@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Ckpt, CorpusOps, DriftOps, MaintOps, SimilarityOps, SkewOps, StatsOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale probe: run the shuffle-bearing operator cores over the
@@ -18,26 +18,19 @@ object ScaleProbe {
   def main(rawArgs: Array[String]): Unit = {
     val (onlyArgs, args) = rawArgs.partition(_.startsWith("only="))
     val only: Option[Set[String]] = onlyArgs.headOption.map(_.stripPrefix("only=").split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // TypedImperativeAggregate partials (q-digest/CMS/MG sketches) fall
-      // back to SORT-based aggregation once >128 groups live in a task's
-      // hash map — a full row sort that dwarfs the sketch fold. Raising
-      // the threshold keeps the object-hash path for slice counts any
-      // real per-day/per-shard sketch build sees.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    // TypedImperativeAggregate partials (q-digest/CMS/MG sketches) fall
+    // back to SORT-based aggregation once >128 groups live in a task's
+    // hash map — a full row sort that dwarfs the sketch fold. Raising
+    // the threshold keeps the object-hash path for slice counts any
+    // real per-day/per-shard sketch build sees.
+    val spark = GraftSession.local(cpus, "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4096")
 
     val scales = if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(2000000L, 20000000L)
 
     def synth(rows: Long): DataFrame =
       spark.read.format("graft.sources.v2.SyntheticTableProvider")
-        .option("rows", rows).option("partitions", cpus.toInt * 4).load()
+        .option("rows", rows).option("partitions", cpus * 4).load()
 
     def time(f: => Long): (Double, Long) = {
       val t0 = System.nanoTime(); val n = f; ((System.nanoTime() - t0) / 1e9, n)
@@ -51,7 +44,7 @@ object ScaleProbe {
     def withScaledPartitions[A](rows: Long)(f: => A): A = {
       val prev = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(cpus.toInt, (rows / 250000L).toInt).toString)
+        math.max(cpus, (rows / 250000L).toInt).toString)
       try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
 

@@ -56,29 +56,12 @@ object SparkEntry {
   /** Compute-heavy scans over the documents/embeddings tables: when the
     * input lacks natural file parallelism (the testdata tables are ONE
     * parquet file = one scan task), repartition raw rows to the session's
-    * parallelism so hashing/vector work uses every core. GATED on actual
-    * input parallelism (round-7 verdict item 4): a production multi-file
-    * table takes the no-shuffle path — the spread shuffle exists only for
-    * parallelism-starved inputs. `spark.graft.spreadSmallScans`
-    * (true/false/auto) forces either path.
+    * parallelism so hashing/vector work uses every core — `Par.spread`'s
+    * gate. Queries whose map work needs only some columns project first
+    * and call `Par.spread` on the projection, so the spread shuffle
+    * carries only those bytes.
     */
-  private def TP(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = T(s, dir, name)
-    val spread = s.conf.get("spark.graft.spreadSmallScans", "auto") match {
-      case "true"  => true
-      case "false" => false
-      case _       => df.inputFiles.length * 2 < s.sparkContext.defaultParallelism
-    }
-    if (spread) df.repartition(s.sparkContext.defaultParallelism) else df
-  }
-
-  /** The TP spread applied to a PROJECTED frame (r14): same
-    * parallelism-starvation gate, but the caller projects to the needed
-    * columns FIRST so the spread shuffle carries only those bytes. For
-    * queries whose per-row map work (md5 batteries, in-row expands,
-    * try_cast stacks) dwarfs the scan, the 1-task single-file read
-    * otherwise serializes the whole computation. */
-  private def SP(df: DataFrame): DataFrame = graft.operators.Par.spread(df)
+  private def TP(s: SparkSession, dir: String, name: String): DataFrame = Par.spread(T(s, dir, name))
 
   /** SUM of a per-row term, decimal-exact internally (cast term →
     * DECIMAL(18,s), sum — order-independent, bit-exact), emitted as DOUBLE:
@@ -200,8 +183,8 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- relational core -----
     "q1_agg" -> ((s, d) => {
-      // SP: six decimal-sum partials ran serial on the 1-task scan
-      SP(T(s, d, "lineitem").select("l_returnflag", "l_linestatus",
+      // Par.spread: six decimal-sum partials ran serial on the 1-task scan
+      Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_linestatus",
           "l_quantity", "l_extendedprice", "l_discount"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -338,7 +321,7 @@ object SparkEntry {
         .orderBy("event_type")
     }),
     "q15_rollup" -> ((s, d) => {
-      SP(T(s, d, "lineitem").select("l_returnflag", "l_linestatus", "l_quantity"))
+      Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_linestatus", "l_quantity"))
         .rollup("l_returnflag", "l_linestatus")
         .agg(grouping_id().as("gid"), count(lit(1)).as("n"), dsum(col("l_quantity"), 2).as("sum_qty"))
         .orderBy(col("gid"), col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
@@ -426,7 +409,7 @@ object SparkEntry {
     "q21_cube" -> ((s, d) => {
       // CUBE: all four grouping-set combinations in one pass (Expand +
       // single shuffle), gid disambiguates the null-vs-subtotal rows
-      SP(T(s, d, "lineitem").select("l_returnflag", "l_linestatus", "l_quantity"))
+      Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_linestatus", "l_quantity"))
         .cube("l_returnflag", "l_linestatus")
         .agg(grouping_id().as("gid"), count(lit(1)).as("n"), dsum(col("l_quantity"), 2).as("sum_qty"))
         .orderBy(col("gid"), col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
@@ -457,7 +440,7 @@ object SparkEntry {
       // the oracle mirrors token-for-token. Spark's native corr/stddev
       // accumulate doubles in partition order → not oracle-able.
       StatsOps.exactStats(
-          SP(T(s, d, "lineitem").select("l_returnflag", "l_quantity", "l_extendedprice")),
+          Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_quantity", "l_extendedprice")),
           Seq("l_returnflag"),
           col("l_quantity"), col("l_extendedprice"), scale = 2)
         .orderBy("l_returnflag")
@@ -2024,7 +2007,7 @@ object SparkEntry {
     "q35_mad" -> ((s, d) => {
       // robust spread: per-status median absolute deviation (two exact
       // percentile passes; the outlier gate stddev can't provide)
-      StatsOps.madByKey(SP(T(s, d, "orders").select("o_orderstatus", "o_totalprice")),
+      StatsOps.madByKey(Par.spread(T(s, d, "orders").select("o_orderstatus", "o_totalprice")),
           "o_orderstatus", "o_totalprice")
         .orderBy("o_orderstatus")
     }),
@@ -3799,9 +3782,9 @@ object SparkEntry {
       // (Knuth multiplicative + odd increment, mod 2^48) — 64 md5s/row
       // was the whole query's cost at sf0.1 (9.9s -> ~1s); the mix is
       // plain integer arithmetic the oracle replicates exactly
-      // SP: the md5 + ×64 expand + mix ran serial on the 1-task scan
+      // Par.spread: the md5 + ×64 expand + mix ran serial on the 1-task scan
       // (2.5 s of this query's ~2.9 s at sf0.1)
-      val rows = SP(T(s, d, "orders").select(col("o_orderkey"),
+      val rows = Par.spread(T(s, d, "orders").select(col("o_orderkey"),
         (col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").as("cents")))
         .withColumn("h0", conv(substring(
           md5(concat(lit("bs:"), col("o_orderkey"))), 1, 12), 16, 10).cast("bigint"))
@@ -4944,9 +4927,9 @@ object SparkEntry {
       // candidates stacked IN-ROW (the expectations idiom), ONE scan,
       // one tiny agg. The contract gate before rewriting a 100 TB
       // extract under a tightened schema.
-      // SP: the 3-cast try_cast battery ran serial on the 1-task scan
+      // Par.spread: the 3-cast try_cast battery ran serial on the 1-task scan
       // (3.0 s of this query's ~3.4 s at sf0.1)
-      SP(T(s, d, "orders").select("o_totalprice", "o_orderkey", "o_orderstatus"))
+      Par.spread(T(s, d, "orders").select("o_totalprice", "o_orderkey", "o_orderstatus"))
         .select(explode(array(
           struct(lit("totalprice->decimal(7,2)").as("cast_to"),
             col("o_totalprice").isNotNull.as("nonnull"),
@@ -6112,9 +6095,9 @@ object SparkEntry {
                 dmean(0, c, sum(when(g === 0, 1L).otherwise(0L))).as(s"ma_$n"),
                 dmean(1, c, sum(when(g === 1, 1L).otherwise(0L))).as(s"mb_$n")))
           }
-      // SP: 8 conditional countDistincts expand every row 8× before the
+      // Par.spread: 8 conditional countDistincts expand every row 8× before the
       // partial agg — serial on the 1-task scan
-      val agg = SP(T(s, d, "orders")
+      val agg = Par.spread(T(s, d, "orders")
           .select("o_orderkey", "o_totalprice", "o_custkey", "o_orderstatus", "o_orderpriority"))
         .agg(aggCols.head, aggCols.tail: _*)
       agg.select(expr(
@@ -7035,10 +7018,10 @@ object SparkEntry {
       // uses a different index rule (floor((n−1)p) vs Spark's
       // smallest-cume_dist ≥ p), so the oracle replays Spark's ANSI
       // definition via integer cume counts — same answer, provably.
-      // SP'd view: the three PERCENTILE_DISC buffers accumulate the whole
+      // spread view: the three PERCENTILE_DISC buffers accumulate the whole
       // column per group inside the partial aggregate — serial on the
       // 1-task single-file scan (7.6 s of serial CPU measured at sf0.1)
-      SP(T(s, d, "lineitem").select("l_returnflag", "l_extendedprice"))
+      Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_extendedprice"))
         .createOrReplaceTempView("r12_li_pdisc")
       s.sql("""
         SELECT l_returnflag,

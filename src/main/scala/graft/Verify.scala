@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,17 +24,10 @@ object Verify {
       case Array(s, o)       => (s, o, None)
       case Array(s, o, sel)  => (s, o, Some(sel.split(',').map(_.trim).toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // µs timestamps in output parquet so the DuckDB compare sees the
-      // exact values Spark computed (INT96 would round-trip through ns)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    // µs timestamps in output parquet so the DuckDB compare sees the
+    // exact values Spark computed (INT96 would round-trip through ns)
+    val spark = GraftSession.local(cpus, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -123,7 +115,7 @@ object Verify {
     // `graft_*` prefix, audited). Failures stay per-query; the TOTAL
     // line makes a partial/killed run visible to the driver's log.
     val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR").map(_.toInt)
-      .getOrElse(math.min(4, math.max(1, cpus.toInt / 2)))
+      .getOrElse(math.min(4, math.max(1, cpus / 2)))
     val todo = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val ok = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -116,13 +116,6 @@ object TextFunctions {
     */
   def fingerprint(c: Column): Column = md5(normText(c))
 
-  /** Min-shingle fingerprint: lexicographic min of md5 over word n-grams —
-    * a 1-permutation MinHash that survives small edits; engine-portable
-    * because it only uses md5.
-    */
-  def minShingleFingerprint(c: Column, n: Int): Column =
-    array_min(transform(shingles(c, n), s => md5(s)))
-
   /** URL canonicalization (the CommonCrawl-style curation key): strips
     * the fragment, lowercases scheme and host, drops default ports
     * (:80/:443) and a leading "www.", collapses trailing slashes on the

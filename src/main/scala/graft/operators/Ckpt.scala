@@ -1,22 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The repo's localCheckpoint conventions behind audit seams.
+/** The repo's localCheckpoint conventions behind one audit seam,
+  * [[recording]].
   *
   * LAZY checkpoints (multi-consumer frames) ride `.transform(Ckpt
   * .lazyCkpt)` instead of a bare `.localCheckpoint(eager = false)` so
-  * that `spark.graft.ckpt.disabled=true` (set ONLY by plan-audit
-  * harnesses — WindowKeyAudit/BroadcastSizeAudit/ArrayAggAudit) makes
-  * the checkpoint a no-op and the full logical plan visible. A lazy
-  * checkpoint otherwise truncates the plan to a LogicalRDD at
-  * construction, which is exactly how the round-12 `events_dgim`
-  * hot-partition window HID from every plan pin: the rows-sized per-key
-  * sort lived inside the checkpointed subtree and no audit walking the
-  * final query plan could see it.
+  * that a `recording(spark, lazyPins = false)` block (the plan audits,
+  * `graft.plans.PlanAudits`) makes the checkpoint a no-op and the full
+  * logical plan visible. A lazy checkpoint otherwise truncates the plan
+  * to a LogicalRDD at construction, which is exactly how the round-12
+  * `events_dgim` hot-partition window HID from every plan pin: the
+  * rows-sized per-key sort lived inside the checkpointed subtree and no
+  * audit walking the final query plan could see it.
   *
-  * Value-safety of the switch: every lazily checkpointed frame in this
+  * Value-safety of the bypass: every lazily checkpointed frame in this
   * repo is deterministic (md5-seeded, no rand), so recomputing it per
   * consumer changes cost, never values.
   *
@@ -24,32 +26,55 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * pins) ride `.transform(Ckpt.eagerCkpt)`. These carry CORRECTNESS
   * contracts (a loop that re-derives its edge set per round is a
   * different computation; the writeBucketed staged-swap pins the old
-  * generation before an overwrite) so the kill-switch NEVER disables
-  * them — instead, when `spark.graft.ckpt.record=true`, the
-  * pre-checkpoint OPTIMIZED plan is recorded into [[drainRecorded]]'s
-  * registry so the plan audits can walk the subtree the checkpoint is
-  * about to hide. This closes WindowKeyAudit's round-13 documented
-  * blind spot (eagerly checkpointed subtrees were planned before the
-  * audit saw them).
+  * generation before an overwrite) so nothing ever disables them —
+  * instead, inside a [[recording]] block, the pre-checkpoint OPTIMIZED
+  * plan is recorded so the plan audits and the exchange budget can walk
+  * the subtree the checkpoint is about to hide.
+  *
+  * The `localCheckpoint` calls stay in this file: profilers find pin
+  * jobs by their `Ckpt.scala` call site.
   */
 object Ckpt {
-  def lazyCkpt[T](ds: Dataset[T]): Dataset[T] =
-    if (ds.sparkSession.conf.getOption("spark.graft.ckpt.disabled").contains("true")) ds
-    else ds.localCheckpoint(eager = false)
 
-  private val recorded = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
-
-  /** Eager lineage-cut pin; always checkpoints (correctness contract),
-    * but exposes the pre-checkpoint plan to the audits when recording. */
-  def eagerCkpt[T](ds: Dataset[T]): Dataset[T] = {
-    if (ds.sparkSession.conf.getOption("spark.graft.ckpt.record").contains("true"))
-      recorded.synchronized { recorded += ds.queryExecution.optimizedPlan }
-    ds.localCheckpoint()
+  /** One [[recording]] block's state: the lazy-pin mode and the plans. */
+  private final class Recorder(val lazyPins: Boolean) {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
   }
 
-  /** Plans recorded by [[eagerCkpt]] since the last drain (audit use). */
-  def drainRecorded(): Seq[LogicalPlan] =
-    recorded.synchronized { val out = recorded.toList; recorded.clear(); out }
+  // keyed by session identity (SparkSession does not override equals), so
+  // pins built on other threads — Par.concurrently — are recorded too
+  private val recorders = new ConcurrentHashMap[SparkSession, Recorder]()
+
+  /** Runs `body` with plan recording on for `spark` only, and returns its
+    * result with the pre-checkpoint optimized plan of every eager pin it
+    * built on that session, in pin order. With `lazyPins = false`, lazy
+    * checkpoints on that session are skipped for the block. Blocks on one
+    * session do not nest. */
+  def recording[A](spark: SparkSession, lazyPins: Boolean)(body: => A): (A, Seq[LogicalPlan]) = {
+    val r = new Recorder(lazyPins)
+    if (recorders.putIfAbsent(spark, r) != null)
+      throw new IllegalStateException("Ckpt.recording is already active on this session")
+    try {
+      val out = body
+      (out, r.synchronized(r.plans.toList))
+    } finally recorders.remove(spark)
+  }
+
+  private def recorder(ds: Dataset[_]): Option[Recorder] = Option(recorders.get(ds.sparkSession))
+
+  private def record(ds: Dataset[_]): Unit =
+    recorder(ds).foreach(r => r.synchronized { r.plans += ds.queryExecution.optimizedPlan })
+
+  def lazyCkpt[T](ds: Dataset[T]): Dataset[T] =
+    if (recorder(ds).exists(!_.lazyPins)) ds
+    else ds.localCheckpoint(eager = false)
+
+  /** Eager lineage-cut pin; always checkpoints (correctness contract),
+    * but exposes the pre-checkpoint plan to a [[recording]] block. */
+  def eagerCkpt[T](ds: Dataset[T]): Dataset[T] = {
+    record(ds)
+    ds.localCheckpoint()
+  }
 
   private val meterId = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -64,9 +89,11 @@ object Ckpt {
   def eagerCkptMetered[T](ds: Dataset[T], metrics: org.apache.spark.sql.Column*): (Dataset[T], org.apache.spark.sql.Row) = {
     val name = s"__graft_ckpt_meter_${meterId.incrementAndGet()}"
     val obs = ds.observe(name, metrics.head, metrics.tail: _*)
-    if (ds.sparkSession.conf.getOption("spark.graft.ckpt.record").contains("true"))
-      recorded.synchronized { recorded += obs.queryExecution.optimizedPlan }
+    record(obs)
     val pinned = obs.localCheckpoint()
-    (pinned, obs.queryExecution.observedMetrics(name))
+    val row = obs.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(
+        s"Ckpt.eagerCkptMetered: meter $name was not observed by the checkpoint job"))
+    (pinned, row)
   }
 }

@@ -54,9 +54,6 @@ object DedupOps {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Distinct word n-gram set of a text column (materialize before joins). */
-  def shingleSet(text: Column, n: Int): Column = array_distinct(shingles(text, n))
-
   /** Distinct shingle set as 64-bit hashes: set operations on longs are
     * ~an order of magnitude cheaper than on shingle strings, and |A∩B| is
     * preserved (64-bit collisions are ~1e-9 at corpus scale). Native
@@ -562,44 +559,6 @@ object DedupOps {
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("a_id", "b_id", "hamming")
-  }
-
-  /** Length-banded blocked Jaccard dedup: pairs must share `blockCol`
-    * AND be within `maxLenDiff` of each other on `lengthCol`. Physically,
-    * each row lands in two length buckets of width maxLenDiff+2 and the
-    * join key is (block, bucket) — this splits big blocks into many small
-    * equi-key groups (parallelism + bounded worst task) while the
-    * `emitted == max(bktA, bktB)` rule keeps every pair matched exactly
-    * once. Result set is EXACTLY {share block, |Δlen| ≤ maxLenDiff,
-    * jaccard ≥ τ} — the banding is invisible to the oracle.
-    */
-  def lengthBandedJaccardPairs(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      blockCol: Column,
-      lengthCol: String,
-      maxLenDiff: Int,
-      threshold: Double,
-      shingleSize: Int = 3
-  ): DataFrame = {
-    val width = maxLenDiff + 2
-    val base = df.select(
-      col(idCol).as("id"),
-      hashedShingleSet(col(textCol), shingleSize).as("sh"),
-      blockCol.as("blk"),
-      col(lengthCol).cast("long").as("len"))
-      .withColumn("bkt", floor(col("len") / width).cast("long"))
-    val emitted = base.withColumn("eb", explode(array(col("bkt"), col("bkt") + 1)))
-    emitted.as("a")
-      .join(emitted.as("b"),
-        col("a.blk") === col("b.blk") && col("a.eb") === col("b.eb") &&
-          col("a.id") < col("b.id") &&
-          abs(col("a.len") - col("b.len")) <= maxLenDiff &&
-          col("a.eb") === greatest(col("a.bkt"), col("b.bkt")))
-      .withColumn("jaccard", jaccardSets(col("a.sh"), col("b.sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a.id").as("a_id"), col("b.id").as("b_id"), col("jaccard"))
   }
 
   /** Blocked n-gram Jaccard dedup (engine-portable variant): block on

@@ -2,15 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Parallelism-starvation spread, shared by SparkEntry's TP/SP and the
+/** Parallelism-starvation spread, shared by SparkEntry's TP and the
   * operator library (r14): the testdata tables are ONE single-row-group
   * parquet file, so every scan is one task and all map-side work above
   * it — decimal-moment batteries, md5 expansions, percentile buffers —
-  * runs serial. When (and only when) the input lacks file parallelism,
-  * repartition to the session's core count; a production multi-file
-  * table takes the no-shuffle path. `spark.graft.spreadSmallScans`
-  * (true/false/auto) forces either path — the same gate TP has carried
-  * since round 7.
+  * runs serial. When (and only when) the input lacks file parallelism
+  * (input files × 2 < default parallelism), repartition to the
+  * session's core count; a production multi-file table takes the
+  * no-shuffle path.
   *
   * Call it on the PROJECTED frame so the spread shuffle carries only
   * the needed columns. Value-safe wherever downstream results are
@@ -18,13 +17,8 @@ import org.apache.spark.sql.DataFrame
   */
 object Par {
   def spread(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val doIt = s.conf.get("spark.graft.spreadSmallScans", "auto") match {
-      case "true"  => true
-      case "false" => false
-      case _       => df.inputFiles.length * 2 < s.sparkContext.defaultParallelism
-    }
-    if (doIt) df.repartition(s.sparkContext.defaultParallelism) else df
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (df.inputFiles.length * 2 < cores) df.repartition(cores) else df
   }
 
   /** Run two INDEPENDENT driver-side action chains concurrently (guide

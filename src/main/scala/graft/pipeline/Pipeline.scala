@@ -26,21 +26,19 @@ final case class Pipeline(
     sinks: Seq[(String, DataFrame => Boolean)]
 ) {
   def run(spark: SparkSession): Boolean = {
-    sources.foreach { case (name, rd) =>
-      rd(spark).createOrReplaceTempView(name)
-    }
-    val effective =
-      if (transforms.isEmpty) Seq(("source", "sink", identity[DataFrame] _))
-      else transforms
-    effective.foreach { case (in, out, fn) =>
-      fn(spark.table(in)).createOrReplaceTempView(out)
-    }
+    register(spark)
     val ok = sinks.takeWhile { case (name, wr) => wr(spark.table(name)) }
     ok.length == sinks.length
   }
 
   /** Convenience for tests/queries: run sources+transforms, return view. */
   def resultView(spark: SparkSession, view: String): DataFrame = {
+    register(spark)
+    spark.table(view)
+  }
+
+  /** Registers every source view, then every transform's output view. */
+  private def register(spark: SparkSession): Unit = {
     sources.foreach { case (name, rd) => rd(spark).createOrReplaceTempView(name) }
     val effective =
       if (transforms.isEmpty) Seq(("source", "sink", identity[DataFrame] _))
@@ -48,7 +46,6 @@ final case class Pipeline(
     effective.foreach { case (in, out, fn) =>
       fn(spark.table(in)).createOrReplaceTempView(out)
     }
-    spark.table(view)
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Collect, CollectSet}
 import org.apache.spark.sql.catalyst.plans.logical._
 
@@ -80,43 +79,4 @@ object ArrayAggAudit {
           else Nil
         } else Nil
     }.flatten
-
-  /** Audit every SparkEntry query (final plan + eagerly checkpointed
-    * subtrees recorded through the Ckpt seam). */
-  def auditAll(spark: SparkSession, sfDir: String): Seq[String] = {
-    spark.conf.set("spark.graft.ckpt.disabled", "true")
-    spark.conf.set("spark.graft.ckpt.record", "true")
-    try {
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, fn) =>
-        try {
-          graft.operators.Ckpt.drainRecorded()
-          val top = findings(n, fn(spark, sfDir).queryExecution.optimizedPlan)
-          val sub = graft.operators.Ckpt.drainRecorded().flatMap(p =>
-            findings(s"$n [ckpt subtree]", p))
-          top ++ sub
-        } catch {
-          case e: Throwable =>
-            Seq(s"$n: audit could not build/optimize — ${e.getClass.getSimpleName} " +
-              String.valueOf(e.getMessage).linesIterator.take(1).mkString)
-        }
-      }
-    } finally {
-      spark.conf.set("spark.graft.ckpt.disabled", "false")
-      spark.conf.set("spark.graft.ckpt.record", "false")
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val out = auditAll(spark, args.headOption.getOrElse("/root/testdata/sf0.001"))
-    out.foreach(f => println(s"[arrayagg-audit] $f"))
-    println(s"[arrayagg-audit] ${out.size} findings")
-    spark.stop()
-    if (out.nonEmpty) sys.exit(1)
-  }
 }

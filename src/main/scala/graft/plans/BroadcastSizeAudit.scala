@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -43,8 +42,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * every flagged class this audit exists for is a straight raw-scan or
   * threshold-filter input, which this classifies exactly).
   *
-  * X-ray contract: run with `spark.graft.ckpt.disabled=true` (lazy
-  * checkpoints would truncate the hinted subtree) — auditAll sets it.
+  * X-ray contract: [[PlanAudits]] builds every query with lazy
+  * checkpoints skipped (they would truncate the hinted subtree) and
+  * with RankOps' size-certified banded-offset hints off.
   * Explicit hints survive into the OPTIMIZED plan as `Join.hint`
   * (EliminateResolvedHint moves the ResolvedHint node into the join),
   * so the audit reads `JoinHint.{leftHint,rightHint}.strategy ==
@@ -249,50 +249,5 @@ object BroadcastSizeAudit {
           "justify in BroadcastSizeAudit.justified")
       else Nil
     }
-  }
-
-  /** Audit every SparkEntry query (final plan + every eagerly
-    * checkpointed subtree recorded through the Ckpt seam). */
-  def auditAll(spark: SparkSession, sfDir: String): Seq[String] = {
-    spark.conf.set("spark.graft.ckpt.disabled", "true")
-    spark.conf.set("spark.graft.ckpt.record", "true")
-    // RankOps.maybeBroadcast's banded-offset hints are SIZE-CERTIFIED at
-    // call time (bandCountHint vs broadcastMaxBands, kill-switch = 0,
-    // plain shuffle join stays correct without the hint) — this audit
-    // covers UNGUARDED hints, so run the plans with the gate off.
-    spark.conf.set("spark.graft.bandedRank.broadcastMaxBands", "0")
-    try {
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, fn) =>
-        try {
-          graft.operators.Ckpt.drainRecorded()
-          val top = findings(n, fn(spark, sfDir).queryExecution.optimizedPlan)
-          val sub = graft.operators.Ckpt.drainRecorded().flatMap(p =>
-            findings(s"$n [ckpt subtree]", p))
-          top ++ sub
-        } catch {
-          case e: Throwable =>
-            Seq(s"$n: audit could not build/optimize — ${e.getClass.getSimpleName} " +
-              String.valueOf(e.getMessage).linesIterator.take(1).mkString)
-        }
-      }
-    } finally {
-      spark.conf.set("spark.graft.ckpt.disabled", "false")
-      spark.conf.set("spark.graft.ckpt.record", "false")
-      spark.conf.unset("spark.graft.bandedRank.broadcastMaxBands")
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val out = auditAll(spark, args.headOption.getOrElse("/root/testdata/sf0.001"))
-    out.foreach(f => println(s"[broadcast-audit] $f"))
-    println(s"[broadcast-audit] ${out.size} findings")
-    spark.stop()
-    if (out.nonEmpty) sys.exit(1)
   }
 }

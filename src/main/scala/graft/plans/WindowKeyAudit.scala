@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Expression, Literal, Pmod, Remainder}
 import org.apache.spark.sql.catalyst.plans.logical._
 
@@ -29,16 +28,16 @@ import org.apache.spark.sql.catalyst.plans.logical._
   *    unless the query is in [[justified]] (each entry must also appear
   *    in §5.1 with its rationale).
   *
-  * X-ray contract: run with `spark.graft.ckpt.disabled=true` so lazy
-  * localCheckpoints (Ckpt.lazyCkpt) don't truncate the visible plan —
-  * round 12's `events_dgim` finding hid exactly there. Low-card
-  * EXPRESSIONS over high-card columns (pmod(user_id, 2)) are detected
-  * through [[isSmallModulo]], including when the analyzer extracts the
-  * inline expression into a `_wN` projection (traced by exprId to its
-  * defining Alias). EAGER checkpoints (correctness pins) are covered
-  * since round 14: every `Ckpt.eagerCkpt` site records its
-  * pre-checkpoint optimized plan when `spark.graft.ckpt.record=true`,
-  * and [[auditAll]] drains and audits those subtrees per query.
+  * X-ray contract: [[PlanAudits]] builds every query with lazy
+  * localCheckpoints (Ckpt.lazyCkpt) skipped, so they don't truncate the
+  * visible plan — round 12's `events_dgim` finding hid exactly there.
+  * Low-card EXPRESSIONS over high-card columns (pmod(user_id, 2)) are
+  * detected through [[isSmallModulo]], including when the analyzer
+  * extracts the inline expression into a `_wN` projection (traced by
+  * exprId to its defining Alias). EAGER checkpoints (correctness pins)
+  * are covered since round 14: `Ckpt.recording` hands PlanAudits every
+  * pin's pre-checkpoint optimized plan, and it audits those subtrees
+  * too.
   */
 object WindowKeyAudit {
 
@@ -175,44 +174,4 @@ object WindowKeyAudit {
           else Nil
         } else Nil
     }.flatten
-
-  /** Audit every SparkEntry query (final plan + every eagerly
-    * checkpointed subtree recorded through the Ckpt seam); returns all
-    * violations. */
-  def auditAll(spark: SparkSession, sfDir: String): Seq[String] = {
-    spark.conf.set("spark.graft.ckpt.disabled", "true")
-    spark.conf.set("spark.graft.ckpt.record", "true")
-    try {
-      graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, fn) =>
-        try {
-          graft.operators.Ckpt.drainRecorded()
-          val top = findings(n, fn(spark, sfDir).queryExecution.optimizedPlan)
-          val sub = graft.operators.Ckpt.drainRecorded().flatMap(p =>
-            findings(s"$n [ckpt subtree]", p))
-          top ++ sub
-        } catch {
-          case e: Throwable =>
-            Seq(s"$n: audit could not build/optimize — ${e.getClass.getSimpleName} " +
-              String.valueOf(e.getMessage).linesIterator.take(1).mkString)
-        }
-      }
-    } finally {
-      spark.conf.set("spark.graft.ckpt.disabled", "false")
-      spark.conf.set("spark.graft.ckpt.record", "false")
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val out = auditAll(spark, args.headOption.getOrElse("/root/testdata/sf0.001"))
-    out.foreach(f => println(s"[window-audit] $f"))
-    println(s"[window-audit] ${out.size} findings")
-    spark.stop()
-    if (out.nonEmpty) sys.exit(1)
-  }
 }

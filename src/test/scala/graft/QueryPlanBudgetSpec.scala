@@ -1,7 +1,5 @@
 package graft
 
-import graft.operators.BucketOps
-
 /** Shuffle-budget regression guard: the number of Exchange operators in
   * each headline query's physical plan is pinned, so a refactor that
   * silently adds a shuffle (the round-1 ngram self-join class of bug)
@@ -24,7 +22,7 @@ class QueryPlanBudgetSpec extends SparkSpec {
   //
   // r15 counting change (round-14 advisor item 3): the count now ALSO
   // includes exchanges inside eagerly-checkpointed subtrees (recorded
-  // via spark.graft.ckpt.record and re-planned — see hiddenExchanges),
+  // via Ckpt.recording and re-planned — see RunOne.exchanges),
   // so an eager pin no longer blinds the guard to shuffles under it.
   // 14 pins were re-derived under the new counting in the same commit;
   // each one's visible-plan breakdown in its comment still holds — the
@@ -35,7 +33,7 @@ class QueryPlanBudgetSpec extends SparkSpec {
   // the round-14 red-test flake was exactly this, not a conf race);
   // recording restores the subtree ONCE (+1) = 12.
   private val budgets = Map(
-    "q1_agg" -> 3,            // SP spread (r14) + agg + final ORDER BY
+    "q1_agg" -> 3,            // Par.spread (r14) + agg + final ORDER BY
     "q3_join_topn" -> 1,      // broadcast join (no shuffle) + agg; topN is TakeOrdered
     "q5_multijoin" -> 4,      // 5-table join: nation/region broadcast; the
                               // customer dim side carries NO static hint
@@ -59,7 +57,7 @@ class QueryPlanBudgetSpec extends SparkSpec {
                               // here means the single-scan shape regressed to a join
     "events_agg_maint" -> 5,  // 3 day-slice aggs + one merge-side exchange + ORDER BY;
                               // both full-outer merges otherwise reuse the aggs' hash partitioning
-    "q35_mad" -> 4,           // SP spread (r14) + median agg + deviation agg (med table broadcast back) + ORDER BY
+    "q35_mad" -> 4,           // Par.spread (r14) + median agg + deviation agg (med table broadcast back) + ORDER BY
     "events_hopping" -> 2,    // window() is a generator (projection) — agg + ORDER BY only
     "events_debounce" -> 2,   // per-key lag window + ORDER BY
     "events_cooccurrence" -> 3, // user agg + pair agg + ORDER BY (pair expansion is in-row)
@@ -171,7 +169,7 @@ class QueryPlanBudgetSpec extends SparkSpec {
                               // band-count offset window + in-band window; totals agg
                               // recurs pre-AQE, ReuseExchange dedupes); final agg is 1 row
     "events_twap" -> 3,       // user-keyed dwell sort + type agg + ORDER BY
-    "data_bootstrap_ci" -> 3, // SP spread (r14) + ×64 in-row expand + ONE groupBy(b); rank picks run on
+    "data_bootstrap_ci" -> 3, // Par.spread (r14) + ×64 in-row expand + ONE groupBy(b); rank picks run on
                               // the 64-row mean frame (final agg reuses its sort)
     "dedup_best_match" -> 5,  // minhash band agg + bucket pair-gen + symmetric-union
                               // best window + mutual self-join + ORDER BY, all off the
@@ -287,7 +285,7 @@ class QueryPlanBudgetSpec extends SparkSpec {
                               // assignment don't depend on nProbe, so the 4 sweep
                               // points probe one eagerly-checkpointed index; the 4
                               // probe pipelines keep their window/agg exchanges)
-    "data_cast_audit" -> 3,   // SP spread (r14) + ONE scan + stacked (cast_to) agg + ORDER BY
+    "data_cast_audit" -> 3,   // Par.spread (r14) + ONE scan + stacked (cast_to) agg + ORDER BY
     "diff_column_stats" -> 3, // full-outer diff join (SMJ sorts ride the lazily-
                               // checkpointed diff frame) + column-stack agg + row-total
                               // agg + union ORDER BY
@@ -500,7 +498,7 @@ class QueryPlanBudgetSpec extends SparkSpec {
                               // ORDER BY — the weights themselves are a projection
     "q68_offset" -> 0,        // TakeOrdered absorbs ORDER BY + LIMIT/OFFSET whole —
                               // pagination without a single Exchange
-    "data_profile_drift" -> 3, // SP spread (r14) + ONE scan: the 8-way conditional count-distinct Expand's
+    "data_profile_drift" -> 3, // Par.spread (r14) + ONE scan: the 8-way conditional count-distinct Expand's
                               // partial/final pair (+ the 4-row stack is a projection);
                               // a count > 2 means a generation became its own scan
     "dedup_shared_spans" -> 4, // position-bucket agg + per-diagonal agg + the linked-pair
@@ -700,7 +698,7 @@ class QueryPlanBudgetSpec extends SparkSpec {
                               // fold driver-side over the collected bounded transition
                               // matrix — the kmeans1d contract; the chained-DataFrame
                               // form cost 17 s of pure stage scheduling); 1 = ORDER BY
-    "q79_percentile_disc" -> 3, // SP spread (r14: the three PERCENTILE_DISC buffers were serial on the 1-task scan) + ordered-set agg + ORDER BY
+    "q79_percentile_disc" -> 3, // Par.spread (r14: the three PERCENTILE_DISC buffers were serial on the 1-task scan) + ordered-set agg + ORDER BY
     "graph_reciprocity" -> 2, // the distinct edge set rides ONE lazy checkpoint (its
                               // distinct exchange runs once, not once per semi-join
                               // side); the 2 = the swapped semi-join's repartition +
@@ -731,37 +729,18 @@ class QueryPlanBudgetSpec extends SparkSpec {
                               // the 1/w-selected fingerprints, not every gram
   )
 
-  // Exchanges inside eagerly-checkpointed subtrees (r15, round-14
+  // RunOne.exchanges counts with AQE off on a private session, and adds
+  // the exchanges inside eagerly-checkpointed subtrees (r15, round-14
   // advisor item 3): an eager pin truncates the consumer plan to a
-  // LogicalRDD, so its subtree's exchanges vanished from the counted
-  // total — every new eagerCkpt silently shrank its query's pin and
-  // the guard went blind to shuffle regressions under the pin. With
-  // `spark.graft.ckpt.record=true` Ckpt records each pre-checkpoint
-  // optimized plan; re-planning those subtrees and adding their
-  // exchange counts makes the pin cover the WHOLE query again.
-  private def hiddenExchanges(): Int =
-    graft.operators.Ckpt.drainRecorded().map { p =>
-      spark.sessionState.executePlan(p).executedPlan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }.size
-    }.sum
-
+  // LogicalRDD, so without them every new eagerCkpt silently shrank its
+  // query's pin and the guard went blind to shuffle regressions under it.
   test("headline queries match their pinned shuffle counts") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.graft.ckpt.record", "true")
-    try {
-      graft.operators.Ckpt.drainRecorded() // discard other suites' leftovers
-      val report = budgets.toSeq.sortBy(_._1).map { case (q, budget) =>
-        val df = SparkEntry.queries(q)(spark, sfDir)
-        (q, BucketOps.countExchanges(df) + hiddenExchanges(), budget)
-      }
-      val off = report.filter { case (_, n, b) => n != b }
-      assert(off.isEmpty,
-        off.map { case (q, n, b) => s"$q: planned $n shuffles, pinned $b" }.mkString("; "))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.graft.ckpt.record")
+    val report = budgets.toSeq.sortBy(_._1).map { case (q, budget) =>
+      (q, RunOne.exchanges(spark, q, sfDir), budget)
     }
+    val off = report.filter { case (_, n, b) => n != b }
+    assert(off.isEmpty,
+      off.map { case (q, n, b) => s"$q: planned $n shuffles, pinned $b" }.mkString("; "))
   }
 
   test("data_acceptance_sampling draws both stages through map-side WindowGroupLimit heaps") {

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-13 verdict items 1-3 as STANDING gates beside WindowKeyAuditSpec:
   * every `SparkEntry.queries` plan (including eagerly-checkpointed
-  * subtrees recorded through the Ckpt seam) is walked for (a) explicit
+  * subtrees recorded through `Ckpt.recording`; the walk is shared with
+  * WindowKeyAuditSpec through SparkSpec.planAudits) is walked for (a) explicit
   * `broadcast()` hints whose input is data-sized — the q41_hotkey_join
   * class (count>4 picked ~half of TPC-H orders; its fix is the bounded
   * top-K hot set) — and (b) `collect_list`/`collect_set` aggregations
@@ -14,12 +15,12 @@ import org.apache.spark.sql.functions._
 class SizeAuditSpec extends SparkSpec {
 
   test("no query plans an unguarded data-sized broadcast()") {
-    val out = BroadcastSizeAudit.auditAll(spark, "/root/testdata/sf0.001")
+    val out = SparkSpec.planAudits("broadcast-audit")
     assert(out.isEmpty, s"${out.size} data-sized broadcasts:\n${out.mkString("\n")}")
   }
 
   test("no query collects a data-proportional group into one array") {
-    val out = ArrayAggAudit.auditAll(spark, "/root/testdata/sf0.001")
+    val out = SparkSpec.planAudits("arrayagg-audit")
     assert(out.isEmpty, s"${out.size} unbounded collects:\n${out.mkString("\n")}")
   }
 
@@ -77,22 +78,19 @@ class SizeAuditSpec extends SparkSpec {
     "the Ckpt recording seam (round-13 blind spot, closed)") {
     import org.apache.spark.sql.expressions.Window
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    spark.conf.set("spark.graft.ckpt.record", "true")
-    try {
-      graft.operators.Ckpt.drainRecorded()
-      val hidden = graft.operators.Ckpt.eagerCkpt(
+    val (hidden, recorded) = graft.operators.Ckpt.recording(spark, lazyPins = true) {
+      graft.operators.Ckpt.eagerCkpt(
         ev.withColumn("rn", row_number().over(
           Window.partitionBy("event_type").orderBy(col("event_id")))))
-      // the checkpointed FINAL plan is a LogicalRDD — the window is gone
-      assert(WindowKeyAudit.findings("synthetic_final",
-        hidden.queryExecution.optimizedPlan).isEmpty,
-        "sanity: the checkpoint hides the window from the final plan")
-      // …but the seam recorded the pre-checkpoint subtree, which flags
-      val recorded = graft.operators.Ckpt.drainRecorded()
-      assert(recorded.nonEmpty, "eagerCkpt must record under the audit conf")
-      val out = recorded.flatMap(p => WindowKeyAudit.findings("synthetic_ckpt", p))
-      assert(out.nonEmpty, "the recorded pre-checkpoint plan must flag the hot window")
-    } finally spark.conf.set("spark.graft.ckpt.record", "false")
+    }
+    // the checkpointed FINAL plan is a LogicalRDD — the window is gone
+    assert(WindowKeyAudit.findings("synthetic_final",
+      hidden.queryExecution.optimizedPlan).isEmpty,
+      "sanity: the checkpoint hides the window from the final plan")
+    // …but the seam recorded the pre-checkpoint subtree, which flags
+    assert(recorded.nonEmpty, "eagerCkpt must record inside Ckpt.recording")
+    val out = recorded.flatMap(p => WindowKeyAudit.findings("synthetic_ckpt", p))
+    assert(out.nonEmpty, "the recorded pre-checkpoint plan must flag the hot window")
   }
 
   test("every justified exception names a real query") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.PlanAudits
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +13,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Four cores whatever the host has: QueryPlanBudgetSpec's exchange
+    * pins depend on the parallelism (Par.spread's gate, shuffle
+    * partitions). */
+  lazy val session: SparkSession = GraftSession.local(4)
 
   /** Session-isolated clone: shares the SparkContext, catalog and cache
     * but owns its SQL conf. Plan-shape suites (QueryPlanBudgetSpec,
@@ -31,4 +29,10 @@ object SparkSpec {
     * item 1).
     */
   def isolated(): SparkSession = session.newSession()
+
+  /** The three plan audits' findings over every query, by audit name —
+    * one shared walk (PlanAudits.walk) that WindowKeyAuditSpec and
+    * SizeAuditSpec both read. */
+  lazy val planAudits: Map[String, Seq[String]] =
+    PlanAudits.walk(session, s"${sys.props("user.home")}/testdata/sf0.001")
 }

@@ -4,8 +4,8 @@ import graft.plans.WindowKeyAudit
 
 /** SURVEY §5.1's window key-cardinality audit as a standing gate
   * (round-12 verdict item 4): every `SparkEntry.queries` plan is walked
-  * with lazy checkpoints DISABLED (Ckpt.lazyCkpt's kill-switch — the
-  * round-12 `events_dgim` hot window hid behind exactly such a
+  * with lazy checkpoints SKIPPED (PlanAudits' `Ckpt.recording` block —
+  * the round-12 `events_dgim` hot window hid behind exactly such a
   * checkpoint), and any Window partitioned only by known low-card
   * columns over a data-sized input fails here, pre-commit, instead of
   * surfacing as a 100 TB straggler in a verdict. First run caught
@@ -14,7 +14,7 @@ import graft.plans.WindowKeyAudit
 class WindowKeyAuditSpec extends SparkSpec {
 
   test("no query plans a low-card RAW window (§5.1 hot-partition class)") {
-    val out = WindowKeyAudit.auditAll(spark, "/root/testdata/sf0.001")
+    val out = SparkSpec.planAudits("window-audit")
     assert(out.isEmpty, s"${out.size} low-card RAW windows:\n${out.mkString("\n")}")
   }
 
