@@ -1,7778 +1,46 @@
 package graft
 
-import graft.functions.TextFunctions
-import graft.functions.VectorFunctions
-import graft.operators._
-import graft.pipeline.{Pipeline, Uris}
-import graft.streaming.StreamOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.queries._
+import graft.queries.Inputs.Query
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   *
-  * Conventions that make the DuckDB oracle hash-match exactly:
-  *  - money/qty aggregates: cast each term to DECIMAL before SUM (exact,
-  *    order-independent), final cast to a fixed DECIMAL type both sides;
-  *  - ratios: raw doubles (identical IEEE arithmetic both sides);
-  *  - every query ends in an ORDER BY on a unique key;
-  *  - every computed column is aliased identically in Spark and SQL.
+  * The index of graft's queries. Each query lives in the family file
+  * its name prefix selects (`graft.queries`), the inputs they share in
+  * [[graft.queries.Inputs]] (with the oracle-alignment conventions), and
+  * their DuckDB twins in [[Oracles]].
   */
 object SparkEntry {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** events reader, adaptive to the table's physical `ts` type — the
-    * driver has shipped both µs TIMESTAMP / TIMESTAMP_NTZ (current) and
-    * TIMESTAMP(NANOS)-as-INT64 (legacy, readable only behind the
-    * nanosAsLong flag, which is set ONLY when that path is taken).
-    * Normalizes to the two columns every event-time query uses:
-    * `ts` TimestampType (µs instant) and `ts_us` BIGINT µs-since-epoch —
-    * the same value DuckDB's `epoch_us(CAST(ts AS TIMESTAMP))` yields on
-    * the same file. All graft sessions pin spark.sql.session.timeZone=UTC,
-    * so the NTZ→timestamp cast is the naive-as-UTC reading DuckDB uses. */
-  private def EV(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType => TsType}
-    val path = s"$dir/events.parquet"
-    val raw =
-      try s.read.parquet(path)
-      catch {
-        case e: Exception if String.valueOf(e.getMessage).contains("NANOS") =>
-          s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          s.read.parquet(path)
-      }
-    raw.schema("ts").dataType match {
-      case LongType => // ns since epoch; truncate to µs like DuckDB's NS→US cast
-        raw.withColumn("ts_us", expr("ts div 1000"))
-          .withColumn("ts", timestamp_micros(col("ts_us")))
-      case TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TsType))
-          .withColumn("ts_us", unix_micros(col("ts")))
-      case _ => // already a µs instant
-        raw.withColumn("ts_us", unix_micros(col("ts")))
-    }
-  }
-
-  /** Compute-heavy scans over the documents/embeddings tables: when the
-    * input lacks natural file parallelism (the testdata tables are ONE
-    * parquet file = one scan task), repartition raw rows to the session's
-    * parallelism so hashing/vector work uses every core — `Par.spread`'s
-    * gate. Queries whose map work needs only some columns project first
-    * and call `Par.spread` on the projection, so the spread shuffle
-    * carries only those bytes.
-    */
-  private def TP(s: SparkSession, dir: String, name: String): DataFrame = Par.spread(T(s, dir, name))
-
-  /** SUM of a per-row term, decimal-exact internally (cast term →
-    * DECIMAL(18,s), sum — order-independent, bit-exact), emitted as DOUBLE:
-    * the decimal→double conversion is correctly rounded and deterministic
-    * in both Spark (BigDecimal.doubleValue) and DuckDB, so hashes agree,
-    * whereas DECIMAL output canonicalizes differently between a Spark
-    * parquet dump and a DuckDB result (round-1 driver hash failures). */
-  private def dsum(term: Column, scale: Int): Column =
-    sum(term.cast(s"decimal(18,$scale)")).cast(s"decimal(38,$scale)").cast("double")
-
-  private def revenueTerm: Column = col("l_extendedprice") * (lit(1) - col("l_discount"))
-
-  /** Weighted part co-order edges (a < b, w = orders containing both
-    * parts) — shared by the Louvain rows: GUARDED basket pair-gen
-    * (never a lineitem×lineitem self-join, the graph_triangles
-    * contract), then one weight aggregate. */
-  private def coOrderPartEdges(s: SparkSession, d: String): DataFrame = {
-    val baskets = T(s, d, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy("l_orderkey")
-      .agg(sort_array(array_distinct(collect_list(col("l_partkey")))).as("parts"))
-    DedupOps.boundedBucketPairs(baskets, Seq("l_orderkey"), "parts")
-      .groupBy("a", "b").agg(count(lit(1)).cast("long").as("w"))
-  }
-
-  /** Shared input of `dedup_semantic` and its `_aux_semantic_cells`
-    * oracle dump (Verify) — base embeddings ∪ an index-shift perturbed
-    * copy (ids +100000): v'ᵢ = vᵢ + 0.05·v₍ᵢ₊₁ mod d₎. The shift is a
-    * norm-preserving permutation nearly orthogonal to v, so
-    * cos(v, v') ≈ 1/√1.0025 ≈ 0.9987 — a guaranteed semantic-dup pair
-    * per vector — while the perturbed unit vector differs enough that
-    * its centroid similarity does too, exercising the keep-the-outlier
-    * preference (not just the id tie-break). */
-  def semanticDedupInput(s: SparkSession, d: String): DataFrame = {
-    val base = TP(s, d, "embeddings")
-      .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-    base.unionByName(shiftPerturb(base, 1, 100000L))
-  }
-
-  /** v'ᵢ = vᵢ + 0.05·v₍ᵢ₊ₖ mod d₎ with ids offset — the near-dup
-    * synthesis shared by the semantic-dedup queries. O(d): rotate by
-    * slice/concat + one zip_with (the earlier per-element `element_at`
-    * shape was O(d²) per row AND got re-inlined downstream — measured
-    * ~21 ms/row); arithmetic is the plain add/mul order both engines
-    * reproduce. */
-  private def shiftPerturb(df: DataFrame, shift: Int, idOffset: Long): DataFrame = {
-    val dim = 64
-    df.withColumn("vec_id", col("vec_id") + idOffset)
-      .withColumn("vec", zip_with(
-        col("vec"),
-        concat(slice(col("vec"), shift + 1, dim - shift), slice(col("vec"), 1, shift)),
-        (x, y) => x + lit(0.05) * y))
-  }
-
-  /** The cells/cent_sims dump the `dedup_semantic` oracle replays. */
-  def semanticDedupCells(s: SparkSession, d: String): DataFrame =
-    SimilarityOps.semanticCells(semanticDedupInput(s, d), "vec_id", "vec", nCells = 16)
-
-  /** Base/delta split for `dedup_semantic_incr`: the index bootstraps on
-    * vec_id % 3 ≠ 0; the delta is a shift-1 perturbed copy of EVERY
-    * vector (ids +100000 — the %3 ≠ 0 members have an index twin at
-    * cos ≈ 0.9987) plus a shift-2 perturbed copy of the %3 = 0 members
-    * (ids +200000 — twinned only WITHIN the delta at cos ≈ 0.9975, so
-    * the within-batch prune fires, not just the index probe). */
-  def semanticDedupIncrParts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val emb = TP(s, d, "embeddings")
-      .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-    val base = emb.filter(col("vec_id") % 3 =!= 0)
-    val delta = shiftPerturb(emb, 1, 100000L)
-      .unionByName(shiftPerturb(emb.filter(col("vec_id") % 3 === 0), 2, 200000L))
-    (base, delta)
-  }
-
-  /** The side-tagged cells dump the `dedup_semantic_incr` oracle replays
-    * (base cells feed its bootstrap-prune CTE, delta cells the probe;
-    * both sides assigned under the SAME base-trained frozen centroids,
-    * exactly as the engine's index build + probe do). */
-  def semanticDedupIncrCells(s: SparkSession, d: String): DataFrame = {
-    val (base, delta) = semanticDedupIncrParts(s, d)
-    val cents = SimilarityOps.trainCentroids(base, "vec_id", "vec", nCells = 16, iters = 4)
-    SimilarityOps.semanticCellsFrozen(base, "vec_id", "vec", cents)
-      .withColumn("side", lit("base"))
-      .unionByName(SimilarityOps.semanticCellsFrozen(delta, "vec_id", "vec", cents)
-        .withColumn("side", lit("delta")))
-  }
-
-  /** The side-tagged (side, id, cell, cent_sim, qerr) dump the
-    * `ann_ivfpq_drift` oracle replays (round-11 verdict item 9): the
-    * persisted IVF-PQ index is (re)built from the BASE generation —
-    * unique `graft_ivfpqdrift_idx` prefix, staged-swap idempotent —
-    * then both sides are assigned + self-ADC'd under its frozen
-    * centroids and codebook. The delta is a DRIFTED copy of the corpus
-    * (v' = v + 0.4·rot(v, 16), ids +500000): big enough to shift cell
-    * occupancy and inflate residual quantization error, so the monitor
-    * has real signal to report. */
-  def ivfPqDriftCellsDump(s: SparkSession, d: String): DataFrame = {
-    val emb = TP(s, d, "embeddings")
-      .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-    val dim = 64
-    val delta = emb
-      .withColumn("vec_id", col("vec_id") + 500000L)
-      .withColumn("vec", zip_with(
-        col("vec"),
-        concat(slice(col("vec"), 17, dim - 16), slice(col("vec"), 1, 16)),
-        (x, y) => x + lit(0.4) * y))
-    val idx = VectorIndexOps.buildIvfPqIndex(emb, "vec_id", "vec",
-      "graft_ivfpqdrift_idx", nCells = 8, numBuckets = 4, subspaces = 16, codes = 16)
-    val tagged = emb.withColumn("side", lit("base"))
-      .unionByName(delta.withColumn("side", lit("delta")))
-    VectorIndexOps.ivfPqDriftCells(tagged, "side", "vec_id", "vec", idx)
-  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q3_join_topn")(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------- queries
+  /** The families' queries as one map; a name declared twice throws. */
+  def union(families: Seq[(String, Query)]*): Map[String, Query] = {
+    val all = families.flatten
+    val dups = all.groupBy(_._1).collect { case (n, qs) if qs.size > 1 => n }
+    if (dups.nonEmpty)
+      throw new IllegalStateException(s"query names declared twice: ${dups.toSeq.sorted.mkString(", ")}")
+    all.toMap
+  }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ----- relational core -----
-    "q1_agg" -> ((s, d) => {
-      // Par.spread: six decimal-sum partials ran serial on the 1-task scan
-      Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_linestatus",
-          "l_quantity", "l_extendedprice", "l_discount"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity"), 2).as("sum_qty"),
-          dsum(col("l_extendedprice"), 2).as("sum_base_price"),
-          dsum(revenueTerm, 6).as("sum_disc_price"),
-          round(dsum(col("l_quantity"), 2).cast("double") / count(lit(1)), 4).as("avg_qty"),
-          count(lit(1)).as("count_order")
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-    "q2_pushdown" -> ((s, d) => {
-      // filter+project must reach the parquet scan (PushedFilters in explain)
-      T(s, d, "lineitem")
-        .filter(col("l_quantity") >= 48 && col("l_discount") >= 0.08)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    "q3_join_topn" -> ((s, d) => {
-      // customer is SCALE-PROPORTIONAL (sf·150k rows) — no explicit
-      // broadcast hint: AQE auto-broadcasts the segment slice while it
-      // fits its size-guarded threshold and shuffle-joins beyond it.
-      val cust = T(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
-      T(s, d, "lineitem")
-        .join(T(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(dsum(revenueTerm, 6).as("revenue"))
-        .select(col("o_orderkey"), col("o_orderdate").cast("date").as("o_orderdate"), col("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-    "q4_semijoin" -> ((s, d) => {
-      val late = T(s, d, "lineitem").select("l_orderkey", "l_shipdate")
-      T(s, d, "orders")
-        .join(late, col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    }),
-    "q5_multijoin" -> ((s, d) => {
-      // nation/region are FIXED-domain (25/5 rows at every SF) — they
-      // keep explicit broadcast hints. customer is scale-proportional,
-      // so the assembled dim side carries NO hint: AQE auto-broadcasts
-      // it while small, shuffle-joins it at 100×.
-      val dims =
-        T(s, d, "customer")
-          .join(broadcast(T(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-          .join(broadcast(T(s, d, "region").filter(col("r_name") === "ASIA")),
-            col("n_regionkey") === col("r_regionkey"))
-          .select("c_custkey", "n_name")
-      T(s, d, "lineitem")
-        .join(T(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(dims, col("o_custkey") === col("c_custkey"))
-        .groupBy("n_name")
-        .agg(dsum(revenueTerm, 6).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-    "q6_selective_agg" -> ((s, d) => {
-      T(s, d, "lineitem")
-        .filter(
-          col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-            col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-            col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(
-          dsum(col("l_extendedprice") * col("l_discount"), 6).as("revenue"),
-          count(lit(1)).as("n"))
-    }),
-    "q7_window" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      T(s, d, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select("o_custkey", "rn", "o_orderkey", "o_totalprice")
-        .orderBy("o_custkey", "rn")
-    }),
-    "q8_distinct" -> ((s, d) => {
-      T(s, d, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          countDistinct(col("l_partkey")).as("n_parts"),
-          countDistinct(col("l_suppkey")).as("n_supps"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
-    }),
-    "q9_antijoin" -> ((s, d) => {
-      // customers with no urgent order (anti join on a filtered build side)
-      val urgent = T(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
-      T(s, d, "customer")
-        .join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_customers"))
-        .orderBy("c_nationkey")
-    }),
-    "q10_topk" -> ((s, d) => {
-      T(s, d, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .limit(10)
-    }),
-    "q11_having" -> ((s, d) => {
-      T(s, d, "lineitem")
-        .groupBy("l_partkey")
-        .agg(dsum(col("l_quantity"), 2).as("sum_qty"))
-        .filter(col("sum_qty") > 900)
-        .orderBy("l_partkey")
-    }),
-    "q12_case_agg" -> ((s, d) => {
-      T(s, d, "lineitem")
-        .join(T(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_linestatus")
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L)).as("high_count"),
-          sum(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L).otherwise(0L)).as("low_count"))
-        .orderBy("l_linestatus")
-    }),
-    "q13_outerjoin_agg" -> ((s, d) => {
-      T(s, d, "customer")
-        .join(T(s, d, "orders"), col("c_custkey") === col("o_custkey"), "left_outer")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-    "q14_union" -> ((s, d) => {
-      val e = EV(s, d)
-      e.filter(col("event_type").isin("click", "purchase"))
-        .unionByName(e.filter(col("event_type").isin("signup", "view")))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("event_type")
-    }),
-    "q15_rollup" -> ((s, d) => {
-      Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_linestatus", "l_quantity"))
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(grouping_id().as("gid"), count(lit(1)).as("n"), dsum(col("l_quantity"), 2).as("sum_qty"))
-        .orderBy(col("gid"), col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-    "q16_pivot" -> ((s, d) => {
-      EV(s, d)
-        .withColumn("cohort", pmod(col("user_id"), lit(10)))
-        .groupBy("cohort")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(dsum(col("value"), 2))
-        .orderBy("cohort")
-    }),
-    "q17_subquery" -> ((s, d) => {
-      // correlated-subquery shape: each part vs its brand's average. The
-      // average comes from a partial-agged groupBy joined back (AQE
-      // broadcasts the |brands|-row table), NOT a partitionBy(p_brand)
-      // window — 25 brands over a 100 TB part table would funnel rows/25
-      // through single window tasks (round-8 window-key audit).
-      val part = T(s, d, "part")
-      val avgs = part.groupBy("p_brand").agg(
-        (sum(col("p_retailprice").cast("decimal(18,2)")).cast("decimal(38,2)").cast("double")
-          / count(lit(1))).as("brand_avg"))
-      part.join(broadcast(avgs), Seq("p_brand"))
-        .filter(col("p_retailprice") > col("brand_avg"))
-        .select("p_partkey", "p_brand", "p_retailprice")
-        .orderBy("p_partkey")
-    }),
-    "q19_percentile" -> ((s, d) => {
-      T(s, d, "orders")
-        .groupBy("o_orderstatus")
-        .agg(
-          expr("percentile(o_totalprice, 0.5)").as("p50"),
-          expr("percentile(o_totalprice, 0.9)").as("p90"))
-        .orderBy("o_orderstatus")
-    }),
-    "q20_approx" -> ((s, d) => {
-      // approx sketch values differ across engines, so the DRIVER-checked
-      // output is (exact count distinct, sketch-within-bounds booleans):
-      // the exact column is fully SQL-verifiable and the booleans pin the
-      // sketches against their own error guarantees (HLL rsd 5% → 15%
-      // margin; approx_percentile at default accuracy → p40..p60 window)
-      // two separate aggregations joined on the group key: mixing
-      // countDistinct with multiple percentile buffers in ONE agg forces
-      // the distinct-rewrite Expand through the object-hash aggregate
-      // (measured 375s at sf0.1); split, each is a normal 1-2s shape
-      val li = T(s, d, "lineitem")
-      val counts = li.groupBy("l_returnflag").agg(
-        countDistinct(col("l_partkey")).as("n_parts_exact"),
-        approx_count_distinct(col("l_partkey")).as("approx_parts"))
-      // ONE exact-percentile buffer for both bounds (array percentile):
-      // each percentile(...) agg keeps its own per-group value-counts map
-      // through the ObjectHashAggregate — two maps doubled the allocation
-      // churn for no information gain
-      val pcts = li.groupBy("l_returnflag").agg(
-        expr("approx_percentile(l_extendedprice, 0.5)").as("approx_p50"),
-        expr("percentile(l_extendedprice, array(0.40, 0.60))").as("p4060"))
-        .select(col("l_returnflag"), col("approx_p50"),
-          col("p4060")(0).as("p40"), col("p4060")(1).as("p60"))
-      counts.join(pcts, "l_returnflag")
-        .select(
-          col("l_returnflag"),
-          col("n_parts_exact"),
-          (abs(col("approx_parts") - col("n_parts_exact")) <= col("n_parts_exact") * 0.15).as("parts_ok"),
-          col("approx_p50").between(col("p40"), col("p60")).as("p50_ok"))
-        .orderBy("l_returnflag")
-    }),
-    "q18_skewjoin" -> ((s, d) => {
-      // skew-resilient aggregation: three grouping keys cover the whole
-      // fact table (the hot-key shape); SkewOps.saltedAgg splits each key
-      // over 32 salt buckets before the per-key re-aggregation, so no
-      // single reducer sees a whole hot group. Result must be identical
-      // to the plain groupBy — the oracle computes the plain form.
-      SkewOps.saltedAgg(
-        T(s, d, "lineitem").select("l_returnflag", "l_quantity"),
-        Seq("l_returnflag"),
-        saltBuckets = 32,
-        partialAggs = Seq(
-          sum(col("l_quantity").cast("decimal(18,2)")).as("ps"),
-          count(lit(1)).as("pn")),
-        finalAggs = Seq(
-          sum("ps").cast("decimal(38,2)").cast("double").as("sum_qty"),
-          sum("pn").as("n")))
-        .orderBy("l_returnflag")
-    }),
-    "q21_cube" -> ((s, d) => {
-      // CUBE: all four grouping-set combinations in one pass (Expand +
-      // single shuffle), gid disambiguates the null-vs-subtotal rows
-      Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_linestatus", "l_quantity"))
-        .cube("l_returnflag", "l_linestatus")
-        .agg(grouping_id().as("gid"), count(lit(1)).as("n"), dsum(col("l_quantity"), 2).as("sum_qty"))
-        .orderBy(col("gid"), col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-    }),
-    "q22_setops" -> ((s, d) => {
-      // INTERSECT / EXCEPT (distinct set semantics, same as SQL): which
-      // customers have BOTH open and finished orders vs open-only. Both
-      // ops plan as hash aggregates + one shuffle on the compared column.
-      val o = T(s, d, "orders")
-      val open = o.filter(col("o_orderstatus") === "O").select("o_custkey")
-      val fin = o.filter(col("o_orderstatus") === "F").select("o_custkey")
-      open.intersect(fin).withColumn("op", lit("both"))
-        .unionByName(open.except(fin).withColumn("op", lit("open_only")))
-        .orderBy("op", "o_custkey")
-    }),
-    "q23_histogram" -> ((s, d) => {
-      // fixed-width histogram: one narrow projection + tiny groupBy —
-      // the profiling primitive for choosing bucket/partition bounds
-      T(s, d, "lineitem")
-        .select(floor(col("l_extendedprice") / lit(5000d)).cast("long").as("bin"))
-        .groupBy("bin").agg(count(lit(1)).as("n"))
-        .withColumn("lo", (col("bin") * 5000).cast("double"))
-        .orderBy("bin")
-    }),
-    "q24_stats" -> ((s, d) => {
-      // deterministic corr/stddev: decimal-exact moment sums (order-
-      // independent), closed-form combine in a FIXED double expression
-      // the oracle mirrors token-for-token. Spark's native corr/stddev
-      // accumulate doubles in partition order → not oracle-able.
-      StatsOps.exactStats(
-          Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_quantity", "l_extendedprice")),
-          Seq("l_returnflag"),
-          col("l_quantity"), col("l_extendedprice"), scale = 2)
-        .orderBy("l_returnflag")
-    }),
-    "events_resample" -> ((s, d) => {
-      // per-user hourly resample with forward fill (pandas asfreq/ffill,
-      // time_bucket_gapfill): grid generated from per-key bounds — never
-      // a calendar cross-join against the fact table
-      val ev = EV(s, d).filter(col("user_id") % 10 === 0)
-      ResampleOps.resampleFfill(ev, "user_id",
-          expr("ts_us div 3600000000"),
-          Seq("sum_value" -> dsum(col("value"), 2)))
-        .select("user_id", "bucket", "n", "sum_value", "gap")
-        .orderBy("user_id", "bucket")
-    }),
-    "q25_ntile" -> ((s, d) => {
-      // equi-height bucketing via NTILE — deterministic because the
-      // order is total (acctbal desc, custkey tie-break). 5 segments
-      // over a 100 TB customer table make partitionBy(segment) a hot
-      // partition, so the tile comes from the grouped banded rank
-      // (per-(segment, $256-balance-slab) bounded windows) + the
-      // closed-form ntile — same round-8 pattern as q40_rfm.
-      val cust = T(s, d, "customer")
-        .withColumn("bb", floor(col("c_acctbal").cast("double") / 256.0).cast("long"))
-      val ranked = RankOps.groupedBandedRank(cust,
-        groupCols = Seq("c_mktsegment"), bandCols = Seq("bb"),
-        bandSort = Seq(col("bb").desc),
-        rowSort = Seq(col("c_acctbal").desc, col("c_custkey").asc), rankName = "rk")
-      val totals = cust.groupBy("c_mktsegment").agg(count(lit(1)).as("n_seg"))
-      ranked.join(broadcast(totals), Seq("c_mktsegment"))
-        .withColumn("quartile", RankOps.ntileFromRank(col("rk"), col("n_seg"), 4))
-        .groupBy("c_mktsegment", "quartile")
-        .agg(count(lit(1)).as("n"), min("c_acctbal").as("min_bal"), max("c_acctbal").as("max_bal"))
-        .orderBy("c_mktsegment", "quartile")
-    }),
-    "q26_fuzzy" -> ((s, d) => {
-      // fuzzy string matching via deletion-neighborhood blocking
-      // (FastSS/SymSpell): complete for edit distance ≤ 1, linear in
-      // total string length — the block-join-with-levenshtein-condition
-      // alternative measured 50s at sf0.1 (distance evaluated per
-      // in-block pair); this runs in under a second and needs no
-      // metadata block key at all, so the oracle is the FULL quadratic
-      DedupOps.editDistancePairs(T(s, d, "customer"), "c_name", "c_custkey")
-        .orderBy("a_id", "b_id")
-    }),
-    "q27_hof" -> ((s, d) => {
-      // array higher-order functions: per-order quantity vector, then
-      // filter/aggregate lambdas (codegen-free HOFs but integer-exact,
-      // so the oracle can compute the equivalent FILTER aggregation)
-      T(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity").cast("int").as("q"))
-        .groupBy("l_orderkey").agg(sort_array(collect_list("q")).as("qs"))
-        .select(
-          col("l_orderkey"),
-          size(col("qs")).cast("long").as("n_items"),
-          aggregate(filter(col("qs"), _ > 25), lit(0L), (acc, x) => acc + x).as("sum_hi"),
-          size(filter(col("qs"), _ > 25)).cast("long").as("n_hi"))
-        .orderBy("l_orderkey")
-    }),
-    "q28_datetime" -> ((s, d) => {
-      // temporal rollup: year/month extraction + decimal-exact sums
-      T(s, d, "orders")
-        .groupBy(year(col("o_orderdate")).as("yr"), month(col("o_orderdate")).as("mo"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice"), 2).as("sum_price"))
-        .orderBy("yr", "mo")
-    }),
-    "q31_rangeframe" -> ((s, d) => {
-      // RANGE window frame: per-user trailing-hour running sum — value
-      // depends on the ORDER-key distance, not row count (peers share
-      // the frame, so ties are deterministic by construction)
-      import org.apache.spark.sql.expressions.Window
-      val e = EV(s, d).filter(col("user_id") % 20 === 0)
-        .select(col("user_id"), col("event_id"), expr("ts_us div 1000000").as("ts_s"), col("value"))
-      val w = Window.partitionBy("user_id").orderBy(col("ts_s")).rangeBetween(-3600, 0)
-      e.withColumn("w_sum",
-          sum(col("value").cast("decimal(18,2)")).over(w).cast("decimal(38,2)").cast("double"))
-        .withColumn("w_n", count(lit(1)).over(w))
-        .drop("value")
-        .orderBy("user_id", "ts_s", "event_id")
-    }),
-    "q32_lateral" -> ((s, d) => {
-      // LATERAL correlated subquery: per nation, its top-2 customers by
-      // balance — the SQL-level form of per-key top-k (same semantics
-      // capPerKey gives the DataFrame API)
-      T(s, d, "nation").createOrReplaceTempView("graft_nation")
-      T(s, d, "customer").createOrReplaceTempView("graft_customer")
-      s.sql("""SELECT n.n_name, t.c_custkey, t.c_acctbal
-              |FROM graft_nation n,
-              | LATERAL (SELECT c_custkey, c_acctbal FROM graft_customer c
-              |          WHERE c.c_nationkey = n.n_nationkey
-              |          ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-              |ORDER BY n.n_name, t.c_custkey""".stripMargin)
-    }),
-    "q29_nullsafe" -> ((s, d) => {
-      // null-safe equality join (<=>): the null bucket matches the null
-      // dim row instead of disappearing — the classic silent-data-loss
-      // gap between = and IS NOT DISTINCT FROM
-      import s.implicits._
-      val e = EV(s, d)
-        .withColumn("bucket", expr("nullif(pmod(user_id, 4), 3)"))
-      val dim = Seq((Option(0L), "a"), (Option(1L), "b"), (Option(2L), "c"), (Option.empty[Long], "nul"))
-        .toDF("bucket", "tag")
-      e.join(broadcast(dim), e("bucket") <=> dim("bucket"))
-        .groupBy("tag")
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 2).as("sum_value"))
-        .orderBy("tag")
-    }),
-    "q30_stragg" -> ((s, d) => {
-      // ordered string aggregation (LISTAGG): deterministic via sorted
-      // distinct set — one shuffle, tiny output
-      T(s, d, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          array_join(array_sort(collect_set(col("l_linestatus"))), ",").as("statuses"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
-    }),
-    "data_weighted" -> ((s, d) => {
-      // quality-weighted deterministic sampling: keep probability
-      // ∝ n_chars (md5-uniform u < weight) — retry-stable, no RNG state
-      val u = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long").cast("double") / lit(4294967296.0)
-      val w = least(lit(1.0), col("n_chars").cast("double") / lit(600.0))
-      TP(s, d, "documents").filter(u < w)
-        .select("doc_id", "n_chars")
-        .orderBy("doc_id")
-    }),
-    "data_topk_sample" -> ((s, d) => {
-      // exact-k deterministic uniform sample: global top-k by md5 order
-      // (TakeOrdered — per-partition heads then one merge, no full sort)
-      TP(s, d, "documents")
-        .select(col("doc_id"), md5(col("doc_id").cast("string")).as("h"))
-        .orderBy("h").limit(100)
-        .orderBy("doc_id")
-    }),
-    "data_overlap_sketch" -> ((s, d) => {
-      // KMV distinct-value sketches with SET ALGEBRA (Beyer et al.
-      // SIGMOD'07): which parts shipped in each of two overlapping
-      // one-month windows, union/overlap estimated by composing the two
-      // sketches — the cross-crawl overlap question. One scan, k longs
-      // per partition per side, NO co-shuffle of the key sets (the
-      // exact columns exist for the oracle; the estimate booleans are
-      // the driver-checked claim, q20_approx convention). At sf0.001
-      // both windows are under k → the sketch is the distinct hash set
-      // and the estimates are exact; at sf0.01/0.1 the estimator path
-      // runs. Bounds are 3σ for k=256 (σ≈1/√(k−2)≈6.3%; intersection
-      // compounds ρ and union error → 25%).
-      import graft.functions.SketchAggregates._
-      val k = 256
-      val aWin = col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1996-02-01").cast("timestamp")
-      val bWin = col("l_shipdate") >= lit("1996-01-15").cast("timestamp") &&
-        col("l_shipdate") < lit("1996-02-15").cast("timestamp")
-      val sk = T(s, d, "lineitem")
-        .filter(aWin || bWin)
-        .select(
-          kmvSketch(when(aWin, col("l_partkey")), k).as("ska"),
-          kmvSketch(when(bWin, col("l_partkey")), k).as("skb"),
-          countDistinct(when(aWin, col("l_partkey"))).as("exact_a"),
-          countDistinct(when(bWin, col("l_partkey"))).as("exact_b"),
-          countDistinct(col("l_partkey")).as("exact_union"))
-      def ok(est: Column, exact: Column, tol: Double): Column =
-        abs(est / exact.cast("double") - 1.0) <= tol
-      sk.select(
-          col("exact_a"), col("exact_b"), col("exact_union"),
-          (col("exact_a") + col("exact_b") - col("exact_union")).as("exact_overlap"),
-          ok(kmvEstimate(col("ska"), k), col("exact_a"), 0.19).as("est_a_ok"),
-          ok(kmvEstimate(col("skb"), k), col("exact_b"), 0.19).as("est_b_ok"),
-          ok(kmvEstimate(kmvUnion(col("ska"), col("skb"), k), k),
-            col("exact_union"), 0.19).as("est_union_ok"),
-          ok(kmvIntersectEstimate(col("ska"), col("skb"), k),
-            col("exact_a") + col("exact_b") - col("exact_union"), 0.25).as("est_overlap_ok"))
-    }),
-    "graph_pagerank_check" -> ((s, d) => {
-      // driver-checkable PageRank invariants (decimal ranks have no cheap
-      // DuckDB twin — replicating Spark's decimal-division rounding in
-      // another engine is exactly the nondeterminism PageRank here
-      // avoids): on a deterministic graph derived from customer,
-      // (a) node coverage is data-derived identically in both engines,
-      // (b) every rank is positive, (c) total mass ≤ 1 (dangling nodes
-      // leak, never create, mass), (d) a SECOND independent run returns
-      // bit-identical ranks — the replay-stability property the decimal
-      // arithmetic exists for (a double PageRank fails this).
-      val edges = T(s, d, "customer")
-        .select((col("c_custkey") % 25).as("src"), col("c_nationkey").cast("long").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      val pr1 = GraphOps.pageRank(edges, "src", "dst", iterations = 3)
-      val pr2 = GraphOps.pageRank(edges, "src", "dst", iterations = 3)
-      val drift = pr1.join(pr2, Seq("id", "rank"), "left_anti")
-        .agg(count(lit(1)).as("n_drift"))
-      pr1.agg(
-          count(lit(1)).as("n_nodes"),
-          bool_and(col("rank") > 0).as("all_positive"),
-          // ≤ 1 + rounding slack: each scale-18 HALF_UP division can round
-          // up by 5e-19, so total mass may exceed 1 by a few ULPs even
-          // though the dangling leak only ever removes mass
-          (sum(col("rank")) <= lit(BigDecimal("1.000000001")).cast("decimal(38,18)")).as("mass_bounded"))
-        .crossJoin(drift)
-        .select(col("n_nodes"), col("all_positive"), col("mass_bounded"),
-          (col("n_drift") === 0).as("replay_stable"))
-    }),
-    "write_metrics_check" -> ((s, d) => {
-      // observe-metrics write (row 90): the metrics the WRITE JOB itself
-      // reports (no second scan) must equal what the oracle computes from
-      // the table — n_rows and a decimal-exact price sum
-      val dir = java.nio.file.Files.createTempDirectory("graft-obs").toString
-      val m = WriteOps.writeWithMetrics(
-        T(s, d, "orders").select("o_orderkey", "o_totalprice"), dir,
-        "n_rows" -> count(lit(1)),
-        "sum_price" -> dsum(col("o_totalprice"), 2))
-      import s.implicits._
-      Seq((m("n_rows").asInstanceOf[Long], m("sum_price").asInstanceOf[Double]))
-        .toDF("n_rows", "sum_price")
-    }),
-    "write_compact_check" -> ((s, d) => {
-      // compaction write-layout invariant (row 79's second half): rewrite
-      // to exactly 3 round-robin files, no rows lost, every file within
-      // the maxRecordsPerFile cap — the small-file-problem remedy as a
-      // driver-checkable row
-      val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-      WriteOps.compact(T(s, d, "orders").select("o_orderkey", "o_totalprice"),
-        dir, numFiles = 3, maxRecordsPerFile = 1000000L)
-      s.read.parquet(dir)
-        .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
-        .agg(
-          count(lit(1)).as("n_files"),
-          sum("n").as("n_rows"),
-          bool_and(col("n") <= 1000000L).as("within_cap"))
-    }),
-    "write_zorder_check" -> ((s, d) => {
-      // driver-checkable z-order WRITE-LAYOUT invariant (the dedup_simhash
-      // _check pattern — the write itself has no DuckDB twin, but its
-      // data-skipping guarantee does): after zorderBy into 4 files, the
-      // per-file z-ranges must be pairwise DISJOINT (that disjointness IS
-      // the min/max pruning property readers skip files by) and no rows
-      // may be lost. The oracle states n_files/disjointness as constants
-      // and derives n_rows from the table.
-      val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-      val base = T(s, d, "part").select(
-        pmod(col("p_partkey"), lit(256)).cast("int").as("za"),
-        pmod(col("p_size"), lit(256)).cast("int").as("zb"))
-      WriteOps.zorderBy(base, "za", "zb", numFiles = 4, bits = 8)
-        .write.mode("overwrite").parquet(dir)
-      val perFile = s.read.parquet(dir)
-        .withColumn("z", WriteOps.interleaveBits(col("za"), col("zb"), 8))
-        .groupBy(input_file_name().as("f"))
-        .agg(min("z").as("zmin"), max("z").as("zmax"), count(lit(1)).as("n"))
-      // pairwise-disjoint via a tiny self-join on the ONE-ROW-PER-FILE
-      // frame (4 rows → broadcast NLJ) instead of a lead() over a global
-      // Window, which emitted the "moving all data to a single partition"
-      // warning into the driver-parsed log tail on every bench run
-      val a = perFile.select(col("f").as("af"), col("zmin").as("amin"), col("zmax").as("amax"))
-      val b = perFile.select(col("f").as("bf"), col("zmin").as("bmin"), col("zmax").as("bmax"))
-      val overlaps = a.join(b,
-          col("af") < col("bf") && col("amin") <= col("bmax") && col("bmin") <= col("amax"))
-        .agg(count(lit(1)).as("n_overlap"))
-      perFile.agg(count(lit(1)).as("n_files"), sum("n").as("n_rows"))
-        .crossJoin(overlaps) // 1-row × 1-row scalar attach
-        .select(col("n_files"), (col("n_overlap") === 0).as("ranges_disjoint"), col("n_rows"))
-    }),
-    "events_scd2" -> ((s, d) => {
-      // SCD2 history compression: per-user state intervals from an event
-      // log — change rows survive (lag filter), validity closes at the
-      // next change (lead after the filter). Two windows over one sort.
-      import org.apache.spark.sql.expressions.Window
-      val e = EV(s, d).filter(col("user_id") % 10 === 0)
-        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      val changes = e
-        .withColumn("prev", lag(col("event_type"), 1).over(w))
-        .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-      changes
-        .withColumn("valid_to", lead(col("ts_us"), 1).over(w))
-        .select(col("user_id"), col("event_type"), col("ts_us").as("valid_from"), col("valid_to"))
-        .orderBy("user_id", "valid_from")
-    }),
-    "events_funnel_conv" -> ((s, d) => {
-      // funnel conversion: first click → earliest purchase at-or-after
-      // it, per user. One tiny agg per stage + a key join — no window
-      // over the raw log, no cross product.
-      val e = EV(s, d)
-        .select(col("user_id"), col("ts_us"), col("event_type"))
-      val fc = e.filter(col("event_type") === "click")
-        .groupBy("user_id").agg(min("ts_us").as("first_click_us"))
-      // purchase side carries a renamed key: both frames descend from `e`,
-      // so fc("user_id") === p("user_id") resolves to the SAME attribute
-      // (trivially-true predicate + a WARN per run); distinct names make
-      // the equi-join unambiguous
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_uid"), col("ts_us").as("pts"))
-      fc.join(p, col("user_id") === col("p_uid") && col("pts") >= col("first_click_us"), "left")
-        .groupBy(col("user_id"), col("first_click_us"))
-        .agg(min("pts").as("first_purchase_us"))
-        .withColumn("converted", col("first_purchase_us").isNotNull)
-        .orderBy("user_id")
-    }),
-    "events_intervals" -> ((s, d) => {
-      // interval union per user (gaps-and-islands): each event opens a
-      // 10-minute activity window; overlapping windows collapse into
-      // maximal spans — one sort, two window passes, one aggregation
-      val iv = EV(s, d).filter(col("user_id") % 10 === 0)
-        .select(col("user_id"),
-          col("ts_us").as("s_us"),
-          (col("ts_us") + lit(600000000L)).as("e_us"))
-      IntervalOps.mergeIntervals(iv, "user_id", "s_us", "e_us")
-        .select(col("user_id"), col("island"), col("s").as("s_us"), col("e").as("e_us"), col("n"))
-        .orderBy("user_id", "island")
-    }),
-    "events_intervals_typed" -> ((s, d) => {
-      // typed-Dataset twin of events_intervals (SURVEY §2 row 94),
-      // driver-oracled against the SAME SQL: pins groupByKey/
-      // flatMapGroups + case-class Encoders result-identical to the
-      // window/Column form (previously only a ScalaTest cross-check)
-      import s.implicits._
-      implicit val sp: SparkSession = s
-      val iv = EV(s, d).filter(col("user_id") % 10 === 0)
-        .select(col("user_id").as("k"), col("ts_us").as("s"),
-          (col("ts_us") + lit(600000000L)).as("e"))
-        .as[IntervalOps.Interval]
-      IntervalOps.mergeIntervalsTyped(iv).toDF()
-        .select(col("k").as("user_id"), col("island"),
-          col("s").as("s_us"), col("e").as("e_us"), col("n"))
-        .orderBy("user_id", "island")
-    }),
-    "events_range_join" -> ((s, d) => {
-      // point-in-interval attribution via the bucketized range join (no
-      // cross product): 50 deterministic overlapping 21h windows stepped
-      // every 14h across the events month, built identically in DuckDB
-      val baseUs = 1704067200000000L // 2024-01-01T00:00:00Z
-      val stepUs = 50400000000L      // 14 h
-      val lenUs = 75600000000L       // 21 h
-      val iv = s.range(50).select(
-        col("id").as("interval_id"),
-        (lit(baseUs) + col("id") * stepUs).as("s_us"),
-        (lit(baseUs) + col("id") * stepUs + lenUs).as("e_us"))
-      val ev = EV(s, d).select(col("ts_us"), col("value"))
-      JoinOps.rangeJoin(ev, iv, Nil, "ts_us", "s_us", "e_us", bucketWidth = lenUs)
-        .groupBy("interval_id")
-        .agg(count(lit(1)).as("n_events"), dsum(col("value"), 2).as("sum_value"))
-        .orderBy("interval_id")
-    }),
-    "events_range_join_rule" -> ((s, d) => {
-      // the RangeJoinBucketing optimizer rule, driver-verified: this is
-      // the PLAIN inequality-join SQL (which Spark would nested-loop);
-      // the injected rule rewrites it to the bucketized equi-join at
-      // optimization time and the result must still hash-match the same
-      // DuckDB oracle as the hand-bucketized events_range_join. The conf
-      // stays set for the session: the rule's pattern guard makes it a
-      // no-op for every other query shape (incl. the manual rangeJoin,
-      // whose __graft_* bucket columns mark it already-bucketized).
-      if (!s.experimental.extraOptimizations.contains(graft.plans.RangeJoinBucketing))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.RangeJoinBucketing
-      s.conf.set(graft.plans.RangeJoinBucketing.WidthConf, "75600000000")
-      val baseUs = 1704067200000000L
-      val stepUs = 50400000000L
-      val lenUs = 75600000000L
-      s.range(50).select(
-        col("id").as("interval_id"),
-        (lit(baseUs) + col("id") * stepUs).as("s_us"),
-        (lit(baseUs) + col("id") * stepUs + lenUs).as("e_us"))
-        .createOrReplaceTempView("graft_rj_iv")
-      EV(s, d).select(col("ts_us"), col("value"))
-        .createOrReplaceTempView("graft_rj_ev")
-      s.sql("""SELECT interval_id, COUNT(*) AS n_events,
-              | CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS sum_value
-              |FROM graft_rj_iv JOIN graft_rj_ev ON ts_us >= s_us AND ts_us < e_us
-              |GROUP BY interval_id ORDER BY interval_id""".stripMargin)
-    }),
-    "asof_join" -> ((s, d) => {
-      val orders = T(s, d, "orders")
-        .withColumn("cutoff", col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .select("o_orderkey", "cutoff")
-      val line = T(s, d, "lineitem").select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"))
-      JoinOps
-        .asofBackward(orders, line, Seq("o_orderkey"), "cutoff", "l_shipdate",
-          Map("l_shipdate" -> "asof_shipdate"))
-        .select(col("o_orderkey"), unix_micros(col("asof_shipdate").cast("timestamp")).as("asof_us"))
-        .orderBy("o_orderkey")
-    }),
-    "asof_join_fwd" -> ((s, d) => {
-      // forward direction of the same as-of machinery: earliest shipment
-      // at-or-after the cutoff per order (DuckDB twin: MIN over >= join)
-      val orders = T(s, d, "orders")
-        .withColumn("cutoff", col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .select("o_orderkey", "cutoff")
-      val line = T(s, d, "lineitem").select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"))
-      JoinOps
-        .asofForward(orders, line, Seq("o_orderkey"), "cutoff", "l_shipdate",
-          Map("l_shipdate" -> "asof_shipdate"))
-        .select(col("o_orderkey"), unix_micros(col("asof_shipdate").cast("timestamp")).as("asof_us"))
-        .orderBy("o_orderkey")
-    }),
-    "asof_join_tol" -> ((s, d) => {
-      // merge_asof tolerance, driver-oracled: latest shipment ≤ cutoff is
-      // nulled when >30d before it — equivalently (backward direction ⇒
-      // monotone distance) the MAX over the [cutoff−30d, cutoff] window,
-      // which a plain SQL LEFT JOIN + MAX expresses exactly
-      val orders = T(s, d, "orders")
-        .withColumn("cutoff", col("o_orderdate") + expr("INTERVAL 90 DAYS"))
-        .select("o_orderkey", "cutoff")
-      val line = T(s, d, "lineitem").select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"))
-      JoinOps.asofJoin(orders, line, Seq("o_orderkey"), "cutoff", "l_shipdate",
-          Map("l_shipdate" -> "asof_shipdate"), forward = false, tolerance = Some(30L * 86400))
-        .select(col("o_orderkey"), unix_micros(col("asof_shipdate").cast("timestamp")).as("asof_us"))
-        .orderBy("o_orderkey")
-    }),
-    "asof_join_nearest" -> ((s, d) => {
-      // nearest as-of (pandas direction='nearest'): closest shipment to
-      // the cutoff in EITHER direction, ties → backward; composed from
-      // the two directional union+window passes — still two keyed
-      // shuffles, zero range cross-products
-      val orders = T(s, d, "orders")
-        .withColumn("cutoff", col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .select("o_orderkey", "cutoff")
-      val line = T(s, d, "lineitem").select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"))
-      JoinOps.asofNearest(orders, line, Seq("o_orderkey"), "cutoff", "l_shipdate",
-          Map("l_shipdate" -> "asof_shipdate"))
-        .select(col("o_orderkey"), unix_micros(col("asof_shipdate").cast("timestamp")).as("asof_us"))
-        .orderBy("o_orderkey")
-    }),
-    "events_retention" -> ((s, d) => {
-      // cohort retention matrix (cohort week × week offset → active
-      // fraction): two partial-agged aggregations + user-keyed join, the
-      // cohort-size table rides back small (AQE broadcast) — no
-      // self-join over the raw log, no window
-      val uw = EV(s, d)
-        .select(col("user_id"), expr("ts_us div 604800000000").as("week"))
-        .distinct()
-      val cohort = uw.groupBy("user_id").agg(min("week").as("cohort_week"))
-      val sizes = cohort.groupBy("cohort_week").agg(count(lit(1)).as("n_cohort"))
-      uw.join(cohort, "user_id")
-        .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
-        .agg(count(lit(1)).as("n_active"))
-        .join(sizes, "cohort_week")
-        .withColumn("retention", col("n_active").cast("double") / col("n_cohort").cast("double"))
-        .orderBy("cohort_week", "week_offset")
-    }),
-    "events_sessionize" -> ((s, d) => {
-      SessionOps
-        .sessionize(EV(s, d), "user_id", "ts", gapSeconds = 1800)
-        .orderBy("user_id", "session_idx")
-    }),
-    "events_window_agg" -> ((s, d) => {
-      EV(s, d)
-        .groupBy(unix_micros(date_trunc("hour", col("ts"))).as("hour_us"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value"), 2).as("sum_value"))
-        .orderBy("hour_us")
-    }),
-    "events_stream_join_twin" -> ((s, d) => {
-      // batch twin of StreamOps.streamStreamJoin — the SAME code path
-      // (batch analysis eliminates the watermark nodes), so the driver
-      // oracle pins the time-bounded join semantics and the streaming
-      // spec keeps the incremental/state side: purchases within 1 hour
-      // at-or-after a click by the same user
-      val e = EV(s, d)
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("purchase_ts"), col("event_id").as("purchase_id"))
-      StreamOps.streamStreamJoin(clicks, purchases, Seq("user_id"),
-          "click_ts", "purchase_ts", watermarkDelay = "10 minutes", maxDelay = "1 hour")
-        .select(col("user_id"), col("click_id"), col("purchase_id"),
-          unix_micros(col("click_ts")).as("click_us"),
-          unix_micros(col("purchase_ts")).as("purchase_us"))
-        .orderBy("user_id", "click_id", "purchase_id")
-    }),
-    "events_json" -> ((s, d) => {
-      EV(s, d)
-        .withColumn("k", regexp_extract(col("props"), "\"k\": ([0-9]+)", 1).cast("int"))
-        .groupBy("k")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("k")
-    }),
+  lazy val queries: Map[String, Query] = union(
+    Relational.queries, Events.queries, Data.queries, Text.queries, Dedup.queries,
+    Vectors.queries, Quality.queries, Graph.queries, Etl.queries,
+    Seq("_gate_meta" -> gateMeta))
 
-    // ----- ETL pipeline surface -----
-    "pipeline_sql" -> ((s, _) => {
-      val (p, _) = Pipeline.fromArgs(Seq(
-        "--source", "values:///?header=a:int,b&values=1,x;2,y;3,x",
-        "--transform",
-        "sql:///" + java.net.URLEncoder.encode(
-          "SELECT b, CAST(SUM(a) AS BIGINT) AS sum_a FROM source GROUP BY b ORDER BY b", "UTF-8")))
-      p.resultView(s, "sink")
-    }),
-    "pipeline_values" -> ((s, _) => {
-      // unnamed source defaults to view "source"; the implicit identity
-      // transform renames it to "sink" (reference ETL.run behavior)
-      val (p, _) = Pipeline.fromArgs(Seq(
-        "--source", "values:///?header=id:int,name,score:double&values=1,ada,9.5;2,bob,7.25"))
-      p.resultView(s, "sink").orderBy("id")
-    }),
-    "pipeline_sql_file" -> ((s, d) => {
-      val f = java.nio.file.Files.createTempFile("graft", ".sql")
-      java.nio.file.Files.writeString(
-        f, "SELECT l_returnflag, COUNT(*) AS n FROM source GROUP BY l_returnflag ORDER BY l_returnflag")
-      val (p, _) = Pipeline.fromArgs(Seq(
-        "--source", s"parquet://$d/lineitem.parquet",
-        "--transform", s"sql-file://$f"))
-      p.resultView(s, "sink")
-    }),
-    "pipeline_identity" -> ((s, d) => {
-      val (p, _) = Pipeline.fromArgs(Seq(
-        "--source", s"regions+parquet://$d/region.parquet",
-        "--transform", "regions+renamed+identity:///"))
-      p.resultView(s, "renamed").orderBy("r_regionkey")
-    }),
-    "pipeline_csv_roundtrip" -> ((s, d) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-csv").toString
-      val (write, _) = Pipeline.fromArgs(Seq(
-        "--source", s"parquet://$d/region.parquet",
-        "--transform", "source+sink+identity:///",
-        "--sink", s"text://$tmp/region.csv"))
-      write.run(s)
-      val (read, _) = Pipeline.fromArgs(Seq("--source", s"text://$tmp/region.csv"))
-      read.resultView(s, "source").orderBy("r_regionkey")
-    }),
-    "flatten_struct" -> ((s, d) => {
-      val nested = EV(s, d).select(
-        col("event_id"),
-        struct(col("event_type"), col("value"), struct(col("user_id")).as("u")).as("ev"))
-      FlattenOps.flatten(nested).orderBy("event_id")
-    }),
-    "flatten_explode" -> ((s, d) => {
-      val docs = T(s, d, "documents").select(TextFunctions.tokens(col("text")).as("token"))
-      FlattenOps
-        .flattenExplode(docs)
-        .groupBy("token")
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("token"))
-        .limit(20)
-    }),
-    "diff_tables" -> ((s, d) => {
-      val left = T(s, d, "orders")
-      val right = left
-        .filter(col("o_orderkey") % 97 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 100 === 0, col("o_totalprice") + 10).otherwise(col("o_totalprice")))
-        .withColumn("o_orderkey",
-          when(col("o_orderkey") % 500 === 0, col("o_orderkey") + 1000000).otherwise(col("o_orderkey")))
-      DiffOps
-        .onlyDifferences(DiffOps.diff(left, right, Seq("o_orderkey")))
-        .select("diff", "o_orderkey", "left_o_totalprice", "right_o_totalprice")
-        .orderBy("o_orderkey", "diff")
-    }),
-
-    "merge_upsert" -> ((s, d) => {
-      // CDC apply over orders: keys %100 get a price bump (update), keys
-      // %97 are tombstoned (delete), keys %500 re-insert under +2000000
-      // (insert); the merged snapshot is aggregated for a compact oracle
-      val base = T(s, d, "orders")
-      val mods = base
-        .filter(col("o_orderkey") % 100 === 0 || col("o_orderkey") % 97 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 10)
-        .withColumn("__delete", col("o_orderkey") % 97 === 0)
-      val inserts = base.filter(col("o_orderkey") % 500 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + 2000000)
-        .withColumn("__delete", lit(false))
-      DiffOps.merge(base, mods.unionByName(inserts), Seq("o_orderkey"), deleteCol = Some("__delete"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice"), 2).as("sum_price"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // ----- LLM-pipeline: dedup -----
-    "dedup_exact" -> ((s, d) => {
-      val docs = TP(s, d, "documents")
-      val doubled = docs.unionByName(docs.withColumn("doc_id", col("doc_id") + 1000000))
-      DedupOps.exact(doubled, "text", "doc_id").orderBy("keep_id")
-    }),
-    "dedup_minhash" -> ((s, d) => {
-      // SQL-oracled: banding recall at j≥0.7 with 32 bands × 3 rows is
-      // 1-(1-0.7³)^32 ≈ 1-1.4e-6 per pair, so the verified output equals
-      // the full quadratic Jaccard pair set the DuckDB oracle computes.
-      // rows=2 was too loose here: background 2-gram jaccard ≈ 0.1 made
-      // ~10% of ALL pairs candidates (measured 91s/1778s CPU at sf0.1)
-      DedupOps
-        .minhashDupPairs(TP(s, d, "documents"), "text", "doc_id", threshold = 0.7,
-          shingleSize = 2, numBands = 32, rowsPerBand = 3)
-        .orderBy("a_id", "b_id")
-    }),
-    "dedup_incremental" -> ((s, d) => {
-      // incremental dedup (daily-delta shape): base corpus (¾ of docs)
-      // indexed ONCE into bucketed band/sig tables, then the new batch
-      // (doc_id % 4 == 0) probed against the index — pairs touching at
-      // least one new doc. Same band params as dedup_minhash, so the
-      // verified output equals the quadratic oracle restricted to
-      // new×all (per-pair recall 1-(1-0.7³)^32 ≈ 1-1.4e-6).
-      val docs = TP(s, d, "documents")
-      val isNew = col("doc_id") % 4 === 0
-      val idx = IncrementalDedupOps.buildIndex(docs.filter(!isNew), "text", "doc_id",
-        prefix = "graft_inc_idx", numBuckets = 4, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      IncrementalDedupOps.probe(docs.filter(isNew), "text", "doc_id", idx, threshold = 0.7,
-          shingleSize = 2, numBands = 32, rowsPerBand = 3)
-        .orderBy("a_id", "b_id")
-    }),
-    "data_survivors" -> ((s, d) => {
-      // the apply side of dedup: verified minhash pairs → connected
-      // components → keep min-id per cluster → surviving rows. Output is
-      // the kept doc_ids, which the recursive-CTE oracle recomputes from
-      // the quadratic pair set.
-      val docs = TP(s, d, "documents")
-      val pairs = DedupOps.minhashDupPairs(docs, "text", "doc_id", threshold = 0.7,
-        shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      DedupOps.applyPairDedup(docs, "doc_id", pairs)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "data_survivors_quality" -> ((s, d) => {
-      // quality-preferred dedup apply: each cluster keeps its LONGEST
-      // member (token count, ties to min id) — the canonical-page rule.
-      // The oracle recomputes components and the argmax from scratch.
-      val docs = TP(s, d, "documents")
-      val pairs = DedupOps.minhashDupPairs(docs, "text", "doc_id", threshold = 0.7,
-        shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      DedupOps.applyPairDedupPreferring(docs, "doc_id", pairs,
-          score = TextFunctions.tokenCount(col("text")))
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "dedup_incremental_2day" -> ((s, d) => {
-      // two GENERATIONS of the daily job: day-1 batch probed then
-      // APPENDED to the index (bucket-spec-preserving), day-2 batch
-      // probed against base∪day1. The union of both probes must equal
-      // the quadratic pair set touching day1∪day2 — which fails if the
-      // append loses rows or breaks the band layout. base = doc_id%4∈
-      // {1,2}, day1 = %4==3, day2 = %4==0.
-      // r15 (guide §1.2/§2.6): day-1 was shingled twice (probe + append)
-      // — one eager signature pin now feeds both; and the base index
-      // build overlaps the day-1 signature job (independent chains).
-      // The probe→append→probe ordering itself is the contract under
-      // test and stays strictly sequential.
-      val docs = TP(s, d, "documents")
-      val m4 = col("doc_id") % 4
-      val (idx, day1Sh) = Par.concurrently(
-        IncrementalDedupOps.buildIndex(docs.filter(m4.isin(1, 2)), "text", "doc_id",
-          prefix = "graft_inc2_idx", numBuckets = 4, shingleSize = 2, numBands = 32,
-          rowsPerBand = 3),
-        docs.filter(m4 === 3)
-          .select(col("doc_id").as("id"),
-            DedupOps.hashedShingleSet(col("text"), 2).as("sh"))
-          .transform(Ckpt.eagerCkpt))
-      val pairs1 = IncrementalDedupOps.probeOf(day1Sh, idx, threshold = 0.7,
-        numBands = 32, rowsPerBand = 3)
-      // materialize day-1 pairs BEFORE the append mutates the index the
-      // lazy plan would re-read
-      val p1 = pairs1.transform(Ckpt.eagerCkpt)
-      IncrementalDedupOps.appendToIndexOf(day1Sh, idx,
-        numBuckets = 4, numBands = 32, rowsPerBand = 3)
-      val pairs2 = IncrementalDedupOps.probe(docs.filter(m4 === 0), "text", "doc_id", idx,
-        threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      p1.unionByName(pairs2).orderBy("a_id", "b_id")
-    }),
-    "dedup_simhash" -> ((s, d) => {
-      DedupOps
-        .simhashDupPairs(TP(s, d, "documents"), "text", "doc_id", maxHamming = 3)
-        .orderBy("a_id", "b_id")
-    }),
-    "dedup_ngram_jaccard" -> ((s, d) => {
-      // candidates from MinHash bands (no self-join, no skewed metadata
-      // block key), verified by exact 3-gram Jaccard ≥ 0.8; band recall
-      // 1-(1-0.8³)^16 ≈ 1-1e-5 per pair → output equals the quadratic
-      // Jaccard pair set the oracle computes
-      DedupOps
-        .minhashDupPairs(TP(s, d, "documents"), "text", "doc_id", threshold = 0.8,
-          shingleSize = 3, numBands = 16, rowsPerBand = 3)
-        .orderBy("a_id", "b_id")
-    }),
-    "dedup_containment" -> ((s, d) => {
-      // asymmetric doc-in-doc duplication: containment = |A∩B|/min sizes,
-      // rare-shingle inverted-index blocking (complete for any pair
-      // sharing a df≤20 shingle; the oracle replicates the same rule)
-      DedupOps.containmentPairs(TP(s, d, "documents"), "text", "doc_id",
-          threshold = 0.9, shingleSize = 3, maxDf = 20)
-        .orderBy("a_id", "b_id")
-    }),
-    "dedup_embedding" -> ((s, d) => {
-      // LSH-bucket blocking (no label/metadata dependence): near-parallel
-      // vectors keep identical hyperplane signs, so every cosine≥0.999
-      // pair lands in a shared bucket and the output equals the quadratic
-      // cosine pair set the oracle computes
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val scaled = vecs
-        .withColumn("vec_id", col("vec_id") + 100000)
-        .withColumn("vec", transform(col("vec"), x => x * 1.001))
-      SimilarityOps
-        .embeddingDupPairsLsh(vecs.unionByName(scaled), "vec_id", "vec", threshold = 0.999)
-        .orderBy("a_id", "b_id")
-    }),
-
-    "dedup_semantic" -> ((s, d) => {
-      // SemDeDup (cluster-then-prune): spherical-k-means cells, within-cell
-      // cosine ≥ τ pairs, keep the member FARTHER from its centroid (the
-      // paper's diversity rule). Dup structure is synthesized (embeddings
-      // are noise — natural max cosine ≈0.51): an index-shift perturbed
-      // copy of every vector at cosine ≈0.9987 vs τ=0.99. Oracle = the
-      // same prune rule replayed in DuckDB over the _aux_semantic_cells
-      // dump (cells/cent_sims aren't SQL-replicable — simhash precedent).
-      SimilarityOps.semanticDedup(semanticDedupInput(s, d), "vec_id", "vec",
-          nCells = 16, tau = 0.99)
-        .orderBy("id")
-    }),
-
-    "dedup_semantic_incr" -> ((s, d) => {
-      // incremental SemDeDup against a PERSISTED index (the daily-delta
-      // posture: the corpus is never rescanned): bootstrap a bucketed
-      // survivor-cells catalog table on the base split, then probe the
-      // delta under the index's frozen centroids. Fate labels: ANY
-      // same-cell index member at cos ≥ τ drops the delta row (the index
-      // is append-only — the keep-the-outlier preference is bootstrap-
-      // only), then the index-clean remainder self-prunes by the paper's
-      // rule. Oracle replays the whole sequential chain in DuckDB over
-      // the _aux_semantic_incr_cells dump.
-      val (base, delta) = semanticDedupIncrParts(s, d)
-      val idx = VectorIndexOps.buildSemDedupIndex(base, "vec_id", "vec",
-        "graft_sem_idx", nCells = 16, numBuckets = 8, tau = 0.99)
-      VectorIndexOps.probeSemDedupIndex(delta, "vec_id", "vec", idx,
-          update = false, numBuckets = 8)
-        .orderBy("id")
-    }),
-
-    "dedup_semantic_drift" -> ((s, d) => {
-      // the SemDeDup index drift monitor (the rebuild trigger for the
-      // frozen-centroid contract — rebuildSemDedupIndex is the escape
-      // hatch it arms): two staleness signals over the SAME side-tagged
-      // cells the incremental probe computes, (1) assignment-quality
-      // drift = base mean cent_sim − delta mean cent_sim (decimal-exact
-      // sums, one double division each, round 9), (2) cell-occupancy
-      // shift = integer-exact L1 distance between the two cell
-      // distributions in ppm of its [0,2] range (cross-multiplied
-      // BIGINT shares — the data_drift convention; cells missing on one
-      // side coalesce to 0). rebuild fires on literal thresholds both
-      // engines compare identically. Oracle replays the whole report
-      // over the _aux_semantic_incr_cells dump.
-      val cells = semanticDedupIncrCells(s, d)
-      val occ = cells.groupBy("cell").agg(
-        sum(when(col("side") === "base", 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("side") === "delta", 1L).otherwise(0L)).as("n_d"))
-      val totals = cells.groupBy().agg(
-        sum(when(col("side") === "base", 1L).otherwise(0L)).as("n_base"),
-        sum(when(col("side") === "delta", 1L).otherwise(0L)).as("n_delta"),
-        dsum(when(col("side") === "base", col("cent_sim")), 6).as("sum_b"),
-        dsum(when(col("side") === "delta", col("cent_sim")), 6).as("sum_d"))
-      occ.crossJoin(broadcast(totals))
-        .groupBy("n_base", "n_delta", "sum_b", "sum_d")
-        .agg(sum(abs(col("n_b").cast("decimal(38,0)") * col("n_delta")
-            - col("n_d").cast("decimal(38,0)") * col("n_base")))
-          .cast("decimal(38,0)").as("l1_num")) // Long products wrap at ~3e9 cells·side
-        .select(
-          col("n_base"), col("n_delta"),
-          round(col("sum_b") / col("n_base"), 9).as("base_mean_sim"),
-          round(col("sum_d") / col("n_delta"), 9).as("delta_mean_sim"),
-          round(col("sum_b") / col("n_base") - col("sum_d") / col("n_delta"), 9)
-            .as("sim_drift"),
-          expr("(l1_num * 1000000) div (cast(n_base as decimal(38,0)) * n_delta * 2)")
-            .as("occ_l1_ppm")) // whole ratio in 38-digit ints (oracle: HUGEINT)
-        .withColumn("rebuild",
-          abs(col("sim_drift")) > 0.005 || col("occ_l1_ppm") > 100000L)
-    }),
-    "vec_quantize" -> ((s, d) => {
-      // int8 scalar quantization of the embedding table (4× storage cut)
-      // + reconstruction error, both engines computing the identical
-      // arithmetic: per-vector min/max, codes = round((x-lo)·255/range),
-      // max |x − dequant(x)| per vector
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val q = vecs.withColumn("q", VectorFunctions.quantize8(col("vec")))
-      q.select(
-        col("vec_id"),
-        col("q.lo").as("lo"),
-        col("q.hi").as("hi"),
-        array_max(zip_with(col("vec"), VectorFunctions.dequantize8(col("q")),
-          (a, b) => abs(a - b))).as("max_abs_err"))
-        .orderBy("vec_id")
-    }),
-
-    // ----- LLM-pipeline: similarity search -----
-    "ann_bruteforce" -> ((s, d) => {
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      SimilarityOps
-        .bruteForceTopK(vecs, vecs.filter(col("vec_id") < 8), "vec_id", "vec", k = 5)
-        .orderBy("query_id", "rank")
-    }),
-    "ann_lsh" -> ((s, d) => {
-      // LSH result rows depend on the hash buckets (not SQL-replicable),
-      // so the DRIVER-checked output is the recall-vs-brute-force
-      // invariant as data: one row the DuckDB oracle states as constants.
-      // Exact top-k rows are exercised by the ScalaTest recall spec.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val queries = vecs.filter(col("vec_id") < 8)
-      val k = 5
-      val bf = SimilarityOps.bruteForceTopK(vecs, queries, "vec_id", "vec", k)
-        .select("query_id", "neighbor_id")
-      // Hamming-1 multi-probe at nBits=5/nTables=8: per-table hit prob
-      // rises p⁵ → p⁵+5p⁴(1-p), so FEWER tables than the old single-probe
-      // nTables=12 while recall clears 0.8 with margin (measured ≥0.9 at
-      // sf0.01/sf0.1, ≥0.97 at sf0.001, on this corpus's ~0.4-cosine
-      // neighbor geometry; the old setup measured 0.65-0.70 vs a 0.5 bar)
-      val lsh = SimilarityOps.lshTopK(vecs, queries, "vec_id", "vec", k,
-          nBits = 5, nTables = 8, multiProbe = true)
-        .select("query_id", "neighbor_id")
-      bf.join(lsh, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .select(
-          lit(8L).as("n_queries"),
-          (col("hits").cast("double") / (8 * k) >= 0.8).as("recall_ok"))
-    }),
-    "ann_ivf" -> ((s, d) => {
-      // IVF coarse-quantization ANN (the nProbe/nCells scan-fraction knob);
-      // like ann_lsh, driver-checked via the recall-vs-brute-force
-      // invariant; exact rows pinned by the ScalaTest recall spec.
-      // Round 5: √n adaptive sizing (ivfTopKAuto) replaced the fixed
-      // 16-cell index whose centroids were noisy at 500 vectors —
-      // measured recall@5 0.825/0.95/0.85 at sf0.001/0.01/0.1
-      // (deterministic), so the invariant rises 0.7 → 0.8
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val queries = vecs.filter(col("vec_id") < 8)
-      val k = 5
-      val bf = SimilarityOps.bruteForceTopK(vecs, queries, "vec_id", "vec", k)
-        .select("query_id", "neighbor_id")
-      val ivf = SimilarityOps.ivfTopKAuto(vecs, queries, "vec_id", "vec", k)
-        .select("query_id", "neighbor_id")
-      bf.join(ivf, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .select(
-          lit(8L).as("n_queries"),
-          (col("hits").cast("double") / (8 * k) >= 0.8).as("recall_ok"))
-    }),
-
-    // ----- LLM-pipeline: text analysis -----
-    // All text queries materialize (norm, tokens) ONCE as aliased columns
-    // in a staged select: an alias referenced more than once is not
-    // re-inlined by CollapseProject, so the regexp tokenizer runs once per
-    // row instead of once per use site and codegen classes stay small
-    // (round 1 inlined it up to ~10×/row).
-    "text_tokens" -> ((s, d) => {
-      TP(s, d, "documents")
-        .select(col("doc_id"), col("text"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), col("text"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(
-          col("doc_id"),
-          size(col("tk")).cast("long").as("n_ws"),
-          TextFunctions.bpeTokenCount(col("text")).cast("long").as("n_bpe"))
-        .orderBy("doc_id")
-    }),
-    "text_quality" -> ((s, d) => {
-      TP(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), col("norm"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(
-          col("doc_id"),
-          length(col("norm")).cast("long").as("n_chars_norm"),
-          TextFunctions.punctCountFromNorm(col("norm")).cast("long").as("punct_cnt"),
-          size(col("tk")).as("n_tok"),
-          TextFunctions.tokenHitsFromTokens(col("tk"), TextFunctions.allStopwords).as("stop_hits"))
-        .select(
-          col("doc_id"), col("n_chars_norm"), col("punct_cnt"),
-          TextFunctions.qualityScoreFrom(col("n_tok"), col("n_chars_norm"), col("punct_cnt"), col("stop_hits"))
-            .as("quality_score"))
-        .orderBy("doc_id")
-    }),
-    "text_langid" -> ((s, d) => {
-      val langs = Seq("en", "de", "es", "fr", "zh")
-      TP(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), array_distinct(TextFunctions.tokensFromNorm(col("norm"))).as("dtk"))
-        .select(
-          col("doc_id") +:
-            langs.map(l =>
-              TextFunctions.markerOverlapFromDistinct(col("dtk"), TextFunctions.stopwords(l))
-                .cast("long").as(s"s_$l")): _*)
-        .withColumn("lang_guess", TextFunctions.langIdFromScores(langs.map(l => l -> col(s"s_$l"))))
-        .orderBy("doc_id")
-    }),
-    "text_fingerprint" -> ((s, d) => {
-      TP(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), col("norm"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(
-          col("doc_id"),
-          md5(col("norm")).as("fp"),
-          array_min(transform(TextFunctions.shinglesFromTokens(col("tk"), 3), x => md5(x))).as("min_shingle_fp"))
-        .orderBy("doc_id")
-    }),
-    "text_shingles" -> ((s, d) => {
-      TP(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("tk"), 3).as("sh"))
-        .select(
-          col("doc_id"),
-          size(col("sh")).cast("long").as("n_shingles"),
-          size(array_distinct(col("sh"))).cast("long").as("n_distinct_shingles"))
-        .orderBy("doc_id")
-    }),
-
-    "text_repetition" -> ((s, d) => {
-      // Gopher-style repetition signal: duplicate word-2-gram fraction
-      TP(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(
-          col("doc_id"),
-          size(col("tk")).cast("long").as("n_tok"),
-          TextFunctions.repetitionRatioFromTokens(col("tk"), 2).as("rep_ratio"))
-        .orderBy("doc_id")
-    }),
-    "data_split" -> ((s, d) => {
-      // deterministic md5-bucket train/val/test split (12/2/2 of 16):
-      // same doc → same split on every run and engine — the property that
-      // prevents train↔test leakage across reprocessing at corpus scale
-      TP(s, d, "documents")
-        .select(
-          col("doc_id"),
-          TextFunctions.tokens(col("text")).as("tk"),
-          SplitOps.assignSplit(col("doc_id")).as("split"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"), sum(size(col("tk")).cast("long")).as("n_tokens"))
-        .orderBy("split")
-    }),
-    "vec_meanpool" -> ((s, d) => {
-      // chunk embeddings → document embedding by deterministic mean
-      // pooling (decimal-exact per-position sums → replay-stable vector);
-      // the oracle checks dim/count plus two sampled positions (array
-      // outputs don't hash portably — scalars do)
-      val pooled = SimilarityOps.meanPool(
-        TP(s, d, "embeddings").select(pmod(col("vec_id"), lit(50)).as("grp"), col("embedding")),
-        "grp", "embedding")
-      pooled.select(
-          col("grp"),
-          size(col("mean_vec")).cast("long").as("dim"),
-          col("n_vectors").as("n_chunks"),
-          element_at(col("mean_vec"), 1).as("v0"),
-          element_at(col("mean_vec"), 32).as("v31"))
-        .orderBy("grp")
-    }),
-    "data_packing" -> ((s, d) => {
-      // sequence-packing plan: concatenate-then-chop documents into
-      // 512-token context windows across 16 md5 shards — per-doc
-      // placement is one running sum per shard over a portable hash, so
-      // the training-batch layout reproduces in any engine; `div` (not
-      // double /) keeps window ids exact past 2^53 token offsets
-      val docs = TP(s, d, "documents")
-      PackingOps.packSequences(docs, "doc_id",
-          TextFunctions.tokenCount(col("text")), windowTokens = 512L,
-          shardCol = SplitOps.bucket16(col("doc_id")))
-        .orderBy("doc_id")
-    }),
-    "data_shuffle" -> ((s, d) => {
-      // deterministic training shuffle: seeded engine-portable global
-      // permutation (md5("42:"||doc_id) sort key, id tiebreak) — position
-      // computed bucket-parallel (no global window), so the batch order a
-      // training run sees reproduces on any engine from (seed, ids) alone
-      ExportOps.permutation(TP(s, d, "documents").select("doc_id"), "doc_id", seed = "42")
-        .select("doc_id", "pos")
-        .orderBy("pos")
-    }),
-    "data_shuffle_check" -> ((s, d) => {
-      // chunked-export write invariant (the write_compact_check pattern):
-      // after exportShuffled at 1000 rows/file, the re-read layout must
-      // show ceil(n/1000) chunks, one file per chunk, every chunk exactly
-      // the contiguous position range [chunk·1000+1, chunk·1000+n_k] —
-      // which pins the full permutation→file assignment, not just counts
-      val dir = java.nio.file.Files.createTempDirectory("graft-shuffle").toString
-      ExportOps.exportShuffled(TP(s, d, "documents").select("doc_id", "lang"),
-        "doc_id", seed = "42", dir, rowsPerFile = 1000L)
-      val back = s.read.parquet(dir)
-        .select(col("chunk").cast("long").as("chunk"), col("pos"), input_file_name().as("f"))
-      back.groupBy(col("chunk"))
-        .agg(count(lit(1)).as("n"), min("pos").as("minp"), max("pos").as("maxp"),
-          countDistinct(col("f")).as("nf"))
-        .agg(
-          count(lit(1)).as("n_files"),
-          sum("n").as("n_rows"),
-          bool_and(col("n") <= 1000L).as("within_cap"),
-          bool_and(col("minp") === col("chunk") * 1000L + 1 &&
-            col("maxp") === col("chunk") * 1000L + col("n")).as("ranges_contiguous"),
-          bool_and(col("nf") === 1).as("one_file_per_chunk"))
-    }),
-    "data_export_manifest_check" -> ((s, d) => {
-      // committed-snapshot invariant: after exportWithManifest, the
-      // distributed per-chunk manifest must agree row-for-row with the
-      // re-read data (count, position range, content fingerprint), the
-      // _COMMIT totals must agree with both, and the marker must exist —
-      // the atomic-publish contract a training reader relies on
-      val dir = java.nio.file.Files.createTempDirectory("graft-export").toString
-      ExportOps.exportWithManifest(TP(s, d, "documents").select("doc_id", "lang"),
-        "doc_id", seed = "42", dir, rowsPerFile = 1000L)
-      val markerPath = java.nio.file.Paths.get(dir, "_COMMIT")
-      val committed = java.nio.file.Files.exists(markerPath)
-      // the marker is one JSON line; Spark's FileIndex hides _-prefixed
-      // files (that hiding is WHY the marker can't be mistaken for data),
-      // so it is parsed driver-side
-      val marker = java.nio.file.Files.readString(markerPath)
-      def markerLong(key: String): Long =
-        s""""$key":(\\d+)""".r.findFirstMatchIn(marker).map(_.group(1).toLong).getOrElse(-1L)
-      val man = s.read.json(dir + "/manifest")
-        .select(col("chunk"), col("n").as("man_n"), col("min_pos").as("man_min"),
-          col("max_pos").as("man_max"), col("fp").as("man_fp"))
-      val re = ExportOps.chunkStats(s.read.parquet(dir + "/data"), "doc_id")
-      man.join(re, Seq("chunk"), "full_outer")
-        .agg(bool_and(col("man_n") === col("n") && col("man_min") === col("min_pos") &&
-          col("man_max") === col("max_pos") && col("man_fp") === col("fp")).as("mm"),
-          count(lit(1)).as("n_files"), sum("n").as("n_rows"))
-        .select(col("n_files"), col("n_rows"),
-          (col("mm") && col("n_files") === lit(markerLong("n_chunks")) &&
-            col("n_rows") === lit(markerLong("n_rows"))).as("manifest_matches"),
-          lit(committed).as("committed"))
-    }),
-    "text_postings" -> ((s, d) => {
-      // rare-3-gram inverted index (df ≤ 2): the blocking structure
-      // containment dedup / contamination tracing query; df filtered
-      // BEFORE collect_list so no boilerplate gram ever materializes a
-      // giant posting buffer
-      CorpusOps.rarePostings(TP(s, d, "documents"), "doc_id", "text", n = 3, maxDf = 2)
-        .orderBy("gram")
-    }),
-    "q34_unpivot" -> ((s, d) => {
-      // UNPIVOT / melt (the inverse of q16_pivot): wide metric columns →
-      // long (metric, value) rows — a pure per-row Expand projection, no
-      // shuffle except the final ORDER BY; metrics pre-cast to one type
-      // (unpivot requires it, and raw-value double casts are correctly
-      // rounded in both engines)
-      T(s, d, "lineitem").filter(col("l_orderkey") <= 100)
-        .select(col("l_orderkey"), col("l_linenumber").cast("int").as("l_linenumber"),
-          col("l_quantity").cast("double").as("quantity"),
-          col("l_extendedprice").cast("double").as("extendedprice"),
-          col("l_discount").cast("double").as("discount"))
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("quantity"), col("extendedprice"), col("discount")),
-          "metric", "value")
-        .orderBy("l_orderkey", "l_linenumber", "metric", "value")
-    }),
-    "q33_zscore" -> ((s, d) => {
-      // per-group z-score standardization: decimal-exact (n, Σx, Σx²)
-      // moments + one join back; the per-row standardization is a fixed
-      // IEEE expression mirrored token-for-token by the oracle
-      StatsOps.zscore(
-          T(s, d, "customer").filter(col("c_custkey") % 10 === 0)
-            .select("c_custkey", "c_mktsegment", "c_acctbal"),
-          Seq("c_mktsegment"), col("c_acctbal"))
-        .select("c_custkey", "c_mktsegment", "z")
-        .orderBy("c_custkey")
-    }),
-    "dedup_simhash_check" -> ((s, d) => {
-      // driver-checkable SimHash invariant (hamming over 64-bit xxhash
-      // signatures has no DuckDB twin, so the pair list itself stays
-      // rows-only): on a corpus where every doc is duplicated, every
-      // exact-dup pair MUST surface with hamming 0. n_exact_pairs is
-      // data-derived identically in both engines; all_covered pins the
-      // banding + bucket plumbing (a dropped bucket or band bug flips it)
-      val docs = TP(s, d, "documents")
-      val doubled = docs.unionByName(docs.withColumn("doc_id", col("doc_id") + 1000000))
-      val exact = DedupOps.exactDupPairs(doubled, "text", "doc_id")
-      val sims0 = DedupOps.simhashDupPairs(doubled, "text", "doc_id", maxHamming = 3)
-        .filter(col("hamming") === 0).select("a_id", "b_id")
-      val miss = exact.join(sims0, Seq("a_id", "b_id"), "left_anti")
-        .agg(count(lit(1)).as("n_missing"))
-      exact.agg(count(lit(1)).as("n_exact_pairs")).crossJoin(miss)
-        .select(col("n_exact_pairs"), (col("n_missing") === 0).as("all_covered"))
-    }),
-    "dedup_clusters" -> ((s, d) => {
-      // pair detection → duplicate CLUSTERS: connected components over
-      // the verified minhash pair set (same parameters as dedup_minhash);
-      // cluster_id = min member id = the canonical keeper
-      val pairs = DedupOps.minhashDupPairs(TP(s, d, "documents"), "text", "doc_id",
-        threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      GraphOps.connectedComponents(pairs, "a_id", "b_id").orderBy("id")
-    }),
-    "data_sample" -> ((s, d) => {
-      // deterministic 2/16 sample: a pure md5-bucket filter — stable under
-      // retries and reprocessing, reproducible in any engine (df.sample is
-      // partitioning-dependent and would never oracle-match)
-      SplitOps.deterministicSample(TP(s, d, "documents"), "doc_id", keepBuckets = 2)
-        .select(col("doc_id"), TextFunctions.tokenCount(col("text")).cast("long").as("n_tok"))
-        .orderBy("doc_id")
-    }),
-    "data_token_budget" -> ((s, d) => {
-      // per-language token budget: admit docs in seeded md5 order per
-      // lang until ~2000 tokens — mixture control in the unit training
-      // actually consumes (tokens, not rows)
-      SplitOps.tokenBudgetSample(TP(s, d, "documents"), "doc_id", "lang",
-          tokens = TextFunctions.tokenCount(col("text")), budget = 2000L, seed = "7")
-        .orderBy("doc_id")
-    }),
-    "data_contam_report" -> ((s, d) => {
-      // per-eval-item contamination audit: docs 0..127 are the eval
-      // set (a benchmark is FIXED-SIZE — it does not grow with the
-      // corpus, so the stand-in is an id prefix, not a modulo sample,
-      // keeping the broadcast input bounded by construction), the REST
-      // are training docs; for each eval item, count the
-      // training docs and distinct 8-grams leaking into it
-      val all = TP(s, d, "documents")
-      val isBench = col("doc_id") < 128
-      DecontamOps.contaminationReport(all.filter(!isBench), "text", "doc_id",
-          all.filter(isBench), "text", "doc_id", n = 8)
-        .orderBy("bench_id")
-    }),
-    "data_decontam" -> ((s, d) => {
-      // benchmark decontamination: docs 0..127 stand in for an eval
-      // set (fixed-size id prefix — bounded broadcast by construction); docs sharing any word 8-gram with it are contaminated
-      // (benchmark members trivially hit themselves — kept; the oracle
-      // computes the same). Bench shingles broadcast; corpus scans once.
-      val docs = TP(s, d, "documents")
-      val bench = docs.filter(col("doc_id") < 128).select(col("text"))
-      DecontamOps.contaminationHits(docs, "text", "doc_id", bench, "text", n = 8)
-        .orderBy("doc_id")
-    }),
-    "data_stratified" -> ((s, d) => {
-      // per-stratum deterministic downsampling (keep all purchases, 1/8
-      // of clicks, 1/16 of views, 1/4 of the rest) — the curation shape
-      // for rebalancing training mixtures, still a pure pushed filter
-      val sampled = SplitOps.stratifiedSample(EV(s, d), "event_id", "event_type",
-        Map("click" -> 2, "purchase" -> 16, "view" -> 1), defaultBuckets = 4)
-      sampled.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 2).as("sum_value"))
-        .orderBy("event_type")
-    }),
-    "text_topterms" -> ((s, d) => {
-      // most frequent non-stopword token per doc (integer-only tf ranking
-      // — no float idf, so the oracle matches bit-for-bit); the classic
-      // explode → groupBy wordcount shape with map-side combine
-      import org.apache.spark.sql.expressions.Window
-      val toks = TP(s, d, "documents")
-        .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("token"))
-        .filter(col("token") =!= "" && !col("token").isin(TextFunctions.allStopwords: _*))
-      val counts = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val w = Window.partitionBy("doc_id").orderBy(col("tf").desc, col("token").asc)
-      counts.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("doc_id"), col("token").as("top_term"), col("tf"))
-        .orderBy("doc_id")
-    }),
-    "text_vocab" -> ((s, d) => {
-      // corpus vocabulary: top-100 tokens by total tf with document
-      // frequency — two-level agg, no count-distinct Expand (distinct
-      // (doc, token) IS the first grouping level)
-      CorpusOps.vocabulary(TP(s, d, "documents"), "doc_id", "text", topV = 100)
-        .orderBy(col("tf").desc, col("token").asc)
-    }),
-    "text_tfidf" -> ((s, d) => {
-      // per-doc top tf-idf term: the distinct-token df table is unbounded
-      // at corpus scale, so it is NOT broadcast-hinted — AQE broadcasts
-      // when small, else shuffle join on token (skew-splittable); score =
-      // tf·N/df as ONE IEEE division on integer-exact inputs (log-free →
-      // bit-identical cross-engine, monotone in tf and 1/df)
-      CorpusOps.tfidfTopTerms(TP(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    "dedup_spans" -> ((s, d) => {
-      // substring-dedup approximation at 8-gram granularity (the Lee
-      // et al. duplicated-span signal): per doc, how many distinct
-      // 8-grams occur in ≥2 docs. df via two-level groupBy on the hash
-      // (map-side partial agg bounds hot boilerplate shingles) joined
-      // back without a hint so AQE can broadcast or skew-split
-      CorpusOps.duplicatedSpanStats(TP(s, d, "documents"), "doc_id", "text", n = 8)
-        .orderBy("doc_id")
-    }),
-    "text_clean" -> ((s, d) => {
-      // crawled-text cleanup: strip tags, decode entities, straighten
-      // curly punctuation, collapse whitespace — md5 pins the exact
-      // cleaned string against the DuckDB twin
-      val cleaned = TextFunctions.cleanHtml(col("text"))
-      TP(s, d, "documents")
-        .select(col("doc_id"), length(cleaned).as("clean_chars"), md5(cleaned).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-    "data_funnel" -> ((s, d) => {
-      // curation filter funnel: first-failing-rule attribution, the
-      // drop-reason report every pipeline run ships with
-      CorpusOps.filterFunnel(TP(s, d, "documents"), Seq(
-          "too_short" -> (size(TextFunctions.tokens(col("text"))) < 20),
-          "too_long" -> (col("n_chars") > 450),
-          "non_english" -> (col("lang") =!= "en")))
-        .orderBy("verdict")
-    }),
-    "data_mixture" -> ((s, d) => {
-      // rebalance to a target language mixture: binding stratum caps the
-      // output (fr here — its rate lands exactly 1.0, exercising the
-      // thr≥65536 keep-all edge); per-lang kept counts are the output
-      val kept = SplitOps.mixtureSample(TP(s, d, "documents"), "doc_id", "lang",
-        Map("en" -> 0.5, "de" -> 0.2, "fr" -> 0.2, "zh" -> 0.1))
-      kept.groupBy("lang").agg(count(lit(1)).as("n_kept")).orderBy("lang")
-    }),
-    "data_domain_cap" -> ((s, d) => {
-      // per-domain document cap (web-crawl "max N docs per domain"):
-      // two-phase top-k — per-(domain, salt) local cap bounds the final
-      // per-domain reducer input to saltBuckets·k rows under any skew
-      CorpusOps.capPerKey(
-          TP(s, d, "documents").select("doc_id", "source", "n_chars"),
-          "source", Seq(col("n_chars").desc, col("doc_id").asc), k = 20, rankCol = Some("rn"))
-        .orderBy("source", "rn")
-    }),
-    "text_chunks" -> ((s, d) => {
-      // LLM pre-training chunking: 32-token windows, 8-token overlap
-      TP(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(col("doc_id"), explode(TextFunctions.chunkTokens(col("tk"), 32, 8)).as("c"))
-        .select(
-          col("doc_id"),
-          col("c.chunk_idx").as("chunk_idx"),
-          col("c.n_tokens").as("n_tokens"),
-          md5(col("c.chunk_text")).as("chunk_hash"))
-        .orderBy("doc_id", "chunk_idx")
-    }),
-    "text_pii_report" -> ((s, d) => {
-      // corpus-level PII audit: per language — docs scanned, docs with
-      // any PII span, spans by type. The compliance summary a release
-      // review asks for (per-doc detail is text_pii). PII is injected
-      // deterministically into a doc_id-derived subset so the counts
-      // vary and both engines agree.
-      val aug0 = when(col("doc_id") % 3 === 0,
-        concat(col("text"), lit(" contact-"), col("doc_id").cast("string"), lit("@example.com")))
-        .otherwise(col("text"))
-      val aug = when(col("doc_id") % 5 === 0, concat(aug0, lit(" ref 9876543210"))).otherwise(aug0)
-      TP(s, d, "documents")
-        .select(col("lang"), TextFunctions.piiCounts(aug).as("pc"))
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("pc.emails") + col("pc.urls") + col("pc.long_numbers") > 0, 1L)
-            .otherwise(0L)).as("docs_with_pii"),
-          sum(col("pc.emails")).as("n_emails"),
-          sum(col("pc.urls")).as("n_urls"),
-          sum(col("pc.long_numbers")).as("n_long_nums"))
-        .orderBy("lang")
-    }),
-    "text_pii" -> ((s, d) => {
-      // the corpus has no natural PII, so augment each doc with
-      // deterministic doc_id-derived spans — both engines compute the
-      // same augmented text, making the scrub/count oracle substantive
-      val aug = concat(
-        col("text"), lit(" contact-"), col("doc_id").cast("string"),
-        lit("@example.com see https://ex.org/d/"), col("doc_id").cast("string"),
-        lit(" ref 9876543210"))
-      TP(s, d, "documents")
-        .select(col("doc_id"), aug.as("t2"))
-        .select(
-          col("doc_id"),
-          TextFunctions.piiCounts(col("t2")).as("pc"),
-          md5(TextFunctions.scrubPii(col("t2"))).as("scrub_hash"))
-        .select(
-          col("doc_id"),
-          col("pc.emails").as("n_emails"),
-          col("pc.urls").as("n_urls"),
-          col("pc.long_numbers").as("n_long_nums"),
-          col("scrub_hash"))
-        .orderBy("doc_id")
-    }),
-
-    "pipeline_curation" -> ((s, d) => {
-      // the engine's purpose in one verified flow: exact-dedup keep-first
-      // → benchmark decontamination → quality filter → deterministic
-      // split → chunk counting. Every stage is the already-oracled
-      // operator; the composition itself is what this query pins.
-      val docs = TP(s, d, "documents")
-      val deduped = DedupOps.exactKeepFirst(docs, "text", "doc_id")
-      val bench = docs.filter(col("doc_id") < 128).select(col("text"))
-      val clean = DecontamOps.decontaminated(deduped, "text", "doc_id", bench, "text", n = 8)
-      val scored = clean
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), col("norm"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(col("doc_id"), col("tk"),
-          TextFunctions.qualityScoreFrom(
-            size(col("tk")), length(col("norm")),
-            TextFunctions.punctCountFromNorm(col("norm")),
-            TextFunctions.tokenHitsFromTokens(col("tk"), TextFunctions.allStopwords)).as("q"))
-        .filter(col("q") >= 0.5)
-      scored
-        .withColumn("split", SplitOps.assignSplit(col("doc_id")))
-        .withColumn("n_chunks", size(TextFunctions.chunkTokens(col("tk"), 32, 8)).cast("long"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(col("tk")).cast("long")).as("n_tokens"),
-          sum(col("n_chunks")).as("n_chunks"))
-        .orderBy("split")
-    }),
-
-    "text_line_dedup" -> ((s, d) => {
-      // CCNet-style boilerplate removal: this corpus has no newline
-      // structure, so the "line" unit is a non-overlapping 3-token
-      // segment; segments occurring in >2 distinct docs (shared spans of
-      // near-dup classes, frequent trigrams) are dropped corpus-wide
-      // staged projections: norm → tokens → segments, so the regex
-      // tokenizer runs once per row instead of once per slice reference
-      // (segmentsFromTokens references its token array ~n_seg times;
-      // CollapseProject keeps multiply-referenced aliases materialized)
-      val segs = TP(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(col("doc_id"), TextFunctions.segmentsFromTokens(col("tk"), 3).as("segs"))
-      CorpusOps.removeBoilerplateSegments(segs, "doc_id", "segs", maxDf = 2)
-        .orderBy("doc_id")
-    }),
-    "text_para_dedup" -> ((s, d) => {
-      // within-document repeated-segment removal (keep-first) — a pure
-      // projection, zero shuffles at any corpus size
-      TP(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(col("doc_id"), TextFunctions.segmentsFromTokens(col("tk"), 2).as("segs"))
-        .select(col("doc_id"), col("segs"), TextFunctions.dedupSegments(col("segs")).as("kept"))
-        .select(
-          col("doc_id"),
-          concat_ws(" ", col("kept")).as("clean_text"),
-          size(col("segs")).cast("long").as("n_seg"),
-          size(col("kept")).cast("long").as("n_kept"))
-        .orderBy("doc_id")
-    }),
-    "data_decontam_ngram" -> ((s, d) => {
-      // fractional n-gram-overlap contamination (GPT-3/PaLM-style):
-      // benchmark = docs 0..63 (fixed-size id prefix); flag corpus docs sharing ≥50% of an
-      // item's distinct 5-grams (the item itself scores 1.0 — that IS
-      // the verbatim-inclusion signal)
-      val docs = TP(s, d, "documents")
-      val bench = docs.filter(col("doc_id") < 64).select(col("doc_id").as("bid"), col("text"))
-      DecontamOps.ngramContamination(docs, "text", "doc_id", bench, "text", "bid",
-          n = 5, minOverlap = 0.5)
-        .orderBy("doc_id", "bench_id")
-    }),
-    "quality_calibrate" -> ((s, d) => {
-      // per-source percent_rank of the quality score: "keep the top 20%"
-      // applied uniformly across sources with different score profiles
-      val scored = TP(s, d, "documents")
-        .select(col("doc_id"), col("source"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), col("source"), col("norm"),
-          TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(col("doc_id"), col("source"),
-          TextFunctions.qualityScoreFrom(
-            size(col("tk")), length(col("norm")),
-            TextFunctions.punctCountFromNorm(col("norm")),
-            TextFunctions.tokenHitsFromTokens(col("tk"), TextFunctions.allStopwords))
-            .as("quality_score"))
-        // EAGER (r15): the calibrate core consumes this 3× (band agg,
-        // rank join, totals) with concurrent stages — unpinned, the
-        // tokenize+score scan ran per consumer; the pinned frame is 3
-        // narrow columns, not the corpus
-        .transform(Ckpt.eagerCkpt)
-      CorpusOps.calibrateByKey(scored, "source", "quality_score", "doc_id")
-        .withColumn("kept", (col("pct_rank") >= 0.8).cast("int"))
-        .orderBy("doc_id")
-    }),
-    "text_bm25" -> ((s, d) => {
-      // corpus search: top-20 BM25 matches for a 3-term query (log-free
-      // odds-ratio idf, decimal-summed contributions — replay-stable)
-      CorpusOps.bm25TopK(TP(s, d, "documents"), "doc_id", "text",
-        Seq("merge", "join", "window"), k = 20)
-    }),
-
-    "data_quarantine" -> ((s, d) => {
-      // apply side of data_funnel: every row leaves with an attributed
-      // verdict (first failing rule or "kept") — the DQ-gate routing
-      // column a quarantine sink filters on
-      CorpusOps.quarantineTag(
-          TP(s, d, "documents")
-            .select(col("doc_id"), col("lang"), col("n_chars"),
-              TextFunctions.tokens(col("text")).as("tk")),
-          Seq(
-            "too_short" -> (size(col("tk")) < 20),
-            "too_long" -> (col("n_chars") > 450),
-            "non_english" -> (col("lang") =!= "en")))
-        .select("doc_id", "verdict")
-        .orderBy("doc_id")
-    }),
-    "vec_hash_features" -> ((s, d) => {
-      // hashing-trick featurization: 16-dim sparse COO vectors with no
-      // vocabulary state (md5-bucketed, engine-portable)
-      CorpusOps.hashedFeatures(TP(s, d, "documents"), "doc_id", "text", dim = 16)
-        .orderBy("doc_id", "bucket")
-    }),
-    "write_partition_overwrite_check" -> ((s, d) => {
-      // idempotent daily-rerun invariant: write events partitioned by a
-      // derived day, then dynamically overwrite ONE day with a corrected
-      // subset — the other days' rows must survive byte-for-byte and the
-      // replaced day must hold exactly the corrected batch
-      val dir = java.nio.file.Files.createTempDirectory("graft-dynpart").toString
-      val base = EV(s, d).filter(col("user_id") % 10 === 0)
-        .select(col("event_id"), col("user_id"), pmod(col("event_id"), lit(5)).cast("int").as("day"))
-      WriteOps.overwritePartitions(base, dir, Seq("day"))
-      val corrected = base.filter(col("day") === 2 && col("user_id") % 3 === 0)
-      WriteOps.overwritePartitions(corrected, dir, Seq("day"))
-      s.read.parquet(dir)
-        .agg(
-          countDistinct(col("day")).as("n_parts"),
-          sum(when(col("day") === 2, 1L).otherwise(0L)).as("rows_replaced"),
-          sum(when(col("day") =!= 2, 1L).otherwise(0L)).as("rows_other"))
-    }),
-
-    "events_sketch_union" -> ((s, d) => {
-      // mergeable-sketch invariant: build the per-day HLL sketch table a
-      // daily job would persist, then check (a) each day's estimate and
-      // (b) the MERGED all-days estimate — computed from sketch rows
-      // alone, no raw re-scan — against exact distincts within the
-      // sketch's error bound (lgK=12 ⇒ ~1.6% rsd; 5%+1 margin)
-      val ev = EV(s, d)
-        .select(pmod(col("event_id"), lit(7)).cast("int").as("day"), col("user_id"))
-      val sk = StatsOps.distinctSketches(ev, "day", "user_id")
-      val perDay = sk.withColumn("est", hll_sketch_estimate(col("sketch")))
-      val exactDay = ev.groupBy("day").agg(countDistinct(col("user_id")).as("exact"))
-      val dayOk = perDay.join(exactDay, "day")
-        .agg(
-          count(lit(1)).as("n_days"),
-          bool_and(abs(col("est") - col("exact")) <= col("exact") * 0.05 + lit(1)).as("days_ok"))
-      val total = StatsOps.unionDistinctEstimate(sk)
-      val exactTotal = ev.agg(countDistinct(col("user_id")).as("exact_total"))
-      dayOk.crossJoin(broadcast(total)).crossJoin(broadcast(exactTotal))
-        .select(
-          col("n_days"), col("exact_total"),
-          (abs(col("est_distinct") - col("exact_total")) <= col("exact_total") * 0.05 + lit(1))
-            .as("total_ok"),
-          col("days_ok"))
-    }),
-
-    "dedup_bloom_probe" -> ((s, d) => {
-      // membership fast path: build the Bloom index a daily job would
-      // persist over the kept docs' content hashes, then probe a batch
-      // of half members / half absent hashes — every verdict is
-      // engine-portable (md5-derived bits), so the oracle replays the
-      // exact filter; the spec additionally pins zero false negatives
-      val docs = TP(s, d, "documents")
-      val members = docs.filter(col("doc_id") % 3 === 0).select(md5(col("text")).as("h"))
-      val index = BloomOps.bloomIndex(members, "h", k = 7, bitsPerValue = 16)
-      val probes = docs.filter(col("doc_id") % 3 <= 1)
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 0, md5(col("text")))
-            .otherwise(md5(concat(col("text"), lit("::absent")))).as("h"),
-          (col("doc_id") % 3 === 0).cast("int").as("is_member"))
-      BloomOps.bloomProbe(index, probes, "doc_id", "h", k = 7)
-        .join(probes.select("doc_id", "is_member"), "doc_id")
-        .select("doc_id", "is_member", "might_contain")
-        .orderBy("doc_id")
-    }),
-
-    "text_ngram_topk" -> ((s, d) => {
-      // boilerplate/watermark miner: the 25 most repeated exact 3-grams
-      // across the corpus with occurrence + doc-frequency counts
-      CorpusOps.ngramTopK(TP(s, d, "documents"), "doc_id", "text", n = 3, k = 25)
-    }),
-    "data_drift" -> ((s, d) => {
-      // distribution-drift monitor: top token movers between the en and
-      // de slices, ordered by integer cross-multiplied |Δfreq| (no float
-      // division anywhere — bit-identical on any engine)
-      // ordering happens on the exact DECIMAL inside tokenDrift; only
-      // the OUTPUT column goes through the string→double idiom (the
-      // q1_agg convention for decimal/engine-numeric alignment)
-      DriftOps.tokenDrift(TP(s, d, "documents"), "text", "lang",
-        ref = "en", cur = "de", topK = 20)
-        .withColumn("delta_scaled", col("delta_scaled").cast("string").cast("double"))
-    }),
-    "quality_model_score" -> ((s, d) => {
-      // linear quality-model inference over hashed features: exact
-      // integer milli-scores from md5-derived weights, sign-threshold
-      // verdict — the apply side of a fastText-style filter
-      CorpusOps.linearModelScore(TP(s, d, "documents"), "doc_id", "text", dim = 64)
-        .orderBy("doc_id")
-    }),
-    "corpus_overlap_est" -> ((s, d) => {
-      // corpus-overlap audit: mergeable per-slice MinHash signatures →
-      // pairwise Jaccard estimates, checked inline against the exact
-      // token-set Jaccard (est is md5-deterministic, so the oracle
-      // replays it bit-for-bit; ok bounds the sampling error at k=200)
-      DriftOps.overlapEstimates(
-        TP(s, d, "documents").filter(col("lang").isin("en", "de", "fr", "es")),
-        "text", "lang", k = 200, bound = 0.15)
-    }),
-    "text_hybrid_retrieval" -> ((s, d) => {
-      // hybrid retrieval: BM25 top-20 ⊕ embedding-cosine top-20 fused
-      // by reciprocal rank (c=60) — rank-based, so lexical and vector
-      // scores need no cross-calibration; fusion cost is depth-bounded
-      val bm25 = CorpusOps.bm25TopK(TP(s, d, "documents"), "doc_id", "text",
-        Seq("merge", "join", "window"), k = 20)
-      val bmRanks = CorpusOps.rankFromScore(bm25, "doc_id", "score")
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val vecRanks = SimilarityOps
-        .bruteForceTopK(vecs, vecs.filter(col("vec_id") === 0), "vec_id", "vec", k = 20)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      CorpusOps.rrfFuse(Seq(bmRanks, vecRanks), "doc_id", "rank", k = 15)
-    }),
-    "events_agg_maint" -> ((s, d) => {
-      // incremental aggregate maintenance: fold day-5 and day-6 deltas
-      // into the day-0..4 state table (full-outer merge of mergeable
-      // components) — the oracle recomputes from ALL raw days, so hash
-      // equality proves state-fold ≡ full rescan
-      val ev = EV(s, d)
-        .select(col("user_id"), col("value"), pmod(col("event_id"), lit(7)).cast("int").as("day"))
-      val base = MaintOps.aggState(ev.filter(col("day") <= 4), Seq("user_id"), "value")
-      val d5 = MaintOps.aggState(ev.filter(col("day") === 5), Seq("user_id"), "value")
-      val d6 = MaintOps.aggState(ev.filter(col("day") === 6), Seq("user_id"), "value")
-      val st = MaintOps.mergeState(MaintOps.mergeState(base, d5, Seq("user_id")), d6, Seq("user_id"))
-      st.select(col("user_id"), col("cnt"),
-          col("sum_v").cast("string").cast("double").as("sum_v"),
-          col("min_v"), col("max_v"))
-        .orderBy("user_id")
-    }),
-    "q36_groupingsets" -> ((s, d) => {
-      // GROUPING SETS: the asymmetric subset cube/rollup can't express —
-      // (status, priority), (status), and grand total, one Expand pass
-      T(s, d, "orders")
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus"), col("o_orderpriority")),
-            Seq(col("o_orderstatus")), Seq()),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(grouping_id().as("gid"), count(lit(1)).as("n"),
-          dsum(col("o_totalprice"), 2).as("sum_price"))
-        .orderBy(col("gid"), col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)
-    }),
-    "data_winsorize" -> ((s, d) => {
-      // outlier clipping: per-status [p5, p95] winsorization — rows kept,
-      // leverage bounded; quantiles from one exact-percentile agg
-      StatsOps.winsorizeByKey(T(s, d, "orders"), "o_orderstatus", "o_totalprice", 0.05, 0.95)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("v_w"))
-        .orderBy("o_orderkey")
-    }),
-    "data_diversity_sample" -> ((s, d) => {
-      // cluster-balanced subsample: ≤3 vectors per sign-pattern cell
-      // (2^5 cells over the first 5 dims), seeded md5 order — keeps
-      // regions, not density; cap rides map-side WindowGroupLimit
-      SimilarityOps.diversitySample(TP(s, d, "embeddings"), "vec_id", "embedding",
-          signDims = 5, perBucket = 3, seed = "42")
-        .orderBy("bucket", "rank")
-    }),
-    "vec_project" -> ((s, d) => {
-      // Rademacher random projection 64 → 4 dims: md5-signed sums,
-      // decimal-stable components — deterministic on any engine
-      SimilarityOps.randomProjection(TP(s, d, "embeddings"), "vec_id", "embedding",
-          dim = 64, outDims = 4, seed = "rp")
-        .orderBy("vec_id", "j")
-    }),
-    "data_padding_waste" -> ((s, d) => {
-      // pad-vs-pack accounting: token-length buckets (step 32, context
-      // 256), per-bucket padded slots / waste / naive-padding waste
-      PackingOps.paddingWaste(
-        TP(s, d, "documents")
-          .select(size(TextFunctions.tokens(col("text"))).as("n_tok")),
-        "n_tok", contextLen = 256, step = 32)
-    }),
-    "data_curriculum" -> ((s, d) => {
-      // curriculum staging: per-lang calibrated quality percentile →
-      // 3 stages (low→high), deterministic within-stage order key —
-      // the schedule a staged training run consumes
-      val scored = TP(s, d, "documents")
-        .select(col("doc_id"), col("lang"), TextFunctions.normText(col("text")).as("norm"))
-        .select(col("doc_id"), col("lang"), col("norm"),
-          TextFunctions.tokensFromNorm(col("norm")).as("tk"))
-        .select(col("doc_id"), col("lang"),
-          TextFunctions.qualityScoreFrom(
-            size(col("tk")), length(col("norm")),
-            TextFunctions.punctCountFromNorm(col("norm")),
-            TextFunctions.tokenHitsFromTokens(col("tk"), TextFunctions.allStopwords))
-            .as("quality_score"))
-        // EAGER (r15): same rationale as quality_calibrate — 3 calibrate
-        // consumers, 3 narrow columns pinned, tokenization runs once
-        .transform(Ckpt.eagerCkpt)
-      CorpusOps.calibrateByKey(scored, "lang", "quality_score", "doc_id")
-        .withColumn("stage", least(floor(col("pct_rank") * 3), lit(2L)).cast("int"))
-        .withColumn("sort_key", md5(concat_ws(":", lit("cur"), col("doc_id").cast("string"))))
-        .select("doc_id", "lang", "stage", "sort_key")
-        .orderBy("stage", "sort_key", "doc_id")
-    }),
-    "q35_mad" -> ((s, d) => {
-      // robust spread: per-status median absolute deviation (two exact
-      // percentile passes; the outlier gate stddev can't provide)
-      StatsOps.madByKey(Par.spread(T(s, d, "orders").select("o_orderstatus", "o_totalprice")),
-          "o_orderstatus", "o_totalprice")
-        .orderBy("o_orderstatus")
-    }),
-
-    // ----- LLM-pipeline: multimodal plumbing -----
-    "multimodal_features" -> ((s, d) => {
-      val withBin = T(s, d, "documents").select(col("doc_id"), encode(col("text"), "UTF-8").as("bin"))
-      MultimodalOps
-        .fakeDecodeMeta(withBin, "bin")
-        .select(
-          col("doc_id"),
-          length(col("bin")).cast("long").as("byte_len"),
-          col("media_meta.width").as("width"),
-          col("media_meta.height").as("height"),
-          col("media_meta.n_frames").as("n_frames"),
-          md5(col("bin")).as("content_hash"))
-        .orderBy("doc_id")
-    }),
-
-    "multimodal_framesample" -> ((s, d) => {
-      // video-style frame sampling over opaque binary payloads: the
-      // decode runs PARTITION-LOCAL via mapPartitions (the real-codec
-      // shape — MultimodalOps.decodeKernel is the documented env stub),
-      // every stride-th frame index expands in-row, per-frame features
-      // are deterministic signatures, and the binary column is projected
-      // out BEFORE the only shuffle (final ORDER BY moves ids+sigs only)
-      val withBin = T(s, d, "documents")
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("bin"))
-      val dec = MultimodalOps.decodePartitionLocal(withBin, "bin")
-      MultimodalOps.frameSamplePlan(dec, stride = 4)
-        .select(col("doc_id"), length(col("bin")).cast("long").as("bl"),
-          explode(col("sampled_frames")).as("frame_idx"))
-        .select(col("doc_id"), col("frame_idx").cast("bigint").as("frame_idx"),
-          md5(concat_ws(":", col("bl"), col("frame_idx"))).as("frame_sig"))
-        .orderBy("doc_id", "frame_idx")
-    }),
-
-    // ----- events: hopping windows, debounce, co-occurrence, mode -----
-    "events_hopping" -> ((s, d) => {
-      // sliding/hopping window (width 600s, slide 300s): each event lands
-      // in width/slide = 2 windows; Spark's window() generator is a
-      // projection (2 rows per event), then one map-side-combined groupBy
-      EV(s, d)
-        .groupBy(window(col("ts"), "600 seconds", "300 seconds").as("w"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value"), 2).as("sum_value"))
-        .select(col("w.start").cast("long").as("window_start_s"),
-          col("n_events"), col("sum_value"))
-        .orderBy("window_start_s")
-    }),
-    "events_debounce" -> ((s, d) => {
-      // throttle repeated signals: keep an event only if the PREVIOUS
-      // event of the same (user, type) is more than 2 days older (or
-      // absent). One lag window per key; integer-µs math, no float time.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id", "event_type")
-        .orderBy(col("ts").asc, col("event_id").asc)
-      EV(s, d)
-        .withColumn("us", col("ts_us"))
-        .withColumn("prev_us", lag(col("us"), 1).over(w))
-        .filter(col("prev_us").isNull || col("us") - col("prev_us") > lit(172800000000L))
-        .select("event_id")
-        .orderBy("event_id")
-    }),
-    "events_cooccurrence" -> ((s, d) => {
-      // event-type co-occurrence: for each unordered type pair, how many
-      // users emit BOTH. collect_set per user is bounded by the type
-      // domain (small by nature); pair expansion is an in-row HOF over
-      // that set — no distinct×distinct self-join, one groupBy each side.
-      val pairs = flatten(transform(col("t"), a =>
-        filter(transform(col("t"), b => struct(a.as("type_a"), b.as("type_b"))),
-          p => p.getField("type_a") < p.getField("type_b"))))
-      EV(s, d)
-        .groupBy("user_id")
-        .agg(sort_array(collect_set("event_type")).as("t"))
-        .select(explode(pairs).as("p"))
-        .groupBy(col("p.type_a").as("type_a"), col("p.type_b").as("type_b"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy("type_a", "type_b")
-    }),
-    "q37_mode" -> ((s, d) => {
-      // per-user modal event type, deterministic tie-break on the
-      // lexicographically smallest type (SQL MODE() leaves ties
-      // implementation-defined — this pins them)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("mode_cnt").desc, col("mode_type").asc)
-      EV(s, d)
-        .groupBy(col("user_id"), col("event_type").as("mode_type"))
-        .agg(count(lit(1)).as("mode_cnt"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("user_id", "mode_type", "mode_cnt")
-        .orderBy("user_id")
-    }),
-
-    // ----- ops tooling: join-key skew report -----
-    "data_skew_report" -> ((s, d) => {
-      // heavy-hitter report for a join key: top keys by row count with
-      // exact parts-per-million share (integer div — no float drift).
-      // One map-side-combined groupBy + a one-row broadcast total;
-      // top-k is TakeOrderedAndProject, never a global sort.
-      val counts = T(s, d, "lineitem").groupBy("l_suppkey").agg(count(lit(1)).as("cnt"))
-      val total = T(s, d, "lineitem").agg(count(lit(1)).as("total"))
-      counts.crossJoin(broadcast(total))
-        .select(col("l_suppkey"), col("cnt"),
-          expr("(cnt * 1000000L) div total").as("share_ppm"))
-        .orderBy(col("cnt").desc, col("l_suppkey").asc)
-        .limit(20)
-    }),
-
-    // ----- LLM-pipeline: clustering layer -----
-    "text_bpe_pairs" -> ((s, d) =>
-      CorpusOps.bpePairCounts(TP(s, d, "documents"), "text", topK = 30)),
-    "vec_kmeans_step" -> ((s, d) =>
-      ClusterOps.kmeansStep(TP(s, d, "embeddings"), "vec_id", "embedding", k = 8)),
-    "dedup_cluster_stats" -> ((s, d) => {
-      // same pair parameters as dedup_clusters → component sizes →
-      // histogram with the singleton (unique-doc) row included
-      val docs = TP(s, d, "documents")
-      val pairs = DedupOps.minhashDupPairs(docs, "text", "doc_id",
-        threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      ClusterOps.clusterSizeStats(docs, GraphOps.connectedComponents(pairs, "a_id", "b_id"))
-    }),
-    "data_grouped_split" -> ((s, d) => {
-      val docs = TP(s, d, "documents")
-      val pairs = DedupOps.minhashDupPairs(docs, "text", "doc_id",
-        threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      ClusterOps.groupedSplit(docs, "doc_id", GraphOps.connectedComponents(pairs, "a_id", "b_id"))
-        .orderBy("doc_id")
-    }),
-
-    // ----- round 7: event-time + corpus additions -----
-    "events_time_split" -> ((s, d) => {
-      // temporal train/embargo/test split with a 2-day gap: the
-      // time-axis leakage guard (hash split → data_split, cluster split
-      // → data_grouped_split, time split → here). Pure pushed
-      // projection; report shape per split.
-      SplitOps.timeSplit(EV(s, d), "ts_us",
-          trainEndUs = 1705795200000000L,  // 2024-01-21T00:00Z
-          testStartUs = 1705968000000000L) // 2024-01-23T00:00Z
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          min("ts_us").as("min_us"), max("ts_us").as("max_us"))
-        .orderBy("split")
-    }),
-    "events_burst" -> ((s, d) => {
-      // burst detection: per user, the max event count in any trailing
-      // 10-minute window — a RANGE frame (value-distance peers, so ties
-      // are deterministic by construction), one keyed shuffle
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts_us"))
-        .rangeBetween(-600000000L, 0)
-      EV(s, d).select(col("user_id"), col("ts_us"))
-        .withColumn("w_n", count(lit(1)).over(w))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"), max("w_n").as("max_burst"))
-        .withColumn("bursty", col("max_burst") >= 2)
-        .orderBy("user_id")
-    }),
-    "events_gap_stats" -> ((s, d) => {
-      // per-user inter-event gap distribution, integer-exact: lower
-      // median and ceil(0.9·n) discrete p90 via ranked self-positions
-      // (no FP interpolation — engines disagree on lerp order at the
-      // ulp level), avg as exact-int sum / count (gap sums < 2^53)
-      import org.apache.spark.sql.expressions.Window
-      val wo = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      val gaps = EV(s, d).select(col("user_id"), col("event_id"), col("ts_us"))
-        .withColumn("prev", lag(col("ts_us"), 1).over(wo))
-        .filter(col("prev").isNotNull)
-        .withColumn("gap", col("ts_us") - col("prev"))
-      val ranked = gaps
-        .withColumn("rn", row_number().over(Window.partitionBy("user_id").orderBy("gap")))
-        .withColumn("cnt", count(lit(1)).over(Window.partitionBy("user_id")))
-      ranked.groupBy("user_id")
-        .agg(
-          count(lit(1)).as("n_gaps"),
-          max("gap").as("max_gap"),
-          (sum("gap").cast("double") / count(lit(1))).as("avg_gap"),
-          max(when(expr("rn = (cnt + 1) div 2"), col("gap"))).as("med_gap"),
-          max(when(expr("rn = (9 * cnt + 9) div 10"), col("gap"))).as("p90_gap"))
-        .orderBy("user_id")
-    }),
-    "events_churn" -> ((s, d) => {
-      // inactivity/churn flag: users whose last event is >7 days before
-      // the corpus frontier; the frontier rides back as a broadcast
-      // 1-row scalar (no window over the log)
-      val e = EV(s, d).select(col("user_id"), col("ts_us"))
-      val last = e.groupBy("user_id")
-        .agg(max("ts_us").as("last_us"), count(lit(1)).as("n_events"))
-      val mx = e.agg(max("ts_us").as("corpus_max_us"))
-      last.crossJoin(broadcast(mx)) // 1-row scalar attach
-        .select(col("user_id"), col("last_us"), col("n_events"),
-          (col("corpus_max_us") - col("last_us") > lit(7L * 86400000000L)).as("churned"))
-        .orderBy("user_id")
-    }),
-    "events_interval_overlap" -> ((s, d) => {
-      // interval×interval overlap join: 50 deterministic report windows
-      // against per-user merged activity spans (mergeIntervals output) —
-      // bucketized with emit-once anchoring, so no cross product AND no
-      // distinct pass over the pair set
-      val baseUs = 1704067200000000L // 2024-01-01T00:00Z
-      val stepUs = 50400000000L      // 14 h
-      val lenUs = 75600000000L       // 21 h
-      val iv = s.range(50).select(
-        col("id").as("interval_id"),
-        (lit(baseUs) + col("id") * stepUs).as("s_us"),
-        (lit(baseUs) + col("id") * stepUs + lenUs).as("e_us"))
-      val spans = IntervalOps.mergeIntervals(
-        EV(s, d).filter(col("user_id") % 10 === 0)
-          .select(col("user_id"), col("ts_us").as("s0"),
-            (col("ts_us") + lit(600000000L)).as("e0")),
-        "user_id", "s0", "e0")
-        .select(col("user_id"), col("s"), col("e"))
-      JoinOps.intervalOverlapJoin(iv, spans, Nil, "s_us", "e_us", "s", "e", bucketWidth = lenUs)
-        .groupBy("interval_id")
-        .agg(count(lit(1)).as("n_spans"), countDistinct(col("user_id")).as("n_users"))
-        .orderBy("interval_id")
-    }),
-    "events_rolling_distinct" -> ((s, d) => {
-      // 7-day rolling distinct users from MERGEABLE daily HLL sketches:
-      // the rolling series is computed from one sketch row per day —
-      // never rescanning the log — and checked day-by-day against the
-      // exact rolling distinct within the sketch's error bound
-      val e = EV(s, d).select(expr("ts_us div 86400000000").as("day"), col("user_id"))
-      val est = StatsOps.rollingDistinctEstimate(e, "day", "user_id", window = 7)
-      val uw = e.distinct()
-      val exact = uw.select(col("day")).distinct()
-        .join(uw.select(col("day").as("src_day"), col("user_id")),
-          col("src_day") >= col("day") - 6 && col("src_day") <= col("day"))
-        .groupBy("day").agg(countDistinct(col("user_id")).as("exact7"))
-      est.join(exact, "day")
-        .select(col("day"), col("exact7"),
-          (abs(col("est") - col("exact7")) <= col("exact7") * 0.05 + lit(1)).as("ok"))
-        .orderBy("day")
-    }),
-    "quality_oov" -> ((s, d) =>
-      CorpusOps.oovRate(TP(s, d, "documents"), "doc_id", "text", topV = 20)
-        .orderBy("doc_id")),
-    "dedup_source_matrix" -> ((s, d) => {
-      // cross-source duplication matrix: verified near-dup pairs joined
-      // back to each side's source label, canonicalized to an unordered
-      // (src_lo, src_hi) cell — "which crawls mirror each other". Two
-      // keyed joins against the DUP-SIZED pair set (never corpus²); the
-      // matrix itself is |sources|² at most.
-      val docs = TP(s, d, "documents")
-      val pairs = DedupOps.minhashDupPairs(docs, "text", "doc_id", threshold = 0.7,
-        shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      val src = docs.select(col("doc_id"), col("source"))
-      pairs
-        .join(src.select(col("doc_id").as("a_id"), col("source").as("source_a")), "a_id")
-        .join(src.select(col("doc_id").as("b_id"), col("source").as("source_b")), "b_id")
-        .select(least(col("source_a"), col("source_b")).as("src_lo"),
-          greatest(col("source_a"), col("source_b")).as("src_hi"))
-        .groupBy("src_lo", "src_hi")
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy("src_lo", "src_hi")
-    }),
-    "text_zipf" -> ((s, d) => {
-      // rank-frequency (Zipf) curve with cumulative corpus share — the
-      // tokenizer-planning table ("how many vocab entries cover 95% of
-      // tokens"). Two aggs; rank + running sum run on the two-level
-      // banding core with band (tf, 2-char token prefix) — a fixed-length
-      // prefix is a monotone coarsening of the in-tie token order, so the
-      // vocab (10⁸⁺ entries on a web corpus, mostly tf=1 ties) never
-      // funnels through one WindowExec task; total rides back broadcast.
-      val tok = CorpusOps.docTermCounts(TP(s, d, "documents"), "doc_id", "text")
-        .groupBy("token").agg(sum("tf").as("tf"))
-        .withColumn("pfx", substring(col("token"), 1, 2))
-      val total = tok.agg(sum("tf").as("total"))
-      RankOps.bandedRankCum(tok,
-          bandCols = Seq("tf", "pfx"),
-          bandSort = Seq(col("tf").desc, col("pfx").asc),
-          rowSort = Seq(col("token").asc),
-          cumCols = Seq("tf"))
-        .crossJoin(broadcast(total)) // 1-row scalar attach
-        .select(col("rank"), col("token"), col("tf"),
-          ((col("cum_before_tf") + col("tf")).cast("double") /
-            col("total").cast("double")).as("cum_share"))
-        .orderBy("rank")
-    }),
-    "vec_norm_audit" -> ((s, d) => {
-      // embedding hygiene report: per-vector L2 norm with a FIXED
-      // left-fold operation order (identical IEEE sequence in DuckDB's
-      // list_reduce), bucketed into zero/small/unit/large. Projection +
-      // one tiny agg — the norm never leaves the map side.
-      val v = TP(s, d, "embeddings").select(col("vec_id"),
-        VectorFunctions.asDouble(col("embedding")).as("v"))
-      val norm = sqrt(aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x))
-      v.select(col("vec_id"), norm.as("norm"))
-        .withColumn("bucket",
-          when(col("norm") === 0.0, "zero")
-            .when(col("norm") < 0.5, "small")
-            .when(col("norm") <= 2.0, "unit")
-            .otherwise("large"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), min("norm").as("min_norm"), max("norm").as("max_norm"))
-        .orderBy("bucket")
-    }),
-    "events_ewma" -> ((s, d) => {
-      // per-user exponentially-weighted moving value (α = 1/2, bounded
-      // at the last 16 events): every weight 2^-k is a power of two, so
-      // v·2^-k is EXACT in IEEE double and the fixed left-to-right chain
-      // sum is bit-identical across engines — the usual "EWMA is
-      // FP-recursive and engine-divergent" objection disappears by
-      // construction. One keyed sort serves all 16 lag terms; only the
-      // per-user LATEST row is emitted.
-      import org.apache.spark.sql.expressions.Window
-      val woDesc = Window.partitionBy("user_id").orderBy(col("ts_us").desc, col("event_id").desc)
-      StatsOps
-        .boundedEwma(EV(s, d).select(col("user_id"), col("event_id"), col("ts_us"), col("value")),
-          "user_id", Seq("ts_us", "event_id"), "value", k = 16)
-        .withColumn("__rn", row_number().over(woDesc))
-        .filter(col("__rn") === 1)
-        .select(col("user_id"), col("ts_us").as("last_us"), col("ewma").as("ewma16"))
-        .orderBy("user_id")
-    }),
-    "events_anomaly" -> ((s, d) => {
-      // trailing-20-event z-score anomalies per user: decimal window
-      // moments + the exactStats closed-form double contract, windowed
-      StatsOps.rollingZScore(
-          EV(s, d).select(col("user_id"), col("event_id"), col("ts_us"), col("value")),
-          "user_id", Seq("ts_us", "event_id"), "value",
-          window = 20, minN = 10, zThresh = 2.0)
-        .select(col("user_id"), col("event_id"), col("ts_us"), col("z"))
-        .orderBy("user_id", "ts_us", "event_id")
-    }),
-    "events_dwell" -> ((s, d) => {
-      // time-in-state: the gap to the user's next event attributed to
-      // the current event's type (classic telemetry dwell report); one
-      // keyed sort, integer-exact sums
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      EV(s, d).select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-        .withColumn("dwell", lead(col("ts_us"), 1).over(w) - col("ts_us"))
-        .filter(col("dwell").isNotNull)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_spans"),
-          sum("dwell").as("total_dwell_us"), max("dwell").as("max_dwell_us"))
-        .orderBy("event_type")
-    }),
-    "events_transitions" -> ((s, d) => {
-      // first-order Markov transition matrix over per-user event
-      // sequences: lag pairs → counts → per-from row-normalized
-      // probability (the window sum rides the same from_type hash)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      EV(s, d).select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-        .withColumn("from_type", lag(col("event_type"), 1).over(w))
-        .filter(col("from_type").isNotNull)
-        .groupBy(col("from_type"), col("event_type").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p",
-          col("n").cast("double") / sum("n").over(Window.partitionBy("from_type")).cast("double"))
-        .orderBy("from_type", "to_type")
-    }),
-    "text_ngram_novelty" -> ((s, d) => {
-      // per-doc novelty: fraction of its distinct 3-gram shingles whose
-      // FIRST owner (min doc_id) is the doc itself — the dedup-ROI curve
-      // ("how much of each new crawl is genuinely new text"). First
-      // ownership is a min window on the shingle hash — one shuffle,
-      // no gram×gram join.
-      import org.apache.spark.sql.expressions.Window
-      TP(s, d, "documents")
-        .select(col("doc_id"),
-          explode(array_distinct(TextFunctions.shingles(col("text"), 3))).as("g"))
-        .withColumn("first_doc", min("doc_id").over(Window.partitionBy("g")))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
-        .withColumn("novelty", col("n_novel").cast("double") / col("n_grams").cast("double"))
-        .orderBy("doc_id")
-    }),
-    "vec_power_iteration" -> ((s, d) =>
-      LinAlgOps.powerIterationStep(TP(s, d, "embeddings"), "vec_id", "embedding")),
-    "ann_ivf_index" -> ((s, d) => {
-      // the PERSISTED IVF index (vector twin of dedup_incremental's
-      // bucketed band index): build → catalog tables → probe with the
-      // index side bucket-pruned and Exchange-free; same √n sizing and
-      // recall-vs-brute-force invariant as ann_ivf
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val n = vecs.count()
-      val nCells = math.max(4, math.sqrt(n.toDouble).toInt)
-      val nProbe = math.max(2, nCells / 2)
-      val idx = VectorIndexOps.buildIvfIndex(vecs, "vec_id", "vec", "graft_ivf_idx",
-        nCells, numBuckets = 4)
-      val queries = vecs.filter(col("vec_id") < 8)
-      val k = 5
-      val bf = SimilarityOps.bruteForceTopK(vecs, queries, "vec_id", "vec", k)
-        .select("query_id", "neighbor_id")
-      val got = VectorIndexOps.probeIvf(s, queries, "vec_id", "vec", idx, k, nProbe)
-        .select("query_id", "neighbor_id")
-      bf.join(got, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .select(
-          lit(8L).as("n_queries"),
-          (col("hits").cast("double") / (8 * k) >= 0.8).as("recall_ok"))
-    }),
-    "text_langid_eval" -> ((s, d) => {
-      // language-ID quality against the corpus's labeled lang column:
-      // the (label, guess) confusion matrix — row-normalized recall per
-      // label cell. Pure projection + one tiny agg.
-      TP(s, d, "documents")
-        .select(col("lang"), TextFunctions.langId(col("text")).as("lang_guess"))
-        .groupBy("lang", "lang_guess")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("recall",
-          col("n").cast("double") /
-            sum("n").over(org.apache.spark.sql.expressions.Window.partitionBy("lang")).cast("double"))
-        .orderBy("lang", "lang_guess")
-    }),
-    "data_profile" -> ((s, d) => {
-      // relational schema-profiling: null count, exact distinct count,
-      // numeric min/max per column in ONE scan (a 4-way count-distinct
-      // Expand — the profile op every ingestion pipeline runs first).
-      // Dates profile as epoch days; strings profile nulls+distincts.
-      val li = T(s, d, "lineitem")
-      val cols = Seq(
-        ("l_quantity", col("l_quantity").cast("double")),
-        ("l_discount", col("l_discount").cast("double")),
-        ("l_shipdate", datediff(col("l_shipdate"), lit("1970-01-01")).cast("double")),
-        ("l_returnflag", lit(null).cast("double")))
-      val agg = li.agg(
-        count(lit(1)).as("n_rows"),
-        cols.flatMap { case (n, c) =>
-          val src = col(n)
-          Seq(
-            sum(when(src.isNull, 1L).otherwise(0L)).as(s"nn_$n"),
-            countDistinct(src).as(s"nd_$n"),
-            min(c).as(s"mn_$n"), max(c).as(s"mx_$n"))
-        }: _*)
-      agg.select(expr(
-        "stack(" + cols.size + ", " +
-          cols.map { case (n, _) => s"'$n', n_rows, nn_$n, nd_$n, mn_$n, mx_$n" }.mkString(", ") +
-          ") AS (column_name, n_rows, n_nulls, n_distinct, min_d, max_d)"))
-        .orderBy("column_name")
-    }),
-    "events_heatmap" -> ((s, d) => {
-      // hour-of-day × day-of-week activity heatmap in PURE integer
-      // arithmetic (epoch-day + 4 mod 7 ⇒ Sunday=0) — engines disagree
-      // on calendar dow conventions, integers don't
-      EV(s, d)
-        .select(
-          expr("(ts_us div 86400000000 + 4) % 7").as("dow"),
-          expr("(ts_us % 86400000000) div 3600000000").as("hour"),
-          col("value"))
-        .groupBy("dow", "hour")
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 2).as("sum_value"))
-        .orderBy("dow", "hour")
-    }),
-    "events_late_audit" -> ((s, d) => {
-      // watermark planning: per user, events whose event time lags the
-      // running frontier (max prior ts in ARRIVAL order = event_id) by
-      // more than the candidate 10-min delay — i.e. what a watermark
-      // would drop. One keyed sort; frontier is a running-max window.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      EV(s, d).select(col("user_id"), col("event_id"), col("ts_us"))
-        .withColumn("frontier", max("ts_us").over(w))
-        .withColumn("late",
-          col("frontier").isNotNull && col("ts_us") < col("frontier") - lit(600000000L))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("late"), 1L).otherwise(0L)).as("n_late"))
-        .withColumn("late_rate", col("n_late").cast("double") / col("n_events").cast("double"))
-        .orderBy("user_id")
-    }),
-    "data_forget" -> ((s, d) => {
-      // right-to-be-forgotten propagation audit: a deterministic forget
-      // list (custkey/user_id % 17 == 3) anti-joined through the
-      // user-keyed tables, INCLUDING the FK cascade (forgotten customers
-      // take their orders with them), with one audit row per table —
-      // the deletion manifest a compliance job must emit. Each table
-      // pays one anti join; the forget list carries NO broadcast hint —
-      // a real RTBF batch is usually small (AQE auto-broadcasts it,
-      // size-guarded) but nothing bounds it by construction, and the
-      // anti join stays correct at any size.
-      def audit(name: String, before: DataFrame, after: DataFrame): DataFrame =
-        before.agg(count(lit(1)).as("rows_before"))
-          .crossJoin(after.agg(count(lit(1)).as("rows_after"))) // 1-row × 1-row
-          .select(lit(name).as("table_name"), col("rows_before"), col("rows_after"),
-            (col("rows_before") - col("rows_after")).as("rows_dropped"))
-      val e = EV(s, d)
-      val eKept = e.filter(col("user_id") % 17 =!= 3)
-      val cust = T(s, d, "customer")
-      val fc = cust.filter(col("c_custkey") % 17 === 3).select(col("c_custkey"))
-      val cKept = cust.join(fc, Seq("c_custkey"), "left_anti")
-      val ord = T(s, d, "orders")
-      val oKept = ord.join(fc.select(col("c_custkey").as("o_custkey")),
-        Seq("o_custkey"), "left_anti")
-      audit("customer", cust, cKept)
-        .unionByName(audit("events", e, eKept))
-        .unionByName(audit("orders", ord, oKept))
-        .orderBy("table_name")
-    }),
-    "events_sequences" -> ((s, d) => {
-      // frequent 3-event sequences per user stream (sequence mining's
-      // bread and butter): two lags over one keyed sort, top-20 via
-      // TakeOrdered — no self-joins
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      EV(s, d).select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-        .withColumn("t1", lag(col("event_type"), 2).over(w))
-        .withColumn("t2", lag(col("event_type"), 1).over(w))
-        .filter(col("t1").isNotNull)
-        .groupBy(col("t1"), col("t2"), col("event_type").as("t3"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("t1"), col("t2"), col("t3"))
-        .limit(20)
-    }),
-    "data_contrastive_pairs" -> ((s, d) => {
-      // contrastive training pairs: positives = verified near-dup pairs,
-      // negatives = the md5-ring partner (each doc paired with its
-      // neighbor in seeded-hash order WITHIN a 16-way prefix partition —
-      // deterministic, uniform, and never a global sort), minus any ring
-      // pair that happens to be a true near-dup
-      import org.apache.spark.sql.expressions.Window
-      val docs = TP(s, d, "documents")
-      val pos = DedupOps.minhashDupPairs(docs, "text", "doc_id", threshold = 0.7,
-          shingleSize = 2, numBands = 32, rowsPerBand = 3)
-        .select(col("a_id"), col("b_id"), lit(1).as("label"))
-        // EAGER: consumed by the union's pos branch AND the negatives'
-        // anti join, whose stages launch concurrently — unpinned, the
-        // whole minhash pipeline evaluated twice (the query's main cost)
-        .transform(Ckpt.eagerCkpt)
-      val h = md5(concat(lit("neg:"), col("doc_id").cast("string")))
-      val w = Window.partitionBy(substring(h, 1, 1)).orderBy(h, col("doc_id"))
-      val neg = docs.select(col("doc_id"))
-        .withColumn("nb", lead(col("doc_id"), 1).over(w))
-        .filter(col("nb").isNotNull)
-        .select(least(col("doc_id"), col("nb")).as("a_id"),
-          greatest(col("doc_id"), col("nb")).as("b_id"))
-        .join(pos.select("a_id", "b_id"), Seq("a_id", "b_id"), "left_anti")
-        .select(col("a_id"), col("b_id"), lit(0).as("label"))
-      pos.unionByName(neg).orderBy("label", "a_id", "b_id")
-    }),
-    "text_readability" -> ((s, d) => {
-      // reading-ease proxy on deterministic features (words/sentence,
-      // chars/word — no syllable dictionaries, engine-portable): the
-      // quality-score sibling every curation stack carries
-      val toks = TextFunctions.tokens(col("text"))
-      val nS = size(filter(split(col("text"), "[.!?]"), x => length(trim(x)) > 0)).cast("long")
-      val nW = size(toks).cast("long")
-      val nC = aggregate(transform(toks, t => length(t)), lit(0), (a, b) => a + b).cast("long")
-      TP(s, d, "documents")
-        .select(col("doc_id"), nS.as("n_sentences"), nW.as("n_words"), nC.as("n_chars"))
-        .withColumn("words_per_sentence",
-          col("n_words").cast("double") / greatest(col("n_sentences"), lit(1L)).cast("double"))
-        .withColumn("chars_per_word",
-          col("n_chars").cast("double") / greatest(col("n_words"), lit(1L)).cast("double"))
-        .orderBy("doc_id")
-    }),
-    "data_label_balance" -> ((s, d) => {
-      // class balance + inverse-frequency loss weights over the labeled
-      // embedding set: weight = total / (n_classes · n) — the class-
-      // imbalance prep step for any classifier head; integer-exact until
-      // one double division each
-      val e = TP(s, d, "embeddings")
-      val counts = e.groupBy("label").agg(count(lit(1)).as("n"))
-      val tot = counts.agg(sum("n").as("total"), count(lit(1)).as("n_classes"))
-      counts.crossJoin(broadcast(tot)) // 1-row scalar attach
-        .select(col("label"), col("n"),
-          (col("n").cast("double") / col("total").cast("double")).as("share"),
-          (col("total").cast("double") / (col("n_classes") * col("n")).cast("double"))
-            .as("class_weight"))
-        .orderBy("label")
-    }),
-    "events_pareto" -> ((s, d) => {
-      // activity concentration (Pareto report): per-user event counts
-      // ranked desc, cumulative share of total — "do 20% of users
-      // produce 80% of events". Rank + running sum run on the two-level
-      // banding core (RankOps.bandedRankCum: band (n, user_id div 4096),
-      // per-band counts, a band-count-sized offset window, ≤4096-row
-      // in-band windows) — no user-count single-partition WindowExec;
-      // total rides back broadcast.
-      val uc = EV(s, d).groupBy("user_id").agg(count(lit(1)).as("n"))
-        .withColumn("sub", RankOps.idiv(col("user_id"), 4096))
-      val tot = uc.agg(sum("n").as("total"))
-      RankOps.bandedRankCum(uc,
-          bandCols = Seq("n", "sub"),
-          bandSort = Seq(col("n").desc, col("sub").asc),
-          rowSort = Seq(col("user_id").asc),
-          cumCols = Seq("n"))
-        .crossJoin(broadcast(tot)) // 1-row scalar attach
-        .select(col("rank"), col("user_id"), col("n"),
-          ((col("cum_before_n") + col("n")).cast("double") /
-            col("total").cast("double")).as("cum_share"))
-        .orderBy("rank")
-    }),
-    "events_wow_change" -> ((s, d) => {
-      // week-over-week deltas: weekly decimal-exact totals + lag over
-      // the week-count-sized aggregate (the period-over-period report
-      // every ops dashboard carries); pct change is one double division
-      import org.apache.spark.sql.expressions.Window
-      val wk = EV(s, d)
-        .groupBy(expr("ts_us div 604800000000").as("week"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value"), 2).as("sum_value"))
-      val w = Window.orderBy("week")
-      wk.withColumn("prev_n", lag(col("n_events"), 1).over(w))
-        .withColumn("wow_events_pct",
-          (col("n_events") - col("prev_n")).cast("double") / col("prev_n").cast("double"))
-        .select("week", "n_events", "sum_value", "wow_events_pct")
-        .orderBy("week")
-    }),
-    "events_streaks" -> ((s, d) => {
-      // longest consecutive-active-day streak per user — gaps-and-islands
-      // on the DISTINCT day table (day − row_number is constant within a
-      // run of consecutive days); the distinct is day-count-sized
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("day")
-      val ud = EV(s, d).select(col("user_id"), expr("ts_us div 86400000000").as("day")).distinct()
-      ud.withColumn("grp", col("day") - row_number().over(w))
-        .groupBy("user_id", "grp")
-        .agg(count(lit(1)).as("streak"))
-        .groupBy("user_id")
-        .agg(sum("streak").as("n_active_days"), max("streak").as("max_streak"))
-        .orderBy("user_id")
-    }),
-    "q39_basket_affinity" -> ((s, d) => {
-      // market-basket affinity: part pairs co-ordered in one order,
-      // expanded by the GUARDED basket idiom (boundedBucketPairs: in-row
-      // for baskets ≤1024 — TPC-H orders are ≤7 items — distributed
-      // overflow join above, so an adversarial 10⁵-item basket can never
-      // materialize m² structs in one row); never a lineitem×lineitem
-      // self-join. Top-25 by support via TakeOrdered.
-      val baskets = T(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-        .groupBy("l_orderkey")
-        .agg(sort_array(array_distinct(collect_list(col("l_partkey")))).as("parts"))
-      DedupOps.boundedBucketPairs(baskets, Seq("l_orderkey"), "parts")
-        .select(col("a").as("part_a"), col("b").as("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
-        .limit(25)
-    }),
-    "q38_keyset_pagination" -> ((s, d) => {
-      // keyset (seek-method) pagination: the cursor predicate pushes to
-      // the scan and the page is a TakeOrdered — OFFSET pagination
-      // re-reads everything before the page; this reads only past the
-      // cursor. Page 100 after (1000, 2).
-      T(s, d, "lineitem")
-        .filter(col("l_orderkey") > 1000 ||
-          (col("l_orderkey") === 1000 && col("l_linenumber") > 2))
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          datediff(col("l_shipdate"), lit("1970-01-01")).as("ship_day"))
-        // the synthetic lineitem has duplicate (orderkey, linenumber)
-        // pairs — order by EVERY output column so any residual tie is an
-        // exact duplicate row and the page is deterministic as a multiset
-        .orderBy("l_orderkey", "l_linenumber", "l_quantity", "ship_day")
-        .limit(100)
-    }),
-    "dedup_threshold_sweep" -> ((s, d) => {
-      // dedup ROI preview: verified pair counts + affected-doc counts per
-      // similarity band from ONE candidate pass (candidates generated at
-      // the lowest threshold, banded by exact jaccard) — the sweep a
-      // curation team runs before picking the production threshold
-      val pairs = DedupOps.minhashDupPairs(TP(s, d, "documents"), "text", "doc_id",
-        threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      val banded = pairs.withColumn("band",
-        when(col("jaccard") >= 0.9, "0.9").when(col("jaccard") >= 0.8, "0.8").otherwise("0.7"))
-      banded
-        .select(col("band"), explode(array(col("a_id"), col("b_id"))).as("doc"))
-        .groupBy("band")
-        .agg((count(lit(1)) / 2).cast("long").as("n_pairs"), countDistinct(col("doc")).as("n_docs"))
-        .orderBy("band")
-    }),
-    "q40_rfm" -> ((s, d) => {
-      // RFM customer segmentation: recency (days since last order vs the
-      // corpus max day), frequency (order count), monetary (decimal-exact
-      // spend), each quartiled with a custkey tiebreak so the tiling is
-      // a total order (deterministic across engines). ntile(4) is
-      // computed CLOSED-FORM from a banded global rank (three
-      // RankOps.bandedRankCum passes — bounded-domain r_days/f_orders
-      // band with a custkey div 1024 sub-band; near-unique m_total bands
-      // on floor(m/1024) alone) + RankOps.ntileFromRank — replacing the
-      // three customer-count single-partition ntile sorts.
-      val perCust = T(s, d, "orders")
-        .groupBy(col("o_custkey").as("custkey"))
-        .agg(max(datediff(col("o_orderdate").cast("date"), lit("1970-01-01").cast("date")))
-               .as("last_day"),
-             count(lit(1)).as("f_orders"),
-             dsum(col("o_totalprice"), 2).as("m_total"))
-      val maxDay = perCust.agg(max("last_day").as("max_day"))
-      val nCust = perCust.agg(count(lit(1)).as("n_cust"))
-      val base = perCust.crossJoin(broadcast(maxDay)) // 1-row scalar attach
-        .withColumn("r_days", (col("max_day") - col("last_day")).cast("long"))
-        .withColumn("sub", RankOps.idiv(col("custkey"), 1024))
-        .withColumn("mb", floor(col("m_total") / 1024.0).cast("long"))
-      val rRank = RankOps.bandedRankCum(base, Seq("r_days", "sub"),
-        Seq(col("r_days").asc, col("sub").asc), Seq(col("custkey").asc), Nil, "r_i")
-      val fRank = RankOps.bandedRankCum(rRank, Seq("f_orders", "sub"),
-        Seq(col("f_orders").desc, col("sub").asc), Seq(col("custkey").asc), Nil, "f_i")
-      val mRank = RankOps.bandedRankCum(fRank, Seq("mb"),
-        Seq(col("mb").desc), Seq(col("m_total").desc, col("custkey").asc), Nil, "m_i")
-      mRank.crossJoin(broadcast(nCust)) // 1-row scalar attach
-        .withColumn("r_q", RankOps.ntileFromRank(col("r_i"), col("n_cust"), 4))
-        .withColumn("f_q", RankOps.ntileFromRank(col("f_i"), col("n_cust"), 4))
-        .withColumn("m_q", RankOps.ntileFromRank(col("m_i"), col("n_cust"), 4))
-        .select(col("custkey"), col("r_days"), col("f_orders"), col("m_total"),
-          col("r_q"), col("f_q"), col("m_q"),
-          concat(col("r_q"), col("f_q"), col("m_q")).as("segment"))
-        .orderBy("custkey")
-    }),
-    "events_trend" -> ((s, d) => {
-      // per-user activity trend: least-squares slope of daily event counts
-      // over the user's observed days, computed ENTIRELY in BIGINT moments
-      // (n, Σx, Σy, Σxy, Σx²  →  num = nΣxy−ΣxΣy, den = nΣx²−(Σx)²) —
-      // exact and order-independent; the only double is the final ratio.
-      // Both aggs are partial-agged map-side, so the (user,day) and user
-      // shuffles move pre-combined rows, never raw events — cheaper at
-      // 100 TB than forcing a single user-only shuffle of raw rows.
-      val daily = EV(s, d)
-        .groupBy(col("user_id"), expr("ts_us div 86400000000").as("day"))
-        .agg(count(lit(1)).as("y"))
-      daily
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n"),
-             sum(col("day")).as("sx"),
-             sum(col("y")).as("sy"),
-             sum(col("day") * col("y")).as("sxy"),
-             sum(col("day") * col("day")).as("sxx"))
-        .filter(col("n") >= 2)
-        .select(col("user_id"), col("n"),
-          (col("n") * col("sxy") - col("sx") * col("sy")).as("slope_num"),
-          (col("n") * col("sxx") - col("sx") * col("sx")).as("slope_den"))
-        .withColumn("slope",
-          col("slope_num").cast("double") / col("slope_den").cast("double"))
-        .orderBy("user_id")
-    }),
-    "data_kanonymity" -> ((s, d) => {
-      // k-anonymity audit over quasi-identifiers (market segment × nation
-      // × account-balance band): every equivalence class with its size and
-      // an at-risk flag (n < k ⇒ rows re-identifiable within the class).
-      // One shuffle on the QI tuple; class count is bounded by the QI
-      // domain, not the row count.
-      val k = 5
-      T(s, d, "customer")
-        .groupBy(col("c_mktsegment").as("segment"),
-                 col("c_nationkey").cast("long").as("nation"),
-                 floor(col("c_acctbal") / 1000.0).cast("long").as("bal_band"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("at_risk", (col("n") < k).cast("boolean"))
-        .orderBy("segment", "nation", "bal_band")
-    }),
-    "text_fertility" -> ((s, d) => {
-      // tokenizer-fertility report by language: chars per token and tokens
-      // per doc — the compression-ratio lens a tokenizer team uses to spot
-      // languages the vocab underserves. Single scan, lang-sized output.
-      val nToks = size(TextFunctions.tokens(col("text"))).cast("long")
-      TP(s, d, "documents")
-        .select(col("lang"), col("n_chars"), nToks.as("n_toks"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-             sum("n_toks").as("sum_tokens"),
-             sum("n_chars").as("sum_chars"))
-        .withColumn("chars_per_token",
-          col("sum_chars").cast("double") / col("sum_tokens").cast("double"))
-        .withColumn("tokens_per_doc",
-          col("sum_tokens").cast("double") / col("n_docs").cast("double"))
-        .orderBy("lang")
-    }),
-    "graph_triangles" -> ((s, d) => {
-      // triangle census of the part co-order graph (two parts linked when
-      // some order contains both): edges via GUARDED basket expansion
-      // (DedupOps.boundedBucketPairs — in-row for baskets ≤1024, the
-      // distributed overflow join above; never a lineitem×lineitem
-      // self-join, never an unbounded m² in-row pair array), triangles
-      // via degree-ordered compact-forward counting (GraphOps
-      // .triangleStats) — each triangle counted once at its lowest
-      // oriented edge as a sorted-adjacency intersection; out-degrees
-      // O(√m) under the orientation so no adjacency array is hot.
-      val baskets = T(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-        .groupBy("l_orderkey")
-        .agg(sort_array(array_distinct(collect_list(col("l_partkey")))).as("parts"))
-      val edges = DedupOps.boundedBucketPairs(baskets, Seq("l_orderkey"), "parts")
-        .select(col("a").as("pa"), col("b").as("pb"))
-      GraphOps.triangleStats(edges, "pa", "pb")
-    }),
-    "dedup_prefix_filter" -> ((s, d) => {
-      // the dedup_ngram_jaccard output contract (exact 3-gram Jaccard
-      // ≥ 0.8 pair set) via a DIFFERENT exact algorithm: AllPairs prefix
-      // filtering — candidates join only on each doc's globally-RAREST
-      // shingles, zero false negatives by the prefix lemma (no LSH recall
-      // bound), exact verify from materialized sets. Both paths hash-match
-      // the same quadratic oracle.
-      DedupOps.prefixFilterJaccardPairs(TP(s, d, "documents"), "text", "doc_id",
-          threshold = 0.8, shingleSize = 3)
-        .orderBy("a_id", "b_id")
-    }),
-    "q41_hotkey_join" -> ((s, d) => {
-      // manual hot-key split join: the K heaviest fact keys take a
-      // broadcast path, the long tail takes the ordinary shuffle path,
-      // and the union is invisible to the oracle (= plain join + agg —
-      // hot/cold is a PARTITION of keys, so ANY hot set yields the same
-      // union). The pattern for skew KNOWN ahead of time — bucketed /
-      // pre-shuffled inputs AQE cannot re-split, or a maintained
-      // skewed-key stats table. The hot set is a LIMIT-bounded top-K of
-      // heavy hitters (the data_skew_report TakeOrdered core), never a
-      // count-threshold filter: a threshold admits a fact-proportional
-      // key set (count>4 picks ~half of TPC-H orders) and the broadcast
-      // OOMs at 100×; top-K caps the broadcast at K rows by construction.
-      val K = 100
-      val li = T(s, d, "lineitem").select(col("l_orderkey"), revenueTerm.as("rev"))
-      val hotKeys = li.groupBy("l_orderkey").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("l_orderkey")).limit(K).select("l_orderkey")
-      val dim = T(s, d, "orders").select(col("o_orderkey"), col("o_orderpriority"))
-      val hotDim = dim.join(broadcast(hotKeys),
-        col("o_orderkey") === col("l_orderkey"), "left_semi")
-      val hot = li.join(broadcast(hotKeys), Seq("l_orderkey"), "left_semi")
-        .join(broadcast(hotDim), col("l_orderkey") === col("o_orderkey"))
-      val cold = li.join(broadcast(hotKeys), Seq("l_orderkey"), "left_anti")
-        .join(dim.hint("merge"), col("l_orderkey") === col("o_orderkey"))
-      hot.unionByName(cold)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"), dsum(col("rev"), 6).as("revenue"))
-        .orderBy("o_orderpriority")
-    }),
-    "text_heavy_tokens" -> ((s, d) => {
-      // frequent-token mining WITHOUT shuffling the token domain: pass 1
-      // folds each partition into a Misra-Gries summary (k=256 counters,
-      // native mergeable TypedImperativeAggregate) — the only shuffle is
-      // the 1-row sketch merge; pass 2 exact-counts ONLY the ≤256
-      // candidates (broadcast semi filter). φ=0.5% support: n·φ > n/257,
-      // so the sketch provably holds every qualifying token and the exact
-      // verify makes the output literally the full-groupBy answer — the
-      // two-scan shape that works when the distinct-gram domain is
-      // billions and a global groupBy would be the bottleneck.
-      import graft.functions.SketchAggregates
-      val toks = TP(s, d, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-      val sketch = toks
-        .agg(SketchAggregates.misraGries(col("tok"), 256).as("mg"),
-          count(lit(1)).as("total"))
-        .transform(Ckpt.lazyCkpt) // feeds candidates + total
-      val cands = sketch.select(explode(map_keys(col("mg"))).as("tok"))
-      toks.join(broadcast(cands), Seq("tok"), "left_semi")
-        .groupBy("tok").agg(count(lit(1)).as("n"))
-        .crossJoin(broadcast(sketch.select(col("total")))) // 1-row scalar attach
-        .filter(col("n") * 200 > col("total"))
-        .select(col("tok"), col("n"))
-        .orderBy("tok")
-    }),
-    "vec_centroid_affinity" -> ((s, d) => {
-      // label-centroid affinity matrix, EXACT until two final double ops:
-      // per-(label,pos) component sums in DECIMAL(18,9) (order-independent
-      // across the shuffle), dot/norms as exact decimal sums of products
-      // (a float dot-product fold is NOT replay-stable cross-engine —
-      // measured 8e-16 drift vs DuckDB), and since cosine is scale-
-      // invariant and dot-of-means = dotsum/(na·nb), the mean division
-      // never happens in FP. The corpus is touched ONCE (posexplode →
-      // partial agg); everything after is label×dim-sized.
-      val moments = TP(s, d, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("label", "pos")
-        .agg(sum(col("x").cast("double").cast("decimal(18,9)"))
-               .cast("decimal(18,9)").as("sx"),
-             count(lit(1)).as("nv"))
-        .transform(Ckpt.lazyCkpt) // feeds norms + both pair sides
-      val norms = moments.groupBy("label")
-        .agg(sum(col("sx") * col("sx")).cast("decimal(38,18)").cast("string")
-               .cast("double").as("norm2"),
-             max(col("nv")).as("nv"))
-      val pairs = moments.as("a")
-        .join(broadcast(moments.as("b")),
-          col("a.pos") === col("b.pos") && col("a.label") < col("b.label"))
-        .groupBy(col("a.label").as("label_a"), col("b.label").as("label_b"))
-        .agg(sum(col("a.sx") * col("b.sx")).cast("decimal(38,18)").cast("string")
-               .cast("double").as("dotsum"))
-      pairs
-        .join(broadcast(norms.select(col("label").as("label_a"),
-          col("norm2").as("na2"), col("nv").as("na"))), Seq("label_a"))
-        .join(broadcast(norms.select(col("label").as("label_b"),
-          col("norm2").as("nb2"), col("nv").as("nb"))), Seq("label_b"))
-        .select(col("label_a"), col("label_b"),
-          (col("dotsum") / (col("na") * col("nb")).cast("double")).as("dot"),
-          (col("dotsum") / (sqrt(col("na2")) * sqrt(col("nb2")))).as("cosine"))
-        .orderBy("label_a", "label_b")
-    }),
-    "events_ohlc" -> ((s, d) => {
-      // OHLC bar downsampling (time-series render reduction): per
-      // (event_type, hour) opening/closing/extreme values — open/close
-      // picked by min_by/max_by on the (ts_us, event_id) struct so
-      // timestamp ties resolve deterministically. ONE partial-agged
-      // shuffle; the output is bar-count-sized, never point-sized.
-      EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 3600000000").as("hour"))
-        .agg(count(lit(1)).as("n"),
-          min_by(col("value"), struct(col("ts_us"), col("event_id"))).as("open"),
-          max_by(col("value"), struct(col("ts_us"), col("event_id"))).as("close"),
-          max(col("value")).as("high"), min(col("value")).as("low"))
-        .orderBy("event_type", "hour")
-    }),
-    "data_dense_ids" -> ((s, d) => {
-      // global contiguous row numbering WITHOUT the classic scale trap (a
-      // single-partition row_number over the corpus): two-level banding on
-      // (n_chars, doc_id div 1024) caps every within-band window at 1024
-      // rows regardless of corpus size or n_chars skew; band offsets are a
-      // running sum over the band-COUNT-sized frame (1024× smaller than
-      // the corpus — at exabyte scale you'd recurse the banding once
-      // more) broadcast back onto the rows. Total order (n_chars, doc_id)
-      // is preserved exactly: band sort + in-band rank = global rank.
-      import org.apache.spark.sql.expressions.Window
-      val docs = T(s, d, "documents")
-        .select(col("doc_id"), col("n_chars"), expr("doc_id div 1024").as("sub"))
-      val offsets = docs.groupBy("n_chars", "sub").agg(count(lit(1)).as("bn"))
-        .withColumn("offset", coalesce(
-          sum("bn").over(Window.orderBy("n_chars", "sub")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val wBand = Window.partitionBy("n_chars", "sub").orderBy("doc_id")
-      docs.join(broadcast(offsets.select("n_chars", "sub", "offset")), Seq("n_chars", "sub"))
-        .select(col("doc_id"), col("n_chars"),
-          (col("offset") + row_number().over(wBand)).as("dense_id"))
-        .orderBy("dense_id")
-    }),
-    "events_attribution" -> ((s, d) => {
-      // first-/last-touch attribution: for every purchase, the first and
-      // most recent preceding non-purchase touchpoint of that user plus
-      // the touch count — ONE user-keyed sort serves all three windows
-      // (identical partitioning+ordering ⇒ one Exchange, one Sort).
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val touch = when(col("event_type") =!= "purchase", col("event_type"))
-      EV(s, d)
-        .withColumn("first_touch", first(touch, ignoreNulls = true).over(w))
-        .withColumn("last_touch", last(touch, ignoreNulls = true).over(w))
-        .withColumn("n_touches", count(touch).over(w))
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_us"),
-          col("first_touch"), col("last_touch"), col("n_touches"))
-        .orderBy("event_id")
-    }),
-    "data_fk_audit" -> ((s, d) => {
-      // referential-integrity audit over the full FK graph: each fact
-      // side collapses to DISTINCT keys BEFORE the parent join (the
-      // shuffle carries the key domain, never the fact rows), parents
-      // are pk-projected and AQE-broadcast — 7 edges, 7 1-row reports
-      AuditOps.fkAudit(AuditOps.tpchFkEdges(s, d))
-    }),
-    "quality_model_auc" -> ((s, d) => {
-      // exact ROC-AUC of the hashed linear quality model at predicting
-      // English, per source: Mann-Whitney pair identity on the integer
-      // milli-score DISTRIBUTION — no global rank sort ever happens
-      // (StatsOps.aucExact); one doc_id-keyed join carries the labels
-      val docs = TP(s, d, "documents")
-      val scored = CorpusOps.linearModelScore(docs, "doc_id", "text", dim = 64)
-      val labeled = docs
-        .select(col("doc_id"), col("source"), (col("lang") === "en").as("is_en"))
-        .join(scored.select("doc_id", "score_milli"), Seq("doc_id"))
-      StatsOps.aucExact(labeled, "source", "score_milli", "is_en")
-    }),
-    "data_ks_drift" -> ((s, d) => {
-      // exact per-source Kolmogorov-Smirnov distance of the doc-length
-      // distribution vs the whole corpus — integer CDF cross-products
-      // on the (source × length-domain) grid, one row shuffle total
-      DriftOps.ksDistance(
-        T(s, d, "documents").select("source", "n_chars"), "source", "n_chars")
-    }),
-    "q42_moments" -> ((s, d) => {
-      // distribution-shape report: skewness + excess kurtosis per order
-      // status from integer-cent power sums — one hash aggregate with
-      // map-side partials, closed-form doubles (StatsOps.momentsReport)
-      StatsOps.momentsReport(T(s, d, "orders"), "o_orderstatus", "o_totalprice")
-    }),
-    "events_quantile_sketch" -> ((s, d) => {
-      // mergeable quantile sketches WITHOUT randomness: per-day q-digest
-      // rows (deterministic, ≤3k nodes) union into corpus p50/p90/p99
-      // whose rank error is provably ≤ W·n/k UNDER ANY MERGE TREE — the
-      // sketch-table shape of events_sketch_union, for quantiles. The
-      // checked contract: count(≤ est) ≥ qn − εn and count(< est) ≤
-      // qn + εn with ε = W/k ≈ 3.9%, verified against the raw data.
-      import graft.functions.QuantileSketch._
-      val W = 20; val K = 512
-      val ev = EV(s, d).select(
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"),
-        expr("ts_us div 86400000000").as("day"))
-      val daily = ev.groupBy("day").agg(qdigest(col("cents"), W, K).as("sk"))
-      val est = daily.agg(qdigestMerge(col("sk"), W, K).as("sk"))
-        .select(
-          qdigestQuantile(col("sk"), 0.5, W).as("e50"),
-          qdigestQuantile(col("sk"), 0.9, W).as("e90"),
-          qdigestQuantile(col("sk"), 0.99, W).as("e99"))
-      val eps = lit(W.toDouble / K) * col("n")
-      def okCols(q: Double, e: String) =
-        (col(s"le_$e") >= lit(q) * col("n") - eps) &&
-          (col(s"lt_$e") <= lit(q) * col("n") + eps)
-      ev.crossJoin(broadcast(est)) // 1-row estimate attach
-        .agg(
-          count(lit(1)).as("n"),
-          sum(when(col("cents") <= col("e50"), 1L).otherwise(0L)).as("le_e50"),
-          sum(when(col("cents") < col("e50"), 1L).otherwise(0L)).as("lt_e50"),
-          sum(when(col("cents") <= col("e90"), 1L).otherwise(0L)).as("le_e90"),
-          sum(when(col("cents") < col("e90"), 1L).otherwise(0L)).as("lt_e90"),
-          sum(when(col("cents") <= col("e99"), 1L).otherwise(0L)).as("le_e99"),
-          sum(when(col("cents") < col("e99"), 1L).otherwise(0L)).as("lt_e99"))
-        .select(col("n"),
-          okCols(0.5, "e50").as("p50_ok"),
-          okCols(0.9, "e90").as("p90_ok"),
-          okCols(0.99, "e99").as("p99_ok"))
-    }),
-    "events_cms_check" -> ((s, d) => {
-      // count-min frequency index: per-day CMS rows (4×2048 counters)
-      // merge element-wise into corpus key frequencies — kilobytes of
-      // state answer "how often does key X appear" with the
-      // DETERMINISTIC one-sided guarantee est ≥ true (collisions only
-      // add); probed here for the 10 heaviest users against exact
-      // counts, upper slack 3n/w
-      import graft.functions.CountMinSketch._
-      val D = 4; val Wd = 2048
-      val ev = EV(s, d).select(col("user_id"),
-        expr("ts_us div 86400000000").as("day"))
-      val daily = ev.groupBy("day").agg(
-        cms(col("user_id"), D, Wd).as("sk"), count(col("user_id")).as("nd"))
-      val merged = daily.agg(
-        cmsMerge(col("sk"), D, Wd).as("sk"), sum("nd").as("n"))
-      val top = ev.groupBy("user_id").agg(count(lit(1)).as("c"))
-        .orderBy(desc("c"), col("user_id")).limit(10)
-      top.crossJoin(broadcast(merged)) // 1-row sketch attach
-        .withColumn("est", cmsEstimate(col("sk"), col("user_id"), D, Wd))
-        .agg(
-          count(lit(1)).cast("bigint").as("n_probes"),
-          first(col("n")).cast("bigint").as("n"),
-          bool_and(col("est") >= col("c")).as("lower_ok"),
-          bool_and(col("est") <= col("c") + lit(3.0) * col("n") / lit(Wd)).as("upper_ok"))
-    }),
-    "maint_join_view" -> ((s, d) => {
-      // incremental JOIN-view maintenance: the persisted base view
-      // (written to parquet here, standing in for yesterday's
-      // materialization) is scanned and unioned with two delta joins —
-      // V' = V ∪ (Δli ⋈ orders') ∪ (li_base ⋈ Δorders) — the base-base
-      // join is never recomputed and both delta joins broadcast their
-      // delta side. Oracle = the full join of the updated tables.
-      val cols = Seq("l_orderkey", "l_linenumber", "o_custkey", "o_orderstatus")
-      val li = T(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"))
-      val ord = T(s, d, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"), col("o_orderstatus"))
-      val (liBase, liDelta) = (li.filter(expr("l_orderkey % 5 != 0")),
-        li.filter(expr("l_orderkey % 5 = 0")))
-      val (ordBase, ordDelta) = (ord.filter(expr("l_orderkey % 7 != 0")),
-        ord.filter(expr("l_orderkey % 7 = 0")))
-      val dir = java.nio.file.Files.createTempDirectory("graft-jview").toString
-      liBase.join(ordBase, Seq("l_orderkey"))
-        .write.mode("overwrite").parquet(s"$dir/view0")
-      val view0 = s.read.parquet(s"$dir/view0")
-      MaintOps.maintainJoinView(view0, liBase, liDelta, ord, ordDelta,
-          Seq("l_orderkey"))
-        .select(cols.map(col): _*)
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    "pipeline_json_roundtrip" -> ((s, d) => {
-      // JSON source + sink end-to-end under the DuckDB gate: prices ride
-      // as DECIMAL(18,2) (JSON numbers render decimals exactly; raw
-      // doubles would round-trip through shortest-repr text), read back
-      // with an explicit schema, folded to one decimal-exact row
-      val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
-      T(s, d, "orders")
-        .select(col("o_orderkey"), col("o_totalprice").cast("decimal(18,2)").as("price"))
-        .write.mode("overwrite").json(s"$dir/out")
-      s.read.schema("o_orderkey BIGINT, price DECIMAL(18,2)").json(s"$dir/out")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(col("o_orderkey")).cast("bigint").as("key_sum"),
-          sum(col("price")).cast("decimal(38,2)").cast("double").as("price_sum"))
-    }),
-    "dedup_review_sample" -> ((s, d) => {
-      // human-review sampling of near-dup pairs: verified pairs bucket
-      // into similarity bands, each band contributes its top-2 pairs by
-      // an md5 ring (deterministic "random" pick, the data_sample
-      // contract) — the QA step before a dedup threshold ships
-      import org.apache.spark.sql.expressions.Window
-      val pairs = DedupOps
-        .minhashDupPairs(TP(s, d, "documents"), "text", "doc_id", threshold = 0.8,
-          shingleSize = 3, numBands = 16, rowsPerBand = 3)
-      val banded = pairs.withColumn("band",
-        (floor(col("jaccard") * 10) / 10).cast("double"))
-        .withColumn("pick", md5(concat_ws(":", col("a_id"), col("b_id"))))
-      val w = Window.partitionBy("band").orderBy("pick")
-      banded.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 2)
-        .select(col("band"), col("a_id"), col("b_id"), col("jaccard"))
-        .orderBy("band", "a_id", "b_id")
-    }),
-    "data_ablation" -> ((s, d) => {
-      // leave-one-source-out ablation: every corpus statistic with and
-      // WITHOUT each source, from one per-source aggregate + a broadcast
-      // global row — no per-ablation rescan (the mixture-analysis shape:
-      // which source moves the corpus mean?). Integer sums, exact ratios.
-      val per = TP(s, d, "documents")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n"),
-          sum(col("n_chars")).as("chars"),
-          sum(size(TextFunctions.tokens(col("text")))).as("toks"))
-        .transform(Ckpt.lazyCkpt) // per-source + global sides read it
-      val glob = per.agg(sum("n").as("gn"), sum("chars").as("gchars"),
-        sum("toks").as("gtoks"))
-      per.crossJoin(broadcast(glob)) // source-count × 1 row
-        .select(col("source"), col("n"),
-          (col("toks").cast("double") / col("n").cast("double")).as("mean_tokens"),
-          ((col("gtoks") - col("toks")).cast("double") /
-            (col("gn") - col("n")).cast("double")).as("mean_tokens_without"),
-          ((col("gchars") - col("chars")).cast("double") /
-            (col("gn") - col("n")).cast("double")).as("mean_chars_without"))
-        .orderBy("source")
-    }),
-    "events_ab_srm" -> ((s, d) => {
-      // sample-ratio-mismatch guard for the A/B split: |n_a − n_b| must
-      // sit within 4·sqrt(n) of an even split (binomial 4σ) or the
-      // assignment itself is broken and no readout can be trusted — the
-      // pre-test every experiment pipeline runs before events_ab_test
-      val arm = when(
-        conv(substring(md5(concat(lit("ab:"), col("user_id"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, "A").otherwise("B")
-      EV(s, d).select(arm.as("arm"))
-        .agg(
-          sum(when(col("arm") === "A", 1L).otherwise(0L)).as("n_a"),
-          sum(when(col("arm") === "B", 1L).otherwise(0L)).as("n_b"))
-        .select(col("n_a"), col("n_b"),
-          (abs(col("n_a") - col("n_b")).cast("double") <=
-            lit(4.0) * sqrt((col("n_a") + col("n_b")).cast("double"))).as("srm_ok"))
-    }),
-    "dedup_lsh_tuner" -> ((s, d) => {
-      // LSH parameter planner: for every (bands, rows) within the k=64
-      // signature budget, the S-curve catch probability 1-(1-s^r)^b at
-      // the FP guard (s=0.6) and TP target (s=0.9) — powers computed by
-      // REPEATED MULTIPLICATION folds (libm pow() is not cross-engine
-      // reproducible; left-fold products are), feasibility + the chosen
-      // minimal-cost config flagged on the 100-row grid in-row. The
-      // planning step that sizes dedup_minhash before touching data.
-      import org.apache.spark.sql.expressions.Window
-      def scurve(sLit: String) = expr(
-        s"""1.0 - aggregate(sequence(1, b), cast(1.0 as double), (acc, i) ->
-           |  acc * (1.0 - aggregate(sequence(1, r), cast(1.0 as double), (a2, j) ->
-           |    a2 * $sLit)))""".stripMargin)
-      val grid = s.range(1, 17).toDF("b")
-        .select(col("b").cast("int").as("b"),
-          explode(expr("sequence(1, 8)")).as("r"))
-        .filter(col("b") * col("r") <= 64)
-      val probs = grid
-        .withColumn("k", (col("b") * col("r")).cast("int"))
-        .withColumn("p_low", scurve("0.6"))
-        .withColumn("p_high", scurve("0.9"))
-        .withColumn("feasible", col("p_high") >= 0.95 && col("p_low") <= 0.2)
-      probs // chosen: min-cost feasible config, deterministic tie-break
-        .withColumn("chosen",
-          col("feasible") &&
-            row_number().over(Window.orderBy(
-              (!col("feasible")).cast("int"), col("k"), col("p_high").desc, col("b"))) === 1)
-        .select("b", "r", "k", "p_low", "p_high", "feasible", "chosen")
-        .orderBy("b", "r")
-    }),
-    "q48_cohort_ltv" -> ((s, d) => {
-      // cohort lifetime-value curve: customers grouped by first-order
-      // month, cumulative revenue per cohort over month age — decimal-
-      // exact sums; the cumulative runs on the cohort×age aggregate
-      // (calendar² rows), one customer-keyed min and one month rollup
-      import org.apache.spark.sql.expressions.Window
-      val ord = T(s, d, "orders").select(col("o_custkey"),
-        (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("m"),
-        col("o_totalprice").cast("decimal(18,2)").as("v"))
-        .transform(Ckpt.lazyCkpt) // cohort min + revenue rollup read it
-      val cohorts = ord.groupBy("o_custkey").agg(min("m").as("cohort_m"))
-      val cells = ord.join(cohorts, Seq("o_custkey"))
-        .groupBy(col("cohort_m"), (col("m") - col("cohort_m")).as("age"))
-        .agg(sum(col("v")).cast("decimal(38,2)").as("rev"))
-      val w = Window.partitionBy("cohort_m").orderBy("age")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      cells
-        .withColumn("cum_rev",
-          sum(col("rev")).over(w).cast("decimal(38,2)").cast("double"))
-        .select(col("cohort_m"), col("age"),
-          col("rev").cast("double").as("rev"), col("cum_rev"))
-        .orderBy("cohort_m", "age")
-    }),
-    "q49_otif" -> ((s, d) => {
-      // supplier on-time scorecard: ship-lag ≤ 90 days counts as
-      // on-time; volume, revenue (decimal-exact) and on-time share per
-      // supplier — the fact-to-fact join on orderkey with a supplier
-      // rollup; integer ratio, one double division
-      val li = T(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"),
-          revenueTerm.as("rev_term"))
-      val ord = T(s, d, "orders").select(col("o_orderkey").as("l_orderkey"),
-        col("o_orderdate"))
-      li.join(ord, Seq("l_orderkey"))
-        .groupBy(col("l_suppkey"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(when(datediff(col("l_shipdate"), col("o_orderdate")) <= 90, 1L)
-            .otherwise(0L)).as("n_ontime"),
-          dsum(col("rev_term"), 6).as("revenue"))
-        .select(col("l_suppkey"), col("n_lines"),
-          (col("n_ontime").cast("double") / col("n_lines").cast("double")).as("otif"),
-          col("revenue"))
-        .orderBy("l_suppkey")
-    }),
-    "dedup_tf_cosine" -> ((s, d) => {
-      // EXACT tf-vector cosine similarity join: candidates from shared
-      // RARE terms (df-bounded inverted index — the containment-blocking
-      // contract: common terms never generate pairs), then the FULL dot
-      // product in integer tf arithmetic over two keyed posting joins,
-      // norms from per-doc Σtf² — the one division per pair is the only
-      // FP op, so pairs replay bit-for-bit vs the quadratic oracle
-      // blocking on rare word 3-GRAMS, not tokens: the unigram vocab is
-      // dense (every token common), but shingles are selective — the
-      // dedup_containment blocking contract; verification is the FULL
-      // token-tf cosine, so blocking only bounds the pair set. Core in
-      // DedupOps.tfCosinePairs (shared with ScaleProbe's tf_cosine).
-      DedupOps.tfCosinePairs(TP(s, d, "documents"), "text", "doc_id",
-          maxDf = 20, shingleSize = 3, threshold = 0.9)
-        .orderBy("a_id", "b_id")
-    }),
-    "data_dataset_card" -> ((s, d) => {
-      // dataset-card generator: the summary block a curated release
-      // ships with — size, dedup rate, language mix, token mass — all
-      // from ONE scan (single aggregate incl. the distinct-hash expand;
-      // metric rows are an in-row stack)
-      val docs = TP(s, d, "documents")
-      val m = docs.agg(
-        count(lit(1)).as("n"),
-        sum(col("n_chars")).as("chars"),
-        countDistinct(md5(TextFunctions.normText(col("text")))).as("n_uniq"),
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_en"),
-        sum(size(TextFunctions.tokens(col("text")))).as("toks"))
-      m.select(inline(array(
-        struct(lit("n_docs").as("metric"), col("n").cast("double").as("value")),
-        struct(lit("total_chars").as("metric"), col("chars").cast("double").as("value")),
-        struct(lit("exact_dup_rate").as("metric"),
-          ((col("n") - col("n_uniq")).cast("double") / col("n").cast("double")).as("value")),
-        struct(lit("share_en").as("metric"),
-          (col("n_en").cast("double") / col("n").cast("double")).as("value")),
-        struct(lit("mean_tokens").as("metric"),
-          (col("toks").cast("double") / col("n").cast("double")).as("value")))))
-        .orderBy("metric")
-    }),
-    "events_forecast_baseline" -> ((s, d) => {
-      // forecast-baseline backtest: seasonal-naive ŷ(day) = y(day−7) per
-      // event type, scored by MAE/bias in integer cents over the
-      // calendar-sized daily aggregate — the sanity bar any forecasting
-      // model must beat, computed exactly (one day-keyed join, no FP
-      // until the final ratios)
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg((sum(col("value").cast("decimal(18,2)")) * 100)
-          .cast("decimal(38,0)").cast("bigint").as("cents"))
-        .transform(Ckpt.lazyCkpt) // actual + lag-7 sides both read it
-      val lag7 = daily.select(col("event_type").as("et2"),
-        (col("day") + 7).as("day2"), col("cents").as("pred"))
-      daily.join(lag7,
-          col("event_type") === col("et2") && col("day") === col("day2"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"),
-          sum(abs(col("cents") - col("pred"))).cast("bigint").as("abs_err"),
-          sum(col("cents") - col("pred")).cast("bigint").as("bias_cents"))
-        .select(col("event_type"), col("n_days"),
-          (col("abs_err").cast("double") / col("n_days").cast("double") / lit(100.0))
-            .as("mae"),
-          col("bias_cents"))
-        .orderBy("event_type")
-    }),
-    "text_rake" -> ((s, d) => {
-      // RAKE keyphrase extraction: stopword-delimited candidate phrases,
-      // corpus word freq/degree, integer ratio-of-sums scores — see
-      // CorpusOps.rakePhrases for the scale shape (doc-bounded windows,
-      // vocab-sized stats, TakeOrdered top-k)
-      CorpusOps.rakePhrases(TP(s, d, "documents"), "doc_id", "text", topK = 20)
-    }),
-    "events_ab_test" -> ((s, d) => {
-      // A/B experiment readout: users split 50/50 by md5 (deterministic,
-      // the data_split contract), per-arm mean/variance from
-      // decimal-exact moments, Welch's t statistic as the fixed
-      // closed-form double — one scan, a 2-row aggregate, no window
-      val arm = when(
-        conv(substring(md5(concat(lit("ab:"), col("user_id"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, "A").otherwise("B")
-      val vd = col("value").cast("decimal(18,2)")
-      val m = EV(s, d)
-        .select(arm.as("arm"), vd.as("v"))
-        .groupBy("arm")
-        .agg(count(lit(1)).as("n"),
-          sum(col("v")).cast("decimal(38,2)").cast("double").as("sx"),
-          sum((col("v") * col("v")).cast("decimal(38,4)")).cast("decimal(38,4)")
-            .cast("double").as("sxx"))
-        .selectExpr("arm", "n", "sx / n AS mean",
-          "(sxx - sx * sx / n) / (n - 1) / n AS se2") // s²/n, Welch term
-      val a = m.filter(col("arm") === "A")
-        .select(col("n").as("n_a"), col("mean").as("mean_a"), col("se2").as("se2_a"))
-      val b = m.filter(col("arm") === "B")
-        .select(col("n").as("n_b"), col("mean").as("mean_b"), col("se2").as("se2_b"))
-      a.crossJoin(broadcast(b)) // 1-row × 1-row
-        .selectExpr("n_a", "n_b", "mean_a", "mean_b",
-          "(mean_a - mean_b) / sqrt(se2_a + se2_b) AS t_welch")
-    }),
-    "write_bin_packing" -> ((s, d) => {
-      // write planning: pack per-key byte totals into target-sized output
-      // bins with a greedy running-sum cut (bin = cum_before div target) —
-      // the file-count planner a compaction job runs over the KEY-DOMAIN
-      // aggregate before any data moves. Integer-exact; the running sum
-      // is the two-level banding core (band = key div 4096), NOT a
-      // key-domain single-partition window — the key domain grows with
-      // the data, so the old shape was the scale bug this repo documents.
-      val target = 512 * 1024L // 512 KiB per output bin
-      val sizes = T(s, d, "lineitem")
-        .groupBy(col("l_orderkey").as("key"))
-        .agg(sum(lit(96) + length(col("l_returnflag"))).as("bytes")) // est row cost
-        .withColumn("kb", RankOps.idiv(col("key"), 4096))
-      RankOps.bandedRankCum(sizes,
-          bandCols = Seq("kb"),
-          bandSort = Seq(col("kb").asc),
-          rowSort = Seq(col("key").asc),
-          cumCols = Seq("bytes"))
-        .withColumn("bin", RankOps.idiv(col("cum_before_bytes"), target).cast("int"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_keys"), sum("bytes").cast("bigint").as("bin_bytes"))
-        .orderBy("bin")
-    }),
-    "ann_pq_adc" -> ((s, d) => {
-      // PQ-compressed ANN: corpus → 8 codes/vector (sampled codebook),
-      // queries rank by asymmetric distance to the reconstructions.
-      // Like ann_lsh/ann_ivf, driver-checked via the recall-vs-L2-brute-
-      // force invariant (codebook-dependent rows aren't SQL-replicable).
-      import org.apache.spark.sql.expressions.Window
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val queries = vecs.filter(col("vec_id") < 8)
-      val k = 5
-      val q = queries.select(col("vec_id").as("query_id"), col("vec").as("q_vec"))
-      val bfw = Window.partitionBy("query_id").orderBy(col("l2"), col("neighbor_id"))
-      val bf = vecs.select(col("vec_id").as("neighbor_id"), col("vec").as("c_vec"))
-        .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-        .withColumn("l2", expr(
-          """aggregate(zip_with(q_vec, c_vec, (x, y) -> (x - y) * (x - y)),
-            | cast(0.0 as double), (acc, v) -> acc + v)""".stripMargin))
-        .withColumn("rk", row_number().over(bfw)).filter(col("rk") <= k)
-        .select("query_id", "neighbor_id")
-      // candidate budget = corpus/4 (the scan-fraction knob): codes prune
-      // 75% of full-precision reads; recall@5 measured 0.775/0.925/0.85
-      // at sf0.001/0.01/0.1 (deterministic) — invariant bar 0.6 with margin
-      val n = vecs.count()
-      val pq = SimilarityOps.pqAdcRerankTopK(vecs, queries, "vec_id", "vec", k,
-          nCandidates = math.max(64, (n / 4).toInt))
-        .select("query_id", "neighbor_id")
-      bf.join(pq, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .select(lit(8L).as("n_queries"),
-          (col("hits").cast("double") / (8 * k) >= 0.6).as("recall_ok"))
-    }),
-    "data_oversample" -> ((s, d) => {
-      // minority-class oversampling: integer replication factors
-      // ceil(max_n/n) from the label histogram (broadcast back), rows
-      // replicated by an in-row sequence explode — deterministic, no
-      // sampling randomness, and the explode factor is bounded by the
-      // imbalance ratio. Report: class sizes before/after.
-      val labels = TP(s, d, "embeddings").select(col("vec_id"), col("label"))
-      val hist = labels.groupBy("label").agg(count(lit(1)).as("n_before"))
-        .transform(Ckpt.lazyCkpt) // max side + factor side both read it
-      val maxN = hist.agg(max("n_before").as("max_n"))
-      val factors = hist.crossJoin(broadcast(maxN)) // label-count × 1 row
-        .withColumn("factor", ceil(col("max_n").cast("double") / col("n_before").cast("double")).cast("int"))
-      labels.join(broadcast(factors.select("label", "n_before", "factor")), Seq("label"))
-        .select(col("label"), col("n_before"), col("factor"),
-          explode(sequence(lit(1), col("factor"))).as("rep"))
-        .groupBy("label")
-        .agg(first("n_before").as("n_before"), first("factor").as("factor"),
-          count(lit(1)).as("n_after"))
-        .orderBy("label")
-    }),
-    "text_vocab_coverage" -> ((s, d) => {
-      // tokenizer-design curve: share of all token OCCURRENCES covered by
-      // the top-k vocabulary, at k checkpoints — rank + cumulative run on
-      // the two-level banding core with band (c, 2-char token prefix)
-      // (the text_zipf banding precedent — no vocab-sized
-      // single-partition window), integer sums until one double division
-      val checkpoints = Seq(5, 10, 20, 30) // synthetic corpus vocab is ~31 tokens
-      val counts = TP(s, d, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("tok").agg(count(lit(1)).as("c"))
-        .withColumn("pfx", substring(col("tok"), 1, 2))
-      val tot = counts.agg(sum("c").cast("bigint").as("n_occ"),
-        count(lit(1)).cast("bigint").as("n_vocab"))
-      RankOps.bandedRankCum(counts,
-          bandCols = Seq("c", "pfx"),
-          bandSort = Seq(col("c").desc, col("pfx").asc),
-          rowSort = Seq(col("tok").asc),
-          cumCols = Seq("c"),
-          rankName = "rk")
-        .filter(col("rk").isin(checkpoints.map(c => java.lang.Long.valueOf(c.toLong)): _*))
-        .crossJoin(broadcast(tot)) // 1-row scalar attach
-        .select(col("rk").cast("int").as("vocab_size"), col("n_vocab"),
-          ((col("cum_before_c") + col("c")).cast("double") /
-            col("n_occ").cast("double")).as("coverage"))
-        .orderBy("vocab_size")
-    }),
-    "q47_setops_all" -> ((s, d) => {
-      // bag-semantics set operations (INTERSECT ALL / EXCEPT ALL keep
-      // multiplicities — no distinct pass anywhere): customer nations of
-      // high- vs low-balance halves, tagged and unioned into one report
-      val cust = T(s, d, "customer")
-      val hi = cust.filter(col("c_acctbal") >= 0).select(col("c_nationkey"))
-      val lo = cust.filter(col("c_acctbal") < 0).select(col("c_nationkey"))
-      hi.intersectAll(lo).groupBy("c_nationkey").agg(count(lit(1)).as("n"))
-        .withColumn("op", lit("intersect_all"))
-        .unionAll(
-          hi.exceptAll(lo).groupBy("c_nationkey").agg(count(lit(1)).as("n"))
-            .withColumn("op", lit("except_all")))
-        .select(col("op"), col("c_nationkey").cast("long").as("nation"), col("n"))
-        .orderBy("op", "nation")
-    }),
-    "events_quantile_by_type" -> ((s, d) => {
-      // per-key quantile sketch TABLE: (type, day) q-digest rows merge
-      // into per-type medians — the persisted-sketch layout where daily
-      // jobs append rows and readers merge per key without touching raw
-      // history; each type's estimate is rank-checked against the raw
-      // data with the W/k bound
-      import graft.functions.QuantileSketch._
-      val W = 20; val K = 512
-      val ev = EV(s, d).select(col("event_type"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"),
-        expr("ts_us div 86400000000").as("day"))
-      val est = ev.groupBy("event_type", "day")
-        .agg(qdigest(col("cents"), W, K).as("sk"))
-        .groupBy("event_type")
-        .agg(qdigestMerge(col("sk"), W, K).as("sk"))
-        .select(col("event_type").as("et2"),
-          qdigestQuantile(col("sk"), 0.5, W).as("e50"))
-      ev.join(broadcast(est), col("event_type") === col("et2"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("cents") <= col("e50"), 1L).otherwise(0L)).as("le"),
-          sum(when(col("cents") < col("e50"), 1L).otherwise(0L)).as("lt"))
-        .select(col("event_type"), col("n"),
-          ((col("le") >= lit(0.5) * col("n") - lit(W.toDouble / K) * col("n")) &&
-            (col("lt") <= lit(0.5) * col("n") + lit(W.toDouble / K) * col("n")))
-            .as("p50_ok"))
-        .orderBy("event_type")
-    }),
-    "pipeline_schema_evolution" -> ((s, d) => {
-      // schema evolution across parquet generations: gen1 lacks the
-      // price column, gen2 carries it; a mergeSchema read unions both
-      // layouts (old rows null-fill the new column) — the
-      // append-only-with-widening contract a long-lived 100 TB dataset
-      // lives by. Plan: two file-source scans union, one 1-row agg.
-      val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString
-      val ord = T(s, d, "orders")
-      ord.filter(expr("o_orderkey % 2 = 0"))
-        .select(col("o_orderkey"), col("o_custkey"))
-        .write.mode("overwrite").parquet(s"$dir/gen1")
-      ord.filter(expr("o_orderkey % 2 = 1"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .write.mode("overwrite").parquet(s"$dir/gen2")
-      s.read.option("mergeSchema", "true").parquet(s"$dir/gen1", s"$dir/gen2")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("o_totalprice").isNull, 1L).otherwise(0L)).as("n_old_layout"),
-          sum(when(col("o_totalprice").isNotNull, 1L).otherwise(0L)).as("n_new_layout"))
-    }),
-    "vec_pq" -> ((s, d) => {
-      // product quantization: 64 dims → 8 subspaces × 8 dims, each coded
-      // to the nearest of 16 codebook centroids — 64 floats become 8
-      // small codes (the 32× compression ANN recall tables ride on).
-      // The codebook is a LITERAL 1024-double array (md5-derived, so the
-      // oracle rebuilds it bit-for-bit via SQL md5), assignment is pure
-      // map-side in-row HOF arithmetic — the corpus never shuffles, and
-      // the only exchange is the final ORDER BY. Distances fold in fixed
-      // k-order with a +0.0 seed, so qerr doubles replay cross-engine.
-      val J = 8; val C = 16; val K = 8
-      def cent(j: Int, c: Int, k: Int): Double = {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hex = md.digest(s"pq:$j:$c:$k".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        (java.lang.Long.parseLong(hex.substring(0, 8), 16) % 2001 - 1000) / 1000.0
-      }
-      val cents = array((for (j <- 0 until J; c <- 0 until C; k <- 0 until K)
-        yield lit(cent(j, c, k))): _*)
-      TP(s, d, "embeddings")
-        .select(col("vec_id"),
-          VectorFunctions.asDouble(col("embedding")).as("v"))
-        .withColumn("cent", cents)
-        .select(col("vec_id"), posexplode(expr(
-          s"""transform(sequence(0, ${J - 1}), j ->
-             |  transform(sequence(0, ${C - 1}), c ->
-             |    aggregate(sequence(1, $K), cast(0.0 as double), (acc, k) ->
-             |      acc + (element_at(v, j*$K + k) - element_at(cent, (j*$C + c)*$K + k))
-             |          * (element_at(v, j*$K + k) - element_at(cent, (j*$C + c)*$K + k)))))
-             |""".stripMargin)).as(Seq("sub_j", "dists")))
-        .select(col("vec_id"), col("sub_j"),
-          (array_position(col("dists"), array_min(col("dists"))) - 1).cast("int").as("code"),
-          array_min(col("dists")).as("qerr"))
-        .orderBy("vec_id", "sub_j")
-    }),
-    "q46_equidepth" -> ((s, d) => {
-      // equi-DEPTH histogram (the q23 equi-width complement) WITHOUT a
-      // global row sort: rows collapse to the (value → count) domain
-      // aggregate, the cumulative runs on the two-level banding core
-      // (band = v div 2^20 — ~$10k value slabs; o_totalprice cents are
-      // near-unique so the old domain-sized single-partition window grew
-      // with the data), and bucket = floor(cum_before·nb / n) — exact
-      // integer assignment, deterministic min/max bounds per bucket
-      val nb = 10
-      val counts = T(s, d, "orders")
-        .select((col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").as("v"))
-        .groupBy("v").agg(count(lit(1)).as("c"))
-        .withColumn("vb", RankOps.idiv(col("v"), 1L << 20))
-      val tot = counts.agg(sum("c").cast("bigint").as("n"))
-      RankOps.bandedRankCum(counts,
-          bandCols = Seq("vb"),
-          bandSort = Seq(col("vb").asc),
-          rowSort = Seq(col("v").asc),
-          cumCols = Seq("c"))
-        .crossJoin(broadcast(tot)) // 1-row scalar attach
-        .withColumn("bucket", expr(s"CAST((cum_before_c * $nb) div n AS INT)"))
-        .groupBy("bucket")
-        .agg(min("v").as("lo_cents"), max("v").as("hi_cents"),
-          sum("c").cast("bigint").as("n_rows"))
-        .orderBy("bucket")
-    }),
-    "data_kanon_suppress" -> ((s, d) => {
-      // k-anonymity ENFORCEMENT (the audit's apply side): rows in
-      // quasi-identifier classes smaller than k get their QI columns
-      // suppressed — one QI-keyed aggregate joined back (AQE broadcasts
-      // the class table: bounded by the QI domain, not rows)
-      val k = 5
-      val cust = T(s, d, "customer").select(col("c_custkey"),
-        col("c_mktsegment").as("segment"),
-        col("c_nationkey").cast("long").as("nation"),
-        floor(col("c_acctbal") / 1000.0).cast("long").as("bal_band"))
-      val classes = cust.groupBy("segment", "nation", "bal_band")
-        .agg(count(lit(1)).as("n"))
-      cust.join(broadcast(classes), Seq("segment", "nation", "bal_band"))
-        .select(col("c_custkey"),
-          when(col("n") >= k, col("segment")).otherwise(lit("*")).as("segment_out"),
-          when(col("n") >= k, col("nation")).otherwise(lit(-1L)).as("nation_out"),
-          when(col("n") >= k, col("bal_band")).otherwise(lit(-1L)).as("band_out"),
-          (col("n") < k).as("suppressed"))
-        .orderBy("c_custkey")
-    }),
-    "data_dp_release" -> ((s, d) => {
-      // differentially-private segment aggregates: Laplace-noised count +
-      // clipped-sum release with an explicit ε ledger — the publishable
-      // complement of the k-anon/l-div/t-closeness audit triple. Noise is
-      // a seeded md5-uniform inverse-CDF draw (retry-stable, no RNG
-      // state), so the oracle replays the release bit-for-bit; only noisy
-      // values leave the operator. clip=$1000 (100k cents), ε=0.5+0.5.
-      val cust = T(s, d, "customer").select(col("c_mktsegment").as("segment"),
-        (col("c_acctbal").cast("decimal(18,2)") * 100).cast("bigint").as("cents"))
-      PrivacyOps.dpRelease(cust, Seq("segment"), "cents", clip = 100000L,
-          epsCount = 0.5, epsSum = 0.5, releaseId = "rel-2026-08")
-        .orderBy("segment")
-    }),
-    "text_span_scrub" -> ((s, d) => {
-      // exact-substring dedup APPLY side (Lee et al. 2021): every 8-token
-      // span also present in a lower-id doc is removed from the higher-id
-      // doc (owner keeps its copy; within-doc repeats untouched — row
-      // 124's job). Linear coverage expand, no suffix array, no
-      // positions×starts product. Scrubbed text rides as md5 (the
-      // text_clean convention) so the compare stays value-sized.
-      CorpusOps.scrubDuplicatedSpans(TP(s, d, "documents"), "doc_id", "text", n = 8)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          md5(col("scrubbed")).as("scrub_md5"))
-        .orderBy("doc_id")
-    }),
-    "text_span_scrub_winnow" -> ((s, d) => {
-      // memory-bounded span scrub (row 307's long-n variant): only the
-      // ~2n/w winnowing-SELECTED grams are positioned and owned (min
-      // doc id per selected hash), each shared selection scrubs its
-      // k-token extent. With w ≤ k the extents tile a shared run's
-      // interior (≤ w−1 edge tokens survive per side) at 1/w of the
-      // positioned-gram memory — the price of the bound. Oracle replays
-      // the full winnowing selection (the dedup_winnowing fragment) +
-      // ownership + coverage rebuild; scrubbed rides as md5.
-      CorpusOps.scrubWinnowedSpans(TP(s, d, "documents"), "doc_id", "text",
-          k = 4, w = 4)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          md5(col("scrubbed")).as("scrub_md5"))
-        .orderBy("doc_id")
-    }),
-    "data_linkage" -> ((s, d) => {
-      // Fellegi–Sunter record linkage (LinkageOps) over a
-      // deterministically dirtied copy of customer: B keeps k%3∈{0,1}
-      // (k%3=0 rows get a last-char typo, ±cents jitter, and a 1-in-9
-      // mangled segment; k%3=1 are clean copies; k%3=2 exist only in A).
-      // Blocking: name chars 1..16 ('Customer#' + 7 digits) → ≤100-wide
-      // blocks, candidates = one equi-join, never all-pairs. Comparators
-      // are INTEGER predicates (levenshtein ≤ 1, equality, cents ≤ 100)
-      // and weights integer log-odds basis points, so the score is an
-      // exact integer sum the oracle replays. Emits match+possible bands.
-      val cents = (col("c_acctbal").cast("decimal(18,2)") * 100).cast("bigint")
-      // TP on the STREAM side: the one-file customer scan is a single
-      // task, and all candidate-pair comparator work (5 levenshtein
-      // evaluations per pair across score + flags) lands on it — spread
-      // to session parallelism first (15.2 s -> ~1 s at sf0.1).
-      val aB = TP(s, d, "customer").select(
-        col("c_custkey").as("a_id"), col("c_name").as("a_name"),
-        col("c_nationkey").cast("long").as("a_nation"), cents.as("a_cents"),
-        col("c_mktsegment").as("a_seg"),
-        substring(col("c_name"), 1, 16).as("blk"))
-      val k = col("c_custkey")
-      val bB = T(s, d, "customer").filter(k % 3 =!= 2).select(
-        (k + 1000000L).as("b_id"),
-        when(k % 3 === 0, concat(substring(col("c_name"), 1, 17), lit("x")))
-          .otherwise(col("c_name")).as("b_name"),
-        col("c_nationkey").cast("long").as("b_nation"),
-        (cents + when(k % 3 === 0, (k % 7 - 3) * 37).otherwise(lit(0L))).as("b_cents"),
-        when(k % 9 === 0, reverse(col("c_mktsegment")))
-          .otherwise(col("c_mktsegment")).as("b_seg"),
-        substring(col("c_name"), 1, 16).as("blk"))
-      LinkageOps.fellegiSunter(aB, bB, "blk", _ => Seq(
-          LinkageOps.FieldRule("name",
-            levenshtein(col("a_name"), col("b_name")) <= 1, 994L, -564L),
-          LinkageOps.FieldRule("nation", col("a_nation") === col("b_nation"), 457L, -426L),
-          LinkageOps.FieldRule("segment", col("a_seg") === col("b_seg"), 217L, -300L),
-          LinkageOps.FieldRule("acct",
-            abs(col("a_cents") - col("b_cents")) <= 100, 649L, -330L)),
-          matchBp = 800L, possibleBp = 0L)
-        .filter(col("decision") =!= "nonmatch")
-        .select(col("a_id"), col("b_id"), col("agree_name"), col("agree_nation"),
-          col("agree_segment"), col("agree_acct"), col("score_bp").cast("bigint").as("score_bp"),
-          col("decision"))
-        .orderBy("a_id", "b_id")
-    }),
-    "data_entity_golden" -> ((s, d) => {
-      // the APPLY side of record linkage (row 306 produces pairs; this
-      // resolves them): two independently-dirtied copies of customer
-      // (B: k%3-based edits — the data_linkage synthesis; C: k%5-based)
-      // are FS-matched against A, match pairs close into entities
-      // (connected components, entity_id = min member), and each
-      // entity emits a GOLDEN record by majority survivorship — per
-      // attribute the most frequent value, ties to the lexicographic
-      // min (a 3-member entity with one dirty copy repairs by 2-1
-      // vote; numeric attributes ride as digit strings, cast back).
-      // All comparators/weights integer, the vote integer — exact.
-      import org.apache.spark.sql.expressions.Window
-      val cents = (col("c_acctbal").cast("decimal(18,2)") * 100).cast("bigint")
-      val k = col("c_custkey")
-      // 17-char block prefix (10-wide blocks): data_linkage's 16-char
-      // convention costs 100-wide blocks, and this query pays it TWICE
-      // (two dirty copies) with a levenshtein per candidate — 3M
-      // comparator evaluations measured as the suite's slowest stage.
-      // Recall is unaffected: both sides derive blk from the SOURCE
-      // name, so narrowing the block never separates a true pair here.
-      val aB = TP(s, d, "customer").select(
-        col("c_custkey").as("a_id"), col("c_name").as("a_name"),
-        col("c_nationkey").cast("long").as("a_nation"), cents.as("a_cents"),
-        col("c_mktsegment").as("a_seg"),
-        substring(col("c_name"), 1, 17).as("blk"))
-      def dirty(off: Long, m1: Int, m2: Int, jmod: Int, jmul: Int) =
-        T(s, d, "customer").filter(k % 3 =!= 2).select(
-          (k + off).as("b_id"),
-          when(k % m1 === 0, concat(substring(col("c_name"), 1, 17), lit("x")))
-            .otherwise(col("c_name")).as("b_name"),
-          col("c_nationkey").cast("long").as("b_nation"),
-          (cents + when(k % m1 === 0, (k % jmod - jmod / 2) * jmul)
-            .otherwise(lit(0L))).as("b_cents"),
-          when(k % m2 === 0, reverse(col("c_mktsegment")))
-            .otherwise(col("c_mktsegment")).as("b_seg"),
-          substring(col("c_name"), 1, 17).as("blk"))
-      def matchesTo(side: DataFrame) =
-        LinkageOps.fellegiSunter(aB, side, "blk", _ => Seq(
-            LinkageOps.FieldRule("name",
-              levenshtein(col("a_name"), col("b_name")) <= 1, 994L, -564L),
-            LinkageOps.FieldRule("nation", col("a_nation") === col("b_nation"), 457L, -426L),
-            LinkageOps.FieldRule("segment", col("a_seg") === col("b_seg"), 217L, -300L),
-            LinkageOps.FieldRule("acct",
-              abs(col("a_cents") - col("b_cents")) <= 100, 649L, -330L)),
-            matchBp = 800L, possibleBp = 0L)
-          .filter(col("decision") === "match").select("a_id", "b_id")
-      val bSide = dirty(1000000L, 3, 9, 7, 37)
-      val cSide = dirty(2000000L, 5, 15, 11, 23)
-      val edges = matchesTo(bSide).unionByName(matchesTo(cSide))
-      val labels = GraphOps.connectedComponents(edges, "a_id", "b_id")
-      def rec(df: DataFrame) = df.select(col("b_id").as("rec_id"),
-        col("b_name").as("name"), col("b_nation").as("nation"),
-        col("b_cents").as("cents"), col("b_seg").as("seg"))
-      val records = rec(aB.select(col("a_id").as("b_id"), col("a_name").as("b_name"),
-          col("a_nation").as("b_nation"), col("a_cents").as("b_cents"),
-          col("a_seg").as("b_seg")))
-        .unionByName(rec(bSide.drop("blk"))).unionByName(rec(cSide.drop("blk")))
-      val tagged = records
-        .join(labels.select(col("id").as("rec_id"), col("cluster_id")), Seq("rec_id"), "left")
-        .withColumn("entity_id", coalesce(col("cluster_id"), col("rec_id")))
-      val stacked = tagged.select(col("entity_id"), explode(array(
-          struct(lit("name").as("attr"), col("name").as("v")),
-          struct(lit("nation").as("attr"), col("nation").cast("string").as("v")),
-          struct(lit("cents").as("attr"), col("cents").cast("string").as("v")),
-          struct(lit("seg").as("attr"), col("seg").as("v")))).as("p"))
-        .select(col("entity_id"), col("p.attr").as("attr"), col("p.v").as("v"))
-      val w = Window.partitionBy("entity_id", "attr")
-        .orderBy(col("c").desc, col("v").asc)
-      // r15 (§1.2): n_records used to re-evaluate the whole records⋈labels
-      // join as a second consumer of `tagged`; every record carries a
-      // non-null name, so the member count is the name-attr count mass in
-      // the SAME (entity, attr, v) table the vote reads — one evaluation.
-      val counts = stacked.groupBy("entity_id", "attr", "v")
-        .agg(count(lit(1)).as("c"))
-        .transform(Ckpt.lazyCkpt) // vote pick + member count read it
-      val picked = counts
-        .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      val golden = picked.groupBy("entity_id").agg(
-        max(when(col("attr") === "name", col("v"))).as("name"),
-        max(when(col("attr") === "nation", col("v"))).cast("long").as("nation"),
-        max(when(col("attr") === "cents", col("v"))).cast("long").as("cents"),
-        max(when(col("attr") === "seg", col("v"))).as("seg"))
-      counts.filter(col("attr") === "name")
-        .groupBy("entity_id").agg(sum("c").as("n_records"))
-        .join(golden, Seq("entity_id"))
-        .select("entity_id", "n_records", "name", "nation", "cents", "seg")
-        .orderBy("entity_id")
-    }),
-    "data_local_dp" -> ((s, d) => {
-      // LOCAL differential privacy by randomized response (Warner 1965;
-      // the RAPPOR building block) — the collector never sees a true
-      // bit, unlike row 305's central-DP release: each user's
-      // "purchased?" bit flips with probability f = 1/4 (ε = ln 3 per
-      // bit) via a seeded md5 coin (the dp_release seeded-noise
-      // convention — deterministic, hence oracle-replayable), and the
-      // debiased estimate p̂ = (rate − f)/(1 − 2f) is emitted as the
-      // INTEGER numerator est_x2 = 4·reported − N (= 2·estimated
-      // count; exact in both engines, no division). True count rides
-      // along to show the estimator lands near it. The sensitive bit:
-      // "heavy purchaser" (≥ 15 purchase events) — a genuinely split
-      // population at the testdata SFs (6/15 and 50/150).
-      val users = EV(s, d).groupBy("user_id")
-        .agg((sum(when(col("event_type") === "purchase", 1L).otherwise(0L)) >= 15L)
-          .cast("long").as("truth"))
-      val coin = conv(substring(md5(concat(lit("rr:"), col("user_id"))), 1, 12), 16, 10)
-        .cast("long")
-      users
-        .withColumn("report",
-          when(coin < lit(70368744177664L), lit(1L) - col("truth")) // 2^46 = 2^48/4
-            .otherwise(col("truth")))
-        .agg(count(lit(1)).as("n_users"), sum("truth").as("n_true"),
-          sum("report").as("n_reported"))
-        .select(col("n_users"), col("n_true"), col("n_reported"),
-          (lit(4L) * col("n_reported") - col("n_users")).as("est_x2"))
-    }),
-    "events_twap" -> ((s, d) => {
-      // time-weighted average price per event type: each observation is
-      // weighted by how long it stayed current (the dwell span to the
-      // user's next event) — Σ(cents·µs)/Σµs in DECIMAL(38,0) (a cents×µs
-      // product overflows BIGINT at day-long spans), one user-keyed sort
-      import org.apache.spark.sql.expressions.Window
-      val d38 = "decimal(38,0)"
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      EV(s, d)
-        .select(col("user_id"), col("event_id"), col("event_type"), col("ts_us"),
-          (col("value").cast("decimal(18,2)") * 100).cast("bigint").as("cents"))
-        .withColumn("dur", lead(col("ts_us"), 1).over(w) - col("ts_us"))
-        .filter(col("dur").isNotNull)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_spans"),
-          sum((col("cents").cast(d38) * col("dur").cast(d38)).cast(d38))
-            .cast(d38).cast("double").as("num"),
-          sum(col("dur").cast(d38)).cast(d38).cast("double").as("den"))
-        .select(col("event_type"), col("n_spans"),
-          (col("num") / col("den") / lit(100.0)).as("twap"))
-        .orderBy("event_type")
-    }),
-    "data_bootstrap_ci" -> ((s, d) => {
-      // bootstrap CI for the mean WITHOUT randomness: row multiplicity in
-      // resample b is Poisson(1) read off a 48-bit md5(b:key) integer
-      // against PRECOMPUTED integer CDF thresholds (identical literals in
-      // the oracle → bit-exact replay). One ×64 in-row expand, one
-      // groupBy(b), then rank-picks on the 64-row mean frame. The
-      // resampling pattern that gives error bars on any 100 TB aggregate
-      // in a single pass — no per-resample scans.
-      import org.apache.spark.sql.expressions.Window
-      val B = 64
-      val d38 = "decimal(38,0)"
-      // ONE md5 per row, then 64 per-resample draws by integer mixing
-      // (Knuth multiplicative + odd increment, mod 2^48) — 64 md5s/row
-      // was the whole query's cost at sf0.1 (9.9s -> ~1s); the mix is
-      // plain integer arithmetic the oracle replicates exactly
-      // Par.spread: the md5 + ×64 expand + mix ran serial on the 1-task scan
-      // (2.5 s of this query's ~2.9 s at sf0.1)
-      val rows = Par.spread(T(s, d, "orders").select(col("o_orderkey"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").as("cents")))
-        .withColumn("h0", conv(substring(
-          md5(concat(lit("bs:"), col("o_orderkey"))), 1, 12), 16, 10).cast("bigint"))
-        .select(col("cents"), col("h0"),
-          explode(sequence(lit(1), lit(B))).as("b"))
-        .withColumn("u", // split h0 so no product exceeds 2^56 (ANSI-safe)
-          pmod(pmod(col("h0"), lit(16777216L)) * lit(2654435761L)
-            + expr("h0 div 16777216") * lit(40503L)
-            + col("b") * pmod(col("h0"), lit(1000003L)) + col("b") * lit(97L),
-            lit(281474976710656L)))
-      val m = when(col("u") < 103548857136060L, 0L)
-        .when(col("u") < 207097714272121L, 1L)
-        .when(col("u") < 258872142840152L, 2L)
-        .when(col("u") < 276130285696162L, 3L)
-        .otherwise(4L)
-      val means = rows.withColumn("m", m)
-        .groupBy("b")
-        .agg((sum((col("m").cast(d38) * col("cents").cast(d38)).cast(d38)).cast(d38)
-          .cast("double") / sum(col("m")).cast("double") / lit(100.0)).as("mean_b"))
-      val ranked = means.withColumn("rk",
-        row_number().over(Window.orderBy("mean_b"))) // 64-row frame
-      ranked.agg(
-        count(lit(1)).cast("bigint").as("n_resamples"),
-        min(when(col("rk") === 2, col("mean_b"))).as("ci_lo"),
-        min(when(col("rk") === B - 1, col("mean_b"))).as("ci_hi"))
-    }),
-    "dedup_best_match" -> ((s, d) => {
-      // entity-resolution pairing: from the verified near-dup pairs,
-      // keep only MUTUAL best matches (each side is the other's highest-
-      // jaccard neighbor; ties to the smaller id) — the post-processor
-      // that turns a candidate soup into 1:1 merge decisions. Windows
-      // run per-doc over candidate lists (bounded by the band recall),
-      // never over the corpus.
-      import org.apache.spark.sql.expressions.Window
-      val pairs = DedupOps
-        .minhashDupPairs(TP(s, d, "documents"), "text", "doc_id", threshold = 0.8,
-          shingleSize = 3, numBands = 16, rowsPerBand = 3)
-        .transform(Ckpt.lazyCkpt) // both symmetric halves read it
-      val sym = pairs.select(col("a_id").as("src"), col("b_id").as("dst"), col("jaccard"))
-        .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst"), col("jaccard")))
-      val w = Window.partitionBy("src").orderBy(col("jaccard").desc, col("dst"))
-      val best = sym.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1).drop("rk")
-      val other = best.select(col("src").as("src2"), col("dst").as("dst2"))
-      best.join(other, col("dst") === col("src2") && col("src") === col("dst2"))
-        .filter(col("src") < col("dst"))
-        .select(col("src").as("a_id"), col("dst").as("b_id"), col("jaccard"))
-        .orderBy("a_id")
-    }),
-    "events_calendar_gaps" -> ((s, d) => {
-      // time-series completeness audit: hourly slots with NO events per
-      // type — the dense hour grid is generated in-row from the 1-row
-      // min/max bounds (never materialized from data), crossed with the
-      // type list (both broadcast), and observed slots anti-join away.
-      // At 100 TB the grid is calendar×types-sized, the observed set is
-      // one distinct-agg of the log.
-      val ev = EV(s, d).select(col("event_type"),
-        expr("ts_us div 3600000000").as("hour"))
-      val bounds = ev.agg(min("hour").as("h0"), max("hour").as("h1"))
-      val types = ev.select("event_type").distinct()
-      val grid = types.crossJoin(broadcast(bounds)) // types × 1 row
-        .select(col("event_type"), explode(sequence(col("h0"), col("h1"))).as("hour"))
-      grid.join(ev.distinct(), Seq("event_type", "hour"), "left_anti")
-        .orderBy("event_type", "hour")
-    }),
-    "data_ldiversity" -> ((s, d) => {
-      // l-diversity audit (the k-anonymity complement): per
-      // quasi-identifier class, the count of DISTINCT sensitive values —
-      // a class can be k-anonymous yet leak everything if all its rows
-      // share one sensitive value. One shuffle on the QI tuple.
-      val l = 3
-      T(s, d, "customer")
-        .groupBy(col("c_nationkey").cast("long").as("nation"),
-          floor(col("c_acctbal") / 1000.0).cast("long").as("bal_band"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("c_mktsegment")).as("l_div"))
-        .withColumn("at_risk", (col("l_div") < l).cast("boolean"))
-        .orderBy("nation", "bal_band")
-    }),
-    "data_expectations" -> ((s, d) => {
-      // declarative data contract: five expectations evaluated in ONE
-      // scan (a single aggregate computes every measured value; rule
-      // rows are an in-row stack) — the gate a pipeline runs before
-      // publishing a 100 TB batch
-      import AuditOps.Expectation
-      AuditOps.expectations(T(s, d, "orders"), Seq(
-        Expectation("key_not_null",
-          sum(when(col("o_orderkey").isNull, 1L).otherwise(0L)), _ === 0.0),
-        Expectation("key_unique",
-          count(lit(1)) - countDistinct(col("o_orderkey")), _ === 0.0),
-        Expectation("price_in_range",
-          sum(when(col("o_totalprice") < 0 || col("o_totalprice") > 1000000, 1L)
-            .otherwise(0L)), _ === 0.0),
-        Expectation("status_domain",
-          sum(when(!col("o_orderstatus").isin("F", "O", "P"), 1L).otherwise(0L)),
-          _ === 0.0),
-        Expectation("row_count_min", count(lit(1)), _ >= 1000.0)))
-    }),
-    "data_neyman_alloc" -> ((s, d) => {
-      // Neyman-optimal stratified-sampling allocation: n_h ∝ N_h·S_h
-      // with EXACT largest-remainder rounding — stddev comes from the
-      // decimal-exact moment sums (the q24_stats contract), the one
-      // double product is floored into integer micro-weights, and every
-      // remaining step (shares, floors, remainder ranks) is integer
-      // arithmetic on the STRATUM-COUNT-sized frame. The sampling-design
-      // op a 1000-stratum corpus needs before drawing a fixed budget.
-      import org.apache.spark.sql.expressions.Window
-      val budget = 1000L
-      val vd = col("o_totalprice").cast("decimal(18,2)")
-      val m = T(s, d, "orders")
-        .groupBy(col("o_orderpriority").as("stratum"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(vd).cast("decimal(38,2)").cast("double").as("sx"),
-          sum((vd * vd).cast("decimal(38,4)")).cast("decimal(38,4)").cast("double").as("sxx"))
-        .withColumn("sd", sqrt((col("sxx") - col("sx") * col("sx") / col("n_rows").cast("double"))
-          / (col("n_rows").cast("double") - lit(1d))))
-        .withColumn("w_micro",
-          floor(col("n_rows").cast("double") * col("sd") * lit(1e6)).cast("decimal(38,0)"))
-      val tot = m.agg(sum("w_micro").cast("decimal(38,0)").as("w_tot"))
-      val alloc = m.crossJoin(broadcast(tot)) // stratum-count × 1 row
-        // integral division + exact remainder in DECIMAL(38,0) — a
-        // decimal `/` would ROUND at its result scale and can differ
-        // from the oracle's integer `//` on knife-edge quotients
-        .withColumn("base", expr(s"CAST(($budget * w_micro) div w_tot AS BIGINT)"))
-        .withColumn("rem", lit(budget) * col("w_micro") - col("base") * col("w_tot"))
-      val w = Window.orderBy(col("rem").desc, col("stratum"))
-      val wAll = Window.orderBy("stratum")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      alloc
-        .withColumn("leftover", lit(budget) - sum("base").over(wAll))
-        .withColumn("rk", row_number().over(w))
-        .select(col("stratum"), col("n_rows"),
-          (col("base") + when(col("rk") <= col("leftover"), 1L).otherwise(0L))
-            .cast("bigint").as("n_alloc"))
-        .orderBy("stratum")
-    }),
-    "data_benford" -> ((s, d) => {
-      // Benford first-digit audit: the leading digit comes from the
-      // INTEGER cents rendered as a string (no log10 on data — the only
-      // doubles are the shared literal expectations), per-digit counts
-      // in one hash agg, corpus total attached as a broadcast scalar
-      val expected = array(Seq(
-        0.3010299956639812, 0.17609125905568124, 0.12493873660829993,
-        0.09691001300805642, 0.07918124604762482, 0.06694678963061322,
-        0.05799194697768673, 0.05115252244738129, 0.04575749056067514)
-        .map(lit): _*)
-      val counts = T(s, d, "orders")
-        .select(substring((col("o_totalprice").cast("decimal(18,2)") * 100)
-          .cast("bigint").cast("string"), 1, 1).cast("int").as("digit"))
-        .groupBy("digit").agg(count(lit(1)).as("n_d"))
-      val tot = counts.agg(sum("n_d").cast("double").as("n"))
-      counts.crossJoin(broadcast(tot)) // 1-row scalar attach
-        .select(col("digit"), col("n_d"),
-          (col("n_d").cast("double") / col("n")).as("share"),
-          element_at(expected, col("digit")).as("expected"))
-        .withColumn("abs_dev", abs(col("share") - col("expected")))
-        .orderBy("digit")
-    }),
-    "events_gini" -> ((s, d) => {
-      // Gini concentration of spend across users: integer-exact
-      // numerator Σ(2i−n−1)·x_i = 2Σi·x − (n+1)Σx with the rank i from
-      // the two-level banding core (band = x div 2^20 — cents spend is
-      // near-unique, so the band key is the value itself coarsened; ties
-      // stay in one band) — no user-count single-partition rank window;
-      // the final agg folds n in exactly, one double division at the end
-      val d38 = "decimal(38,0)"
-      val totals = EV(s, d)
-        .groupBy("user_id")
-        .agg((sum(col("value").cast("decimal(18,2)")) * 100)
-          .cast(d38).cast("bigint").as("x"))
-        .withColumn("xb", RankOps.idiv(col("x"), 1L << 20))
-      RankOps.bandedRankCum(totals,
-          bandCols = Seq("xb"),
-          bandSort = Seq(col("xb").asc),
-          rowSort = Seq(col("x").asc, col("user_id").asc))
-        .agg(
-          count(lit(1)).cast("bigint").as("n_users"),
-          sum(col("rank").cast(d38) * col("x").cast(d38)).cast(d38).as("six"),
-          sum(col("x").cast(d38)).cast(d38).as("sx"))
-        .select(col("n_users"),
-          ((lit(2).cast(d38) * col("six") -
-            (col("n_users").cast(d38) + lit(1).cast(d38)) * col("sx")).cast("double") /
-            (col("n_users").cast(d38) * col("sx")).cast("double")).as("gini"))
-    }),
-    "q44_joinsize" -> ((s, d) => {
-      // planner statistics from sketches: |lineitem ⋈ orders| estimated
-      // as the CMS inner product of two per-table sketch rows (min over
-      // rows of the counter dot product — NEVER an underestimate,
-      // overshoot ≤ n_l·n_o/w per row). The exact count cross-checks it
-      // via domain-sized key-count frames (never the join itself): Σ
-      // c_l(k)·c_o(k). At 100 TB the estimate path reads two kilobyte
-      // sketch rows; no join, no scan.
-      import graft.functions.CountMinSketch._
-      val D = 4; val Wd = 32768
-      val li = T(s, d, "lineitem").select(col("l_orderkey").as("k"))
-      val ord = T(s, d, "orders").select(col("o_orderkey").as("k"))
-      val skL = li.agg(cms(col("k"), D, Wd).as("sk_l"))
-      val skO = ord.agg(cms(col("k"), D, Wd).as("sk_o"))
-      val est = skL.crossJoin(broadcast(skO)) // 1-row × 1-row
-        .select(cmsInnerProduct(col("sk_l"), col("sk_o"), D, Wd).as("est"))
-      val stats = li.groupBy("k").agg(count(lit(1)).as("cl"))
-        .join(ord.groupBy("k").agg(count(lit(1)).as("co")), Seq("k"), "full_outer")
-        .agg(
-          sum(coalesce(col("cl"), lit(0L)) * coalesce(col("co"), lit(0L)))
-            .cast("bigint").as("exact"),
-          sum(coalesce(col("cl"), lit(0L))).cast("double").as("nl"),
-          sum(coalesce(col("co"), lit(0L))).cast("double").as("no"))
-      est.crossJoin(broadcast(stats))
-        .select(col("exact"),
-          (col("est") >= col("exact")).as("lower_ok"),
-          (col("est") <= col("exact") + lit(3.0) * col("nl") * col("no") / lit(Wd))
-            .as("upper_ok"))
-    }),
-    "events_autocorr" -> ((s, d) => {
-      // lag-1 autocorrelation of daily revenue per event type: daily
-      // totals are decimal-exact (order-independent), consecutive days
-      // pair by a day+1 equi-join over the DAY-COUNT-sized aggregate,
-      // and the correlation is the exactStats closed-form double — the
-      // raw events shuffle once (into daily totals), everything after
-      // is calendar-sized
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg(sum(col("value").cast("decimal(18,2)")).cast("decimal(38,2)")
-          .cast("double").as("tot"))
-        .transform(Ckpt.lazyCkpt) // both pair sides read it
-      val nxt = daily.select(col("event_type").as("et2"),
-        (col("day") - 1).as("day2"), col("tot").as("tot_next"))
-      val pairs = daily.join(nxt,
-        col("event_type") === col("et2") && col("day") === col("day2"))
-      StatsOps.exactStats(pairs, Seq("event_type"), col("tot"), col("tot_next"))
-        .select(col("event_type"), col("n"), col("corr_xy").as("acf1"))
-        .orderBy("event_type")
-    }),
-    "q43_percentrank" -> ((s, d) => {
-      // rank-distribution family: percent_rank + cume_dist of supplier
-      // balance WITHIN nation, reassembled CLOSED-FORM from the grouped
-      // banded rank (25 nations over a 100 TB supplier table make
-      // partitionBy(nation) a hot partition — round-8 window-key audit):
-      // row_number rk over (acctbal, suppkey); tie groups (nation,
-      // acctbal) are bounded, so min/max rk over them is a safe window;
-      // pr = (min_rk−1)/(n−1) (SQL RANK semantics), cd = max_rk/n.
-      import org.apache.spark.sql.expressions.Window
-      val sup = T(s, d, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
-        .withColumn("bb", floor(col("s_acctbal").cast("double") / 256.0).cast("long"))
-      val ranked = RankOps.groupedBandedRank(sup,
-        groupCols = Seq("s_nationkey"), bandCols = Seq("bb"),
-        bandSort = Seq(col("bb").asc),
-        rowSort = Seq(col("s_acctbal").asc, col("s_suppkey").asc), rankName = "rk")
-      val totals = sup.groupBy("s_nationkey").agg(count(lit(1)).as("n_nat"))
-      val peers = Window.partitionBy("s_nationkey", "s_acctbal") // bounded tie groups
-      ranked.join(broadcast(totals), Seq("s_nationkey"))
-        .withColumn("min_rk", min("rk").over(peers))
-        .withColumn("max_rk", max("rk").over(peers))
-        .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"),
-          when(col("n_nat") === 1, lit(0.0))
-            .otherwise((col("min_rk") - 1).cast("double") / (col("n_nat") - 1).cast("double"))
-            .as("pr"),
-          (col("max_rk").cast("double") / col("n_nat").cast("double")).as("cd"))
-        .orderBy("s_suppkey")
-    }),
-    "events_chi2" -> ((s, d) => {
-      // chi-square independence test, event_type × day-of-week: observed
-      // counts are integers (dow from pure epoch-day arithmetic, the
-      // events_heatmap convention), margins come from windows over the
-      // CELL frame (|types|×7 rows), each cell's expected/contribution is
-      // a closed-form double, and the chi2 TOTAL is a fold-exact
-      // sequential sum over the (type,dow)-sorted contributions — a
-      // parallel double SUM would be order-nondeterministic. The
-      // seasonality-dependence gate a telemetry pipeline runs before
-      // assuming type-stationary traffic.
-      import org.apache.spark.sql.expressions.Window
-      val cells = EV(s, d)
-        .select(col("event_type"), expr("(ts_us div 86400000000 + 4) % 7").as("dow"))
-        .groupBy("event_type", "dow").agg(count(lit(1)).as("obs"))
-      val c = cells
-        .withColumn("row_tot", sum("obs").over(Window.partitionBy("event_type")))
-        .withColumn("col_tot", sum("obs").over(Window.partitionBy("dow")))
-        .withColumn("n", sum("obs").over(Window.partitionBy()))
-        .withColumn("expected",
-          col("row_tot").cast("double") * col("col_tot").cast("double") / col("n").cast("double"))
-        .withColumn("contrib",
-          (col("obs").cast("double") - col("expected")) *
-            (col("obs").cast("double") - col("expected")) / col("expected"))
-        .transform(Ckpt.lazyCkpt) // cell frame + the fold both read it
-      val tot = c
-        .agg(sort_array(collect_list(struct(col("event_type"), col("dow"), col("contrib")))).as("arr"),
-          countDistinct("event_type").as("n_types"),
-          countDistinct("dow").as("n_dows"))
-        .select(
-          expr("aggregate(arr, cast(0.0 as double), (a, x) -> a + x.contrib)").as("chi2"),
-          ((col("n_types") - 1) * (col("n_dows") - 1)).cast("bigint").as("dof"))
-      c.crossJoin(broadcast(tot)) // 1-row summary attach
-        .select(col("event_type"), col("dow"), col("obs"), col("expected"),
-          col("contrib"), col("chi2"), col("dof"))
-        .orderBy("event_type", "dow")
-    }),
-    "quality_kappa" -> ((s, d) => {
-      // inter-annotator agreement: Cohen's kappa between two independent
-      // deterministic labelers (A: ≥400 chars; B: ≥70 spaces — a
-      // whitespace-token proxy). Confusion counts in ONE scan → one agg
-      // row; po/pe/kappa are closed-form doubles from integer counts.
-      // The QA step for comparing a heuristic labeler against a model
-      // labeler (or two annotator pools) before trusting either's labels.
-      val la = (col("n_chars") >= 400).cast("int")
-      val lb = ((length(col("text")) - length(regexp_replace(col("text"), " ", ""))) >= 70).cast("int")
-      T(s, d, "documents")
-        .select(la.as("la"), lb.as("lb"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("la") === 1 && col("lb") === 1, 1L).otherwise(0L)).as("n11"),
-          sum(when(col("la") === 1 && col("lb") === 0, 1L).otherwise(0L)).as("n10"),
-          sum(when(col("la") === 0 && col("lb") === 1, 1L).otherwise(0L)).as("n01"),
-          sum(when(col("la") === 0 && col("lb") === 0, 1L).otherwise(0L)).as("n00"))
-        .withColumn("po", (col("n11") + col("n00")).cast("double") / col("n").cast("double"))
-        .withColumn("pa1", (col("n11") + col("n10")).cast("double") / col("n").cast("double"))
-        .withColumn("pb1", (col("n11") + col("n01")).cast("double") / col("n").cast("double"))
-        .withColumn("pe",
-          col("pa1") * col("pb1") + (lit(1.0) - col("pa1")) * (lit(1.0) - col("pb1")))
-        .select(col("n"), col("n11"), col("n10"), col("n01"), col("n00"), col("po"),
-          col("pe"), ((col("po") - col("pe")) / (lit(1.0) - col("pe"))).as("kappa"))
-    }),
-    "events_cusum" -> ((s, d) => {
-      // CUSUM change-point detection on daily revenue per event type —
-      // ENTIRELY in integer cents: the recursion S_t = max(0, S_{t-1} +
-      // (x_t − mean − slack)) has the closed form S_t = P_t − min(0,
-      // min_{j≤t} P_j) over the deviation prefix sums, so two running
-      // windows on the calendar-sized daily frame replace the sequential
-      // loop. mean/slack are integer divisions on non-negative totals
-      // (truncated == floored, so Spark `div` and DuckDB `//` agree);
-      // the alarm threshold is 5× slack. Raw events shuffle ONCE into
-      // daily totals; everything after is calendar-sized.
-      import org.apache.spark.sql.expressions.Window
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg((sum(col("value").cast("decimal(18,2)")) * 100)
-          .cast("decimal(38,0)").cast("bigint").as("x"))
-      val wo = Window.partitionBy("event_type").orderBy("day")
-      daily
-        .withColumn("mu", expr("sum(x) over (partition by event_type) div count(*) over (partition by event_type)"))
-        .withColumn("slack", expr("abs(mu) div 20"))
-        .withColumn("y", col("x") - col("mu") - col("slack"))
-        .withColumn("p", sum("y").over(wo))
-        .withColumn("cusum", col("p") - least(lit(0L), min("p").over(wo)))
-        .withColumn("alarm", col("cusum") > col("slack") * 5)
-        .select(col("event_type"), col("day"), col("x"), col("cusum"), col("alarm"))
-        .orderBy("event_type", "day")
-    }),
-    "data_quantile_norm" -> ((s, d) => {
-      // cross-source quantile normalization of doc length: each source's
-      // score distribution maps onto the GLOBAL distribution by integer
-      // rank arithmetic on VALUE-DOMAIN frames (distinct (source,value)
-      // and distinct value — never a global row sort; n_chars has a
-      // bounded domain, so both frames broadcast at any corpus size).
-      // Ties take the min-rank, the target index is one exact integer
-      // division, the lookup is a range join between the two domain
-      // frames, and docs get their normalized score back by a broadcast
-      // (source,value) join. Removes per-source scoring bias before
-      // cross-source quality thresholds.
-      import org.apache.spark.sql.expressions.Window
-      val docs = T(s, d, "documents")
-        .select(col("doc_id"), col("source"), col("n_chars").as("v"))
-        .transform(Ckpt.lazyCkpt) // domain frames + final join read it
-      val srcDom = docs.groupBy("source", "v").agg(count(lit(1)).as("cnt"))
-      val ws = Window.partitionBy("source").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val srcRank = srcDom
-        .withColumn("rank_min", coalesce(sum("cnt").over(ws), lit(0L)) + 1)
-        .withColumn("n_s", sum("cnt").over(Window.partitionBy("source")))
-      val globDom = docs.groupBy("v").agg(count(lit(1)).as("gcnt"))
-        .transform(Ckpt.lazyCkpt) // cumulative + total read it
-      val wg = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-      val glob = globDom // single-partition window on the DOMAIN frame only
-        .withColumn("cum_before", coalesce(sum("gcnt").over(wg), lit(0L)))
-      val nTot = globDom.agg(sum("gcnt").cast("bigint").as("n_g"))
-      val mapped = srcRank.crossJoin(broadcast(nTot)) // 1-row scalar attach
-        .withColumn("p", when(col("n_s") > 1,
-          expr("(rank_min - 1) * (n_g - 1) div (n_s - 1) + 1")).otherwise(lit(1L)))
-      val target = mapped.join(
-        broadcast(glob.select(col("v").as("v_norm"), col("cum_before"), col("gcnt"))),
-        col("p") > col("cum_before") && col("p") <= col("cum_before") + col("gcnt"))
-        .select(col("source"), col("v"), col("v_norm"))
-      docs.join(broadcast(target), Seq("source", "v"))
-        .select(col("doc_id"), col("source"), col("v"), col("v_norm"))
-        .orderBy("doc_id")
-    }),
-    "dedup_cluster_radius" -> ((s, d) => {
-      // near-dup chain-length QA: hop distance of every clustered doc
-      // from its cluster representative (min doc_id) through the
-      // verified pair graph — the radius audit that catches
-      // transitive-merge drift (a≈b≈c chains where a and c share almost
-      // nothing). Pairs and components are the dedup_clusters frame;
-      // distances come from GraphOps.bfsDistances (frontier-layer BFS,
-      // one join+agg+anti-join per round, eccentricity rounds).
-      val pairs = DedupOps.minhashDupPairs(TP(s, d, "documents"), "text", "doc_id",
-          threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-        .transform(Ckpt.eagerCkpt) // CC and BFS both traverse the verified pair set
-      val comp = GraphOps.connectedComponents(pairs, "a_id", "b_id")
-      val dist = GraphOps.bfsDistances(pairs,
-        comp.select(col("cluster_id").as("id")).distinct(), "a_id", "b_id")
-      comp.join(dist, Seq("id"))
-        .select(col("id"), col("cluster_id"), col("dist"))
-        .orderBy("id")
-    }),
-    "events_survival" -> ((s, d) => {
-      // Kaplan-Meier survival of user lifetime (first→last event, in
-      // days), two cohorts by user parity; censoring = last event within
-      // 14 days of the corpus end. d_t/n_t are integers (n_t by a
-      // REVERSE running window over the duration-domain frame), each
-      // factor (n−d)/n is one exact double division, and S(t) is the
-      // fold-exact sequential product over the cohort's ordered factors
-      // (no libm pow — both engines replay the identical IEEE multiply
-      // chain). The retention curve for telemetry dashboards, exact
-      // enough to diff across runs.
-      import org.apache.spark.sql.expressions.Window
-      val users = EV(s, d).groupBy("user_id")
-        .agg(min("ts_us").as("first_us"), max("ts_us").as("last_us"))
-      val gmax = users.agg(max("last_us").as("gmax_us"))
-      val dur = users.crossJoin(broadcast(gmax)) // 1-row scalar attach
-        .select((col("user_id") % 2).as("cohort"),
-          expr("(last_us - first_us) div 86400000000").as("dur"),
-          (col("last_us") < col("gmax_us") - lit(14L * 86400000000L)).cast("int").as("churned"))
-      val cells = dur.groupBy("cohort", "dur")
-        .agg(count(lit(1)).as("n_here"), sum("churned").as("d_t"))
-      val wRev = Window.partitionBy("cohort").orderBy("dur")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val km = cells
-        .withColumn("n_t", sum("n_here").over(wRev))
-        .withColumn("factor",
-          (col("n_t") - col("d_t")).cast("double") / col("n_t").cast("double"))
-      km.groupBy("cohort")
-        .agg(sort_array(collect_list(
-          struct(col("dur"), col("n_t"), col("d_t"), col("factor")))).as("arr"))
-        .select(col("cohort"), col("arr"), posexplode(col("arr")).as(Seq("i", "x")))
-        .select(col("cohort"), col("x.dur").as("t"),
-          col("x.n_t").cast("bigint").as("n_at_risk"),
-          col("x.d_t").cast("bigint").as("d_events"),
-          expr("aggregate(slice(transform(arr, z -> z.factor), 1, i + 1), " +
-            "cast(1.0 as double), (p, q) -> p * q)").as("surv"))
-        .orderBy("cohort", "t")
-    }),
-    "dedup_blocking_eval" -> ((s, d) => {
-      // blocking-scheme evaluation: precision/recall of same-length-band
-      // candidate blocking (band = n_chars div 100) against the EXACT
-      // 3-gram Jaccard ≥ 0.8 truth set — WITHOUT materializing a single
-      // candidate pair: |candidates| is Σ C(band_size, 2) over the band
-      // histogram, and tp joins the (small) truth pair set to the
-      // doc→band map twice. Truth comes from AllPairs prefix filtering
-      // (exact, no LSH recall caveat). The step that picks a blocking
-      // key before committing a 100 TB dedup to it.
-      val docs = TP(s, d, "documents")
-      val bands = docs.select(col("doc_id"), expr("n_chars div 100").as("band"))
-        .transform(Ckpt.lazyCkpt) // histogram + two tp joins read it
-      val nCand = bands.groupBy("band").agg(count(lit(1)).as("c"))
-        .agg(sum(expr("c * (c - 1) div 2")).cast("bigint").as("n_cand"))
-      val truth = DedupOps.prefixFilterJaccardPairs(docs, "text", "doc_id",
-          threshold = 0.8, shingleSize = 3)
-        .select("a_id", "b_id")
-      val tp = truth
-        .join(bands.select(col("doc_id").as("a_id"), col("band").as("band_a")), Seq("a_id"))
-        .join(bands.select(col("doc_id").as("b_id"), col("band").as("band_b")), Seq("b_id"))
-        .agg(count(lit(1)).cast("bigint").as("n_truth"),
-          sum(when(col("band_a") === col("band_b"), 1L).otherwise(0L)).as("tp"))
-      nCand.crossJoin(broadcast(tp)) // 1-row × 1-row
-        .withColumn("prec", col("tp").cast("double") / col("n_cand").cast("double"))
-        .withColumn("recall", col("tp").cast("double") / col("n_truth").cast("double"))
-        .select(col("n_cand"), col("n_truth"), col("tp"), col("prec"), col("recall"),
-          (lit(2.0) * col("prec") * col("recall") / (col("prec") + col("recall"))).as("f1"))
-    }),
-    "quality_label_prop" -> ((s, d) => {
-      // one semi-supervised label-propagation round: docs with
-      // doc_id % 5 == 0 are "labeled" (their lang); every unlabeled doc
-      // adopts the MAJORITY label among its labeled near-dup neighbors
-      // (tie-break min label), with the vote margin emitted. One join
-      // against the dup-sized pair graph + one (doc,label) count + one
-      // per-doc argmax window — the relabeling pass a curation pipeline
-      // runs after clustering to spread scarce human labels.
-      import org.apache.spark.sql.expressions.Window
-      val docs = TP(s, d, "documents")
-      val pairs = DedupOps.minhashDupPairs(docs, "text", "doc_id", threshold = 0.7,
-        shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      val und = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      val labeled = docs.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id").as("dst"), col("lang").as("label"))
-      val votes = und.join(labeled, "dst")
-        .filter(col("src") % 5 =!= 0)
-        .groupBy(col("src"), col("label"))
-        .agg(count(lit(1)).as("n_votes"))
-      val w = Window.partitionBy("src").orderBy(col("n_votes").desc, col("label"))
-      votes
-        .withColumn("n_nbrs", sum("n_votes").over(Window.partitionBy("src")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("src").as("doc_id"), col("label").as("pred_label"),
-          col("n_votes"), col("n_nbrs").cast("bigint").as("n_nbrs"))
-        .orderBy("doc_id")
-    }),
-    "data_temperature_mix" -> ((s, d) => {
-      // temperature-flattened source mixture (τ = 1/2): target share_s ∝
-      // mass_s^τ — the pretraining rebalance that upweights small
-      // sources. τ = 1/2 keeps it EXACT: sqrt is correctly rounded in
-      // every IEEE engine (no libm pow), the one double is floored into
-      // integer micro-weights, and the allocation is the Neyman
-      // largest-remainder machinery (integral div + exact remainder
-      // ranks) on the SOURCE-COUNT-sized frame.
-      import org.apache.spark.sql.expressions.Window
-      val budget = 100000L
-      val m = T(s, d, "documents")
-        .select(col("source"),
-          size(TextFunctions.tokensFromNorm(TextFunctions.normText(col("text"))))
-            .cast("bigint").as("tok"))
-        .groupBy("source").agg(sum("tok").as("mass"))
-        .withColumn("w_micro",
-          floor(sqrt(col("mass").cast("double")) * lit(1e6)).cast("decimal(38,0)"))
-      val tot = m.agg(sum("w_micro").cast("decimal(38,0)").as("w_tot"),
-        sum("mass").cast("double").as("mass_tot"))
-      val alloc = m.crossJoin(broadcast(tot)) // source-count × 1 row
-        .withColumn("base", expr(s"CAST(($budget * w_micro) div w_tot AS BIGINT)"))
-        .withColumn("rem", lit(budget) * col("w_micro") - col("base") * col("w_tot"))
-      val w = Window.orderBy(col("rem").desc, col("source"))
-      val wAll = Window.orderBy("source")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      alloc
-        .withColumn("leftover", lit(budget) - sum("base").over(wAll))
-        .withColumn("rk", row_number().over(w))
-        .select(col("source"), col("mass"),
-          (col("mass").cast("double") / col("mass_tot")).as("share_before"),
-          (col("base") + when(col("rk") <= col("leftover"), 1L).otherwise(0L))
-            .cast("bigint").as("n_alloc"))
-        .withColumn("share_after", col("n_alloc").cast("double") / lit(budget.toDouble))
-        .orderBy("source")
-    }),
-    "text_retrieval_metrics" -> ((s, d) => {
-      // retrieval evaluation with NO libm on data: graded relevance = #
-      // query terms present (0..3); ranking = the text_bm25 contract
-      // truncated to 10; the 1/log2(i+1) rank discounts and their
-      // prefix sums are SHARED LITERALS (e-notation on the oracle side);
-      // DCG is a fold-exact sequential sum over the ranked gains; IDCG's
-      // ideal ordering needs only the three relevance-level COUNTS
-      // (closed-form prefix-sum slot fill — the corpus is never globally
-      // sorted); MRR is one exact integer-ratio double. The eval harness
-      // for comparing retrieval variants (BM25/hybrid/ANN) on one corpus.
-      import org.apache.spark.sql.expressions.Window
-      val terms = Seq("merge", "join", "window")
-      val discSql = "array(1.0D, 0.6309297535714575D, 0.5D, 0.43067655807339306D, " +
-        "0.38685280723454163D, 0.3562071871080222D, 0.3333333333333333D, " +
-        "0.31546487678572877D, 0.3010299956639812D, 0.2890648263178879D)"
-      val pdSql = "array(0.0D, 1.0D, 1.6309297535714575D, 2.1309297535714578D, " +
-        "2.5616063116448506D, 2.9484591188793923D, 3.3046663059874146D, " +
-        "3.637999639320748D, 3.953464516106477D, 4.254494511770458D, 4.543559338088346D)"
-      val docs = TP(s, d, "documents")
-      val rel = docs.select(col("doc_id"),
-        size(array_intersect(
-          array_distinct(TextFunctions.tokensFromNorm(TextFunctions.normText(col("text")))),
-          array(terms.map(lit): _*))).cast("int").as("rel"))
-        .transform(Ckpt.lazyCkpt) // level counts + ranked join read it
-      val idcgRow = rel.agg(
-        sum(when(col("rel") === 3, 1L).otherwise(0L)).as("n3"),
-        sum(when(col("rel") === 2, 1L).otherwise(0L)).as("n2"),
-        sum(when(col("rel") === 1, 1L).otherwise(0L)).as("n1"))
-        .withColumn("m3", least(lit(10L), col("n3")))
-        .withColumn("m32", least(lit(10L), col("n3") + col("n2")))
-        .withColumn("m321", least(lit(10L), col("n3") + col("n2") + col("n1")))
-        .select(col("n3"), col("n2"), col("n1"),
-          expr(s"3.0D * element_at($pdSql, cast(m3 as int) + 1) + " +
-            s"2.0D * (element_at($pdSql, cast(m32 as int) + 1) - element_at($pdSql, cast(m3 as int) + 1)) + " +
-            s"1.0D * (element_at($pdSql, cast(m321 as int) + 1) - element_at($pdSql, cast(m32 as int) + 1))")
-            .as("idcg"))
-      val ranked = CorpusOps.bm25TopK(docs, "doc_id", "text", terms, k = 10)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("doc_id"))).cast("int"))
-      val dcgRow = rel.join(broadcast(ranked), "doc_id")
-        .agg(sort_array(collect_list(struct(col("rank"), col("rel")))).as("arr"),
-          min(when(col("rel") > 0, col("rank"))).as("mr"))
-        .select(
-          expr(s"aggregate(arr, cast(0.0 as double), (a, x) -> " +
-            s"a + cast(x.rel as double) * element_at($discSql, x.rank))").as("dcg"),
-          coalesce(lit(1.0) / col("mr").cast("double"), lit(0.0)).as("mrr"))
-      idcgRow.crossJoin(broadcast(dcgRow)) // 1-row × 1-row
-        .select(col("n3"), col("n2"), col("n1"), col("mrr"), col("dcg"), col("idcg"),
-          (col("dcg") / col("idcg")).as("ndcg"))
-    }),
-    "dedup_clusters_incr" -> ((s, d) => {
-      // incremental CLUSTER-TABLE maintenance: yesterday's component
-      // labels (old corpus only) + today's probe pairs (new×all, via the
-      // persisted bucketed index) merged by running CC over label-edges
-      // ∪ delta-pairs — the old pair set is never re-derived and the old
-      // corpus text is never re-shingled. Label edges connect exactly
-      // the old components and labels only ever take component minima,
-      // so the result EQUALS a from-scratch clustering of the full
-      // corpus — which is precisely what the oracle recomputes.
-      // r15 (guide §1.2/§2.6): the old corpus was shingled THREE times
-      // (pair-gen signatures, verify sets, index build) — one eager
-      // signature pin now feeds all three; and the two independent
-      // driver chains over it (yesterday's CC vs the index build, two
-      // staged bucketed writes) ran back to back — they overlap now.
-      // The former eager pin on oldLabels was redundant: CC's output IS
-      // the last round's checkpoint (minus a projected column).
-      val docs = TP(s, d, "documents")
-      val isNew = col("doc_id") % 4 === 0
-      val oldSh = docs.filter(!isNew)
-        .select(col("doc_id").as("id"),
-          DedupOps.hashedShingleSet(col("text"), 2).as("sh"))
-        .transform(Ckpt.eagerCkpt)
-      val (oldLabels, idx) = Par.concurrently(
-        GraphOps.connectedComponents(
-          DedupOps.minhashDupPairsOf(oldSh, threshold = 0.7, numBands = 32, rowsPerBand = 3),
-          "a_id", "b_id"),
-        IncrementalDedupOps.buildIndexOf(oldSh,
-          prefix = "graft_ccinc_idx", numBuckets = 4, numBands = 32, rowsPerBand = 3))
-      val delta = IncrementalDedupOps.probe(docs.filter(isNew), "text", "doc_id", idx,
-        threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      val edges = oldLabels
-        .select(col("id").as("a_id"), col("cluster_id").as("b_id"))
-        .filter(col("a_id") =!= col("b_id"))
-        .unionByName(delta.select("a_id", "b_id"))
-      GraphOps.connectedComponents(edges, "a_id", "b_id").orderBy("id")
-    }),
-    "graph_sssp" -> ((s, d) => {
-      // bounded-hop weighted shortest paths (Bellman-Ford relaxation,
-      // fixed 4 rounds = min cost over ≤4-edge paths) on the sparse
-      // supplier–part lane graph (lanes with min-quantity ≤ 5); edge
-      // weight = cheapest quantity ever shipped on the lane, in integer
-      // cents. Nodes namespaced into one id space (2p / 2s+1). Fixed
-      // rounds ⇒ deterministic work, one join+min-agg per round.
-      val lanes = T(s, d, "lineitem")
-        .groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg((min(col("l_quantity").cast("decimal(18,2)")) * 100)
-          .cast("bigint").as("w"))
-        .filter(col("w") <= 500)
-        .select((col("l_partkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"),
-          col("w"))
-      val seeds = T(s, d, "supplier").filter(col("s_suppkey") % 100 === 1)
-        .select((col("s_suppkey") * 2 + 1).as("id"))
-      GraphOps.boundedShortestPaths(lanes, seeds, "src", "dst", "w", maxHops = 4)
-        .orderBy("id")
-    }),
-    "q50_skyline" -> ((s, d) => {
-      // Pareto frontier (skyline) of quantity vs price: a point survives
-      // iff no other line has ≥ on both dims with one strict. Computed
-      // on the QUANTITY-DOMAIN frame (≤50 rows: max price-cents per
-      // quantity, strictly-descending running max from the high end) —
-      // the fact table is scanned once and never globally sorted.
-      import org.apache.spark.sql.expressions.Window
-      val dom = T(s, d, "lineitem")
-        .select(col("l_quantity").cast("decimal(18,2)").as("qd"),
-          (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint").as("pc"))
-        .groupBy("qd").agg(max("pc").as("max_pc"))
-      val w = Window.orderBy(col("qd").desc).rowsBetween(Window.unboundedPreceding, -1)
-      dom // domain-sized single-partition window only
-        .withColumn("hi", max("max_pc").over(w))
-        .filter(col("hi").isNull || col("max_pc") > col("hi"))
-        .select(col("qd").cast("double").as("quantity"), col("max_pc").as("price_cents"))
-        .orderBy("quantity")
-    }),
-    "q51_weighted_median" -> ((s, d) => {
-      // exact WEIGHTED median per return flag: the price at which half
-      // the total quantity mass sits at-or-below — cumulative integer
-      // weights over the (flag, price)-domain frame, never a row sort;
-      // the pick is min price with 2·cum ≥ total (lower weighted
-      // median, deterministic).
-      import org.apache.spark.sql.expressions.Window
-      val dom = T(s, d, "lineitem") // r15: SP spread dropped — the driver's
-        // cold-JVM A/B (PERF_r14: 1.6→1.9 s, −16%) contradicted the warm
-        // builder A/B that added it; re-measured both ways this round and
-        // the spread did not pay for its shuffle here (the partial agg on
-        // (flag, pc) already collapses the scan to the ~100k-row domain)
-        .select(col("l_returnflag"),
-          (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("bigint").as("pc"),
-          (col("l_quantity").cast("decimal(18,2)") * 100).cast("bigint").as("qc"))
-        .groupBy("l_returnflag", "pc").agg(sum("qc").as("wt"))
-      val wc = Window.partitionBy("l_returnflag").orderBy("pc")
-      dom
-        .withColumn("cum", sum("wt").over(wc))
-        .withColumn("tot", sum("wt").over(Window.partitionBy("l_returnflag")))
-        .filter(col("cum") * 2 >= col("tot"))
-        .groupBy("l_returnflag")
-        .agg((min("pc").cast("double") / 100).as("wmedian_price"))
-        .orderBy("l_returnflag")
-    }),
-    "vec_matryoshka" -> ((s, d) => {
-      // Matryoshka truncation eval: per probe query, overlap between the
-      // exact top-5 by FULL-dim cosine and top-5 by first-16-dims cosine
-      // — the measurement that decides whether a truncated index (4×
-      // cheaper per vector) is good enough for first-stage retrieval.
-      // Both rankings use the brute-force contract (round-6 cosine, id
-      // tie-break); overlap is a semi join of the two 5-row-per-query
-      // sets. Queries broadcast; the corpus never self-joins.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-        .transform(Ckpt.lazyCkpt) // both rankings read it
-      val tr = vecs.select(col("vec_id"), slice(col("vec"), 1, 16).as("vec"))
-      val isQ = col("vec_id") < 8
-      val fullK = SimilarityOps.bruteForceTopK(vecs, vecs.filter(isQ), "vec_id", "vec", k = 5)
-      val trK = SimilarityOps.bruteForceTopK(tr, tr.filter(isQ), "vec_id", "vec", k = 5)
-      val hits = fullK.select(col("query_id"), col("neighbor_id"))
-        .join(trK.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_overlap"))
-      fullK.select("query_id").distinct()
-        .join(hits, Seq("query_id"), "left")
-        .na.fill(0L, Seq("n_overlap"))
-        .select(col("query_id"), col("n_overlap").cast("bigint").as("n_overlap"),
-          (col("n_overlap").cast("double") / 5.0).as("recall16"))
-        .orderBy("query_id")
-    }),
-    "vec_centroid_drift" -> ((s, d) => {
-      // embedding distribution monitoring: per label, L2 distance
-      // between two generations' centroids (vec_id parity split).
-      // Per-position sums are BINARY-quantized integers (×2³⁰, floor —
-      // power-of-two scaling is an exact double op, so there is no
-      // decimal rounding boundary for the engines to disagree on; a
-      // decimal(28,12) quantization hit a literal half-way case at
-      // sf0.01 where Spark rounds HALF_UP and DuckDB half-even);
-      // the squared-diff sum folds in POSITION ORDER (sequential — a
-      // parallel double SUM would be order-nondeterministic); the corpus
-      // shuffles once into (label, pos) cells.
-      val pe = TP(s, d, "embeddings")
-        .select(col("label").cast("long").as("label"), (col("vec_id") % 2).as("gen"),
-          posexplode(VectorFunctions.asDouble(col("embedding"))).as(Seq("pos", "x")))
-      val S = 1073741824.0 // 2^30
-      val xq = floor(col("x") * lit(S)).cast("long")
-      val cells = pe.groupBy("label", "pos")
-        .agg(
-          sum(when(col("gen") === 0, xq)).as("sa"),
-          sum(when(col("gen") === 0, 1L).otherwise(0L)).as("na"),
-          sum(when(col("gen") === 1, xq)).as("sb"),
-          sum(when(col("gen") === 1, 1L).otherwise(0L)).as("nb"))
-        .withColumn("dd",
-          col("sa").cast("double") / (col("na").cast("double") * lit(S)) -
-            col("sb").cast("double") / (col("nb").cast("double") * lit(S)))
-      cells.groupBy("label")
-        .agg(sort_array(collect_list(struct(col("pos"), col("dd")))).as("arr"),
-          max("na").as("n_a"), max("nb").as("n_b"))
-        .select(col("label"), col("n_a"), col("n_b"),
-          expr("sqrt(aggregate(arr, cast(0.0 as double), (a, p) -> a + p.dd * p.dd))")
-            .as("l2_drift"))
-        .orderBy("label")
-    }),
-    "data_tcloseness" -> ((s, d) => {
-      // t-closeness audit (completes the k-anon / l-div privacy triple):
-      // per QI class, the total-variation distance between the class's
-      // sensitive-value (mktsegment) distribution and the global one.
-      // The numerator stays INTEGER — Σ_seg |n_cs·n_g − n_gs·n_c| — one
-      // double division at the end; the class×segment grid is built from
-      // two domain-sized broadcast frames so zero-count cells exist.
-      val cust = T(s, d, "customer").select(
-        col("c_nationkey").cast("long").as("nation"),
-        floor(col("c_acctbal") / 1000.0).cast("long").as("bal_band"),
-        col("c_mktsegment").as("seg"))
-        .transform(Ckpt.lazyCkpt) // class, global and cell counts read it
-      val cls = cust.groupBy("nation", "bal_band").agg(count(lit(1)).as("n_c"))
-      val glob = cust.groupBy("seg").agg(count(lit(1)).as("n_gs"))
-        .transform(Ckpt.lazyCkpt) // grid + total read it
-      val ng = glob.agg(sum("n_gs").cast("bigint").as("n_g"))
-      val cellCnt = cust.groupBy("nation", "bal_band", "seg").agg(count(lit(1)).as("n_cs"))
-      cls.crossJoin(broadcast(glob)).crossJoin(broadcast(ng))
-        .join(cellCnt, Seq("nation", "bal_band", "seg"), "left")
-        .na.fill(0L, Seq("n_cs"))
-        .withColumn("term", abs(col("n_cs") * col("n_g") - col("n_gs") * col("n_c")))
-        .groupBy("nation", "bal_band")
-        .agg(max("n_c").as("n"), sum("term").as("num"), max("n_g").as("ng"))
-        .select(col("nation"), col("bal_band"), col("n"),
-          (col("num").cast("double") /
-            (lit(2.0) * col("n").cast("double") * col("ng").cast("double"))).as("tvd"))
-        .withColumn("t_ok", col("tvd") <= 0.4)
-        .orderBy("nation", "bal_band")
-    }),
-    "events_stl" -> ((s, d) => {
-      // weekday seasonal decomposition (STL-lite): trend = centered
-      // 7-day MA, seasonal = per-dow mean of the detrended series,
-      // remainder = the rest — ALL intermediate state is integer cents
-      // scaled ×7 (detr7 = 7·x − Σ₇x), so the only doubles are three
-      // closed-form divisions per output row. Interior days only (full
-      // MA window). Everything after the one shuffle into daily totals
-      // is calendar-sized.
-      import org.apache.spark.sql.expressions.Window
-      val daily = EV(s, d)
-        .groupBy(expr("ts_us div 86400000000").as("day"))
-        .agg((sum(col("value").cast("decimal(18,2)")) * 100)
-          .cast("decimal(38,0)").cast("bigint").as("x"))
-      val w7 = Window.orderBy("day").rowsBetween(-3, 3)
-      val t = daily // calendar-sized single-partition windows only
-        .withColumn("wn", count(lit(1)).over(w7))
-        .withColumn("t7", sum("x").over(w7))
-        .filter(col("wn") === 7)
-        .withColumn("detr7", col("x") * 7 - col("t7"))
-        .withColumn("dow", expr("(day + 4) % 7"))
-        .transform(Ckpt.lazyCkpt) // seasonal means + final join read it
-      val seas = t.groupBy("dow").agg(sum("detr7").as("s7sum"), count(lit(1)).as("sn"))
-      t.join(broadcast(seas), "dow")
-        .select(col("day"), col("x"),
-          (col("t7").cast("double") / 7.0).as("trend"),
-          (col("s7sum").cast("double") / (lit(7.0) * col("sn").cast("double"))).as("seasonal"))
-        .withColumn("remainder", col("x").cast("double") - col("trend") - col("seasonal"))
-        .orderBy("day")
-    }),
-    "events_rolling_median" -> ((s, d) => {
-      // robust rolling stats: per event type, the 14-day trailing MEDIAN
-      // of daily revenue — the window's cents collect in-row (≤14 ints),
-      // array_sort + exact lower-median pick, all integer: the robust
-      // anomaly baseline a rolling z-score can't give (one outlier day
-      // moves a mean, not a median). Calendar-sized frame after the one
-      // shuffle into daily totals.
-      import org.apache.spark.sql.expressions.Window
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg((sum(col("value").cast("decimal(18,2)")) * 100)
-          .cast("decimal(38,0)").cast("bigint").as("x"))
-      val w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-13, 0)
-      daily
-        .withColumn("ws", array_sort(collect_list("x").over(w)))
-        .withColumn("n_win", size(col("ws")).cast("bigint"))
-        .select(col("event_type"), col("day"), col("x"), col("n_win"),
-          element_at(col("ws"), expr("cast((n_win + 1) div 2 as int)")).as("med14"))
-        .orderBy("event_type", "day")
-    }),
-    "events_power_analysis" -> ((s, d) => {
-      // A/B sample-size planning per event type: n-per-arm =
-      // 2σ²(z_{α/2}+z_β)²/δ², α=.05 / power=.8 as LITERAL z constants,
-      // σ² from the decimal-exact value moments (the q24_stats
-      // contract), δ = 5% of the mean — closed-form doubles end-to-end,
-      // one scan. The planning step BEFORE events_ab_test is worth
-      // running.
-      val vd = col("value").cast("decimal(18,2)")
-      val k2 = "(1.959963984540054D + 0.8416212335729143D) * " +
-        "(1.959963984540054D + 0.8416212335729143D)"
-      EV(s, d)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(vd).cast("decimal(38,2)").cast("double").as("sx"),
-          sum((vd * vd).cast("decimal(38,4)")).cast("decimal(38,4)").cast("double").as("sxx"))
-        .withColumn("mean", col("sx") / col("n").cast("double"))
-        .withColumn("variance",
-          (col("sxx") - col("sx") * col("sx") / col("n").cast("double")) /
-            (col("n").cast("double") - lit(1.0)))
-        .withColumn("delta", lit(0.05) * col("mean"))
-        .select(col("event_type"), col("n"), col("mean"), col("variance"),
-          expr(s"cast(ceil(2.0D * variance * $k2 / (delta * delta)) as bigint)")
-            .as("n_required"))
-        .orderBy("event_type")
-    }),
-    "data_feature_store" -> ((s, d) => {
-      // feature-store assembly: one WIDE feature row per user — per-type
-      // event counts (conditional aggregation over the known type
-      // domain, NOT a pivot join), decimal-exact revenue total, and
-      // recency vs the corpus frontier — the export a training job joins
-      // against. ONE shuffle (user agg); the frontier rides a broadcast
-      // scalar.
-      val ev = EV(s, d).transform(Ckpt.lazyCkpt) // agg + frontier read it
-      val frontier = ev.agg(max("ts_us").as("f_us"))
-      ev.groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("n_click"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("n_view"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchase"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_error"),
-          dsum(col("value"), 2).as("total_value"),
-          max("ts_us").as("last_us"))
-        .crossJoin(broadcast(frontier)) // 1-row scalar attach
-        .select(col("user_id"), col("n_events"), col("n_click"), col("n_view"),
-          col("n_purchase"), col("n_error"), col("total_value"),
-          expr("(f_us - last_us) div 86400000000").as("recency_days"))
-        .orderBy("user_id")
-    }),
-    "events_cumulative_users" -> ((s, d) => {
-      // cumulative unique-users curve, EXACT and scalable: each user
-      // contributes once at their first-seen day (a user-keyed min, not
-      // a distinct-per-window), then one cumulative sum over the
-      // DAY-DOMAIN frame. The growth metric every dashboard wants,
-      // without the count-distinct-per-day blowup. Days acquiring no new
-      // users don't emit a row (documented contract).
-      import org.apache.spark.sql.expressions.Window
-      val firstSeen = EV(s, d)
-        .groupBy("user_id").agg(min(expr("ts_us div 86400000000")).as("day"))
-      val perDay = firstSeen.groupBy("day").agg(count(lit(1)).as("new_users"))
-      perDay // day-domain single-partition window only
-        .withColumn("cum_users", sum("new_users").over(Window.orderBy("day")))
-        .orderBy("day")
-    }),
-    "events_outlier_iqr" -> ((s, d) => {
-      // IQR-fence outlier flags on daily revenue per type — ALL integer:
-      // quartiles are exact value-domain picks (smallest x with 4·cum ≥
-      // n / ≥ 3n), and the 1.5·IQR fences compare as 2·x vs 2·q ∓ 3·IQR
-      // (no fractional arithmetic ever materializes). The robust
-      // complement to the z-score anomaly family; winsorize caps,
-      // this FLAGS.
-      import org.apache.spark.sql.expressions.Window
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg((sum(col("value").cast("decimal(18,2)")) * 100)
-          .cast("decimal(38,0)").cast("bigint").as("x"))
-        .transform(Ckpt.lazyCkpt) // quartile domain + flag join read it
-      val dom = daily.groupBy("event_type", "x").agg(count(lit(1)).as("c"))
-      val wc = Window.partitionBy("event_type").orderBy("x")
-      val cums = dom
-        .withColumn("cum", sum("c").over(wc))
-        .withColumn("n", sum("c").over(Window.partitionBy("event_type")))
-      val q = cums.groupBy("event_type")
-        .agg(min(when(col("cum") * 4 >= col("n"), col("x"))).as("q1"),
-          min(when(col("cum") * 4 >= col("n") * 3, col("x"))).as("q3"))
-      daily.join(broadcast(q), "event_type")
-        .withColumn("iqr", col("q3") - col("q1"))
-        .select(col("event_type"), col("day"), col("x"), col("q1"), col("q3"),
-          (col("x") * 2 < col("q1") * 2 - col("iqr") * 3 ||
-            col("x") * 2 > col("q3") * 2 + col("iqr") * 3).as("is_outlier"))
-        .orderBy("event_type", "day")
-    }),
-    "q53_window_family" -> ((s, d) => {
-      // window-function conformance row: first/last/nth value with the
-      // explicit whole-partition frame, lag/lead with defaults — the
-      // SQL-surface corners the analytic queries don't exercise;
-      // nation-bounded sorts only, one window layout serves all five.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("s_nationkey").orderBy(col("s_acctbal"), col("s_suppkey"))
-      val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      T(s, d, "supplier")
-        .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
-        .withColumn("first_bal", first("s_acctbal").over(wf))
-        .withColumn("last_bal", last("s_acctbal").over(wf))
-        .withColumn("second_bal", nth_value(col("s_acctbal"), 2).over(wf))
-        .withColumn("prev_bal", lag("s_acctbal", 1).over(w))
-        .withColumn("next_bal", lead("s_acctbal", 1).over(w))
-        .orderBy("s_suppkey")
-    }),
-    "events_error_wilson" -> ((s, d) => {
-      // per-day error rate with a Wilson score LOWER bound — the
-      // alerting metric that doesn't fire on tiny n: p̂ and the bound
-      // are closed-form doubles from integer counts with a LITERAL z
-      // (sqrt is correctly rounded everywhere; no other libm). One
-      // day-keyed agg.
-      val z = "1.959963984540054D"
-      EV(s, d)
-        .groupBy(expr("ts_us div 86400000000").as("day"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("e"))
-        .withColumn("nn", col("n").cast("double"))
-        .withColumn("p", col("e").cast("double") / col("nn"))
-        .withColumn("wilson_low",
-          expr(s"(p + $z * $z / (2.0D * nn) - $z * sqrt(p * (1.0D - p) / nn " +
-            s"+ $z * $z / (4.0D * nn * nn))) / (1.0D + $z * $z / nn)"))
-        .select(col("day"), col("n"), col("e"), col("p").as("rate"),
-          col("wilson_low"), (col("wilson_low") > 0.15).as("alert"))
-        .orderBy("day")
-    }),
-    "vec_knn_eval" -> ((s, d) => {
-      // k-NN classifier eval: each probe's label predicted by majority
-      // vote of its 5 exact nearest neighbors (the brute-force cosine
-      // contract; vote ties break to the smaller label), reported as
-      // per-true-label accuracy — the embedding-quality gate (labels
-      // cluster ⇔ accuracy high). Probes are an id-prefix-bounded
-      // deterministic slice (an eval set is FIXED-SIZE — it does not
-      // grow with the corpus) and ride broadcast; the corpus never
-      // self-joins.
-      import org.apache.spark.sql.expressions.Window
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          VectorFunctions.asDouble(col("embedding")).as("vec"))
-        .transform(Ckpt.lazyCkpt) // ranking + two label joins read it
-      val probes = vecs.filter(col("vec_id") < 32)
-      // label lookups join the corpus-sized map against the TINY knn /
-      // pred sides — no hint, AQE broadcasts the small side (the id→label
-      // map itself must never be broadcast at scale)
-      val knn = SimilarityOps.bruteForceTopK(vecs, probes, "vec_id", "vec", k = 5)
-        .join(vecs.select(col("vec_id").as("neighbor_id"),
-          col("label").as("nbr_label")), "neighbor_id")
-      val wv = Window.partitionBy("query_id")
-        .orderBy(col("n_votes").desc, col("nbr_label"))
-      val pred = knn.groupBy("query_id", "nbr_label")
-        .agg(count(lit(1)).as("n_votes"))
-        .withColumn("rk", row_number().over(wv))
-        .filter(col("rk") === 1)
-        .select(col("query_id"), col("nbr_label").as("pred"))
-      pred
-        .join(probes.select(col("vec_id").as("query_id"), col("label")), "query_id")
-        .groupBy("label")
-        .agg(count(lit(1)).as("n_probes"),
-          sum(when(col("pred") === col("label"), 1L).otherwise(0L)).as("n_correct"))
-        .withColumn("acc", col("n_correct").cast("double") / col("n_probes").cast("double"))
-        .orderBy("label")
-    }),
-    "data_fd_check" -> ((s, d) => {
-      // functional-dependency audit over a denormalized export: for each
-      // candidate FD (A → B), the count of A-values carrying more than
-      // one distinct B — the candidate pairs are STACKED IN-ROW (the
-      // data_expectations / fk-audit idiom) so the denormalized frame is
-      // scanned ONCE, then one (fd, key) agg + one fd agg. The
-      // key-inference gate before declaring uniqueness on a 100 TB
-      // extract. Expected: the three real FDs hold, the segment→nation
-      // candidate fails.
-      val den = T(s, d, "customer")
-        .join(T(s, d, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .join(T(s, d, "region"), col("n_regionkey") === col("r_regionkey"))
-      val stacked = den.select(explode(array(
-        struct(lit("custkey->name").as("fd"),
-          col("c_custkey").cast("string").as("k"), col("c_name").as("v")),
-        struct(lit("nationkey->nname").as("fd"),
-          col("c_nationkey").cast("string").as("k"), col("n_name").as("v")),
-        struct(lit("nationkey->rname").as("fd"),
-          col("c_nationkey").cast("string").as("k"), col("r_name").as("v")),
-        struct(lit("segment->nname").as("fd"),
-          col("c_mktsegment").as("k"), col("n_name").as("v")))).as("p"))
-        .select(col("p.fd").as("fd"), col("p.k").as("k"), col("p.v").as("v"))
-      stacked.groupBy("fd", "k").agg(countDistinct("v").as("nd"))
-        .groupBy("fd")
-        .agg(count(lit(1)).as("n_keys"),
-          sum(when(col("nd") > 1, 1L).otherwise(0L)).as("n_violating"))
-        .withColumn("holds", col("n_violating") === 0)
-        .orderBy("fd")
-    }),
-    "events_holt" -> ((s, d) => {
-      // Holt double-exponential smoothing (level + trend) of daily
-      // revenue per event type with α = β = 1/2: the recursion folds
-      // SEQUENTIALLY over the day-ordered cents (struct state in Spark's
-      // aggregate, a 2-list state in the oracle's list_reduce — both
-      // replay the identical IEEE chain; halving is exact scaling), the
-      // forecast is level + 7·trend. The trend-aware successor to
-      // events_ewma; state per type is two doubles.
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg((sum(col("value").cast("decimal(18,2)")) * 100)
-          .cast("decimal(38,0)").cast("bigint").as("x"))
-      daily.groupBy("event_type")
-        .agg(sort_array(collect_list(struct(col("day"), col("x")))).as("arr"))
-        .select(col("event_type"), size(col("arr")).cast("bigint").as("n_days"),
-          expr("""aggregate(
-              slice(transform(arr, e -> cast(e.x as double)), 2, size(arr) - 1),
-              named_struct('l', cast(element_at(arr, 1).x as double), 'b', cast(0.0 as double)),
-              (a, x) -> named_struct(
-                'l', (x + a.l + a.b) / 2.0D,
-                'b', ((x + a.l + a.b) / 2.0D - a.l) / 2.0D + a.b / 2.0D),
-              a -> a)""").as("st"))
-        .select(col("event_type"), col("n_days"),
-          col("st.l").as("level"), col("st.b").as("trend"),
-          (col("st.l") + lit(7.0) * col("st.b")).as("forecast_7d"))
-        .orderBy("event_type")
-    }),
-    "events_session_window_builtin" -> ((s, d) => {
-      // Spark's BUILT-IN session_window generator against the
-      // gaps-and-islands contract: per-user 30-min-gap sessions with
-      // count/start/end — a second implementation of the
-      // events_sessionize semantics, exercising the native
-      // SessionWindowing aggregation path batch-side. Built-in windows
-      // are [ts, ts+gap): an event arriving at EXACTLY the gap boundary
-      // opens a new session, so the oracle's island break is `>= gap`.
-      EV(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"), min("ts_us").as("start_us"), max("ts_us").as("end_us"))
-        .select(col("user_id"), col("n_events"), col("start_us"), col("end_us"))
-        .orderBy("user_id", "start_us")
-    }),
-    "q54_not_in_nulls" -> ((s, d) => {
-      // three-valued-logic conformance: `x NOT IN (subquery)` where the
-      // subquery yields a NULL is never TRUE (only FALSE/UNKNOWN), so
-      // the with-null variant returns 0 rows while the null-free variant
-      // filters normally — the classic silent-empty-result trap a SQL
-      // engine must reproduce exactly, here pinned as data.
-      val orders = T(s, d, "orders")
-      val inListNull = orders.filter(col("o_orderkey") < 100)
-        .select(expr("nullif(o_orderstatus, 'F')").as("st"))
-      val inListClean = orders.filter(col("o_orderkey") < 100)
-        .filter(col("o_orderstatus") =!= "F")
-        .select(col("o_orderstatus").as("st"))
-      // through the SQL path so Catalyst's NOT IN → null-aware anti join
-      // rewrite is the thing being exercised (a plain anti join has
-      // different null semantics)
-      orders.createOrReplaceTempView("graft_q54_orders")
-      inListNull.createOrReplaceTempView("graft_q54_null_list")
-      inListClean.createOrReplaceTempView("graft_q54_clean_list")
-      s.sql("""
-        SELECT 'with_null' AS variant, COUNT(*) AS n FROM graft_q54_orders
-        WHERE o_orderstatus NOT IN (SELECT st FROM graft_q54_null_list)
-        UNION ALL
-        SELECT 'no_null' AS variant, COUNT(*) AS n FROM graft_q54_orders
-        WHERE o_orderstatus NOT IN (SELECT st FROM graft_q54_clean_list)
-        ORDER BY variant""")
-    }),
-    "ann_ivf_sweep" -> ((s, d) => {
-      // probe-fraction planning sweep for the IVF index: recall-vs-
-      // brute-force at probe fractions {1/16, 1/8, 1/4, 1/2} of the
-      // √n-adaptive cell count (the ann_ivf sizing) must be MONOTONE
-      // non-decreasing and reach ≥ 0.8 at 1/2 — the scan-fraction knob a
-      // 100 TB ANN deployment tunes before committing an index.
-      // Driver-checked as invariants-as-data (cell assignment is
-      // engine-side, like ann_lsh/ann_ivf).
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-        .transform(Ckpt.eagerCkpt) // 5 rankings traverse it
-      val queries = vecs.filter(col("vec_id") < 8)
-      val k = 5
-      val nCells = math.max(4, math.sqrt(vecs.count().toDouble).toInt)
-      val bf = SimilarityOps.bruteForceTopK(vecs, queries, "vec_id", "vec", k)
-        .select("query_id", "neighbor_id")
-        .transform(Ckpt.eagerCkpt) // joined against every sweep point
-      // train + assign ONCE: centroids and corpus cell assignment do not
-      // depend on nProbe, so the sweep's four points share one index
-      // (previously each point re-trained and re-assigned — 4× the
-      // corpus-side work for identical cells; guide §1.2 step 1)
-      val cents = SimilarityOps.trainCentroids(vecs, "vec_id", "vec", nCells, iters = 4)
-      val assigned = SimilarityOps.ivfAssign(vecs, "vec_id", "vec", cents)
-        .transform(Ckpt.eagerCkpt) // 4 probe points traverse it
-      // the four sweep points as one 4-row frame via union
-      val rows = Seq(16, 8, 4, 2).zipWithIndex.map { case (denom, i) =>
-        val ivf = SimilarityOps.ivfProbe(assigned, queries, "vec_id", "vec", cents,
-          k, nProbe = math.max(1, nCells / denom))
-          .select("query_id", "neighbor_id")
-        bf.join(ivf, Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(lit(i + 1).as("nprobe"), (count(lit(1)).cast("double") / (8 * k)).as("recall"))
-      }.reduce(_.unionByName(_))
-      val arr = rows.agg(sort_array(collect_list(struct(col("nprobe"), col("recall")))).as("a"))
-      arr.select(
-        lit(8L).as("n_queries"),
-        expr("""aggregate(a, named_struct('ok', true, 'prev', cast(-1.0 as double)),
-            (acc, x) -> named_struct('ok', acc.ok and x.recall >= acc.prev, 'prev', x.recall),
-            acc -> acc.ok)""").as("monotone_ok"),
-        expr("element_at(a, 4).recall >= 0.8").as("recall8_ok"))
-    }),
-    "q55_join_hints" -> ((s, d) => {
-      // join-strategy hint suite: the SAME join+agg computed under
-      // broadcast, shuffle-hash and merge hints must agree exactly —
-      // three strategies, one contract (the plan spec pins that each
-      // hint actually selects its operator). The fourth row is the
-      // unhinted AQE choice.
-      def one(tag: String, dim: DataFrame) =
-        T(s, d, "lineitem").join(dim, col("l_orderkey") === col("o_orderkey"))
-          .agg(lit(tag).as("variant"), count(lit(1)).as("n"),
-            dsum(revenueTerm, 6).as("revenue"))
-      val dim = T(s, d, "orders").filter(col("o_orderstatus") === "O")
-        .select(col("o_orderkey"))
-      one("1_broadcast", broadcast(dim))
-        .unionByName(one("2_shuffle_hash", dim.hint("shuffle_hash")))
-        .unionByName(one("3_merge", dim.hint("merge")))
-        .unionByName(one("4_aqe", dim))
-        .orderBy("variant")
-    }),
-    "data_cast_audit" -> ((s, d) => {
-      // cast-safety audit before a schema migration: for each proposed
-      // column conversion, the rows that would NULL OUT (try_cast
-      // failure) and the rows that would silently LOSE PRECISION —
-      // candidates stacked IN-ROW (the expectations idiom), ONE scan,
-      // one tiny agg. The contract gate before rewriting a 100 TB
-      // extract under a tightened schema.
-      // Par.spread: the 3-cast try_cast battery ran serial on the 1-task scan
-      // (3.0 s of this query's ~3.4 s at sf0.1)
-      Par.spread(T(s, d, "orders").select("o_totalprice", "o_orderkey", "o_orderstatus"))
-        .select(explode(array(
-          struct(lit("totalprice->decimal(7,2)").as("cast_to"),
-            col("o_totalprice").isNotNull.as("nonnull"),
-            expr("try_cast(o_totalprice as decimal(7,2))").isNull.as("fails"),
-            expr("try_cast(o_totalprice as decimal(7,2)) is not null and " +
-              "cast(try_cast(o_totalprice as decimal(7,2)) as double) <> o_totalprice")
-              .as("lossy")),
-          struct(lit("orderkey->int").as("cast_to"),
-            col("o_orderkey").isNotNull.as("nonnull"),
-            expr("try_cast(o_orderkey as int)").isNull.as("fails"),
-            lit(false).as("lossy")),
-          struct(lit("status->int").as("cast_to"),
-            col("o_orderstatus").isNotNull.as("nonnull"),
-            expr("try_cast(o_orderstatus as int)").isNull.as("fails"),
-            lit(false).as("lossy")))).as("p"))
-        .select(col("p.cast_to").as("cast_to"), col("p.fails").as("fails"),
-          col("p.lossy").as("lossy"))
-        .groupBy("cast_to")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("fails"), 1L).otherwise(0L)).as("n_fail"),
-          sum(when(col("lossy"), 1L).otherwise(0L)).as("n_lossy"))
-        .withColumn("safe", col("n_fail") === 0 && col("n_lossy") === 0)
-        .orderBy("cast_to")
-    }),
-    "diff_column_stats" -> ((s, d) => {
-      // CDC audit on top of the diff operator: per-column CHURN — for
-      // every changed (C) row, which value columns actually differ,
-      // stacked in-row and counted in one tiny agg alongside the
-      // N/C/I/D row totals. The "what drifted between snapshots" report
-      // a 100 TB refresh publishes next to its diff. One full-outer
-      // diff join; everything after is column-count-sized.
-      val left = T(s, d, "orders")
-      val right = left
-        .filter(col("o_orderkey") % 97 =!= 0) // deletions
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 10)
-            .otherwise(col("o_totalprice")))
-        .withColumn("o_orderpriority",
-          when(col("o_orderkey") % 11 === 0, lit("9-RECHECK"))
-            .otherwise(col("o_orderpriority")))
-      val diffed = DiffOps.diff(left, right, Seq("o_orderkey"))
-        .transform(Ckpt.lazyCkpt) // row totals + column stack read it
-      val cols = Seq("o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate",
-        "o_orderpriority")
-      val colStack = diffed.filter(col("diff") === "C")
-        .select(explode(array(cols.map(c =>
-          struct(lit(c).as("column_name"),
-            (!(col(s"left_$c") <=> col(s"right_$c"))).as("chg"))): _*)).as("p"))
-        .groupBy(col("p.column_name").as("column_name"))
-        .agg(sum(when(col("p.chg"), 1L).otherwise(0L)).as("n_changed"))
-      val totals = diffed.groupBy(col("diff").as("column_name"))
-        .agg(count(lit(1)).as("n_changed")) // N/C/I/D row counts share the shape
-      colStack.unionByName(totals).orderBy("column_name")
-    }),
-    "events_json_variant" -> ((s, d) => {
-      // Spark 4 VARIANT path over the props JSON: parse_json once,
-      // variant_get the field (vs events_json's regex extraction — same
-      // contract, the modern semi-structured type), plus a
-      // try_variant_get miss that must be NULL-safe. The oracle replays
-      // it with DuckDB's JSON extraction.
-      EV(s, d)
-        .withColumn("v", parse_json(col("props")))
-        .select(
-          expr("variant_get(v, '$.k', 'int')").as("k"),
-          expr("try_variant_get(v, '$.missing', 'int')").as("miss"))
-        .groupBy("k")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("miss").isNull, 1L).otherwise(0L)).as("n_miss_null"))
-        // pinned null placement: if a props ever lacks '$.k', Spark's ASC
-        // default (NULLS FIRST) and DuckDB's (NULLS LAST) would diverge —
-        // the exact q57_null_ordering pitfall (round-7 advisor)
-        .orderBy(col("k").asc_nulls_last)
-    }),
-    "q56_string_funcs" -> ((s, d) => {
-      // string-function conformance row over customer names: the
-      // portable core (upper/lower/substr/lpad/rpad/replace/reverse/
-      // length/instr/repeat/concat_ws) — every derived column is pure
-      // projection, one ORDER BY.
-      T(s, d, "customer")
-        .filter(col("c_custkey") <= 50)
-        .select(col("c_custkey"),
-          upper(col("c_name")).as("up"),
-          lower(col("c_mktsegment")).as("lo"),
-          substring(col("c_name"), 3, 8).as("sub"),
-          lpad(col("c_name"), 24, "*").as("lp"),
-          rpad(col("c_mktsegment"), 12, ".").as("rp"),
-          regexp_replace(col("c_name"), "0", "#").as("repl"),
-          reverse(col("c_name")).as("rev"),
-          length(col("c_name")).cast("bigint").as("len"),
-          instr(col("c_name"), "1").cast("bigint").as("pos1"),
-          concat_ws("|", col("c_mktsegment"), col("c_name")).as("cw"))
-        .orderBy("c_custkey")
-    }),
-    "q57_null_ordering" -> ((s, d) => {
-      // null-ordering conformance: engines DISAGREE on default null
-      // placement (Spark ASC = NULLS FIRST, DuckDB = NULLS LAST), so
-      // portable sorts must say it explicitly — rank under an explicit
-      // NULLS LAST ordering of a nullable key, plus the null count.
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.orderBy(col("st").asc_nulls_last, col("o_orderkey"))
-      T(s, d, "orders")
-        .filter(col("o_orderkey") <= 200)
-        .select(col("o_orderkey"), expr("nullif(o_orderstatus, 'F')").as("st"))
-        .withColumn("rk", row_number().over(w)) // 200-row bounded window
-        .orderBy("o_orderkey")
-    }),
-    "q58_date_funcs" -> ((s, d) => {
-      // calendar-function conformance: month/quarter/week truncation
-      // (ISO Monday weeks both engines), last_day, day arithmetic, and
-      // datediff — emitted as DATE columns (dates hash portably;
-      // timestamps would re-open the µs/NTZ can). Pure projection.
-      T(s, d, "orders")
-        .filter(col("o_orderkey") <= 100)
-        .select(col("o_orderkey"),
-          to_date(col("o_orderdate")).as("od"),
-          to_date(date_trunc("month", col("o_orderdate"))).as("m_start"),
-          to_date(date_trunc("quarter", col("o_orderdate"))).as("q_start"),
-          to_date(date_trunc("week", col("o_orderdate"))).as("w_start"),
-          last_day(col("o_orderdate")).as("m_end"),
-          date_add(to_date(col("o_orderdate")), 30).as("plus30"),
-          datediff(to_date(col("o_orderdate")), lit("2024-01-01").cast("date"))
-            .cast("bigint").as("days_since"))
-        .orderBy("o_orderkey")
-    }),
-    "vec_matryoshka_curve" -> ((s, d) => {
-      // recall-vs-dimension curve: top-5 overlap against the full-dim
-      // ranking at truncated dims {8, 16, 32, 64} — unlike the IVF
-      // sweep this is EXACT SQL-replayable math (truncated cosine is
-      // deterministic), so every point is oracle-checked, and dim=64
-      // must be a perfect 1.0. The dimension-budget planning curve for
-      // a Matryoshka-trained embedding fleet.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-        .transform(Ckpt.eagerCkpt) // 5 rankings traverse it
-      val isQ = col("vec_id") < 8
-      val k = 5
-      val fullK = SimilarityOps.bruteForceTopK(vecs, vecs.filter(isQ), "vec_id", "vec", k)
-        .select("query_id", "neighbor_id")
-        .transform(Ckpt.eagerCkpt) // joined against every curve point
-      Seq(8, 16, 32, 64).map { dim =>
-        val tr = vecs.select(col("vec_id"), slice(col("vec"), 1, dim).as("vec"))
-        val trK = SimilarityOps.bruteForceTopK(tr, tr.filter(isQ), "vec_id", "vec", k)
-          .select("query_id", "neighbor_id")
-        fullK.join(trK, Seq("query_id", "neighbor_id"), "left_semi")
-          .agg(lit(dim).as("dim"), count(lit(1)).cast("bigint").as("n_overlap"),
-            (count(lit(1)).cast("double") / (8 * k)).as("recall"))
-      }.reduce(_.unionByName(_))
-        .orderBy("dim")
-    }),
-    "q59_array_funcs" -> ((s, d) => {
-      // array-function conformance over token arrays (the order-stable
-      // subset: sort/distinct-sorted/contains/position/size/slice and an
-      // element-wise HOF) — array semantics are where engines silently
-      // diverge, so the portable core is pinned as data. Pure projection.
-      val tk = TextFunctions.tokensFromNorm(TextFunctions.normText(col("text")))
-      TP(s, d, "documents")
-        .filter(col("doc_id") <= 60)
-        .select(col("doc_id"), tk.as("tk"))
-        .select(col("doc_id"),
-          size(col("tk")).cast("bigint").as("n_tok"),
-          // arrays emit as joined strings — array cells don't hash
-          // portably through the parquet/pandas compare (the
-          // vec_meanpool precedent)
-          concat_ws(",", sort_array(array_distinct(col("tk")))).as("sorted_vocab"),
-          array_contains(col("tk"), "the").as("has_the"),
-          array_position(col("tk"), "the").cast("bigint").as("pos_the"),
-          concat_ws(",", slice(col("tk"), 1, 3)).as("first3"),
-          expr("concat_ws(',', transform(slice(tk, 1, 3), x -> cast(length(x) as string)))")
-            .as("first3_lens"),
-          expr("size(filter(tk, x -> length(x) >= 6))").cast("bigint").as("n_long"))
-        .orderBy("doc_id")
-    }),
-    "events_anova" -> ((s, d) => {
-      // one-way ANOVA across event types (does mean value differ by
-      // type?): per-group decimal-exact moment sums → closed-form
-      // between/within sums of squares and the F statistic — the
-      // k-group extension of the Welch A/B readout, one scan + a
-      // group-count-sized frame. The group sums fold into grand totals
-      // by a SORTED sequential fold (a parallel double SUM over groups
-      // would be order-nondeterministic).
-      val vd = col("value").cast("decimal(18,2)")
-      val g = EV(s, d)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(vd).cast("decimal(38,2)").cast("double").as("sx"),
-          sum((vd * vd).cast("decimal(38,4)")).cast("decimal(38,4)").cast("double").as("sxx"))
-      val tot = g
-        .agg(sort_array(collect_list(struct(col("event_type"), col("n"), col("sx"), col("sxx")))).as("a"))
-        .select(
-          expr("aggregate(a, 0L, (acc, x) -> acc + x.n)").as("n_tot"),
-          expr("aggregate(a, cast(0.0 as double), (acc, x) -> acc + x.sx)").as("sx_tot"),
-          expr("aggregate(a, cast(0.0 as double), (acc, x) -> acc + x.sxx)").as("sxx_tot"),
-          expr("aggregate(a, cast(0.0 as double), (acc, x) -> acc + x.sx * x.sx / cast(x.n as double))")
-            .as("ssb_raw"),
-          size(col("a")).cast("bigint").as("k"))
-      tot.select(col("k"), col("n_tot"),
-        (col("ssb_raw") - col("sx_tot") * col("sx_tot") / col("n_tot").cast("double")).as("ss_between"),
-        (col("sxx_tot") - col("ssb_raw")).as("ss_within"))
-        .select(col("k"), col("n_tot"), col("ss_between"), col("ss_within"),
-          ((col("ss_between") / (col("k") - 1).cast("double")) /
-            (col("ss_within") / (col("n_tot") - col("k")).cast("double"))).as("f_stat"))
-    }),
-    "data_dedup_idempotence" -> ((s, d) => {
-      // dedup idempotence proof AS DATA: applying the survivors pass to
-      // its own output must change nothing (pass 2 finds zero pairs) —
-      // the property that makes a nightly dedup safe to re-run on
-      // already-cleaned data. Emits pass-1/pass-2 counts and the
-      // equality verdict; the oracle recomputes pass 1 and states the
-      // invariant.
-      // r15 (guide §1.2): the two passes shingled the corpus FOUR times
-      // (signature + verify per pass) and eagerly checkpointed the full
-      // pass-1 text. The shingle set is a pure per-document function of
-      // unchanged text, so pass 2's "re-shingling of its own output" is
-      // byte-identical to the pass-1 signatures filtered to the
-      // survivors — one eager (id, sh) pin feeds both passes, and only
-      // id sets flow between them. Same counts, same verdict.
-      val docs = TP(s, d, "documents")
-      val docsSh = docs
-        .select(col("doc_id").as("id"), DedupOps.hashedShingleSet(col("text"), 2).as("sh"))
-        .transform(Ckpt.eagerCkpt)
-      def dropsOf(sh: DataFrame) = GraphOps.connectedComponents(
-          DedupOps.minhashDupPairsOf(sh, threshold = 0.7, numBands = 32, rowsPerBand = 3),
-          "a_id", "b_id")
-        .filter(col("id") =!= col("cluster_id"))
-        .select(col("id").as("__drop_id"))
-      val sh1 = docsSh.join(dropsOf(docsSh), col("id") === col("__drop_id"), "left_anti")
-        .transform(Ckpt.eagerCkpt) // pass-2 input: the survivors' signatures
-      val p2 = sh1.join(dropsOf(sh1), col("id") === col("__drop_id"), "left_anti")
-      sh1.agg(count(lit(1)).as("n_pass1"))
-        .crossJoin(broadcast(p2.agg(count(lit(1)).as("n_pass2")))) // 1×1
-        .withColumn("idempotent", col("n_pass1") === col("n_pass2"))
-    }),
-    "synth_agg_pushdown_check" -> ((s, d) => {
-      // DSv2 AGGREGATE pushdown, driver-visible (round-7 verdict item 5):
-      // a billion-row grouped COUNT/MIN/MAX answered closed-form at the
-      // source (SyntheticAggScan), cross-checked against the generator's
-      // arithmetic — invariants-as-data, since DuckDB can compute the
-      // same expected constants from the generator parameters. plan_pushed
-      // proves the scan really IS the pushed-agg shape (not a row scan
-      // that happened to agree); bucket −1 is the empty-range ungrouped
-      // row (count 0, min/max NULL — the round-7 advisor regression).
-      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-      val rows = 1000000000L
-      def pushed(df: DataFrame): Boolean = {
-        val scans = df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
-        scans.nonEmpty && scans.forall(_.scan.isInstanceOf[graft.sources.v2.SyntheticAggScan])
-      }
-      val synth = s.read.format("graft.sources.v2.SyntheticTableProvider")
-        .option("rows", rows.toString).option("partitions", "64").load()
-      val g = synth.groupBy("bucket")
-        .agg(count(lit(1)).as("n"), min("id").as("min_id"), max("id").as("max_id"))
-      val grouped = g.select(col("bucket"),
-        (col("n") === lit(rows / 32)).as("count_ok"),
-        (col("min_id") === col("bucket").cast("long")).as("min_ok"),
-        (col("max_id") === lit(rows - 32) + col("bucket").cast("long")).as("max_ok"))
-        .withColumn("plan_pushed", lit(pushed(g)))
-      val e = synth.filter(col("id") < 0)
-        .agg(count(lit(1)).as("n"), min("id").as("lo"), max("id").as("hi"))
-      val emptyRow = e.select(lit(-1).as("bucket"),
-        (col("n") === 0L).as("count_ok"),
-        col("lo").isNull.as("min_ok"), col("hi").isNull.as("max_ok"))
-        .withColumn("plan_pushed", lit(pushed(e)))
-      grouped.unionByName(emptyRow).orderBy("bucket")
-    }),
-    "q60_runtime_filter_check" -> ((s, d) => {
-      // Runtime bloom-filter join pruning (Spark's InjectRuntimeFilter):
-      // a selective dim-side predicate materializes a bloom filter that
-      // prunes the FACT side before its join shuffle — at 100 TB this is
-      // the difference between shuffling the whole fact table and
-      // shuffling the matching slice. Real sizes clear the default
-      // thresholds; here the plan is proven at toy thresholds (the AQE
-      // skew-split precedent) and the boolean rides the result:
-      // plan_filtered = optimized plan applies BloomFilterMightContain
-      // to l_orderkey under a shuffle join. The data result (revenue of
-      // high-priority orders by month) is computed with default confs.
-      import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-      val confs = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "64MB",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      val planFiltered =
-        try {
-          confs.foreach { case (k, v) => s.conf.set(k, v) }
-          val probe = T(s, d, "lineitem")
-            .join(T(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT"),
-              col("l_orderkey") === col("o_orderkey"))
-            .groupBy("o_orderpriority").agg(dsum(revenueTerm, 6).as("rev"))
-          probe.queryExecution.optimizedPlan.exists(
-            _.expressions.exists(_.exists(_.isInstanceOf[BloomFilterMightContain])))
-        } finally saved.foreach { case (k, v) =>
-          v.fold(s.conf.unset(k))(s.conf.set(k, _))
-        }
-      T(s, d, "lineitem")
-        .join(T(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(expr("CAST(substring(CAST(o_orderdate AS STRING), 1, 7) AS STRING)").as("month"))
-        .agg(count(lit(1)).as("n_items"), dsum(revenueTerm, 6).as("revenue"))
-        .withColumn("plan_filtered", lit(planFiltered))
-        .orderBy("month")
-    }),
-    "data_stratified_exact_k" -> ((s, d) => {
-      // EXACT-k deterministic sample per stratum (the rate-based
-      // data_stratified can't hit a headcount): within each lang, the k
-      // smallest md5(seed:doc_id) — per-key top-k rides
-      // InferWindowGroupLimit's map-side partial heap, so each task
-      // forwards ≤k rows per stratum and the low-cardinality stratum key
-      // never funnels raw rows (the data_domain_cap precedent);
-      // retry-stable, joins-free, exactly min(k, n_stratum) rows out.
-      val k = 40
-      val docs = TP(s, d, "documents").select(col("doc_id"), col("lang"),
-        md5(concat_ws(":", lit("sek"), col("doc_id").cast("string"))).as("pick"))
-      CorpusOps.capPerKey(docs, "lang", Seq(col("pick").asc, col("doc_id").asc), k)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    }),
-    "graph_kcore_check" -> ((s, d) => {
-      // k-core of the bipartite order↔part graph (iterative peeling,
-      // GraphOps.kcore — the link-graph quality core: fringe nodes peel
-      // off, the densely-connected center survives). DuckDB cannot
-      // replay peeling-to-fixpoint (recursive CTEs can't re-aggregate),
-      // so the result row carries the DEFINING invariants computed
-      // independently from the original edges: every core node keeps
-      // induced degree ≥ k, NO non-core node has ≥ k core neighbors
-      // (maximality — else core∪{v} would also qualify), and kcore's own
-      // core_deg equals the recomputed induced degree.
-      val k = 3
-      val edges = T(s, d, "lineitem")
-        .select((col("l_orderkey") * 2).as("x"), (col("l_partkey") * 2 + 1).as("y"))
-        .distinct()
-        .transform(Ckpt.lazyCkpt) // core build + invariant recount read it
-      val core = GraphOps.kcore(edges, "x", "y", k)
-        .transform(Ckpt.lazyCkpt) // three invariant consumers
-      val und = edges.select(col("x").as("src"), col("y").as("dst"))
-        .unionByName(edges.select(col("y").as("src"), col("x").as("dst")))
-      val coreNbr = und
-        .join(core.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .groupBy("src").agg(count(lit(1)).as("n_core_nbr"))
-      val flagged = coreNbr.join(
-        core.select(col("node").as("src"), col("core_deg")), Seq("src"), "left")
-      flagged.agg(
-          min(when(col("core_deg").isNotNull, col("n_core_nbr"))).as("min_core_deg"),
-          max(when(col("core_deg").isNull, col("n_core_nbr"))).as("max_outside_nbr"),
-          sum(when(col("core_deg").isNotNull, 1L).otherwise(0L)).as("n_core"),
-          sum(when(col("core_deg") =!= col("n_core_nbr"), 1L).otherwise(0L)).as("n_inconsistent"))
-        .select(lit(k).as("k"),
-          (col("n_core") > 0).as("nonempty"),
-          (col("min_core_deg") >= k).as("core_min_deg_ok"),
-          (coalesce(col("max_outside_nbr"), lit(0L)) < k).as("maximality_ok"),
-          (coalesce(col("n_inconsistent"), lit(0L)) === 0).as("deg_consistent_ok"))
-    }),
-    "text_bigram_surprisal" -> ((s, d) => {
-      // LM-flavored corpus-familiarity score without logs: each doc's
-      // word bigrams are looked up in the corpus bigram-frequency table
-      // (domain-sized aggregate; AQE broadcasts it when small, shuffle-
-      // joins otherwise — the tfidf precedent). familiarity = mean
-      // corpus count of the doc's bigram occurrences — integer sums, one
-      // double division; LOW scores flag novel/garbled text, the cheap
-      // surprisal gate a curation pipeline runs before a real LM.
-      val bg = TP(s, d, "documents")
-        .select(col("doc_id"), explode(TextFunctions.shingles(col("text"), 2)).as("bigram"))
-        .filter(col("bigram") =!= "")
-        // EAGER (r14): the corpus-frequency agg and the familiarity join
-        // consume this concurrently, and their column-pruned Exchanges
-        // don't canonicalize equal — unpinned, the shingle explode ran
-        // twice (two full 32-task scan stages in the profile)
-        .transform(Ckpt.eagerCkpt)
-      val corpus = bg.groupBy("bigram").agg(count(lit(1)).as("cf"))
-      bg.join(corpus, Seq("bigram"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("bigint").as("n_bigrams"),
-          sum("cf").cast("bigint").as("sum_cf"))
-        .withColumn("familiarity",
-          col("sum_cf").cast("double") / col("n_bigrams").cast("double"))
-        .orderBy("doc_id")
-    }),
-    "events_rate_limit" -> ((s, d) => {
-      // deterministic token-bucket rate limiting (capacity 5 tokens,
-      // refill 1 token/10 s) replayed per user over the event sequence —
-      // the admission decision is an ORDER-DEPENDENT integer fold
-      // (token-µs units, zero FP), expressed as the sequential-fold
-      // idiom both engines replay bit-identically: Spark aggregate()
-      // over the sorted per-user array ≡ DuckDB list_reduce. Per-user
-      // arrays are bounded by user activity (the events_* convention);
-      // the streaming twin of this shape is transformWithState.
-      RateLimitOps.tokenBucket(EV(s, d), "user_id", "ts_us", "event_id",
-          capUs = 50000000L /* 5 tokens × 10 s */, costUs = 10000000L /* 1 token */)
-        .orderBy("user_id")
-    }),
-    "ann_ivfpq" -> ((s, d) => {
-      // FULL IVF-PQ (the FAISS production layout): coarse cells choose
-      // WHICH corpus slice each query reads, residual-PQ codes prune
-      // WITHIN the probed cells by ADC, exact rerank on the surviving
-      // candidates only — three nested scan-fraction knobs
-      // (nProbe/nCells × nCandidates × k). Driver-checked by the ann_*
-      // recall-vs-brute-force invariant.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val queries = vecs.filter(col("vec_id") < 8)
-      val k = 5
-      val bf = SimilarityOps.bruteForceTopK(vecs, queries, "vec_id", "vec", k)
-        .select("query_id", "neighbor_id")
-      // candidate budget = corpus/4 inside a 5/8-probed index (the two
-      // multiplied scan fractions); recall bar 0.6 = the ann_pq_adc
-      // precedent (PQ at 16 codes/subspace is deliberately lossy)
-      val n = vecs.count()
-      // measured recall@5 0.85/0.85 at sf0.001/0.01 (deterministic) with
-      // 16 subspaces of 4 dims (finer residual quantization at the same
-      // 16-code budget) and 5 of 8 cells probed — bar 0.6 with margin
-      val ivfpq = SimilarityOps.ivfPqRerankTopK(vecs, queries, "vec_id", "vec", k,
-          nCells = 8, nProbe = 5, nCandidates = math.max(64, (n / 4).toInt),
-          subspaces = 16, codes = 16, iters = 4)
-        .select("query_id", "neighbor_id")
-      bf.join(ivfpq, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .select(
-          lit(8L).as("n_queries"),
-          (col("hits").cast("double") / (8 * k) >= 0.6).as("recall_ok"))
-    }),
-    "q61_recursive_cte" -> ((s, d) => {
-      // Spark 4 RECURSIVE CTE conformance: ancestor closure + chain
-      // depth over a synthetic decimal hierarchy (parent = key div 10 —
-      // the org-chart/category-tree shape). Scale posture: recursion
-      // depth is log₁₀(keyspace), each level one self-referencing step
-      // over the frontier — rows×depth total work, no quadratic blowup.
-      // DuckDB replays the identical recursion with `//` division.
-      T(s, d, "customer").createOrReplaceTempView("r8_cust")
-      s.sql("""
-        WITH RECURSIVE anc(node, anc, depth) AS (
-          SELECT c_custkey, c_custkey div 10, 1 FROM r8_cust
-          UNION ALL
-          SELECT node, anc div 10, depth + 1 FROM anc WHERE anc > 0
-        )
-        SELECT node, count(*) AS n_ancestors, max(depth) AS chain_len
-        FROM anc GROUP BY node ORDER BY node
-      """)
-    }),
-    "q62_sql_udf" -> ((s, d) => {
-      // Spark 4 SQL scalar UDF conformance (CREATE TEMPORARY FUNCTION …
-      // RETURN expr): the body is INLINED into the plan by Catalyst, so
-      // the UDF costs nothing at 100 TB — same codegen'd decimal
-      // arithmetic as writing the expression by hand (unlike a JVM
-      // closure UDF, which would block codegen and predicate pushdown).
-      // DuckDB has no multi-statement oracle, so its twin inlines the
-      // identical expression — which is exactly the semantics claim.
-      // IF-absent guard: CREATE OR REPLACE on a rerun (bench cold+warm)
-      // logs a "replaced a temporary function" WARN — the conformance
-      // claim is the FIRST registration, so re-runs skip it
-      if (!s.catalog.functionExists("graft_disc_price")) s.sql("""
-        CREATE TEMPORARY FUNCTION graft_disc_price(
-          p DECIMAL(12,2), disc DECIMAL(12,2)) RETURNS DECIMAL(18,6)
-        RETURN p * (1 - disc)
-      """)
-      T(s, d, "lineitem").createOrReplaceTempView("r8_li_udf")
-      s.sql("""
-        SELECT l_returnflag,
-          CAST(CAST(SUM(graft_disc_price(l_extendedprice, l_discount)) AS DECIMAL(38,6)) AS DOUBLE) AS disc_revenue,
-          COUNT(*) AS n
-        FROM r8_li_udf
-        WHERE graft_disc_price(l_extendedprice, l_discount) > 1000
-        GROUP BY l_returnflag ORDER BY l_returnflag
-      """)
-    }),
-    "q63_pipe_syntax" -> ((s, d) => {
-      // Spark 4 SQL pipe-operator conformance (|> WHERE / AGGREGATE /
-      // post-agg WHERE / ORDER BY): pipe stages parse to the SAME
-      // logical plan as nested SQL — scan-filter pushdown and partial
-      // aggregation apply unchanged, so this is pure surface syntax
-      // with zero plan cost. DuckDB twin is the equivalent nested SQL.
-      T(s, d, "orders").createOrReplaceTempView("r8_ord_pipe")
-      s.sql("""
-        FROM r8_ord_pipe
-        |> WHERE o_orderstatus <> 'P'
-        |> AGGREGATE CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS total,
-                     COUNT(*) AS n_orders
-           GROUP BY o_orderpriority
-        |> WHERE n_orders > 10
-        |> SELECT o_orderpriority, CAST(total AS DOUBLE) AS total, n_orders
-        |> ORDER BY o_orderpriority
-      """)
-    }),
-    "q64_trimmed_mean" -> ((s, d) => {
-      // per-group 10% two-sided trimmed mean (the robust-mean gate):
-      // 3 group keys over raw lineitem rows are exactly the hot-
-      // partition class, so the within-group rank comes from the
-      // grouped banded core ($2²⁰-cent slabs), trim bounds from exact
-      // group counts, and the mean is one fixed integer-cents double
-      // division. The sum accumulates in DECIMAL(38,0) from the first
-      // row (a LongType sum would wrap silently past ~9·10¹⁶ cents —
-      // round-8 advisor item 5); the final long cast is the reported
-      // type, overflow-checked by ANSI.
-      val li = T(s, d, "lineitem").select(col("l_returnflag"),
-          (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long").as("cents"),
-          col("l_orderkey"), col("l_linenumber"))
-        .withColumn("bb", RankOps.idiv(col("cents"), 1L << 20))
-      val ranked = RankOps.groupedBandedRank(li,
-        groupCols = Seq("l_returnflag"), bandCols = Seq("bb"),
-        bandSort = Seq(col("bb").asc),
-        rowSort = Seq(col("cents").asc, col("l_orderkey").asc, col("l_linenumber").asc),
-        rankName = "rk")
-      val totals = li.groupBy("l_returnflag").agg(count(lit(1)).cast("long").as("n_g"))
-      ranked.join(broadcast(totals), Seq("l_returnflag"))
-        .filter(col("rk") > RankOps.idiv(col("n_g"), 10L) &&
-                col("rk") <= col("n_g") - RankOps.idiv(col("n_g"), 10L))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_kept"),
-             sum(col("cents").cast("decimal(38,0)")).cast("long").as("sum_cents"))
-        .withColumn("trimmed_mean_cents",
-          col("sum_cents").cast("double") / col("n_kept").cast("double"))
-        .orderBy("l_returnflag")
-    }),
-    "q65_spearman" -> ((s, d) => {
-      // exact tie-averaged Spearman rank correlation per group —
-      // monotone-association between quantity (bounded domain,
-      // broadcast rank table) and extendedprice (near-unique domain,
-      // banded rank table met in a shuffle join). No per-row rank
-      // window anywhere; see StatsOps.spearmanByGroup.
-      StatsOps.spearmanByGroup(T(s, d, "lineitem"), "l_returnflag",
-          col("l_quantity").cast("long"),
-          (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"),
-          // r15: price cents span ~10^7, so the default 2^20 band gave
-          // ~10 bands/flag — the in-band rank windows ran as a handful
-          // of ~100k-row sorts. 2^14 yields ~600 balanced bands/flag:
-          // same exact ranks, far smaller per-band sorts.
-          bandBits = 14)
-        .withColumnRenamed("g", "l_returnflag")
-        .orderBy("l_returnflag")
-    }),
-    "q66_jaro_winkler" -> ((s, d) => {
-      // blocked fuzzy similarity join on a NATIVE codegen Jaro-Winkler
-      // kernel (StringSimExpressions) that returns the similarity as an
-      // EXACT RATIONAL {num, den}: the ≥0.9 keep decision is an integer
-      // cross-multiplication — no floating-point threshold boundary
-      // anywhere. (The one cross-engine FP edge, DuckDB deciding the
-      // 0.7 Winkler boost on its double jaro, cannot affect a
-      // 0.9-filtered set: a 0.7-boundary pair scores ≤ 0.82.) The
-      // reported similarity is ONE final double division + round(6).
-      // Candidate generation (DedupOps.jaroWinklerPairs): kernel runs
-      // over DISTINCT names blocked by word-level deletion-1 keys —
-      // never the within-brand quadratic (round-8 verdict item 2); the
-      // full-quadratic oracle certifies zero false negatives on-data.
-      DedupOps.jaroWinklerPairs(T(s, d, "part"), "p_name", "p_partkey", "p_brand", 9, 10)
-        .select(col("blk").as("p_brand"), col("a_id").as("p1"),
-          col("b_id").as("p2"), col("similarity"))
-        .orderBy("p_brand", "p1", "p2")
-    }),
-    "write_zorder_skipping" -> ((s, d) => {
-      // the PAYOFF side of z-order (round-8 verdict item 8b): the
-      // write_zorder_check row proves the layout (disjoint per-file
-      // z-ranges); this row proves what the layout BUYS — per-file
-      // min/max stats prune files for point queries on EITHER
-      // dimension, where a single-column-sorted layout can only prune
-      // its own sort key and must touch EVERY file for queries on the
-      // other column. "Touched" = the probe point falls inside the
-      // file's (min,max) box on the filtered column(s) — exactly the
-      // file-skipping decision a stats-based reader makes. Probes sit
-      // mid-domain (zb ∈ [64,191]) so the sorted layout's full-range
-      // zb boxes contain them with certainty at ≥25 rows/file.
-      val base = T(s, d, "part").select(
-        pmod(col("p_partkey"), lit(256)).cast("int").as("za"),
-        pmod((col("p_retailprice").cast("decimal(18,2)") * 100).cast("long"), lit(256))
-          .cast("int").as("zb"))
-      val zdir = java.nio.file.Files.createTempDirectory("graft-zskip-z").toString
-      val sdir = java.nio.file.Files.createTempDirectory("graft-zskip-s").toString
-      WriteOps.zorderBy(base, "za", "zb", numFiles = 8, bits = 8)
-        .write.mode("overwrite").parquet(zdir)
-      base.repartitionByRange(8, col("za")).sortWithinPartitions("za")
-        .write.mode("overwrite").parquet(sdir)
-      def stats(dir: String) = s.read.parquet(dir)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("za").as("amin"), max("za").as("amax"),
-          min("zb").as("bmin"), max("zb").as("bmax"), count(lit(1)).as("n"))
-      val probes = s.range(1).select(explode(array(
-        Seq((13, 100), (45, 137), (78, 91), (109, 180),
-          (141, 66), (172, 155), (204, 120), (236, 77)).map { case (a, b) =>
-          struct(lit(a).as("pa"), lit(b).as("pb"))
-        }: _*)).as("p")).select(col("p.pa"), col("p.pb"))
-      def touched(st: org.apache.spark.sql.DataFrame) = st.crossJoin(broadcast(probes))
-        .agg(
-          sum(when(col("pa").between(col("amin"), col("amax")) &&
-            col("pb").between(col("bmin"), col("bmax")), 1L).otherwise(0L)).as("t_point"),
-          sum(when(col("pb").between(col("bmin"), col("bmax")), 1L).otherwise(0L)).as("t_zb"),
-          count(lit(1)).as("cells"))
-      val z = touched(stats(zdir)).select(
-        col("t_point").as("z_point"), col("t_zb").as("z_zb"), col("cells").as("z_cells"))
-      val so = touched(stats(sdir)).select(
-        col("t_point").as("s_point"), col("t_zb").as("s_zb"), col("cells").as("s_cells"))
-      val nrows = s.read.parquet(zdir).agg(count(lit(1)).as("n_rows"))
-      z.crossJoin(so).crossJoin(nrows).select(
-        (col("z_cells") / 8).cast("long").as("n_files_z"),
-        (col("s_cells") / 8).cast("long").as("n_files_sorted"),
-        col("n_rows"),
-        // z-order point queries touch ≤ half of the files
-        (col("z_point") * 2 <= col("z_cells")).as("z_point_prunes"),
-        // z-order prunes on the SECOND dimension alone too
-        (col("z_zb") * 4 <= col("z_cells") * 3).as("z_zb_prunes"),
-        // the single-sort layout cannot prune zb: every probe touches
-        // every file
-        (col("s_zb") === col("s_cells")).as("sorted_zb_touches_all"),
-        (col("z_zb") < col("s_zb")).as("zorder_wins_second_dim"))
-    }),
-    "dedup_winnowing" -> ((s, d) => {
-      // winnowing fingerprints (Schleimer et al. SIGMOD'03 / MOSS):
-      // shared-PASSAGE candidate pairs — docs sharing ≥2 selected gram
-      // hashes. Unlike MinHash (whole-doc similarity, probabilistic),
-      // winnowing GUARANTEES any shared run of ≥ w+k-1 = 7 tokens
-      // surfaces, at ~2/(w+1) fingerprint density. Selection is
-      // rightmost-min-per-window over a packed (40-bit md5 hash)·2²¹ +
-      // (2²¹−1−pos) key, so the oracle replays the whole rule with
-      // plain MIN window arithmetic. One shuffle on doc id (selection
-      // windows), one on fp hash (bucket pair-gen, overflow-guarded).
-      DedupOps.winnowDupPairs(TP(s, d, "documents"), "text", "doc_id",
-          k = 4, w = 4, minShared = 2)
-        .orderBy("a_id", "b_id")
-    }),
-    "data_dsir" -> ((s, d) => {
-      // DSIR importance resampling (Xie et al. 2023): select the 50
-      // raw-corpus docs that look most like the ENGLISH slice under
-      // hashed-bigram models — logw = Σ c_f·(ln θ_en − ln θ_raw)
-      // (per-bucket log-ratio rounded ONCE at the 1024-row bucket
-      // table then decimal-exact per-doc fold) + seeded md5-Gumbel
-      // top-k (≡ sampling without replacement ∝ w, retry-stable).
-      // Fit = one conditional-sum bucket agg; score = broadcast lr
-      // join + one doc agg; selection = TakeOrdered, no global sort.
-      val docs = TP(s, d, "documents")
-      val top = SelectionOps.dsirScores(docs, "doc_id", "text",
-          isTarget = col("lang") === "en", buckets = 1024, seed = "dsir")
-        .orderBy(col("score").desc, col("id"))
-        .limit(50)
-      top.join(docs.select(col("doc_id"), col("lang")), top("id") === col("doc_id"))
-        .select(col("doc_id"), col("lang"),
-          col("logw").cast("double").as("logw"),
-          col("score").cast("double").as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-    }),
-    "quality_model_fit" -> ((s, d) => {
-      // closed-form linear-probe TRAINING (StatsOps.linearProbeFit):
-      // is-English ≈ w0 + w1·n_tokens + w2·stopword_hits fit by normal
-      // equations from ONE sufficient-statistics pass (9 decimal-exact
-      // integer moments, map-side combined), Cramer solve + SSE as a
-      // fixed double expression on the 1-row stats, and a broadcast
-      // eval pass counting threshold-½ correct predictions — the
-      // inference twin is row 135; this is the TRAINING side, with no
-      // gradient loop and no driver-side data. (The synthetic corpus's
-      // lang is nearly independent of its text, so accuracy ≈ the class
-      // base rate here — honest; the spec proves exact recovery +
-      // accuracy 1.0 on a separable corpus.)
-      val docs = TP(s, d, "documents")
-      StatsOps.linearProbeFit(docs,
-        x1 = size(TextFunctions.tokens(col("text"))),
-        x2 = TextFunctions.tokenHits(col("text"), TextFunctions.stopwords("en")),
-        label = when(col("lang") === "en", 1L).otherwise(0L))
-    }),
-    "data_url_canon" -> ((s, d) => {
-      // URL canonicalization + canonical-key dedup (the crawl-curation
-      // stage before any content dedup): scheme/host case, default
-      // ports, leading www., utm_* params, param order, fragments and
-      // trailing slashes all normalize away; docs sharing the canonical
-      // key collapse keep-min. URLs are SYNTHESIZED deterministically
-      // from doc_id/source (the linkage dirty-copy precedent) with all
-      // seven mess dimensions exercised, so the oracle replays the
-      // synthesis + canonicalization byte-for-byte. Shape: pure
-      // projection + one partial-agg groupBy on the canonical key.
-      val u = concat(
-        when(col("doc_id") % 2 === 0, lit("HTTPS://WWW.")).otherwise(lit("https://")),
-        col("source"), lit(".Example.COM"),
-        when(col("doc_id") % 3 === 0, lit(":443")).otherwise(lit("")),
-        lit("/docs/"), (col("doc_id") % 40).cast("string"),
-        when(col("doc_id") % 4 === 0, lit("/")).otherwise(lit("")),
-        when(col("doc_id") % 2 === 0,
-          concat(lit("?utm_source=feed&id="), (col("doc_id") % 5).cast("string"),
-            lit("&utm_campaign=x")))
-          .otherwise(concat(lit("?id="), (col("doc_id") % 5).cast("string"))),
-        when(col("doc_id") % 5 === 0, lit("#sec2")).otherwise(lit("")))
-      T(s, d, "documents")
-        .select(col("doc_id"), TextFunctions.canonicalizeUrl(u).as("canonical_url"))
-        .groupBy("canonical_url")
-        .agg(min("doc_id").as("keep_id"), count(lit(1)).as("dup_count"))
-        .orderBy("canonical_url")
-    }),
-    "text_ccnet_buckets" -> ((s, d) => {
-      // CCNet-style head/middle/tail corpus partitioning (Wenzek et al.
-      // 2020): per-LANGUAGE terciles of an LM-familiarity score (the
-      // log-free bigram corpus-familiarity of row 291 stands in for the
-      // wiki-LM perplexity), split at exact percent_rank thirds via the
-      // banded-rank calibrate core — never a per-language raw window.
-      // head = most familiar (CCNet keeps it), tail = least. Per
-      // (lang, bucket): doc count, bigram mass, exact avg familiarity.
-      val bg = TP(s, d, "documents")
-        .select(col("doc_id"), explode(TextFunctions.shingles(col("text"), 2)).as("bigram"))
-        .filter(col("bigram") =!= "")
-        // EAGER (r14): the corpus-frequency agg and the familiarity join
-        // consume this concurrently, and their column-pruned Exchanges
-        // don't canonicalize equal — unpinned, the shingle explode ran
-        // twice (two full 32-task scan stages in the profile)
-        .transform(Ckpt.eagerCkpt)
-      val corpus = bg.groupBy("bigram").agg(count(lit(1)).as("cf"))
-      val fam = bg.join(corpus, Seq("bigram"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("bigint").as("nb"), sum("cf").cast("bigint").as("scf"))
-        .withColumn("fam", col("scf").cast("double") / col("nb").cast("double"))
-      val scored = T(s, d, "documents").select(col("doc_id"), col("lang"))
-        .join(fam, Seq("doc_id"))
-        // EAGER (r15): the calibrate core consumes this 3× (band agg,
-        // rank join, totals) — unpinned, the cf-join + per-doc fam agg
-        // re-ran per consumer; the pinned frame is 5 narrow columns
-        .transform(Ckpt.eagerCkpt)
-      CorpusOps.calibrateByKey(scored, "lang", "fam", "doc_id", "pct")
-        .withColumn("bucket",
-          when(col("pct") * 3 >= 2, lit("head"))
-            .when(col("pct") * 3 >= 1, lit("middle"))
-            .otherwise(lit("tail")))
-        .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("nb").cast("bigint").as("n_bigrams"),
-          (sum("scf").cast("bigint").cast("double") /
-            sum("nb").cast("bigint").cast("double")).as("avg_familiarity"))
-        .orderBy("lang", "bucket")
-    }),
-    "multimodal_phash_dedup" -> ((s, d) => {
-      // perceptual-hash image dedup plumbing (aHash family): 63-sample
-      // grid → mean threshold → 63-bit signature → 9×7-bit banded
-      // candidates (recall GUARANTEED at hamming ≤ 8) → exact
-      // bit_count(xor) verify. The sampler is the documented env stub
-      // (codepoint at evenly-spaced positions — a real decoder yields
-      // the luma grid); near-dup structure is synthesized by an
-      // in-place 1-char edit (ids +100000) of every 5th payload, which
-      // moves only the samples landing on it. The oracle replays the
-      // grid/threshold/signature arithmetic and the QUADRATIC hamming
-      // truth — banding must find exactly that pair set.
-      val base = TP(s, d, "documents").select(col("doc_id"), col("text"))
-      val perturbed = base.filter(col("doc_id") % 5 === 0).select(
-        (col("doc_id") + 100000L).as("doc_id"),
-        concat(substring(col("text"), 1, 4), lit("z"),
-          expr("substring(text, 6)")).as("text"))
-      MultimodalOps.phashDupPairs(base.unionByName(perturbed), "doc_id", "text",
-          maxHamming = 8)
-        .orderBy("a_id", "b_id")
-    }),
-    "dedup_cross_modal" -> ((s, d) => {
-      // cross-modal duplicate agreement (round-9 verdict item 8): the
-      // SAME synthesized corpus viewed through two modalities — 3-gram
-      // MinHash text near-dup (recall-complete banding at j ≥ 0.8, the
-      // dedup_ngram_jaccard params) ⊕ aHash media near-dup over the
-      // payload (9×14-bit bands, hamming ≤ 8, the multimodal_phash_dedup
-      // machinery). Every pair flagged by EITHER modality is emitted
-      // with both verdicts; the disagreement rows are the curation
-      // signal (text_only ≈ caption edit on the same image class,
-      // media_only ≈ re-encoded payload under a rewritten caption).
-      // Corpus: base docs ∪ a 1-char in-place edit of every 5th doc —
-      // the edit moves only the phash samples landing on it (media dup
-      // survives) while 3-gram jaccard depends on doc length (short
-      // docs fall below 0.8 → media_only rows appear naturally).
-      // Oracle: both quadratic truths replayed in DuckDB, full-outer
-      // joined on the pair.
-      val base = TP(s, d, "documents").select(col("doc_id"), col("text"))
-      val perturbed = base.filter(col("doc_id") % 5 === 0).select(
-        (col("doc_id") + 100000L).as("doc_id"),
-        concat(substring(col("text"), 1, 4), lit("z"),
-          expr("substring(text, 6)")).as("text"))
-      val corpus = base.unionByName(perturbed)
-      val textPairs = DedupOps.minhashDupPairs(corpus, "text", "doc_id",
-          threshold = 0.8, shingleSize = 3, numBands = 16, rowsPerBand = 3)
-        .select(col("a_id"), col("b_id"), lit(true).as("text_dup"))
-      val mediaPairs = MultimodalOps.phashDupPairs(corpus, "doc_id", "text",
-          maxHamming = 8)
-        .select(col("a_id"), col("b_id"), lit(true).as("media_dup"))
-      textPairs.join(mediaPairs, Seq("a_id", "b_id"), "full_outer")
-        .select(col("a_id"), col("b_id"),
-          coalesce(col("text_dup"), lit(false)).as("text_dup"),
-          coalesce(col("media_dup"), lit(false)).as("media_dup"))
-        .withColumn("modality",
-          when(col("text_dup") && col("media_dup"), lit("both"))
-            .when(col("text_dup"), lit("text_only"))
-            .otherwise(lit("media_only")))
-        .orderBy("a_id", "b_id")
-    }),
-    "ann_mips" -> ((s, d) => {
-      // maximum-inner-product search: the EXACT brute-force MIPS top-5
-      // (argmax x·q over RAW unnormalized vectors — a large-norm item
-      // legitimately beats a better-angled small one, which is why
-      // cosine ANN can't answer it directly) is the oracled output;
-      // the asymmetric norm-augmentation reduction (append
-      // √(M²−‖x‖²); Bachrach et al. RecSys'14) turns it into a cosine
-      // problem the IVF index answers — its recall vs the exact set
-      // rides as an invariant boolean (the ann_lsh convention).
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val queries = vecs.filter(col("vec_id") < 8)
-      val k = 5
-      val exact = SimilarityOps.bruteForceMipsTopK(vecs, queries, "vec_id", "vec", k)
-      // the augmented geometry concentrates low-norm vectors along the
-      // extra axis, so MIPS needs a higher probe fraction than plain
-      // cosine IVF for the same recall (12/16 = 75% of cells probed —
-      // the knob a production deployment trades against scan cost)
-      val approx = SimilarityOps.mipsTopK(vecs, queries, "vec_id", "vec", k,
-        nCells = 16, nProbe = 12)
-      val recall = exact.select("query_id", "neighbor_id")
-        .join(approx.select("query_id", "neighbor_id"),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      exact.crossJoin(broadcast(recall))
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("dot"),
-          (col("hits").cast("double") / (8 * k) >= 0.8).as("mips_recall_ok"))
-        .orderBy("query_id", "rank")
-    }),
-    "data_active_learning" -> ((s, d) => {
-      // active-learning annotation selection (uncertainty sampling):
-      // refit the row-311 probe, broadcast the 1-row model, pick the 40
-      // docs closest to the ½ decision boundary — where the next
-      // labeling dollar goes. Selection is TakeOrdered on |pred − ½|
-      // with id tie-break; the model solve and the prediction are the
-      // same fixed double expressions the fit oracle replays.
-      val docs = TP(s, d, "documents")
-      val x1 = size(TextFunctions.tokens(col("text")))
-      val x2 = TextFunctions.tokenHits(col("text"), TextFunctions.stopwords("en"))
-      val label = when(col("lang") === "en", 1L).otherwise(0L)
-      val sel = SelectionOps.uncertaintySample(docs, "doc_id", x1, x2, label, k = 40)
-      sel.join(T(s, d, "documents").select(col("doc_id"), col("lang")),
-          sel("id") === col("doc_id"))
-        .select(col("doc_id"), col("lang"), col("pred"), col("uncertainty"))
-        .orderBy(col("uncertainty").asc, col("doc_id").asc)
-    }),
-    "text_bpe_train" -> ((s, d) =>
-      // FULL BPE tokenizer training, 8 merges (CorpusOps.bpeTrain — the
-      // iterated version of row 151's single step): per-round tf-
-      // weighted pair counts over the VOCAB, lexicographic-min argmax
-      // tie-break, greedy left-to-right merge application as ONE literal
-      // string replace under the double-separator encoding — which is
-      // why DuckDB can replay the entire training loop verbatim
-      // (8 unrolled count→argmax→replace stages).
-      CorpusOps.bpeTrain(TP(s, d, "documents"), "text", steps = 8).orderBy("step")),
-    "text_bpe_encode" -> ((s, d) =>
-      // the APPLY side of BPE training: corpus compression under the 8
-      // learned merges — chars vs BPE tokens, tokens/word, all integer
-      // sums over the final vocab state (tf-weighted), two double
-      // divisions; tells you what the tokenizer BUYS on this corpus.
-      CorpusOps.bpeEncodeStats(TP(s, d, "documents"), "text", steps = 8)),
-    "quality_ece" -> ((s, d) => {
-      // expected calibration error of the row-311 probe (Guo et al.
-      // 2017): 10 equal-width prediction bins, per-bin
-      // |mean confidence − positive rate|, n-weighted scalar ECE.
-      // Per-row confidences round to 9 decimals and sum as DECIMAL
-      // (order-independent); the ≤10-term ECE fold runs in bin order
-      // over a collected array (the anova convention).
-      val docs = TP(s, d, "documents")
-      StatsOps.probeCalibration(docs,
-          x1 = size(TextFunctions.tokens(col("text"))),
-          x2 = TextFunctions.tokenHits(col("text"), TextFunctions.stopwords("en")),
-          label = when(col("lang") === "en", 1L).otherwise(0L), bins = 10)
-        .orderBy("bin")
-    }),
-    "vec_bitext_mining" -> ((s, d) => {
-      // margin-based bitext mining (Artetxe & Schwenk ACL'19): mine
-      // cross-side pairs (side = label % 2 — the two-"language" split)
-      // whose cosine is high RELATIVE to both endpoints' top-4
-      // neighborhoods — the LASER/CCMatrix parallel-corpus criterion
-      // that plain cosine thresholds can't express (hub suppression).
-      // Exact cosines as DECIMAL(9,6), exact decimal neighborhood
-      // means, one fixed double ratio.
-      val vecs = TP(s, d, "embeddings").select(col("vec_id"),
-        VectorFunctions.asDouble(col("embedding")).as("vec"),
-        (col("label") % 2).as("side"))
-      SimilarityOps.bitextMarginPairs(vecs, "vec_id", "vec", "side",
-          k = 4, threshold = 1.1)
-        .orderBy("x_id", "y_id")
-    }),
-    "data_kfold" -> ((s, d) => {
-      // stratified k-fold cross-validation assignment (k=5):
-      // within-stratum md5 rank (seeded, retry-stable) → fold = rank%k,
-      // so per-stratum fold sizes differ by ≤1 — EXACT balance, not
-      // md5-mod-k approximate. The per-lang rank rides the
-      // groupedBandedRank core (lang is 5 values — a raw per-lang
-      // window is the §5.1 anti-pattern). Emits per (lang, fold)
-      // counts + the per-lang balance invariant.
-      val docs = T(s, d, "documents").select(col("doc_id"), col("lang"),
-        md5(concat(lit("kf:"), col("doc_id").cast("string"))).as("h"))
-      val banded = docs.withColumn("hb",
-        conv(substring(col("h"), 1, 2), 16, 10).cast("long"))
-      val ranked = RankOps.groupedBandedRank(banded, Seq("lang"), Seq("hb"),
-        Seq(col("hb").asc), Seq(col("h").asc, col("doc_id").asc), "rk")
-      val folds = ranked
-        .withColumn("fold", pmod(col("rk") - 1, lit(5L)))
-        .groupBy("lang", "fold").agg(count(lit(1)).as("n_docs"))
-      val bal = folds.groupBy("lang")
-        .agg((max("n_docs") - min("n_docs") <= 1).as("balanced"))
-      folds.join(broadcast(bal), Seq("lang"))
-        .select(col("lang"), col("fold"), col("n_docs"), col("balanced"))
-        .orderBy("lang", "fold")
-    }),
-    "q67_group_order_all" -> ((s, d) => {
-      // Spark 4 SQL-surface conformance: GROUP BY ALL (group on every
-      // non-aggregate select item) + ORDER BY ALL — pure syntax over
-      // the same aggregate plan; DuckDB supports both spellings, so
-      // the oracle runs the IDENTICAL text.
-      T(s, d, "lineitem").createOrReplaceTempView("r9_li_all")
-      s.sql("""
-        SELECT l_returnflag, l_linestatus,
-               COUNT(*) AS n,
-               CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS qty
-        FROM r9_li_all
-        GROUP BY ALL
-        ORDER BY ALL
-      """)
-    }),
-    "vec_binary_quant" -> ((s, d) => {
-      // 1-bit quantization retrieval eval (the 64×-compression tier
-      // below int8/PQ): sign-bit hamming ranking + the cos(π·h/d)
-      // angle estimator, judged against exact cosine — per query, the
-      // hamming top-5's recall of the cosine top-5 and the mean
-      // estimator error. Hamming is an exact in-row integer fold;
-      // estimator/error round to 6 and errors sum as decimals.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      SimilarityOps.binaryQuantEval(vecs, vecs.filter(col("vec_id") < 8),
-          "vec_id", "vec", k = 5)
-        .orderBy("query_id")
-    }),
-    "data_psi" -> ((s, d) => {
-      // Population Stability Index (the scorecard-monitoring standard,
-      // completing the drift family: token drift row 134, KS row 201,
-      // chi² row 242): binned (p−q)·ln(p/q) between two deterministic
-      // event slices over the value domain in cents, Laplace-smoothed,
-      // per-bin term rounded ONCE and folded in bin order.
-      DriftOps.psi(
-        EV(s, d).select((col("event_id") % 2 === 0).as("is_base"),
-          (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents")),
-        isBaseline = col("is_base"), measure = col("cents"),
-        bins = 10, lo = 0L, hi = 100000L)
-        .orderBy("bin")
-    }),
-    "events_ab_cuped" -> ((s, d) => {
-      // CUPED-adjusted experiment readout (Deng et al. WSDM'13 — the
-      // variance-reduction step the plain A/B readout of row 229
-      // lacks): per-user pre-period spend (first 15 days from the
-      // corpus's own t₀) is the covariate, post-period spend the
-      // metric; θ and the adjusted arm means derive ENTIRELY from
-      // decimal-exact integer moments. Arm split = the ab: md5
-      // convention shared with events_ab_test/events_ab_srm.
-      val ev = EV(s, d).select(col("user_id"), col("ts_us"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      val t0 = ev.agg(min("ts_us").as("tmin"))
-      val cut = lit(15L * 86400000000L)
-      val perUser = ev.crossJoin(broadcast(t0))
-        .groupBy("user_id")
-        .agg(
-          sum(when(col("ts_us") < col("tmin") + cut, col("cents")).otherwise(0L)).as("x"),
-          sum(when(col("ts_us") >= col("tmin") + cut, col("cents")).otherwise(0L)).as("y"))
-        .withColumn("arm",
-          when(conv(substring(md5(concat(lit("ab:"), col("user_id"))), 1, 8), 16, 10)
-            .cast("bigint") % 2 === 0, "A").otherwise("B"))
-      StatsOps.cupedAdjust(perUser, "arm", col("x"), col("y")).orderBy("arm")
-    }),
-    "text_entropy" -> ((s, d) => {
-      // per-document token Shannon entropy — the gibberish/diversity
-      // signal (low H = repeated tokens, H ≈ ln n = all-distinct) in
-      // the form H = ln(n) − (1/n)·Σ c·ln(c): ln sites are the
-      // DISTINCT (doc, token) counts only, each rounded ONCE to 9 and
-      // folded c-weighted in exact decimal — never a per-token-
-      // occurrence rounding. Shape: one (doc, token) partial agg + one
-      // doc agg; efficiency = H / ln(n) normalizes across lengths.
-      val tc = TP(s, d, "documents")
-        .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      tc.groupBy("doc_id")
-        .agg(sum("c").cast("bigint").as("n_tokens"),
-          count(lit(1)).as("n_distinct"),
-          sum((col("c").cast("decimal(19,0)") *
-            round(log(col("c").cast("double")), 9).cast("decimal(18,9)")))
-            .cast("decimal(38,9)").cast("double").as("clnc"))
-        .filter(col("n_tokens") > 1)
-        .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
-          // ln(n) itself carries cross-engine 1-ulp skew → round(9)
-          // both outputs (one more absorption site per doc)
-          round(log(col("n_tokens").cast("double")) -
-            col("clnc") / col("n_tokens").cast("double"), 9).as("entropy"))
-        .withColumn("efficiency",
-          round(col("entropy") / round(log(col("n_tokens").cast("double")), 9), 9))
-        .orderBy("doc_id")
-    }),
-
-    // ----- round 10: rule battery / semantic decontam / coreset / weighted-k -----
-    "text_gopher_rules" -> ((s, d) => {
-      // Gopher-style quality-rule battery (Rae et al. 2021): per-RULE
-      // marginal failure surface — every rule on every doc in ONE scan
-      // (in-row verdict stack), integer-exact thresholds everywhere
-      // (mean-word-length bounds cross-multiplied, top-token share as
-      // count·5 ≤ n, ppm by integer division) — the curation run's
-      // published rule report. Complements data_funnel (first-fail
-      // attribution) and data_expectations (table contract).
-      CorpusOps.gopherReport(TP(s, d, "documents"), "text")
-    }),
-    "data_semantic_decontam" -> ((s, d) => {
-      // EMBEDDING-space benchmark decontamination (the semantic twin of
-      // data_decontam's n-gram overlap — catches paraphrased eval items
-      // n-grams miss): train docs with cosine ≥ τ to ANY eval vector
-      // are reported with their best-matching eval item. Eval side =
-      // vec_id < 8 (ann convention) + synthesized contamination (a
-      // shift-perturbed copy of each eval vector at cos ≈ 0.9987,
-      // ids +100000, planted in the train side); natural max cosine in
-      // the noise embeddings is ≈ 0.51, so τ = 0.9 isolates the
-      // plants. Eval broadcast, corpus scan map-side, one train-id agg.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val eval_ = vecs.filter(col("vec_id") < 8)
-      val planted = shiftPerturb(eval_, 1, 100000L)
-      val train = vecs.filter(col("vec_id") >= 8).unionByName(planted)
-      train
-        .join(broadcast(eval_.select(col("vec_id").as("eval_id"), col("vec").as("ev"))))
-        .withColumn("cosine", round(VectorFunctions.cosine(col("vec"), col("ev")), 6))
-        .filter(col("cosine") >= 0.9)
-        .groupBy(col("vec_id").as("train_id"))
-        .agg(max(struct(col("cosine"), (-col("eval_id")).as("neg_eval")))
-          .as("best"))
-        .select(col("train_id"),
-          (-col("best.neg_eval")).cast("long").as("eval_id"),
-          col("best.cosine").as("cosine"))
-        .orderBy("train_id")
-    }),
-    "data_kcenter" -> ((s, d) => {
-      // greedy k-center coreset selection (Gonzalez; the Sener &
-      // Savarese active-learning rule): the 8 most mutually-spread
-      // exemplars of the embedding table, each round one map-side
-      // min-distance pass + a 1-row TakeOrdered (centers are driver
-      // literals — the trainCentroids shape). radius is nonincreasing;
-      // its tail bounds the corpus covering radius. Oracle: 8 unrolled
-      // argmax-min-distance CTE stages over the same round-6 cosine.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      SimilarityOps.kCenterGreedy(vecs, "vec_id", "vec", k = 8)
-        .withColumn("radius", round(col("radius"), 6))
-        .orderBy("step")
-    }),
-    "dedup_winnow_incremental" -> ((s, d) => {
-      // incremental shared-PASSAGE dedup against a persisted
-      // fingerprint index (the daily-delta posture applied to
-      // winnowing — whole-doc MinHash misses a license block pasted
-      // into otherwise-unique docs; the fp index catches any shared
-      // run ≥ w+k−1 tokens against the kept corpus without
-      // re-fingerprinting it). Bootstrap on doc_id % 3 ≠ 0, probe the
-      // % 3 = 0 delta: dropped_index (≥ 2 selected hashes shared with
-      // an indexed doc — the index always wins), dropped_delta
-      // (within-batch winnow keep-min via connected components),
-      // survived. Index side of the probe join is bucketed on fp_hash
-      // → Exchange-free. Oracle replays the whole sequential chain
-      // (winnowing selection is md5 — no aux dump needed).
-      // r15 (guide §1.2/§2.6): the delta was fingerprinted TWICE (index
-      // probe + within-batch pair gen) — winnowing selection is a pure
-      // per-document function, so fps(rem) ≡ fps(delta) filtered to the
-      // remainder ids; one eager fingerprint pin feeds both, and the pin
-      // job overlaps the independent index build (staged bucketed write).
-      val docs = TP(s, d, "documents")
-      val base = docs.filter(col("doc_id") % 3 =!= 0)
-      val delta = docs.filter(col("doc_id") % 3 === 0)
-      val (tbl, deltaFps) = Par.concurrently(
-        IncrementalDedupOps.buildWinnowIndex(
-          base, "text", "doc_id", "graft_winc_idx", numBuckets = 8),
-        DedupOps.winnowFingerprints(delta, "text", "doc_id", 4, 4)
-          .select(col("fp_hash"), col("id")).distinct()
-          .transform(Ckpt.eagerCkpt))
-      val dropIdx = IncrementalDedupOps
-        .probeWinnowIndexOf(deltaFps, tbl, minShared = 2)
-        .select(col("batch_id").as("doc_id")).distinct()
-      val remFps = deltaFps.join(dropIdx, col("id") === col("doc_id"), "left_anti")
-      val selfPairs = DedupOps.winnowDupPairsOf(remFps, minShared = 2)
-        .select("a_id", "b_id")
-      val rem = delta.select("doc_id").join(dropIdx, Seq("doc_id"), "left_anti")
-      val survivors = DedupOps.applyPairDedup(rem, "doc_id", selfPairs).select("doc_id")
-      delta.select("doc_id")
-        .join(dropIdx.withColumn("__di", lit(1)), Seq("doc_id"), "left")
-        .join(survivors.withColumn("__sv", lit(1)), Seq("doc_id"), "left")
-        .withColumn("verdict",
-          when(col("__di") === 1, lit("dropped_index"))
-            .when(col("__sv") === 1, lit("survived"))
-            .otherwise(lit("dropped_delta")))
-        .select("doc_id", "verdict")
-        .orderBy("doc_id")
-    }),
-    "events_scd2_join" -> ((s, d) => {
-      // temporal dimension enrichment — the AS-OF join against SCD2
-      // validity intervals (the warehouse pattern rows 104/53 compose
-      // into): purchases of the row-104 cohort are stamped with the
-      // user's non-purchase activity STATE at purchase time
-      // (valid_from ≤ ts < valid_to, open tail = ∞). Bucketized range
-      // join — never a cross product; intervals are disjoint per user
-      // by construction so each purchase matches at most once.
-      import org.apache.spark.sql.expressions.Window
-      val e = EV(s, d).filter(col("user_id") % 10 === 0)
-        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      // the open tail closes at the corpus horizon (max ts + 1) rather
-      // than Long.MaxValue: the bucketized join explodes each interval
-      // into its covered buckets, so an unbounded tail would sequence
-      // ~2.5e9 bucket ids — horizon rides a broadcast 1-row crossJoin
-      val horizon = e.agg((max("ts_us") + lit(1L)).as("__h"))
-      val iv = e.filter(col("event_type") =!= "purchase")
-        .withColumn("prev", lag(col("event_type"), 1).over(w))
-        .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-        .withColumn("valid_to", lead(col("ts_us"), 1).over(w))
-        .crossJoin(broadcast(horizon))
-        .select(col("user_id"), col("event_type").as("state"),
-          col("ts_us").as("valid_from"),
-          coalesce(col("valid_to"), col("__h")).as("valid_to"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-      JoinOps.rangeJoin(purchases, iv, Seq("user_id"), "ts_us",
-          "valid_from", "valid_to", bucketWidth = 3600000000L)
-        .select(col("user_id"), col("event_id"), col("ts_us"),
-          col("state"), col("valid_from").as("state_since_us"))
-        .orderBy("user_id", "event_id")
-    }),
-    "data_dup_weights" -> ((s, d) => {
-      // SOFT dedup — near-dup-aware loss weights instead of dropping:
-      // every doc keeps its row but its training weight is divided by
-      // its near-dup cluster size (weight_ppm = 10⁶ div n_members;
-      // singletons keep 10⁶), so a 5-way duplicated passage
-      // contributes one document's worth of gradient in aggregate.
-      // Same pair parameters as dedup_clusters; integer-exact.
-      val docs = TP(s, d, "documents")
-      val pairs = DedupOps.minhashDupPairs(docs, "text", "doc_id",
-        threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      val labels = GraphOps.connectedComponents(pairs, "a_id", "b_id")
-      val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
-      docs.select(col("doc_id"))
-        .join(labels.select(col("id").as("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
-        .join(sizes, Seq("cluster_id"), "left")
-        .withColumn("n_members", coalesce(col("n_members"), lit(1L)))
-        .select(col("doc_id"), col("cluster_id"), col("n_members"),
-          expr("1000000L div n_members").as("weight_ppm"))
-        .orderBy("doc_id")
-    }),
-    "data_profile_drift" -> ((s, d) => {
-      // generation-over-generation profile drift — the ingestion canary
-      // that pairs with row 172's single-table profile: per column,
-      // yesterday-vs-today row counts, exact distincts, and
-      // decimal-exact means, with integer/rounded drift verdicts
-      // (distinct shift > 10% cross-multiplied; mean shift > $1 on
-      // round-6 exact means). Generations stand in as the two
-      // o_orderkey parities; ONE scan, conditional aggregates, in-row
-      // stack.
-      val g = pmod(col("o_orderkey"), lit(2))
-      val cents = (col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
-      def dmean(side: Int, num: Column, n: Column) = round(
-        sum(when(g === side, num).otherwise(lit(null)).cast("decimal(18,0)"))
-          .cast("decimal(38,0)").cast("double") / n / 100.0, 6)
-      val cols = Seq(
-        ("o_totalprice", Some(cents)),
-        ("o_custkey", Some(col("o_custkey").cast("bigint") * 100)),
-        ("o_orderstatus", None),
-        ("o_orderpriority", None))
-      val aggCols: Seq[Column] =
-        Seq(sum(when(g === 0, 1L).otherwise(0L)).as("n_a"),
-          sum(when(g === 1, 1L).otherwise(0L)).as("n_b")) ++
-          cols.flatMap { case (n, num) =>
-            val src = col(n)
-            Seq(
-              countDistinct(when(g === 0, src)).as(s"nda_$n"),
-              countDistinct(when(g === 1, src)).as(s"ndb_$n")) ++
-              num.toSeq.flatMap(c => Seq(
-                dmean(0, c, sum(when(g === 0, 1L).otherwise(0L))).as(s"ma_$n"),
-                dmean(1, c, sum(when(g === 1, 1L).otherwise(0L))).as(s"mb_$n")))
-          }
-      // Par.spread: 8 conditional countDistincts expand every row 8× before the
-      // partial agg — serial on the 1-task scan
-      val agg = Par.spread(T(s, d, "orders")
-          .select("o_orderkey", "o_totalprice", "o_custkey", "o_orderstatus", "o_orderpriority"))
-        .agg(aggCols.head, aggCols.tail: _*)
-      agg.select(expr(
-        "stack(" + cols.size + ", " +
-          cols.map { case (n, num) =>
-            val m = if (num.isDefined) s"ma_$n, mb_$n"
-              else "CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)"
-            s"'$n', n_a, n_b, nda_$n, ndb_$n, $m"
-          }.mkString(", ") +
-          ") AS (column_name, n_a, n_b, nd_a, nd_b, mean_a, mean_b)"))
-        .withColumn("drift",
-          abs(col("nd_b") - col("nd_a")) * 10L > col("nd_a") ||
-            abs(coalesce(col("mean_b"), lit(0.0)) - coalesce(col("mean_a"), lit(0.0))) > 1.0)
-        .orderBy("column_name")
-    }),
-    "q68_offset" -> ((s, d) => {
-      // LIMIT/OFFSET pagination conformance (the ANSI page-2 shape —
-      // row 179's keyset pagination is the scale-correct alternative;
-      // this row pins the literal syntax both engines agree on):
-      // page 3 of orders by price desc, key tie-break
-      T(s, d, "orders").createOrReplaceTempView("r10_ord_off")
-      s.sql("""
-        SELECT o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS DOUBLE) AS price
-        FROM r10_ord_off
-        ORDER BY CAST(o_totalprice AS DECIMAL(12,2)) DESC, o_orderkey
-        LIMIT 10 OFFSET 20
-      """)
-    }),
-    "dedup_shared_spans" -> ((s, d) => {
-      // near-dup pair EXPLAINABILITY: winnow-linked pairs annotated
-      // with WHERE they overlap — shared selected fingerprints whose
-      // position offset is constant (diag = posA − posB) trace one
-      // contiguous shared run, so the best diagonal's extent
-      // (max−min+k tokens) is the passage-length evidence a reviewer
-      // reads before trusting a drop. Pair-gen for the position pairs
-      // rides the guarded in-bucket machinery (boilerplate hashes
-      // shared corpus-wide never materialize m² in one task); the
-      // linked-pair set comes from the same guarded winnowDupPairs the
-      // dedup uses, so the report covers exactly the pairs that link.
-      DedupOps.winnowSharedSpanEvidence(TP(s, d, "documents"), "text", "doc_id",
-          k = 4, w = 4, minShared = 2)
-        .orderBy("a_id", "b_id")
-    }),
-    "vec_maxsim" -> ((s, d) => {
-      // late-interaction multi-vector retrieval (ColBERT MaxSim,
-      // Khattab & Zaharia SIGIR'20): score(q, doc) = Σ over the query's
-      // token vectors of MAX over the doc's chunk vectors of cosine —
-      // token-level matching mean-pooling (vec_meanpool) blurs away.
-      // Queries: vec_id < 8 as two 4-token queries (qid = id mod 2,
-      // broadcast); docs: the remaining vectors in vec_id mod 50 chunk
-      // groups. Per-token maxes fold in a decimal-exact sum (round-6
-      // cosines ⇒ exact at 6dp, order-independent), top-3 per query.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val q = vecs.filter(col("vec_id") < 8)
-        .select(pmod(col("vec_id"), lit(2)).as("qid"), col("vec_id").as("tid"),
-          col("vec").as("qv"))
-      val docs = vecs.filter(col("vec_id") >= 8)
-        .select(pmod(col("vec_id"), lit(50)).as("grp"), col("vec").as("cv"))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("qid").orderBy(col("maxsim").desc, col("grp").asc)
-      docs.join(broadcast(q))
-        .withColumn("cos", round(VectorFunctions.cosine(col("cv"), col("qv")), 6))
-        .groupBy("qid", "grp", "tid").agg(max("cos").as("mx"))
-        .groupBy("qid", "grp").agg(dsum(col("mx"), 6).as("maxsim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select("qid", "rank", "grp", "maxsim")
-        .orderBy("qid", "rank")
-    }),
-    "events_funnel_steps" -> ((s, d) => {
-      // multi-step ORDERED funnel (view → click → purchase): each
-      // step's timestamp is the user's earliest qualifying event
-      // at-or-after the previous step's — the k-step generalization of
-      // events_funnel_conv's 2-step chain. Per step one user-keyed agg
-      // + one join that reuses the user partitioning; counts and
-      // retention ppm (integer division vs step 1) are the output.
-      val e = EV(s, d).select(col("user_id"), col("ts_us"), col("event_type"))
-      val s1 = e.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts_us").as("t1"))
-      val s2 = e.filter(col("event_type") === "click")
-        .join(s1, "user_id").filter(col("ts_us") >= col("t1"))
-        .groupBy("user_id").agg(min("ts_us").as("t2"))
-      val s3 = e.filter(col("event_type") === "purchase")
-        .join(s2, "user_id").filter(col("ts_us") >= col("t2"))
-        .groupBy("user_id").agg(min("ts_us").as("t3"))
-      def c(df: DataFrame, step: Int, t: String) =
-        df.agg(count(lit(1)).as("n_users"))
-          .select(lit(step).as("step"), lit(t).as("event_type"), col("n_users"))
-      val all = c(s1, 1, "view").unionByName(c(s2, 2, "click"))
-        .unionByName(c(s3, 3, "purchase"))
-      all.crossJoin(broadcast(c(s1, 1, "view").select(col("n_users").as("n1"))))
-        .select(col("step"), col("event_type"), col("n_users"),
-          expr("n_users * 1000000L div n1").as("retention_ppm"))
-        .orderBy("step")
-    }),
-    "data_weighted_exact_k" -> ((s, d) => {
-      // exact-k weighted sampling WITHOUT replacement, integer-exact:
-      // the Efraimidis–Spirakis pairwise law P(i beats j) = wᵢ/(wᵢ+wⱼ)
-      // realized as key = MIN over w replicas of md5(seed, id, r) —
-      // min-of-w-uniforms replaces u^(1/w), so there is NO ln/pow
-      // anywhere and both engines rank identical hex strings (the
-      // md5-ring convention). Weights here: 1 + doc_id mod 4 (a stand-in
-      // for quality-tier weights). Top-k by key, k = 60.
-      val w = TP(s, d, "documents")
-        .select(col("doc_id"), (lit(1) + pmod(col("doc_id"), lit(4))).cast("int").as("weight"))
-      w.select(col("doc_id"), col("weight"),
-          explode(sequence(lit(0), col("weight") - 1)).as("r"))
-        .select(col("doc_id"), col("weight"),
-          md5(concat(lit("wk10_"), col("doc_id"), lit("_"), col("r"))).as("u"))
-        .groupBy("doc_id", "weight")
-        .agg(min("u").as("key"))
-        .orderBy(col("key").asc)
-        .limit(60)
-        .select("doc_id", "weight", "key")
-        .orderBy("doc_id")
-    }),
-    "vec_silhouette" -> ((s, d) =>
-      // simplified-silhouette cell-quality audit (O(n·k) centroid
-      // silhouette): k=8 deterministic centroids (the kmeansStep
-      // smallest-id convention), round-6 squared-euclidean two-min fold
-      // per vector, per-cell decimal-exact mean of round-6 s values.
-      // The audit behind SemDeDup/IVF cell sizing — mean s ≈ 0 says the
-      // cells don't separate. Pure broadcast projection + one groupBy.
-      ClusterOps.silhouetteReport(TP(s, d, "embeddings"), "vec_id", "embedding", k = 8)),
-    "text_c4_rules" -> ((s, d) =>
-      // C4 cleanliness battery (Raffel et al. 2020 §2.2 doc-level):
-      // terminal punctuation / sentence count / word count / lorem
-      // ipsum / '{' / policy boilerplate, one scan, integer-exact ppm
-      CorpusOps.c4Report(TP(s, d, "documents"), "text")),
-    "dedup_bbit_minhash" -> ((s, d) =>
-      // b-bit MinHash estimation audit (Li & König 2010, b=1, m=32):
-      // Ĵ = 2·agree/m − 1 from 1-bit md5-minhash signatures vs the
-      // exact Jaccard on the SAME verified dup pairs (threshold-0.7
-      // band candidates) — the 64×-signature-compression trade
-      // quantified per pair. Signatures only for pair members.
-      DedupOps.bbitMinhashEval(TP(s, d, "documents"), "text", "doc_id")),
-    "q69_agg_filter" -> ((s, d) => {
-      // ANSI aggregate FILTER clause conformance (the SQL:2003 syntax
-      // both engines parse natively — the CASE-in-agg q12 row pins the
-      // rewrite; this row pins the literal syntax): per return flag,
-      // selective counts/sums under independent predicates, one scan.
-      T(s, d, "lineitem").createOrReplaceTempView("r11_li_filter")
-      s.sql("""
-        SELECT l_returnflag,
-               COUNT(*) AS n_rows,
-               COUNT(*) FILTER (WHERE l_quantity > 25) AS n_bulk,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
-                 FILTER (WHERE l_discount > 0.05) AS DOUBLE) AS qty_discounted,
-               COUNT(DISTINCT l_suppkey) FILTER (WHERE l_tax = 0) AS n_notax_supp
-        FROM r11_li_filter
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-      """)
-    }),
-    "text_fim" -> ((s, d) =>
-      // fill-in-the-middle transform (Bavarian et al. 2022): PSM
-      // re-serialization at md5-deterministic cut points — prefix,
-      // middle, suffix all non-empty; pure map-only projection
-      CorpusOps.fimTransform(TP(s, d, "documents"), "doc_id", "text")),
-    "data_epoch_plan" -> ((s, d) =>
-      // training-mixture epoch plan: target ppm weights × a 2.5M-token
-      // budget vs available tokens per language — epochs_ppm > 1e6
-      // flags the sources the recipe would repeat (integer-exact)
-      SelectionOps.epochPlan(TP(s, d, "documents"), "lang",
-        size(graft.functions.TextFunctions.tokens(col("text"))),
-        Map("en" -> 500000L, "de" -> 150000L, "fr" -> 150000L,
-          "es" -> 100000L, "zh" -> 100000L), totalBudget = 2500000L)),
-    "text_distinct_n" -> ((s, d) =>
-      // distinct-1/distinct-2 diversity per language slice (Li et al.
-      // 2016): total vs distinct n-grams, share in ppm — the cheap
-      // template-collapse signal before pairwise dedup runs
-      CorpusOps.distinctNReport(TP(s, d, "documents"), "text", "lang")),
-    "text_kn_bigram" -> ((s, d) =>
-      // interpolated Kneser-Ney bigram components (d=3/4), top-30 pairs:
-      // integer count components + ONE fixed-order double probability
-      // rounded 6 — the n-gram-LM-training core, LM-pipeline-shaped
-      // (pair groupBy + marginals + 1-row type count)
-      CorpusOps.knBigramTopK(TP(s, d, "documents"), "text", topK = 30)),
-    "text_span_corrupt" -> ((s, d) =>
-      // T5-style span corruption (Raffel et al. 2020): per 20-token
-      // block one md5-placed 3-token span → numbered sentinel; target
-      // = sentinels + masked spans. Map-only multi-span sibling of
-      // text_fim; ~15% of tokens mask at the defaults.
-      CorpusOps.spanCorrupt(TP(s, d, "documents"), "doc_id", "text")),
-    "data_ess" -> ((s, d) => {
-      // effective sample size of the soft-dedup loss weights (row 345
-      // composed with Kish 1965 / Kong 1992): ESS = (Σw)²/Σw² — how
-      // many "effective" documents the weighted corpus still carries
-      // after near-dup down-weighting. int64→double conversion is IEEE
-      // round-to-nearest in BOTH engines, so the double division
-      // replays exactly even past 2^53. Σw² stays in BIGINT — exact
-      // below ~9.2M docs at ppm weights; a 100 TB run would widen the
-      // partial sums to DECIMAL(38,0), same plan shape.
-      val docs = TP(s, d, "documents")
-      val pairs = DedupOps.minhashDupPairs(docs, "text", "doc_id",
-        threshold = 0.7, shingleSize = 2, numBands = 32, rowsPerBand = 3)
-      val labels = GraphOps.connectedComponents(pairs, "a_id", "b_id")
-      val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
-      val w = docs.select(col("doc_id"))
-        .join(labels.select(col("id").as("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
-        .join(sizes, Seq("cluster_id"), "left")
-        .withColumn("w", expr("1000000L div coalesce(n_members, 1L)"))
-      w.agg(count(lit(1)).as("n_docs"), sum("w").as("sum_w"),
-          sum(expr("w * w")).as("sum_w2"))
-        .select(col("n_docs"), col("sum_w"), col("sum_w2"),
-          round((col("sum_w").cast("double") * col("sum_w").cast("double"))
-            / col("sum_w2").cast("double"), 6).as("ess"),
-          round((col("sum_w").cast("double") * col("sum_w").cast("double"))
-            / col("sum_w2").cast("double") / col("n_docs"), 6).as("ess_share"))
-    }),
-    "q70_ignore_nulls" -> ((s, d) => {
-      // IGNORE NULLS window conformance (lag / running last_value /
-      // nth_value with explicit null gaps — the gap-fill idiom's
-      // literal syntax; row 82's resample+ffill is the operator form)
-      T(s, d, "orders").createOrReplaceTempView("r11_ord_in")
-      s.sql("""
-        SELECT o_custkey, o_orderkey, CAST(price AS DOUBLE) AS price,
-               CAST(LAG(price) IGNORE NULLS OVER w AS DOUBLE) AS prev_price,
-               CAST(LAST_VALUE(price) IGNORE NULLS OVER
-                 (PARTITION BY o_custkey ORDER BY o_orderkey
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS carried,
-               CAST(NTH_VALUE(price, 2) IGNORE NULLS OVER
-                 (PARTITION BY o_custkey ORDER BY o_orderkey
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS DOUBLE) AS second_seen
-        FROM (SELECT o_custkey, o_orderkey,
-                CASE WHEN o_orderkey % 3 = 0 THEN NULL
-                     ELSE CAST(o_totalprice AS DECIMAL(12,2)) END AS price
-              FROM r11_ord_in WHERE o_custkey % 50 = 0)
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)
-        ORDER BY o_custkey, o_orderkey
-      """)
-    }),
-    "q71_interval_months" -> ((s, d) => {
-      // calendar INTERVAL arithmetic conformance: add_months with
-      // month-END CLAMPING (Jan 31 + 1 mo = Feb 28/29 in both
-      // engines), last_day, and a quarter-start truncation — the
-      // contract-renewal/billing-cycle date math class
-      T(s, d, "orders").createOrReplaceTempView("r11_ord_iv")
-      s.sql("""
-        SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d,
-               ADD_MONTHS(CAST(o_orderdate AS DATE), CAST(o_orderkey % 12 AS INT)) AS renewal,
-               LAST_DAY(CAST(o_orderdate AS DATE)) AS month_end,
-               CAST(DATE_TRUNC('quarter', CAST(o_orderdate AS DATE)) AS DATE) AS quarter_start
-        FROM r11_ord_iv WHERE o_orderkey % 37 = 0
-        ORDER BY o_orderkey
-      """)
-    }),
-    "ann_ivfpq_index" -> ((s, d) => {
-      // the PERSISTED IVF-PQ index (row 293's query-side operator as
-      // catalog tables — FAISS IndexIVFPQ): build lands coded cells +
-      // centroids + a one-row codebook table; probe ADC-prunes over
-      // the (neighbor_id, cell, codes) columns of the probed cells
-      // only, then exact-reranks the surviving candidates. Same
-      // parameters and recall bar as ann_ivfpq; probe ≡ the in-query
-      // ivfPqRerankTopK is spec-pinned in Round11OpsSpec.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val n = vecs.count()
-      val idx = VectorIndexOps.buildIvfPqIndex(vecs, "vec_id", "vec",
-        "graft_ivfpq_idx", nCells = 8, numBuckets = 4, subspaces = 16, codes = 16)
-      val queries = vecs.filter(col("vec_id") < 8)
-      val k = 5
-      val bf = SimilarityOps.bruteForceTopK(vecs, queries, "vec_id", "vec", k)
-        .select("query_id", "neighbor_id")
-      val got = VectorIndexOps.probeIvfPq(s, queries, "vec_id", "vec", idx, k,
-          nProbe = 5, nCandidates = math.max(64, (n / 4).toInt))
-        .select("query_id", "neighbor_id")
-      bf.join(got, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .select(
-          lit(8L).as("n_queries"),
-          (col("hits").cast("double") / (8 * k) >= 0.6).as("recall_ok"))
-    }),
-    "ann_ivfpq_drift" -> ((s, d) =>
-      // IVF-PQ index drift monitor (the rebuild trigger for row 355's
-      // frozen centroids + frozen codebook — rebuildIvfPqIndex is the
-      // escape hatch it arms; the SemDeDup monitor of row 331 with a
-      // third, PQ-specific signal): (1) assignment-quality drift,
-      // (2) cell-occupancy L1 shift in ppm, (3) residual quantization
-      // error ratio delta/base — a frozen codebook that no longer spans
-      // the residual distribution silently degrades ADC ranking, which
-      // no cent_sim signal can see. Oracle replays the report over the
-      // _aux_ivfpq_drift_cells dump.
-      VectorIndexOps.ivfPqDriftReport(ivfPqDriftCellsDump(s, d))),
-    "events_mann_whitney" -> ((s, d) => {
-      // Mann-Whitney U per event_type — the NONPARAMETRIC experiment
-      // readout beside Welch's t (events_ab_test) and CUPED
-      // (events_ab_cuped); arms use the shared "ab:" md5 convention.
-      // 2·U and the tie term are exact integers off the banded rank
-      // cum (no per-row rank window); z is one fixed closed-form
-      // double. See StatsOps.mannWhitneyByGroup.
-      val arm = when(
-        conv(substring(md5(concat(lit("ab:"), col("user_id"))), 1, 8), 16, 10)
-          .cast("long") % 2 === 0, "A").otherwise("B")
-      val ev = EV(s, d).select(col("event_type"), arm.as("arm"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      StatsOps.mannWhitneyByGroup(ev, "event_type", "arm", col("cents"), "A")
-        .withColumnRenamed("g", "event_type")
-        .orderBy("event_type")
-    }),
-    "quality_pr_curve" -> ((s, d) => {
-      // exact precision-recall curve of the hashed linear quality model
-      // at predicting English, per source — one (tp, fp, fn, p, r, f1)
-      // point per DISTINCT integer milli-score threshold (the aucExact
-      // score-domain posture: the cumulative window runs over distinct
-      // scores, never rows). The operating-point picker every
-      // quality-filter deployment needs next to the scalar AUC row.
-      val docs = TP(s, d, "documents")
-      val scored = CorpusOps.linearModelScore(docs, "doc_id", "text", dim = 64)
-      val labeled = docs
-        .select(col("doc_id"), col("source"), (col("lang") === "en").as("is_en"))
-        .join(scored.select("doc_id", "score_milli"), Seq("doc_id"))
-      StatsOps.prCurve(labeled, "source", "score_milli", "is_en")
-        .orderBy(col("source"), col("threshold").desc)
-    }),
-    "text_code_detect" -> ((s, d) => {
-      // code-vs-prose partitioning (CorpusOps.codeProseReport): a mixed
-      // crawl must route code away from stopword/langid-based curation.
-      // The corpus is all prose, so the code class is SYNTHESIZED
-      // in-query for doc_id % 5 = 0 (the data_entity_golden dirty-copy
-      // precedent): a 3-line indented def-block prepended to the text.
-      // The battery must flag exactly the synthesized docs.
-      val docs = TP(s, d, "documents").select(col("doc_id"),
-        when(col("doc_id") % 5 === 0,
-          concat(lit("def process_"), col("doc_id"), lit("(x):\n    y = x * 2;\n    return {'k': y};\n# "),
-            col("text"))).otherwise(col("text")).as("text"))
-      CorpusOps.codeProseReport(docs, "doc_id", "text").orderBy("doc_id")
-    }),
-    "multimodal_audio_vad" -> ((s, d) => {
-      // energy-based voice-activity detection over the audio payload
-      // (documents.text bytes as the opaque binary, the multimodal_*
-      // convention): per-frame energies → threshold → gaps-and-islands
-      // segment merge → per-clip {frames, voiced, segments, longest,
-      // ratio}. Frame-energy kernel is the documented env stub
-      // (md5-derived); the sequence/explode/island plumbing is the
-      // production shape. See MultimodalOps.vadReport.
-      val withBin = T(s, d, "documents")
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("bin"))
-      MultimodalOps.vadReport(withBin, "doc_id", "bin").orderBy("doc_id")
-    }),
-    "text_mmr" -> ((s, d) => {
-      // MMR diversity re-ranking (Carbonell & Goldstein SIGIR'98) over
-      // the embedding corpus: queries = vec_id < 6, pool = top-16 by
-      // cosine, greedy top-5 at λ=0.7 — the post-ANN re-rank step of a
-      // RAG retrieval stack. Greedy runs per query group over ≤16
-      // candidates (O(k²) local work, parallel across queries); the
-      // DuckDB twin unrolls the 5 greedy stages over the same
-      // round-6 cosines. See SimilarityOps.mmrRerank.
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      SimilarityOps.mmrRerank(vecs, vecs.filter(col("vec_id") < 6), "vec_id", "vec",
-          poolK = 16, selectK = 5, lambda = 0.7)
-        .orderBy("query_id", "mmr_rank")
-    }),
-    "q72_try_arith" -> ((s, d) => {
-      // ANSI error-safe arithmetic conformance: try_divide (÷0 → NULL),
-      // try_cast (malformed → NULL), try_element_at (out-of-bounds →
-      // NULL) — the ingestion-hardening trio that keeps a 100 TB batch
-      // alive when a handful of rows are dirty, without FAILFAST or a
-      // permissive-mode rescan. Aggregated to null counts + a guarded
-      // sum so the row count stays O(groups).
-      T(s, d, "lineitem").createOrReplaceTempView("r11_li_try")
-      s.sql("""
-        WITH t AS (
-          SELECT l_returnflag,
-                 try_divide(CAST(l_extendedprice AS DOUBLE), CAST(l_linenumber - 3 AS DOUBLE)) AS dv,
-                 try_cast(CASE WHEN l_linenumber % 2 = 0 THEN CAST(CAST(l_quantity AS BIGINT) AS STRING) ELSE 'n/a' END AS INT) AS tc,
-                 try_element_at(array(1, 2, 3), CAST(l_linenumber AS INT)) AS el
-          FROM r11_li_try)
-        SELECT l_returnflag,
-               COUNT(*) AS n_rows,
-               COUNT(CASE WHEN dv IS NULL THEN 1 END) AS n_div_null,
-               COUNT(CASE WHEN tc IS NULL THEN 1 END) AS n_cast_null,
-               COUNT(CASE WHEN el IS NULL THEN 1 END) AS n_elem_null,
-               CAST(SUM(tc) AS BIGINT) AS sum_cast
-        FROM t GROUP BY l_returnflag ORDER BY l_returnflag
-      """)
-    }),
-    "q73_lateral_alias" -> ((s, d) => {
-      // lateral column alias conformance (Spark 3.4+/ANSI surface): a
-      // SELECT item referencing a SIBLING alias (x → y → z chains)
-      // parses into the same nested-projection plan — pure syntax, zero
-      // plan cost; the DuckDB twin spells the expansion out.
-      T(s, d, "orders").createOrReplaceTempView("r11_ord_lca")
-      s.sql("""
-        SELECT o_orderkey, CAST(base AS DOUBLE) AS base,
-               CAST(doubled AS DOUBLE) AS doubled,
-               CAST(tripled AS DOUBLE) AS tripled
-        FROM (SELECT o_orderkey,
-                     CAST(o_totalprice AS DECIMAL(18,2)) AS base,
-                     base * 2 AS doubled,
-                     doubled + base AS tripled
-              FROM r11_ord_lca WHERE o_orderkey % 53 = 0)
-        ORDER BY o_orderkey
-      """)
-    }),
-    "events_decay_trend" -> ((s, d) => {
-      // exponentially-decayed trending counts per event type: integer
-      // per-day counts as the (mergeable) state, decay applied only at
-      // read as a PINNED ascending-age fold of n·0.5^age — exact
-      // power-of-two weights, so batch, the streaming twin
-      // (StreamOps.DecayTrendProcessor) and the DuckDB twin produce
-      // the identical double. See StatsOps.decayedTrend.
-      StatsOps.decayedTrend(EV(s, d), "event_type", "ts_us")
-        .withColumnRenamed("k", "event_type")
-        .orderBy("event_type")
-    }),
-    "quality_krippendorff" -> ((s, d) => {
-      // Krippendorff's alpha over a synthesized 3-rater annotation
-      // table (the dirty-copy precedent): each rater covers ~80% of
-      // docs (md5 presence), labels = lang with ~14% md5-noise — the
-      // missing-data agreement readout quality_kappa cannot give.
-      // Integer-exact coincidence algebra; ONE double division.
-      val langs = array(lit("en"), lit("de"), lit("es"), lit("fr"), lit("zh"))
-      def h(r: Int) =
-        conv(substring(md5(concat(lit(s"kr$r:"), col("doc_id"))), 1, 8), 16, 10)
-          .cast("long")
-      val docs = T(s, d, "documents").select(col("doc_id"), col("lang"))
-      val ratings = (1 to 3).map { r =>
-        docs.select(col("doc_id"), lit(r).as("rater"),
-            when(h(r) % 7 === 0,
-              element_at(langs, ((h(r) / 35) % 5).cast("int") + 1))
-              .otherwise(col("lang")).as("lab"),
-            h(r).as("__h"))
-          .filter(col("__h") % 5 =!= 0)
-          .drop("__h")
-      }.reduce(_ unionByName _)
-      StatsOps.krippendorffAlpha(ratings, "doc_id", "rater", "lab")
-    }),
-    "events_ab_permutation" -> ((s, d) => {
-      // randomization test on per-user spend: the assumption-free
-      // p-value completing the A/B family (Welch t, Mann-Whitney,
-      // CUPED, SRM) — 64 deterministic md5 reassignments of the
-      // PER-USER totals, add-one Monte-Carlo p. The observed arm is
-      // the shared "ab:" convention. See StatsOps.randomizationTest.
-      val perUser = EV(s, d)
-        .groupBy("user_id")
-        .agg(sum((col("value").cast("decimal(18,2)") * 100).cast("long"))
-          .cast("long").as("cents"))
-      StatsOps.randomizationTest(perUser, "user_id", "cents", "ab:", k = 64)
-    }),
-    "events_ams_f2" -> ((s, d) => {
-      // AMS tug-of-war F2 sketch vs the exact second moment of the
-      // user-id frequency vector — the O(1)-state join-size estimator
-      // (q44_joinsize is the exact twin); 32 integer Z-accumulators
-      // off ONE md5 per row, median-of-means combine. See
-      // StatsOps.amsF2Report.
-      StatsOps.amsF2Report(EV(s, d), "user_id")
-    }),
-    "events_kmeans1d" -> ((s, d) => {
-      // OPTIMAL 1-D k-means segmentation of the spend distribution
-      // (Ckmeans.1d.dp — provably-minimal within-cluster SSE, vs the
-      // heuristic equi-width/equi-depth bins of q23/q46): one
-      // distributed pass onto a 64-cell exact-integer grid, the O(B²k)
-      // DP on the ≤64 occupied cells driver-side. The DuckDB twin
-      // replays the DP forward AND the backtrack decision-for-decision.
-      // See StatsOps.kmeans1dOptimal.
-      val cents = EV(s, d).filter(col("value").isNotNull)
-        .select((col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      StatsOps.kmeans1dOptimal(cents, col("cents"), k = 4, buckets = 64)
-        .orderBy("cluster_id")
-    }),
-    "text_good_turing" -> ((s, d) => {
-      // Good-Turing smoothing components over the corpus token
-      // frequencies: count-of-counts N_r, adjusted r*, p_GT and the
-      // unseen mass P0 — the Katz-backoff ingredient next to the KN
-      // bigram row. See CorpusOps.goodTuringReport.
-      CorpusOps.goodTuringReport(TP(s, d, "documents"), "text", maxRows = 20)
-    }),
-    "data_rendezvous" -> ((s, d) => {
-      // rendezvous-hashing shard plan over the customer keys: the
-      // minimal-movement resharding contract (adding shard 9 moves
-      // ~1/9 of keys) measured ON DATA next to the balance report.
-      // See WriteOps.rendezvousPlan.
-      WriteOps.rendezvousPlan(T(s, d, "customer"), "c_custkey", nShards = 8)
-    }),
-    "events_holt_winters" -> ((s, d) => {
-      // Holt-Winters ADDITIVE SEASONAL smoothing (level + trend +
-      // day-of-week component, α=β=γ=1/2) of daily revenue per event
-      // type — the seasonality-aware successor to events_holt/ewma.
-      // Seasonal slots are CALENDAR-anchored (day % 7), so gaps in the
-      // series cannot shift the weekly pattern; init = l₀ = first
-      // observation, b₀ = 0, s ≡ 0 (the seasonal learns through γ —
-      // the gap-robust simplification, documented). State is a 9-double
-      // array folded in day order: halving is exact scaling and the op
-      // order is pinned, so the DuckDB list_reduce twin replays the
-      // chain bit-for-bit. Forecast(+7d) reuses the same dow slot.
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg((sum(col("value").cast("decimal(18,2)")) * 100)
-          .cast("decimal(38,0)").cast("bigint").as("x"))
-      StatsOps.holtWintersAdditive(daily, "event_type", "day", "x")
-        .orderBy("event_type")
-    }),
-    "text_dispersion" -> ((s, d) => {
-      // Gries' DP corpus dispersion: which frequent tokens are EVENLY
-      // spread across sources vs concentrated ("bursty" — template
-      // artifacts, topical spikes) — the signal raw frequency cannot
-      // give. Exact integer numerators, one double division per token.
-      // See CorpusOps.dispersionReport.
-      CorpusOps.dispersionReport(TP(s, d, "documents"), "text", "source",
-        minCount = 50, k = 30)
-    }),
-    "q75_identifier_clause" -> ((s, d) => {
-      // IDENTIFIER() clause conformance (Spark 3.4+ templating surface:
-      // a string-typed table reference planned like the literal name —
-      // SQL-injection-safe dynamic table selection). DuckDB twin reads
-      // the table directly.
-      T(s, d, "orders").createOrReplaceTempView("r11_ord_idf")
-      s.sql("""SELECT o_orderpriority, COUNT(*) AS n_orders
-               FROM IDENTIFIER('r11_ord_idf')
-               WHERE o_orderstatus = 'F'
-               GROUP BY o_orderpriority ORDER BY o_orderpriority""")
-    }),
-    "quality_isotonic" -> ((s, d) => {
-      // isotonic calibration (PAV) of the hashed linear quality model
-      // at predicting English, per source — the NONPARAMETRIC
-      // calibrator beside quality_calibrate (percent-rank) and
-      // quality_ece: per-bin empirical rates replaced by the closest
-      // non-decreasing fit, violator merges decided by EXACT integer
-      // cross-multiplication. The twin replays via the minimax closed
-      // form (unique-solution property). See StatsOps.isotonicCalibration.
-      val docs = TP(s, d, "documents")
-      val scored = CorpusOps.linearModelScore(docs, "doc_id", "text", dim = 64)
-      val labeled = docs
-        .select(col("doc_id"), col("source"), (col("lang") === "en").as("is_en"))
-        .join(scored.select("doc_id", "score_milli"), Seq("doc_id"))
-        // EAGER (r15): isotonicCalibration evaluates its input twice
-        // (min/max collect + cell collect) — unpinned, the hashed-
-        // featurization scan ran per pass; the pin is 4 narrow columns
-        .transform(Ckpt.eagerCkpt)
-      StatsOps.isotonicCalibration(labeled, "source", "score_milli", "is_en", bins = 16)
-        .orderBy("source", "bin")
-    }),
-    "quality_mcnemar" -> ((s, d) => {
-      // McNemar's paired test comparing TWO hashed linear models
-      // (dim 64 vs dim 32 — different feature collisions) at predicting
-      // English on the SAME docs, per source — the statistically-right
-      // model-swap decision next to the scalar AUCs. See
-      // StatsOps.mcnemar.
-      val docs = TP(s, d, "documents")
-      val base = docs.select(col("doc_id"), col("source"),
-        (col("lang") === "en").as("is_en"))
-      val a = CorpusOps.linearModelScore(docs, "doc_id", "text", dim = 64)
-        .select(col("doc_id"), col("kept").as("pred_a"))
-      val b = CorpusOps.linearModelScore(docs, "doc_id", "text", dim = 32)
-        .select(col("doc_id"), col("kept").as("pred_b"))
-      val j = base.join(a, Seq("doc_id")).join(b, Seq("doc_id"))
-      StatsOps.mcnemar(j, "source",
-          col("pred_a") === col("is_en"), col("pred_b") === col("is_en"))
-        .orderBy("source")
-    }),
-    "events_shapley" -> ((s, d) => {
-      // Shapley-value attribution of purchase conversions over the
-      // view/click/signup touch channels — the principled credit split
-      // beside first/last-touch (events_attribution); 6·φ exact
-      // integers, Σφ = v(all) − v(none) by construction. See
-      // StatsOps.shapleyAttribution.
-      StatsOps.shapleyAttribution(EV(s, d), "user_id", "event_type",
-          Seq("view", "click", "signup"), "purchase")
-        .orderBy("channel")
-    }),
-    "data_wasserstein" -> ((s, d) => {
-      // Wasserstein-1 drift of each source's doc-length distribution vs
-      // the corpus — the "how much mass moved, how far" metric
-      // completing KS (data_ks_drift) and PSI (data_psi); exact integer
-      // CDF-gap × grid-gap products, one double division. See
-      // DriftOps.w1Distance.
-      DriftOps.w1Distance(
-        T(s, d, "documents").select("source", "n_chars"), "source", "n_chars")
-    }),
-    "data_simpson" -> ((s, d) => {
-      // Simpson's-paradox monitor on the events stream: the sign of the
-      // (hour-of-day × spend) association per event type vs in the
-      // aggregate, reversal-flagged — integer covariance signs, no
-      // float in the verdict. See StatsOps.simpsonCheck.
-      StatsOps.simpsonCheck(
-        EV(s, d).select(col("event_type"),
-          expr("(ts_us div 3600000000) % 24").as("hod"),
-          (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents")),
-        "event_type", col("hod"), col("cents"))
-        .withColumnRenamed("stratum", "event_type")
-        .orderBy("event_type")
-    }),
-    "quality_brier" -> ((s, d) => {
-      // Murphy decomposition of the Brier score over the isotonic-
-      // calibrated forecasts of quality_isotonic — REL/RES/UNC per
-      // source; the forecast-quality readout that separates "the model
-      // is miscalibrated" from "the model cannot discriminate". See
-      // StatsOps.brierDecomposition.
-      val docs = TP(s, d, "documents")
-      val scored = CorpusOps.linearModelScore(docs, "doc_id", "text", dim = 64)
-      val labeled = docs
-        .select(col("doc_id"), col("source"), (col("lang") === "en").as("is_en"))
-        .join(scored.select("doc_id", "score_milli"), Seq("doc_id"))
-        // EAGER (r15): isotonicCalibration evaluates its input twice
-        // (min/max collect + cell collect) — unpinned, the hashed-
-        // featurization scan ran per pass; the pin is 4 narrow columns
-        .transform(Ckpt.eagerCkpt)
-      StatsOps.brierDecomposition(
-        StatsOps.isotonicCalibration(labeled, "source", "score_milli", "is_en", bins = 16),
-        "source")
-        .orderBy("source")
-    }),
-    "q74_execute_immediate" -> ((s, d) => {
-      // EXECUTE IMMEDIATE + named parameter marker conformance (the
-      // SQL-scripting surface): the statement string is planned like
-      // the inline query — pushdown/partial agg unchanged, pure
-      // syntax. DuckDB twin is the substituted plain SQL.
-      T(s, d, "orders").createOrReplaceTempView("r11_ord_ei")
-      s.sql("""EXECUTE IMMEDIATE
-        'SELECT o_orderpriority, COUNT(*) AS n_orders,
-                CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS total
-         FROM r11_ord_ei WHERE o_totalprice > :t
-         GROUP BY o_orderpriority ORDER BY o_orderpriority'
-        USING 150000.0 AS t""")
-    }),
-    "q76_grouping_id" -> ((s, d) => {
-      // GROUPING()/GROUPING_ID() conformance: the subtotal-row
-      // DISCRIMINATORS every BI layer reads off a CUBE — q21 pins the
-      // cube shape, this row pins the indicator functions themselves
-      // (which NULLs are "all" vs data NULLs). DuckDB spells
-      // GROUPING_ID as multi-arg GROUPING(a, b) — same bitmask.
-      T(s, d, "lineitem").createOrReplaceTempView("r12_li_gid")
-      s.sql("""
-        SELECT l_returnflag, l_linestatus,
-               CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-               CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
-               CAST(GROUPING_ID(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-               COUNT(*) AS n_rows,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM r12_li_gid
-        GROUP BY CUBE(l_returnflag, l_linestatus)
-        ORDER BY gid, l_returnflag, l_linestatus
-      """)
-    }),
-    "q77_timestamp_arith" -> ((s, d) => {
-      // TIMESTAMPADD/TIMESTAMPDIFF conformance (the SQL:2016 spellings
-      // of the q71 interval class, time-of-day precision): hour-grain
-      // add and day/hour-grain diffs against a fixed anchor. Output
-      // timestamps as epoch-µs (§4 rule: never raw timestamps).
-      T(s, d, "orders").createOrReplaceTempView("r12_ord_ts")
-      s.sql("""
-        SELECT o_orderkey,
-               UNIX_MICROS(TIMESTAMPADD(HOUR, CAST(o_orderkey % 48 AS INT),
-                 CAST(o_orderdate AS TIMESTAMP))) AS due_us,
-               TIMESTAMPDIFF(DAY, TIMESTAMP '1995-01-01 00:00:00',
-                 CAST(o_orderdate AS TIMESTAMP)) AS days_from_anchor,
-               TIMESTAMPDIFF(HOUR, CAST(o_orderdate AS TIMESTAMP),
-                 TIMESTAMPADD(HOUR, CAST(o_orderkey % 48 AS INT),
-                   CAST(o_orderdate AS TIMESTAMP))) AS lead_hours
-        FROM r12_ord_ts WHERE o_orderkey % 41 = 0
-        ORDER BY o_orderkey
-      """)
-    }),
-    "q78_regexp_funcs" -> ((s, d) => {
-      // regexp-function conformance over the shared RE subset both
-      // engines' RE dialects (Java util.regex vs RE2-ish) agree on —
-      // character classes, +, anchors-free extraction: extract the
-      // first number run, squash digit runs, count vowel runs, flag
-      // the pattern's presence. The text-cleanup workhorse functions.
-      T(s, d, "part").createOrReplaceTempView("r12_part_re")
-      s.sql("""
-        SELECT p_partkey,
-               regexp_extract(p_name, '([aeiou]+)', 1) AS first_vowels,
-               regexp_replace(p_name, '[aeiou]+', '_') AS squashed,
-               CAST(regexp_count(p_name, '[aeiou]+') AS BIGINT) AS vowel_runs,
-               (p_name RLIKE 'o[a-z]*e') AS has_oe_bridge
-        FROM r12_part_re WHERE p_partkey % 17 = 0
-        ORDER BY p_partkey
-      """)
-    }),
-    "events_nelson_aalen" -> ((s, d) => {
-      // Nelson-Aalen cumulative hazard H(t) = Σ_{tᵢ≤t} dᵢ/nᵢ — the
-      // additive twin of row 247's Kaplan-Meier product (preferred for
-      // hazard-RATE reading and for small risk sets where the product
-      // compounds noise). Identical cohort/censoring construction;
-      // each increment is one exact double division off integer d/n,
-      // and H is the fold-exact SEQUENTIAL sum over the cohort's
-      // ordered increments (list_reduce twin in DuckDB — never a
-      // window sum, whose combine order differs between engines).
-      import org.apache.spark.sql.expressions.Window
-      val users = EV(s, d).groupBy("user_id")
-        .agg(min("ts_us").as("first_us"), max("ts_us").as("last_us"))
-      val gmax = users.agg(max("last_us").as("gmax_us"))
-      val dur = users.crossJoin(broadcast(gmax))
-        .select((col("user_id") % 2).as("cohort"),
-          expr("(last_us - first_us) div 86400000000").as("dur"),
-          (col("last_us") < col("gmax_us") - lit(14L * 86400000000L)).cast("int").as("churned"))
-      val cells = dur.groupBy("cohort", "dur")
-        .agg(count(lit(1)).as("n_here"), sum("churned").as("d_t"))
-      val wRev = Window.partitionBy("cohort").orderBy("dur")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val hz = cells
-        .withColumn("n_t", sum("n_here").over(wRev))
-        .withColumn("inc", col("d_t").cast("double") / col("n_t").cast("double"))
-      hz.groupBy("cohort")
-        .agg(sort_array(collect_list(
-          struct(col("dur"), col("n_t"), col("d_t"), col("inc")))).as("arr"))
-        .select(col("cohort"), col("arr"), posexplode(col("arr")).as(Seq("i", "x")))
-        .select(col("cohort"), col("x.dur").as("t"),
-          col("x.n_t").cast("bigint").as("n_at_risk"),
-          col("x.d_t").cast("bigint").as("d_events"),
-          col("x.inc").as("hazard"),
-          expr("aggregate(slice(transform(arr, z -> z.inc), 1, i + 1), " +
-            "cast(0.0 as double), (p, q) -> p + q)").as("cum_hazard"))
-        .orderBy("cohort", "t")
-    }),
-    "events_fdr_bh" -> ((s, d) => {
-      // Benjamini-Hochberg FDR across the per-event-type A/B slices —
-      // the multiple-comparisons guard beside the single-slice tests
-      // (Welch t / Mann-Whitney / CUPED / permutation): exact rational
-      // permutation p-values per slice, step-up decided by INTEGER
-      // cross-products at q = 0.1. See StatsOps.fdrBhRandomization.
-      val perUser = EV(s, d)
-        .groupBy("event_type", "user_id")
-        .agg(sum((col("value").cast("decimal(18,2)") * 100).cast("long"))
-          .cast("long").as("cents"))
-      StatsOps.fdrBhRandomization(perUser, "event_type", "user_id", "cents",
-          "ab:", k = 64, qNum = 1L, qDen = 10L)
-        .withColumnRenamed("g", "event_type")
-        .orderBy("event_type")
-    }),
-    "events_theil_sen" -> ((s, d) => {
-      // Theil-Sen robust trend per event type — the median of ALL
-      // pairwise daily-total slopes (breakdown point 29%), the outlier-
-      // immune twin of row 188's least-squares slope. Day pairs ride a
-      // bounded self-join of the DAILY table (≤ a few hundred rows per
-      // type — never the event rows); each slope is ONE double division
-      // of exact integer cents/day deltas; the median picks the middle
-      // row(s) by an integer rank under a deterministic total order
-      // (slope, then day pair), so both engines select the identical
-      // rows and average at most two doubles.
-      import org.apache.spark.sql.expressions.Window
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg(sum((col("value").cast("decimal(18,2)") * 100).cast("long"))
-          .cast("long").as("cents"))
-      val a = daily.select(col("event_type"), col("day").as("da"), col("cents").as("va"))
-      val b = daily.select(col("event_type"), col("day").as("db"), col("cents").as("vb"))
-      val pairs = a.join(b, Seq("event_type")).filter(col("da") < col("db"))
-        .withColumn("slope",
-          (col("vb") - col("va")).cast("double") / (col("db") - col("da")).cast("double"))
-      val w = Window.partitionBy("event_type")
-        .orderBy(col("slope"), col("da"), col("db"))
-      val ranked = pairs
-        .withColumn("rn", row_number().over(w))
-        .withColumn("np", count(lit(1)).over(Window.partitionBy("event_type")))
-      ranked
-        .groupBy("event_type")
-        .agg(max("np").cast("long").as("n_pairs"),
-          avg(when(col("rn") === expr("(np + 1) div 2") || col("rn") === expr("(np + 2) div 2"),
-            col("slope"))).as("ts_slope_cents_per_day"))
-        .orderBy("event_type")
-    }),
-    "graph_assortativity" -> ((s, d) =>
-      // degree assortativity of the synthetic customer→nation affiliation
-      // graph (hub-and-spoke by construction → strongly NEGATIVE — the
-      // crawl-graph shape where link-based quality propagation
-      // concentrates on hubs). Exact decimal moments over both edge
-      // orientations, one double division. See GraphOps.degreeAssortativity.
-      GraphOps.degreeAssortativity(
-        T(s, d, "customer").select((col("c_custkey") % 200).as("src"),
-          (col("c_nationkey").cast("long") + 200L).as("dst")),
-        "src", "dst")),
-    "quality_fleiss" -> ((s, d) => {
-      // Fleiss' kappa over the SAME synthesized annotation setup as
-      // row 375's Krippendorff alpha but with the FIXED 3-raters-per-
-      // item design Fleiss assumes (no coverage filter) — the
-      // agreement metric for a complete multi-rater pass; integer
-      // numerators, three fixed-order doubles. See StatsOps.fleissKappa.
-      val langs = array(lit("en"), lit("de"), lit("es"), lit("fr"), lit("zh"))
-      def h(r: Int) =
-        conv(substring(md5(concat(lit(s"kr$r:"), col("doc_id"))), 1, 8), 16, 10)
-          .cast("long")
-      val docs = T(s, d, "documents").select(col("doc_id"), col("lang"))
-      val ratings = (1 to 3).map { r =>
-        docs.select(col("doc_id"), lit(r).as("rater"),
-          when(h(r) % 7 === 0,
-            element_at(langs, ((h(r) / 35) % 5).cast("int") + 1))
-            .otherwise(col("lang")).as("lab"))
-      }.reduce(_ unionByName _)
-      StatsOps.fleissKappa(ratings, "doc_id", "rater", "lab")
-    }),
-    "text_mojibake" -> ((s, d) => {
-      // encoding-quality audit (the crawl-ingest gate before any text
-      // op trusts the bytes): per source, docs carrying U+FFFD
-      // replacement chars, C0 control chars, or the 'Ã'-prefix
-      // UTF-8-read-as-Latin-1 mojibake signature — plus occurrence
-      // ppm of the char mass. The corpus is clean, so corruption is
-      // SYNTHESIZED deterministically (the dirty-copy precedent):
-      // doc_id % 7 → mojibake 'cafÃ©' marker, % 11 → U+FFFD, % 13 →
-      // a BEL control char; both engines replay the injection and the
-      // scan. Counts via length-delta after char strip — one
-      // projection, one (source) agg, integer everything.
-      val moji = "caf\u00c3\u00a9" // 'café' mis-decoded as Latin-1
-      val base = T(s, d, "documents").select(col("doc_id"), col("source"),
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0, lit(" " + moji)).otherwise(lit("")),
-          when(col("doc_id") % 11 === 0, lit("\ufffd")).otherwise(lit("")),
-          when(col("doc_id") % 13 === 0, lit("\u0007")).otherwise(lit(""))).as("t"))
-      def occurrences(c: String) = length(col("t")) - length(regexp_replace(col("t"), c, ""))
-      val flagged = base.select(col("source"),
-        occurrences("\ufffd").as("n_repl"),
-        occurrences("\u0007").as("n_ctrl"),
-        occurrences("\u00c3").as("n_moji"),
-        length(col("t")).as("n_chars"))
-      flagged.groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("n_repl") > 0, 1L).otherwise(0L)).as("docs_replacement"),
-          sum(when(col("n_ctrl") > 0, 1L).otherwise(0L)).as("docs_control"),
-          sum(when(col("n_moji") > 0, 1L).otherwise(0L)).as("docs_mojibake"),
-          sum(col("n_repl") + col("n_ctrl") + col("n_moji")).cast("long").as("bad_chars"),
-          sum("n_chars").cast("long").as("total_chars"))
-        .withColumn("bad_char_ppm", expr("bad_chars * 1000000L div total_chars"))
-        .orderBy("source")
-    }),
-    "data_blocklist" -> ((s, d) => {
-      // domain-suffix blocklist routing (the crawl-curation kill list —
-      // rule 'spamnet.io' must block every subdomain): hosts are
-      // SYNTHESIZED deterministically from doc_id (the url_canon
-      // precedent), then each host EXPLODES into its ≤4 label suffixes
-      // and hash-joins the blocklist on EQUALITY — the 100 TB form (a
-      // 1e6-rule list broadcast-joins; no per-rule LIKE scan, no
-      // prefix range join). Verdict keeps the LONGEST (most specific)
-      // matching rule, the standard most-specific-wins semantics.
-      val subs = array(lit("www"), lit("ads"), lit("cdn"), lit("mail"), lit("shop"))
-      val doms = array(lit("example.com"), lit("spamnet.io"), lit("news.org"))
-      val docs = T(s, d, "documents").select(col("doc_id"),
-        concat_ws(".",
-          element_at(subs, (col("doc_id") % 5).cast("int") + 1),
-          element_at(doms, (col("doc_id") % 3).cast("int") + 1)).as("host"))
-      val rules = s.createDataFrame(Seq(
-        Tuple1("spamnet.io"), Tuple1("ads.example.com"), Tuple1("mail.news.org")))
-        .toDF("rule")
-      val parts = split(col("host"), "\\.")
-      val sufs = docs.select(col("doc_id"), col("host"),
-        explode(transform(sequence(lit(1), size(parts)),
-          i => array_join(slice(parts, i, size(parts)), "."))).as("suffix"))
-      sufs.join(broadcast(rules), col("suffix") === col("rule"), "left")
-        .groupBy("doc_id", "host")
-        .agg(max(when(col("rule").isNotNull,
-          struct(length(col("rule")).as("l"), col("rule").as("r")))).as("m"))
-        .select(col("doc_id"), col("host"),
-          col("m").isNotNull.as("blocked"), col("m.r").as("matched_rule"))
-        .orderBy("doc_id")
-    }),
-    "text_heaps" -> ((s, d) => {
-      // Heaps'-law vocabulary growth curve (V = K·nᵝ): cumulative
-      // distinct vocabulary at 16 corpus prefixes in doc_id order —
-      // the sub-linear growth check that flags template/boilerplate
-      // corpora (vocab saturating early) before dedup runs. Relational
-      // form: each token type contributes at its FIRST-seen bucket
-      // (min over one token agg), cumulative sums are INTEGER window
-      // folds (order-independent — exact), ratios one division each.
-      import org.apache.spark.sql.expressions.Window
-      val docs = T(s, d, "documents")
-      val mx = docs.agg(max("doc_id").as("mx"))
-      val toks = docs.crossJoin(broadcast(mx))
-        .select(expr("(doc_id * 16) div (mx + 1)").as("bucket"),
-          explode(TextFunctions.tokens(col("text"))).as("token"))
-        .filter(col("token") =!= "")
-      val occ = toks.groupBy("bucket").agg(count(lit(1)).cast("long").as("n_occ"))
-      val firstSeen = toks.groupBy("token").agg(min("bucket").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).cast("long").as("n_new_types"))
-      val w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-      occ.join(firstSeen, Seq("bucket"), "left")
-        .withColumn("n_new_types", coalesce(col("n_new_types"), lit(0L)))
-        .withColumn("tokens_cum", sum("n_occ").over(w).cast("long"))
-        .withColumn("vocab_cum", sum("n_new_types").over(w).cast("long"))
-        .select(col("bucket"), col("n_occ"), col("n_new_types"),
-          col("tokens_cum"), col("vocab_cum"),
-          (col("vocab_cum").cast("double") / col("tokens_cum").cast("double"))
-            .as("type_token_ratio"))
-        .orderBy("bucket")
-    }),
-    "vec_sq_dim" -> ((s, d) => {
-      // per-DIMENSION trained scalar quantization (FAISS SQ8's train/
-      // apply split vs row 69's per-vector variant): corpus min/max per
-      // dim (64 bounded rows collected — the trainCentroids contract),
-      // codes/dequant against the trained grid, per-vector max and
-      // fold-ordered mean |err|. Dims the corpus holds constant map to
-      // code 0 (the quantize8 convention).
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"))
-      val stats = vecs.select(posexplode(col("vec")).as(Seq("i", "x")))
-        .groupBy("i").agg(min("x").as("lo"), max("x").as("hi"))
-        .orderBy("i").collect() // dim rows — bounded by construction
-      val loA = typedLit(stats.map(_.getDouble(1)).toIndexedSeq)
-      val hiA = typedLit(stats.map(_.getDouble(2)).toIndexedSeq)
-      val codes = transform(col("vec"), (x, i) => {
-        val lo = element_at(loA, i + 1); val hi = element_at(hiA, i + 1)
-        when(hi - lo === 0d, 0).otherwise(round((x - lo) * 255d / (hi - lo)).cast("int"))
-      })
-      val errs = transform(col("vec"), (x, i) => {
-        val lo = element_at(loA, i + 1); val hi = element_at(hiA, i + 1)
-        abs(x - when(hi - lo === 0d, lo)
-          .otherwise(lo + when(hi - lo === 0d, 0)
-            .otherwise(round((x - lo) * 255d / (hi - lo)).cast("int")).cast("double")
-            * (hi - lo) / 255d))
-      })
-      vecs.select(col("vec_id"), codes.as("codes"), errs.as("errs"))
-        .select(col("vec_id"),
-          array_max(col("errs")).as("max_abs_err"),
-          (aggregate(col("errs"), lit(0.0), (a, e) => a + e)
-            / size(col("errs")).cast("double")).as("mean_abs_err"),
-          element_at(col("codes"), 1).as("code_d1"))
-        .orderBy("vec_id")
-    }),
-    "q79_percentile_disc" -> ((s, d) => {
-      // PERCENTILE_DISC conformance (WITHIN GROUP ordered-set syntax):
-      // the DISCRETE quantile — an actual data element, no
-      // interpolation float — which is exactly why it's the safe
-      // cross-engine quantile (row 31's exact percentile pins the
-      // CONT form's interpolation separately). DuckDB's quantile_disc
-      // uses a different index rule (floor((n−1)p) vs Spark's
-      // smallest-cume_dist ≥ p), so the oracle replays Spark's ANSI
-      // definition via integer cume counts — same answer, provably.
-      // spread view: the three PERCENTILE_DISC buffers accumulate the whole
-      // column per group inside the partial aggregate — serial on the
-      // 1-task single-file scan (7.6 s of serial CPU measured at sf0.1)
-      Par.spread(T(s, d, "lineitem").select("l_returnflag", "l_extendedprice"))
-        .createOrReplaceTempView("r12_li_pdisc")
-      s.sql("""
-        SELECT l_returnflag,
-               COUNT(*) AS n_rows,
-               PERCENTILE_DISC(0.25) WITHIN GROUP (ORDER BY l_extendedprice) AS p25,
-               PERCENTILE_DISC(0.5)  WITHIN GROUP (ORDER BY l_extendedprice) AS p50,
-               PERCENTILE_DISC(0.9)  WITHIN GROUP (ORDER BY l_extendedprice) AS p90
-        FROM r12_li_pdisc
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-      """)
-    }),
-    "graph_reciprocity" -> ((s, d) => {
-      // directed-edge reciprocity (what fraction of links are returned
-      // — the mutual-follow / backlink ratio; near 0 for crawl graphs,
-      // high for social): distinct directed edges, reciprocated =
-      // left-semi against the swapped edge set, ONE integer division.
-      val e = T(s, d, "customer")
-        .select((col("c_custkey") % 50).as("src"),
-          ((col("c_custkey") * 7 + col("c_nationkey")) % 50).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-        .transform(Ckpt.lazyCkpt) // both semi-join sides + edge count read it
-      val recip = e.join(
-        e.select(col("dst").as("src"), col("src").as("dst")),
-        Seq("src", "dst"), "left_semi")
-      e.agg(count(lit(1)).cast("long").as("n_edges"))
-        .crossJoin(broadcast(recip.agg(count(lit(1)).cast("long").as("n_reciprocated"))))
-        .withColumn("reciprocity",
-          col("n_reciprocated").cast("double") / col("n_edges").cast("double"))
-    }),
-    "text_source_overlap" -> ((s, d) => {
-      // cross-source vocabulary Jaccard matrix (the redundancy signal
-      // before mixing sources into a training recipe — two sources
-      // sharing 90% of their vocab probably duplicate coverage):
-      // per-source DISTINCT token sets as (source, token) rows, pair
-      // intersections via ONE self-join on token (vocab-sized, never
-      // the corpus), |A∪B| = |A|+|B|−|A∩B| — all exact integers, one
-      // double division per pair.
-      val vocab = T(s, d, "documents")
-        .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("token"))
-        .filter(col("token") =!= "")
-        .distinct()
-        .transform(Ckpt.lazyCkpt) // feeds sizes + both join sides once
-      val sizes = vocab.groupBy("source").agg(count(lit(1)).cast("long").as("v"))
-      val inter = vocab.select(col("source").as("sa"), col("token"))
-        .join(vocab.select(col("source").as("sb"), col("token")), Seq("token"))
-        .filter(col("sa") < col("sb"))
-        .groupBy("sa", "sb").agg(count(lit(1)).cast("long").as("n_inter"))
-      inter
-        .join(sizes.select(col("source").as("sa"), col("v").as("va")), Seq("sa"))
-        .join(sizes.select(col("source").as("sb"), col("v").as("vb")), Seq("sb"))
-        .select(col("sa"), col("sb"), col("va"), col("vb"), col("n_inter"),
-          (col("va") + col("vb") - col("n_inter")).as("n_union"),
-          (col("n_inter").cast("double")
-            / (col("va") + col("vb") - col("n_inter")).cast("double")).as("jaccard"))
-        .orderBy("sa", "sb")
-    }),
-    "q80_posexplode" -> ((s, d) => {
-      // generator/table-function conformance: posexplode (0-based) and
-      // explode over a computed array, with the generator's ordinal
-      // participating in downstream arithmetic — DuckDB's unnest WITH
-      // ORDINALITY is 1-based, the oracle subtracts. The LATERAL VIEW
-      // class every nested-data pipeline leans on.
-      T(s, d, "part").createOrReplaceTempView("r12_part_pe")
-      s.sql("""
-        SELECT p_partkey, pos, word,
-               length(word) AS word_len,
-               pos * 100 + length(word) AS ordinal_code
-        FROM (SELECT p_partkey, p_name FROM r12_part_pe WHERE p_partkey % 29 = 0)
-        LATERAL VIEW POSEXPLODE(split(p_name, ' ')) t AS pos, word
-        ORDER BY p_partkey, pos
-      """)
-    }),
-    "data_fair_share" -> ((s, d) => {
-      // max-min fair allocation (progressive water-filling — the
-      // multi-tenant quota planner: small requests fully granted, the
-      // residual capacity split evenly among the big ones): tenants =
-      // order priorities, demand = order count, capacity = half of
-      // total demand. Closed form over the demand-sorted prefix: the
-      // water level L solves Σ min(dᵢ, L) = C; tenant i saturates iff
-      // dᵢ ≤ L. All candidates tested with INTEGER cross-products
-      // (prefix sums × remaining counts), the level itself emitted as
-      // exact num/den integers + one double division. One tiny agg +
-      // a priority-count-sized window — nothing corpus-wide.
-      import org.apache.spark.sql.expressions.Window
-      val dem = T(s, d, "orders").groupBy(col("o_orderpriority").as("tenant"))
-        .agg(count(lit(1)).cast("long").as("demand"))
-      val tot = dem.agg((sum("demand") / 2).cast("long").as("capacity"),
-        count(lit(1)).cast("long").as("n_tenants"))
-      val w = Window.orderBy(col("demand"), col("tenant"))
-      val wAll = Window.partitionBy()
-      val ranked = dem.crossJoin(broadcast(tot))
-        .withColumn("rk", row_number().over(w))
-        .withColumn("prefix", sum("demand").over(
-          w.rowsBetween(Window.unboundedPreceding, 0)).cast("long"))
-        // tenant rk saturates iff demand_rk·(remaining after granting
-        // the prefix IN FULL) ≤ capacity − prefix ... i.e. the water
-        // level is above demand_rk: (C − prefix_rk) ≥ d_rk·(n − rk)
-        .withColumn("saturated",
-          (col("capacity") - col("prefix")) >= col("demand") * (col("n_tenants") - col("rk")))
-      val level = ranked
-        .withColumn("sat_prefix",
-          max(when(col("saturated"), struct(col("rk"), col("prefix")))).over(wAll))
-        .withColumn("lvl_num",
-          col("capacity") - coalesce(col("sat_prefix.prefix"), lit(0L)))
-        .withColumn("lvl_den",
-          col("n_tenants") - coalesce(col("sat_prefix.rk"), lit(0L)))
-      level.select(col("tenant"), col("demand"), col("capacity"),
-          col("saturated"),
-          when(col("saturated"), col("demand"))
-            .otherwise(expr("lvl_num div lvl_den")).as("granted_floor"),
-          col("lvl_num"), col("lvl_den"),
-          when(col("saturated"), col("demand").cast("double"))
-            .otherwise(col("lvl_num").cast("double") / col("lvl_den").cast("double"))
-            .as("granted"))
-        .orderBy("tenant")
-    }),
-    "events_markov_attribution" -> ((s, d) => {
-      // Markov removal-effect attribution (Anderl et al. 2016's
-      // data-driven attribution — the PATH-STRUCTURE-aware credit
-      // split beside row 390's Shapley-over-coalitions and the
-      // first/last-touch windows of row 198): journeys = per-user
-      // event sequences truncated at the first 'purchase' with a
-      // virtual 'start'; first-order transition counts; conversion
-      // probability = 16-step absorption mass at 'purchase' (self-loop
-      // absorbs), removal effect of channel c = 1 − P_c(conv)/P(conv)
-      // with c's edges deleted (lost mass = null, the standard
-      // convention; n_out stays the FULL graph's).
-      // EXACTNESS: the whole iteration runs in ppm INTEGERS —
-      // p'(t) = Σ_f (p(f)·n(f,t)) div n_out(f) — so 16 steps of
-      // integer div/sum replay bit-for-bit in DuckDB's unrolled-CTE
-      // twin; only the final share is a double. Scale: every frame
-      // after the one events scan is (types+2)²-sized; the 16 joins
-      // ride a lazily-checkpointed transition table.
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      val ev = EV(s, d).select(col("user_id"), col("ts_us"), col("event_id"), col("event_type"))
-        .withColumn("rk", row_number().over(w))
-      val prk = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id").agg(min("rk").as("prk"))
-      val trunc = ev.join(prk, Seq("user_id"), "left")
-        .filter(col("prk").isNull || col("rk") <= col("prk"))
-      val seqd = trunc.select(col("user_id"), col("event_type"),
-        coalesce(lag("event_type", 1).over(w), lit("start")).as("f"))
-      val trans = seqd.filter(col("f") =!= "purchase")
-        .groupBy(col("f"), col("event_type").as("t"))
-        .agg(count(lit(1)).cast("long").as("n"))
-        .transform(Ckpt.lazyCkpt) // feeds channels + tr0 + outdeg once
-      val tr0 = trans.unionByName(Seq(("purchase", "purchase", 1L)).toDF("f", "t", "n"))
-      val outdeg = tr0.groupBy("f").agg(sum("n").cast("long").as("n_out"))
-      val scenarios = trans.select(col("f").as("scenario"))
-        .unionAll(trans.select(col("t").as("scenario")))
-        .filter(col("scenario") =!= "start" && col("scenario") =!= "purchase")
-        .distinct()
-        .unionAll(Seq("full").toDF("scenario"))
-      // the (types+2)²-row transition matrix is BOUNDED, so the 16
-      // integer steps fold driver-side (the kmeans1d/isotonic
-      // contract) — the chained-DataFrame form planned ~32 sequential
-      // tiny stages and cost 17 s of pure scheduling at sf0.1; the
-      // integer arithmetic is IDENTICAL per (scenario, state), and
-      // integer addition is order-independent, so the DuckDB unrolled
-      // twin still replays bit-for-bit
-      val edges = tr0.join(outdeg, Seq("f"))
-        .select("f", "t", "n", "n_out").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      val channels = edges.flatMap(e => Seq(e._1, e._2))
-        .filter(c => c != "start" && c != "purchase").distinct.sorted
-      def absorb(drop: Option[String]): Long = {
-        val live = edges.filter(e => drop.forall(c => e._1 != c && e._2 != c))
-        var p = Map("start" -> 1000000L)
-        for (_ <- 1 to 16) {
-          val nx = scala.collection.mutable.HashMap.empty[String, Long]
-          live.foreach { case (f, t, en, nOut) =>
-            p.get(f).foreach(m => nx(t) = nx.getOrElse(t, 0L) + (m * en) / nOut)
-          }
-          p = nx.toMap
-        }
-        p.getOrElse("purchase", 0L)
-      }
-      val convFull = absorb(None)
-      require(convFull > 0,
-        "events_markov_attribution: no absorption mass reaches 'purchase' in 16 steps")
-      val rows = channels.map { c =>
-        val convC = absorb(Some(c))
-        (c, convFull, convC, 1000000L - (convC * 1000000L) / convFull)
-      }
-      val reTotal = rows.map(_._4).sum
-      import s.implicits._
-      rows.toSeq
-        .map { case (c, cf, cw, re) =>
-          (c, cf, cw, re, re.toDouble / reTotal.toDouble) }
-        .toDF("channel", "conv_full", "conv_without_ppm", "removal_effect_ppm",
-          "attribution_share")
-        .orderBy("channel")
-    }),
-    "text_kn_ppl" -> ((s, d) =>
-      // per-doc LM cross-entropy under the corpus's own interpolated
-      // KN bigram (row 360's APPLY side — the CCNet-style perplexity
-      // quality gate; ppl = e^H, H emitted in nats): low H flags
-      // template-like docs, high H novel/garbled — both curation
-      // tails. Exact by the text_entropy ln convention: round-6 model
-      // probabilities, round-9 ln sites, decimal count-weighted fold.
-      CorpusOps.knBigramDocScores(TP(s, d, "documents"), "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")),
-    "data_acceptance_sampling" -> ((s, d) => {
-      // double acceptance-sampling QA (the ANSI-Z1.4 shape applied to
-      // corpus shards): per source, a deterministic md5 stage-1 sample
-      // of 20 docs — accept at k₁ ≤ 1 bad, reject at k₁ ≥ 4, otherwise
-      // draw the DISJOINT md5 stage-2 sample of 40 and accept iff
-      // k₁+k₂ ≤ 4. 'bad' = n_chars < 150 (the length rule from the
-      // quality battery). All verdicts integer. Both draws are rank
-      // PREDICATES over capPerKey (InferWindowGroupLimit's map-side
-      // partial heap — the data_stratified_exact_k core), so each task
-      // forwards ≤ 20/40 rows per source and NO full per-source sort
-      // ever runs; stage 2 excludes stage 1 by a broadcast anti-join of
-      // the ≤ 20·|sources| stage-1 ids (round-12 verdict item 1 — the
-      // prior form ranked as a COLUMN, full-sorting every shard twice
-      // to inspect 60 docs).
-      def h(seed: String) =
-        conv(substring(md5(concat(lit(seed), col("doc_id").cast("string"))), 1, 8), 16, 10)
-          .cast("long")
-      val docs = T(s, d, "documents").select(col("doc_id"), col("source"),
-        (col("n_chars") < 150).cast("int").as("bad"),
-        h("acc1:").as("h1"), h("acc2:").as("h2"))
-      val s1 = CorpusOps.capPerKey(docs, "source",
-        Seq(col("h1").asc, col("doc_id").asc), 20)
-      val s2 = CorpusOps.capPerKey(
-        docs.join(broadcast(s1.select("doc_id")), Seq("doc_id"), "left_anti"),
-        "source", Seq(col("h2").asc, col("doc_id").asc), 40)
-      val k1 = s1.groupBy("source")
-        .agg(count(lit(1)).cast("long").as("n1"), sum("bad").cast("long").as("k1"))
-      val k2 = s2.groupBy("source")
-        .agg(count(lit(1)).cast("long").as("n2"), sum("bad").cast("long").as("k2"))
-      k1.join(k2, Seq("source"), "left")
-        .select(col("source"), col("n1"), col("k1"),
-          coalesce(col("n2"), lit(0L)).as("n2"), coalesce(col("k2"), lit(0L)).as("k2"))
-        .withColumn("decided_at_stage",
-          when(col("k1") <= 1 || col("k1") >= 4, 1L).otherwise(2L))
-        .withColumn("accepted",
-          when(col("k1") <= 1, lit(true))
-            .when(col("k1") >= 4, lit(false))
-            .otherwise(col("k1") + col("k2") <= 4))
-        .orderBy("source")
-    }),
-    "multimodal_video_shots" -> ((s, d) => {
-      // video shot-boundary detection (histogram-difference, Zhang et
-      // al. 1993) over the opaque binary payload (documents.text bytes
-      // — the multimodal_* convention): per-frame 8-bin histograms,
-      // consecutive-frame L1, boundary at L1 > 256; per clip {frames,
-      // shots, mean shot length, max L1}. Decode is the documented
-      // scene-structured env stub; the explode/lag/threshold plumbing
-      // is the production shape. See MultimodalOps.shotBoundaryReport.
-      // TP: the per-frame histogram projection (16 md5 calls per frame,
-      // ~50 frames/doc) runs map-side above this scan — on the 1-task
-      // single-file read it was serial (3.1 s of this query's 3.8 s)
-      val withBin = TP(s, d, "documents")
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("bin"))
-      MultimodalOps.shotBoundaryReport(withBin, "doc_id", "bin")
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-    "events_time_to_convert" -> ((s, d) => {
-      // time-to-convert distribution (first 'view' → first subsequent
-      // 'purchase'), per user-parity cohort: exact integer-µs gaps,
-      // median/p90 picked by the ANSI smallest-cume ≥ p rule with
-      // INTEGER cross-products (the q79 convention — an actual gap
-      // value, no interpolation float), plus decimal-exact mean. The
-      // funnel-latency readout beside row 105's conversion-rate form.
-      // Ranks ride the groupedBandedRank core over ~1-second gap bands
-      // (gap_us div 2²⁰ — the q43 rewrite): the 2-value cohort key
-      // never partitions a raw converted-user-sized window (round-12
-      // verdict item 2 — the prior form's rangeBetween cume put every
-      // converted user into one of TWO hot partitions); for a value v
-      // the max row rank among its ties equals the range-cume count of
-      // gaps ≤ v, so min-when over row ranks selects the identical
-      // p50/p90 VALUES the cume form (and the oracle) selects.
-      val perUser = EV(s, d).groupBy("user_id")
-        .agg(min(when(col("event_type") === "view", col("ts_us"))).as("fv"))
-      val firstBuy = EV(s, d).filter(col("event_type") === "purchase")
-        .join(perUser, Seq("user_id"))
-        .filter(col("fv").isNotNull && col("ts_us") >= col("fv"))
-        .groupBy("user_id").agg(min("ts_us").as("fp"), min("fv").as("fv2"))
-      val gaps = firstBuy
-        .select(col("user_id"), (col("user_id") % 2).as("cohort"),
-          (col("fp") - col("fv2")).as("gap_us"))
-        .withColumn("band", RankOps.idiv(col("gap_us"), 1L << 20))
-        .transform(Ckpt.lazyCkpt) // band agg + rank join + n agg read it
-      val ranked = RankOps.groupedBandedRank(gaps, Seq("cohort"), Seq("band"),
-        bandSort = Seq(col("band").asc),
-        rowSort = Seq(col("gap_us").asc, col("user_id").asc), rankName = "rk")
-      val nPerCohort = gaps.groupBy("cohort").agg(count(lit(1)).cast("long").as("n"))
-      ranked.join(broadcast(nPerCohort), Seq("cohort"))
-        .groupBy("cohort")
-        .agg(max("n").cast("long").as("n_converted"),
-          min(when(col("rk") * 2 >= col("n"), col("gap_us"))).as("p50_gap_us"),
-          min(when(col("rk") * 10 >= col("n") * 9, col("gap_us"))).as("p90_gap_us"),
-          (sum(col("gap_us").cast("decimal(28,0)")).cast("decimal(38,0)").cast("double")
-            / count(lit(1)).cast("double")).as("mean_gap_us"))
-        .orderBy("cohort")
-    }),
-    "events_peaks" -> ((s, d) => {
-      // local-peak detection with prominence (the alerting/seasonality
-      // primitive beside CUSUM and the anomaly z-flags): a day is a
-      // peak iff its total STRICTLY exceeds every day within ±3 days;
-      // prominence-lite = value − max(neighborhood). Exact integer
-      // cents; edge days compare only against the observed side. One
-      // daily agg + two range windows sharing one per-type sort.
-      import org.apache.spark.sql.expressions.Window
-      val daily = EV(s, d)
-        .groupBy(col("event_type"), expr("ts_us div 86400000000").as("day"))
-        .agg(sum((col("value").cast("decimal(18,2)") * 100).cast("long"))
-          .cast("long").as("cents"))
-      val wL = Window.partitionBy("event_type").orderBy("day").rangeBetween(-3, -1)
-      val wR = Window.partitionBy("event_type").orderBy("day").rangeBetween(1, 3)
-      daily
-        .withColumn("max_l", max("cents").over(wL))
-        .withColumn("max_r", max("cents").over(wR))
-        .filter((col("max_l").isNull || col("cents") > col("max_l")) &&
-          (col("max_r").isNull || col("cents") > col("max_r")))
-        .select(col("event_type"), col("day"), col("cents"),
-          (col("cents") - greatest(coalesce(col("max_l"), lit(0L)),
-            coalesce(col("max_r"), lit(0L)))).as("prominence_cents"))
-        .orderBy("event_type", "day")
-    }),
-    "vec_purity" -> ((s, d) => {
-      // cluster-label purity of a deterministic 5-seed nearest-seed
-      // partition over the embedding table (the clustering-quality
-      // audit beside silhouette (348) and centroid affinity (195) —
-      // purity is the INTEGER one: majority-label mass per cell, no
-      // logs, no float verdicts). Seeds = first 5 vectors by
-      // md5('seed:'||id) — replayable in SQL, unlike a Lloyd-trained
-      // geometry; assignment = argmax round-6 cosine, ties to the
-      // LOWER seed index (the ann tie convention).
-      val vecs = TP(s, d, "embeddings")
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("vec"),
-          col("label"))
-      val seeds = vecs
-        .orderBy(conv(substring(md5(concat(lit("seed:"), col("vec_id"))), 1, 8), 16, 10)
-          .cast("long"), col("vec_id"))
-        .limit(5).select("vec_id", "vec").collect() // 5 rows — bounded
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      import graft.functions.VectorFunctions.dot
-      val nrm = sqrt(dot(col("vec"), col("vec")))
-      val scores = array(seeds.zipWithIndex.map { case ((_, sv), i) =>
-        val sl = typedLit(sv.toSeq)
-        val sn = math.sqrt(sv.map(x => x * x).sum)
-        struct(round(dot(col("vec"), sl) / (nrm * lit(sn)), 6).as("s"),
-          lit(4 - i).as("t"))
-      }.toIndexedSeq: _*)
-      val assigned = vecs.select(col("vec_id"), col("label"),
-        (lit(4) - array_max(scores).getField("t")).as("cell"))
-      val cellLab = assigned.groupBy("cell", "label")
-        .agg(count(lit(1)).cast("long").as("n"))
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("cell").orderBy(col("n").desc, col("label"))
-      cellLab
-        .withColumn("rk", row_number().over(w))
-        .groupBy("cell")
-        .agg(sum("n").cast("long").as("n_members"),
-          max(when(col("rk") === 1, col("label"))).as("majority_label"),
-          max(when(col("rk") === 1, col("n"))).cast("long").as("n_majority"))
-        .withColumn("purity_ppm", expr("n_majority * 1000000L div n_members"))
-        .orderBy("cell")
-    }),
-    "q81_bitwise_agg" -> ((s, d) => {
-      // bitwise-aggregate conformance (bit_and / bit_or / bit_xor +
-      // count_if): the flag-mask folding idiom — permission masks,
-      // feature-bit unions, parity checks — all order-independent
-      // integer folds, exact by construction.
-      T(s, d, "lineitem").createOrReplaceTempView("r12_li_bits")
-      s.sql("""
-        SELECT l_returnflag,
-               BIT_AND(CAST(l_suppkey AS BIGINT)) AS mask_and,
-               BIT_OR(CAST(l_suppkey AS BIGINT)) AS mask_or,
-               BIT_XOR(CAST(l_suppkey AS BIGINT)) AS parity_xor,
-               COUNT_IF(l_quantity > 25) AS n_bulk
-        FROM r12_li_bits
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-      """)
-    }),
-    "quality_rater_accuracy" -> ((s, d) => {
-      // per-annotator accuracy vs gold with a Wilson LOWER bound (the
-      // per-rater diagnostic completing the agreement family — kappa/
-      // alpha say whether raters agree, THIS says which rater to
-      // retrain; the bound keeps small-n raters from ranking high on
-      // luck). Same synthesized 3-rater table as row 375 (md5-noised
-      // lang labels, ~80% coverage); gold = the true lang. Integer
-      // counts, literal z, sqrt-only math (the events_error_wilson
-      // convention).
-      val langs = array(lit("en"), lit("de"), lit("es"), lit("fr"), lit("zh"))
-      def h(r: Int) =
-        conv(substring(md5(concat(lit(s"kr$r:"), col("doc_id"))), 1, 8), 16, 10)
-          .cast("long")
-      val docs = T(s, d, "documents").select(col("doc_id"), col("lang"))
-      val ratings = (1 to 3).map { r =>
-        docs.select(col("doc_id"), lit(r).as("rater"), col("lang"),
-            when(h(r) % 7 === 0,
-              element_at(langs, ((h(r) / 35) % 5).cast("int") + 1))
-              .otherwise(col("lang")).as("lab"),
-            h(r).as("__h"))
-          .filter(col("__h") % 5 =!= 0)
-          .drop("__h")
-      }.reduce(_ unionByName _)
-      val z = "1.959963984540054D"
-      ratings.groupBy("rater")
-        .agg(count(lit(1)).cast("long").as("n_rated"),
-          sum(when(col("lab") === col("lang"), 1L).otherwise(0L)).as("n_correct"))
-        .withColumn("nn", col("n_rated").cast("double"))
-        .withColumn("p", col("n_correct").cast("double") / col("nn"))
-        .withColumn("wilson_low",
-          expr(s"(p + $z * $z / (2.0D * nn) - $z * sqrt(p * (1.0D - p) / nn " +
-            s"+ $z * $z / (4.0D * nn * nn))) / (1.0D + $z * $z / nn)"))
-        .select(col("rater"), col("n_rated"), col("n_correct"),
-          col("p").as("accuracy"), col("wilson_low"),
-          (col("wilson_low") >= 0.8).as("meets_bar"))
-        .orderBy("rater")
-    }),
-    "quality_conformal" -> ((s, d) => {
-      // Mondrian split-conformal calibration (Papadopoulos et al. 2002
-      // inductive conformal prediction; Vovk's taxonomy for the
-      // per-group form): wrap a FIXED token-count predictor
-      // (ŷ = (n_chars+3) div 7 — conformal wraps ANY point model, the
-      // guarantee needs only exchangeability) with per-lang prediction
-      // intervals at α = 1/10. Nonconformity = |y − ŷ| in whole
-      // tokens; calibration = md5 buckets 0-7 (8 of 16 — the
-      // data_split machinery), test = the rest. Per-lang threshold =
-      // the ⌈(n_cal+1)(1−α)⌉-th smallest calibration error — k in
-      // exact integers ((9(n+1)+9) div 10), picked as the min err
-      // whose cumulative count ≥ k over the (lang, err) VALUE-DOMAIN
-      // grid (the window rides the domain-sized aggregate, never a raw
-      // per-lang partition — the §5.1 class rule); k > n_cal ⇒ q NULL
-      // = the infinite interval, every test row covered. Test coverage
-      // in exact ppm: the marginal ≥ 1−α guarantee audited per group
-      // as data.
-      import org.apache.spark.sql.expressions.Window
-      // ONE corpus pass: everything folds into the (lang, err, is_cal)
-      // VALUE-DOMAIN grid via a map-side partial agg; the threshold
-      // pick, the calibration counts AND the test coverage all read the
-      // domain-sized grid — the corpus is never scanned or shuffled
-      // twice, and no per-lang partition ever holds raw rows
-      val grid3 = TP(s, d, "documents").select(
-          col("lang"),
-          abs(size(TextFunctions.tokens(col("text"))).cast("long")
-            - expr("cast((n_chars + 3) div 7 as bigint)")).as("err"),
-          (SplitOps.bucket16(col("doc_id")) < 8).as("is_cal"))
-        .groupBy("lang", "err", "is_cal")
-        .agg(count(lit(1)).as("cnt"))
-        .transform(Ckpt.lazyCkpt) // domain-sized; feeds 3 consumers
-      val calg = grid3.filter(col("is_cal"))
-      val nCal = calg.groupBy("lang").agg(sum("cnt").cast("long").as("n_cal"))
-        .withColumn("k", expr("(9 * (n_cal + 1) + 9) div 10"))
-      val wg = Window.partitionBy("lang").orderBy("err")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // every lang-keyed frame below is ≤|lang domain| rows — the
-      // broadcast hints are BroadcastSizeAudit-classified DomainSized
-      val qs = calg.withColumn("cum", sum("cnt").over(wg))
-        .join(broadcast(nCal), Seq("lang"))
-        .filter(col("cum") >= col("k"))
-        .groupBy("lang").agg(min("err").as("q"))
-      val thr = nCal.join(broadcast(qs), Seq("lang"), "left")
-      val cov = grid3.filter(!col("is_cal"))
-        .join(broadcast(thr.select("lang", "q")), Seq("lang"))
-        .groupBy("lang").agg(sum("cnt").cast("long").as("n_test"),
-          sum(when(col("q").isNull || col("err") <= col("q"), col("cnt"))
-            .otherwise(0L)).cast("long").as("covered"))
-      thr.join(broadcast(cov), Seq("lang"), "left")
-        .select(col("lang"), col("n_cal"), col("k"), col("q").cast("long").as("q"),
-          coalesce(col("n_test"), lit(0L)).as("n_test"),
-          coalesce(col("covered"), lit(0L)).as("covered"))
-        .withColumn("covered_ppm",
-          when(col("n_test") > 0,
-            expr("(covered * 1000000) div n_test")).cast("long"))
-        .orderBy("lang")
-    }),
-    "q84_explode_outer" -> ((s, d) => {
-      // explode_outer / LATERAL VIEW OUTER conformance: rows whose
-      // generator input is EMPTY survive with one NULL element — the
-      // left-join-shaped generator semantics; plain explode silently
-      // DROPS those parent rows (the classic silent-loss bug in
-      // flattening pipelines — n_arr in the output makes the parity
-      // auditable). Long tokens (> 7 chars) leave many docs with an
-      // empty array, so both branches are exercised.
-      TP(s, d, "documents").select(col("doc_id"),
-          filter(TextFunctions.tokens(col("text")),
-            x => length(x) > 7).as("arr"))
-        .select(col("doc_id"), size(col("arr")).as("n_arr"),
-          explode_outer(col("arr")).as("tok"))
-        .orderBy(col("doc_id"), col("tok").asc_nulls_first)
-    }),
-    "graph_louvain_step" -> ((s, d) => {
-      // one SYNCHRONOUS Louvain phase-1 sweep from singletons (Blondel
-      // et al. 2008 §2 — the community-detection inner primitive): on
-      // the weighted part co-order graph (w = orders containing both
-      // parts), every node evaluates moving into each neighbor's
-      // singleton community. The modularity gain of i→{j} is
-      // w_ij/m − k_i·k_j/(2m²), and 2m² > 0 makes the WHOLE argmax
-      // INTEGER-exact: compare gain_num = 2m·w_ij − k_i·k_j (longs —
-      // fine to k ~ 10⁹; the full-Louvain loop would coarsen long
-      // before that). Deterministic tie-break (max gain_num, then min
-      // candidate id); move only on gain_num > 0. Scale: m and the
-      // degrees are edge-table aggregates, the per-node argmax a
-      // HIGH-card window over each node's neighbor list — two shuffles
-      // beyond the guarded basket pair-gen; no iteration here by
-      // design (phase 2 coarsens, then this sweep repeats on a graph
-      // that collapsed in size).
-      GraphOps.louvainSweep(coOrderPartEdges(s, d)).orderBy("node")
-    }),
-    "graph_louvain_coarsen" -> ((s, d) => {
-      // Louvain PHASE 2 on the sweep's assignment (the outer-loop
-      // contraction that makes the full algorithm tractable at scale —
-      // the next sweep runs on a graph that collapsed in size): edges
-      // re-keyed to their endpoints' communities, intra-community
-      // weight becomes self-loops, and the partition's MODULARITY is
-      // emitted as exact integers — Q·4m² = Σ_c(4m·in_c − tot_c²)
-      // (in_c = intra-community weight counted once, tot_c = Σ degrees
-      // in c), so the quality of the sweep's move set is DATA, not a
-      // float: the one double (q = q_num/q_den) is a single division.
-      // Scale: the assignment attaches to the edge table by two
-      // high-card joins, the coarse graph and the per-community sums
-      // are plain aggregates — nothing here exceeds the sweep's cost.
-      // r15 restructure (guide §1.2/§2.3): the edge×assign join (`keyed`,
-      // the only edge-sized frame here) was aggregated THREE times
-      // (coarse graph, in_c per community, and — via w — m and n_edges),
-      // and six 1-row aggregates each planned their own subtree. Every
-      // statistic is derivable from ONE edge-sized aggregate: the coarse
-      // graph with per-coarse-edge counts. Every node in `w` gets an
-      // assignment (louvainSweep covers both endpoints), so the inner
-      // joins lose no edge and Σcoarse.w = m, Σcoarse.n_e = n_edges;
-      // cx = cy rows carry exactly the intra-community mass (in_c and
-      // internal_w). All sums are longs — order-independent, so the
-      // emitted integers (and the single q division) are bit-identical.
-      val w = coOrderPartEdges(s, d).transform(Ckpt.eagerCkpt)
-      val assign = GraphOps.louvainSweep(w).select("node", "k", "community")
-        .transform(Ckpt.eagerCkpt) // two edge-side joins + tot_c read it
-      val keyed = w
-        .join(assign.select(col("node").as("a"), col("community").as("ca")), Seq("a"))
-        .join(assign.select(col("node").as("b"), col("community").as("cb")), Seq("b"))
-      val coarse = keyed.groupBy(
-          least(col("ca"), col("cb")).as("cx"),
-          greatest(col("ca"), col("cb")).as("cy"))
-        .agg(sum("w").cast("long").as("w"), count(lit(1)).cast("long").as("n_e"))
-        .transform(Ckpt.lazyCkpt) // community²-bounded; totals + in_c + q read it
-      val totals = coarse.agg(
-        sum("w").cast("long").as("m"),
-        sum("n_e").cast("long").as("n_edges"),
-        count(lit(1)).as("n_coarse_edges"),
-        coalesce(sum(when(col("cx") === col("cy"), col("w"))), lit(0L))
-          .cast("long").as("internal_w"))
-      val tot = assign.groupBy("community").agg(sum("k").cast("long").as("tot"))
-      val inC = coarse.filter(col("cx") === col("cy"))
-        .select(col("cx").as("community"), col("w").as("in_c"))
-      val qterms = tot.join(inC, Seq("community"), "left")
-        .crossJoin(broadcast(totals.select(col("m"))))
-        .select((lit(4L) * col("m") * coalesce(col("in_c"), lit(0L))
-          - col("tot") * col("tot")).as("term"))
-        .agg(sum("term").cast("long").as("q_num"))
-      assign.agg(count(lit(1)).as("n_nodes"),
-          count_distinct(col("community")).as("n_communities"))
-        .crossJoin(broadcast(totals))
-        .crossJoin(broadcast(qterms))
-        .select(col("n_nodes"), col("n_communities"), col("n_edges"),
-          col("n_coarse_edges"), col("internal_w"), col("m"), col("q_num"),
-          (lit(4L) * col("m") * col("m")).as("q_den"),
-          (col("q_num").cast("double") /
-            (lit(4L) * col("m") * col("m")).cast("double")).as("q"))
-    }),
-    "events_sax" -> ((s, d) => {
-      // SAX symbolic aggregate approximation (Lin-Keogh-Wei-Lonardi
-      // DMKD'07): each type's daily cents series → 7-day PAA frames →
-      // alphabet-4 symbols against the N(0,1) quartile breakpoints
-      // ±0.6744897501960817 (literal), z-normalized by the series' OWN
-      // decimal-exact moments; the per-type SAX WORD assembles in frame
-      // order. The time-series motif/indexing primitive at corpus
-      // scale: a 100 TB event log compresses to |types|·|frames|
-      // symbols in ONE daily-agg pass + domain-grid folds — doubles
-      // enter only at the fixed IEEE (paa−μ) vs β·σ comparisons,
-      // mirrored token-for-token by the oracle. All cents sums are
-      // < 2⁵³ so the decimal→double casts are exact.
-      val daily = EV(s, d).groupBy(col("event_type"),
-          expr("ts_us div 86400000000").as("day"))
-        .agg(sum(expr("cast(cast(value as decimal(18,2)) * 100 as bigint)"))
-          .cast("decimal(38,0)").as("cents"))
-        .transform(Ckpt.lazyCkpt) // moments + frames both read it
-      val mom = daily.groupBy("event_type").agg(
-          count(lit(1)).as("n"),
-          sum(col("cents")).cast("decimal(38,0)").cast("double").as("sx"),
-          sum(col("cents") * col("cents")).cast("decimal(38,0)")
-            .cast("double").as("sxx"))
-        .withColumn("mean", col("sx") / col("n").cast("double"))
-        .withColumn("sd", sqrt((col("sxx") - col("sx") * col("sx")
-          / col("n").cast("double")) / (col("n").cast("double") - 1)))
-      val paa = daily.groupBy(col("event_type"), expr("day div 7").as("frame"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(col("cents")).cast("decimal(38,0)").cast("double").as("fsum"))
-        .withColumn("paa", col("fsum") / col("n_days").cast("double"))
-      val beta = "6.744897501960817e-1"
-      val sym = paa
-        .join(broadcast(mom.select("event_type", "mean", "sd")), Seq("event_type"))
-        .withColumn("sym",
-          when(col("paa") - col("mean") < expr(s"-$beta") * col("sd"), "a")
-            .when(col("paa") - col("mean") < lit(0.0), "b")
-            .when(col("paa") - col("mean") < expr(s"$beta") * col("sd"), "c")
-            .otherwise("d"))
-      val word = sym.groupBy("event_type").agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col("frame"), col("sym")))),
-          x => x.getField("sym")), "").as("sax_word"))
-      sym.join(broadcast(word), Seq("event_type"))
-        .select(col("event_type"), col("frame"), col("n_days"),
-          col("paa"), col("sym"), col("sax_word"))
-        .orderBy("event_type", "frame")
-    }),
-    "q83_sql_scripting" -> ((s, d) => {
-      // Spark 4 SQL scripting conformance (the ISO 9075-4 SQL/PSM-style
-      // compound surface: BEGIN / DECLARE / SET / WHILE — the
-      // stored-procedure migration path): an exponential threshold
-      // search over orders — the smallest power-of-two cents bound T
-      // covering ≥90% of orders. Control flow runs on the DRIVER,
-      // bounded by log₂(price domain) ≈ 26 iterations; every data step
-      // is ONE plain distributed aggregate — the scripting contract at
-      // scale (loops never touch rows, queries never loop). DuckDB has
-      // no SQL/PSM, so the oracle replays the SAME monotone fixed point
-      // declaratively over a powers-of-two domain table.
-      s.conf.set("spark.sql.scripting.enabled", "true")
-      // The WHILE loop's predicate n_below(T=2^k) is monotone in k, so
-      // the search only ever needs the ceil-log2 HISTOGRAM of the cents
-      // column: bucket kb = smallest k with cents ≤ 2^k (integer-exact
-      // via bit length — length(bin(cents−1)) = floor(log2(cents−1))+1
-      // for cents > 1024, clamped to the loop's 1024 start). Materialize
-      // that ≤ ~45-row grid ONCE and let every loop iteration count over
-      // it, instead of the previous one full orders scan per doubling
-      // (~16 scans at sf0.1; at 100 TB each scan is the whole fact
-      // table). cents ≤ 2^k ⟺ kb ≤ k, so every SET lands the identical
-      // value and the unchanged DuckDB oracle proves equivalence.
-      val q83hist = T(s, d, "orders")
-        .select((col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").as("cents"))
-        .select(when(col("cents") <= 1024L, lit(10))
-          .otherwise(length(bin(col("cents") - 1))).as("kb"))
-        .groupBy("kb").agg(count(lit(1)).as("c"))
-        .transform(Ckpt.eagerCkpt) // the WHILE loop queries it per iteration
-      q83hist.createOrReplaceTempView("r14s_orders_hist")
-      s.sql("""
-        BEGIN
-          DECLARE t BIGINT DEFAULT 1024;
-          DECLARE kcur INT DEFAULT 10;
-          DECLARE n_total BIGINT DEFAULT 0;
-          DECLARE n_below BIGINT DEFAULT 0;
-          SET n_total = (SELECT sum(c) FROM r14s_orders_hist);
-          SET n_below = (SELECT coalesce(sum(c), 0) FROM r14s_orders_hist WHERE kb <= 10);
-          WHILE n_below * 10 < n_total * 9 DO
-            SET t = t * 2;
-            SET kcur = kcur + 1;
-            SET n_below = (SELECT coalesce(sum(c), 0) FROM r14s_orders_hist WHERE kb <= kcur);
-          END WHILE;
-          SELECT t AS t_cents, n_below, n_total;
-        END
-      """)
-    }),
-    "q82_named_window" -> ((s, d) => {
-      // named WINDOW clause conformance (SQL:2003 <window clause> —
-      // define the frame ONCE, consume it from many functions): rank,
-      // lag and a running integer-cent sum all ride window w, and
-      // Spark plans ONE Sort+Window pass for the shared spec — the
-      // clause's point at scale: N functions, one shuffle, one sort.
-      // Partition key o_custkey is high-card (§5.1-safe); the default
-      // RANGE frame is deterministic because (o_orderdate, o_orderkey)
-      // is unique per row, so no RANGE peers exist. DuckDB replays the
-      // identical clause.
-      T(s, d, "orders").createOrReplaceTempView("r14_orders")
-      s.sql("""
-        SELECT o_custkey, o_orderkey,
-               CAST(rank() OVER w AS BIGINT) AS rk,
-               lag(o_orderkey) OVER w AS prev_order,
-               CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-                    OVER w AS BIGINT) AS run_cents
-        FROM r14_orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        ORDER BY o_custkey, rk
-      """)
-    }),
-    "events_dgim" -> ((s, d) => {
-      // DGIM sliding-window counting sketch (Datar-Gionis-Indyk-
-      // Motwani SICOMP'02): O(log²N) exponential buckets estimate the
-      // count of events in a trailing window with ≤50% error from the
-      // oldest bucket alone. THE RELATIONAL TRICK: the cascade-merge
-      // state after n events is CLOSED-FORM — bucket sizes are n's
-      // digits in the redundant base-2 system with digits ∈ {1,2},
-      // and rᵢ = (n+1) div 2ⁱ − 1 gives digit dᵢ = 2 − (rᵢ mod 2)
-      // directly (the lazy-counter identity; no per-event fold, no
-      // recursion) — so the whole sketch materializes as one
-      // 40×2-row-per-key integer grid joined back for bucket
-      // timestamps. est = Σ included sizes − oldest/2; the realized
-      // error is PROVEN ≤ oldest/2 per key as data (bound_ok).
-      // Keyed per USER — DGIM's realistic deployment key (per
-      // user/session stream) and the HIGH-card shape the ScaleProbe
-      // twin certifies at 512 keys (round-12 verdict item 3: the
-      // event_type demo key put the rows-sized recency rank on ~5 hot
-      // partitions; probe and query now agree on key cardinality).
-      val winUs = 7L * 86400000000L
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_us").desc, col("event_id").desc)
-      val ones = EV(s, d).select(col("user_id"), col("ts_us"), col("event_id"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("user_id")))
-        .withColumn("mx", max("ts_us").over(Window.partitionBy("user_id")))
-        .transform(Ckpt.lazyCkpt) // grid join + exact count + cutoff
-      val grid = ones.select(col("user_id"), col("n"), col("mx")).distinct()
-        .select(col("user_id"), col("n"), col("mx"),
-          explode(sequence(lit(0), lit(39))).as("i"))
-        .withColumn("p2", expr("shiftleft(1L, i)"))
-        .withColumn("r", expr("(n + 1) div p2 - 1"))
-        .filter(col("r") >= 1)
-        .select(col("*"), explode(sequence(lit(1), lit(2))).as("t"))
-        .filter(col("t") <= lit(2) - pmod(col("r"), lit(2)))
-        .withColumn("np", col("n") - col("r") * col("p2") + (col("t") - 1) * col("p2") + 1)
-      val buckets = grid.join(
-        ones.select(col("user_id"), col("rn").as("np"), col("ts_us").as("bts")),
-        Seq("user_id", "np"))
-      val included = buckets.filter(col("bts") >= col("mx") - winUs)
-      val est = included.groupBy("user_id")
-        .agg(max("n").cast("long").as("n_ones"),
-          count(lit(1)).cast("long").as("n_buckets_in"),
-          sum("p2").cast("long").as("sum_sz"),
-          max(struct(col("np"), col("p2"))).getField("p2").as("oldest_sz"))
-        .withColumn("dgim_est", col("sum_sz") - expr("oldest_sz div 2"))
-      val exact = ones.filter(col("ts_us") >= col("mx") - winUs)
-        .groupBy("user_id").agg(count(lit(1)).cast("long").as("exact_in_window"))
-      est.join(exact, Seq("user_id"))
-        .withColumn("abs_err", abs(col("dgim_est") - col("exact_in_window")))
-        .withColumn("bound_ok", col("abs_err") * 2 <= col("oldest_sz"))
-        .select("user_id", "n_ones", "n_buckets_in", "dgim_est",
-          "exact_in_window", "abs_err", "oldest_sz", "bound_ok")
-        .orderBy("user_id")
-    }),
-    "_gate_meta" -> ((s, d) => {
-      // gate sentinel (round-10 verdict item 8): one deterministic row
-      // (engine version, total query count) dumped by Verify like any
-      // query and trivially oracled — an empty driver artifact is now
-      // distinguishable from a truncated or complete one at a glance.
-      // Sorts FIRST ('_' < lowercase), so even a truncated alphabetical
-      // compare carries it. queries is a def; .size here re-materializes
-      // the closure map once at run time (cheap, no recursion).
-      import s.implicits._
-      Seq(("graft-0.1.0", queries.size.toLong)).toDF("engine", "n_queries")
-    })
-  )
+  /** Gate sentinel (round-10 verdict item 8): one deterministic row
+    * (engine version, total query count) dumped by Verify like any
+    * query and trivially oracled — an empty driver artifact is now
+    * distinguishable from a truncated or complete one at a glance.
+    * Sorts FIRST ('_' < lowercase), so even a truncated alphabetical
+    * compare carries it. */
+  private def gateMeta(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    Seq(("graft-0.1.0", queries.size.toLong)).toDF("engine", "n_queries")
+  }
 
   // ---------------------------------------------------------------- oracles
 

@@ -1,5 +1,9 @@
 package graft
+import graft.operators.DedupOps
+import graft.queries.{Dedup, Vectors}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, to_json}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -52,59 +56,32 @@ object Verify {
     // written up-front so a partial run still yields a usable compare set
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // auxiliary dumps referenced by oracles (skipped under a selective
-    // run that excludes their query)
-    if (only.forall(_.contains("dedup_simhash"))) {
-      try {
-        graft.operators.DedupOps
-          .simhashSignatures(spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id")
-          .select(org.apache.spark.sql.functions.col("id"),
-            org.apache.spark.sql.functions.col("sig"))
-          .orderBy("id")
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_aux_simhash_sigs")
-        System.err.println("[verify] _aux_simhash_sigs dumped")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] _aux_simhash_sigs failed: ${e.getMessage}")
+    // run that excludes all of their queries), one dir each, sorted
+    def dumpAux(dir: String, forQueries: Seq[String], order: String*)(df: => DataFrame): Unit =
+      if (only.forall(o => forQueries.exists(o.contains))) {
+        try {
+          df.orderBy(order.head, order.tail: _*)
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$dir")
+          System.err.println(s"[verify] $dir dumped")
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $dir failed: ${e.getMessage}")
+        }
       }
-    }
     // `unit` is dumped as its JSON string (round-9 verdict item 1): the
     // driver loads every dump dir into pandas and SORTS all columns —
     // a raw array column fails lexsort and reads as a red row. The
     // consuming oracles CAST it back to DOUBLE[] (Double.toString is
     // round-trip exact, so the cast loses nothing).
-    if (only.forall(_.contains("dedup_semantic"))) {
-      try {
-        SparkEntry.semanticDedupCells(spark, sfDir)
-          .withColumn("unit", org.apache.spark.sql.functions.to_json(
-            org.apache.spark.sql.functions.col("unit")))
-          .orderBy("id")
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_aux_semantic_cells")
-        System.err.println("[verify] _aux_semantic_cells dumped")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] _aux_semantic_cells failed: ${e.getMessage}")
-      }
-    }
-    if (only.forall(_.contains("ann_ivfpq_drift"))) {
-      try {
-        SparkEntry.ivfPqDriftCellsDump(spark, sfDir)
-          .orderBy("side", "id")
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_aux_ivfpq_drift_cells")
-        System.err.println("[verify] _aux_ivfpq_drift_cells dumped")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] _aux_ivfpq_drift_cells failed: ${e.getMessage}")
-      }
-    }
-    if (only.forall(o => o.contains("dedup_semantic_incr") || o.contains("dedup_semantic_drift"))) {
-      try {
-        SparkEntry.semanticDedupIncrCells(spark, sfDir)
-          .withColumn("unit", org.apache.spark.sql.functions.to_json(
-            org.apache.spark.sql.functions.col("unit")))
-          .orderBy("side", "id")
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_aux_semantic_incr_cells")
-        System.err.println("[verify] _aux_semantic_incr_cells dumped")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] _aux_semantic_incr_cells failed: ${e.getMessage}")
-      }
-    }
+    def unitAsJson(df: DataFrame): DataFrame = df.withColumn("unit", to_json(col("unit")))
+    dumpAux("_aux_simhash_sigs", Seq("dedup_simhash"), "id")(
+      DedupOps.simhashSignatures(spark.read.parquet(s"$sfDir/documents.parquet"), "text", "doc_id")
+        .select(col("id"), col("sig")))
+    dumpAux("_aux_semantic_cells", Seq("dedup_semantic"), "id")(
+      unitAsJson(Dedup.semanticDedupCells(spark, sfDir)))
+    dumpAux("_aux_ivfpq_drift_cells", Seq("ann_ivfpq_drift"), "side", "id")(
+      Vectors.ivfPqDriftCellsDump(spark, sfDir))
+    dumpAux("_aux_semantic_incr_cells", Seq("dedup_semantic_incr", "dedup_semantic_drift"), "side", "id")(
+      unitAsJson(Dedup.semanticDedupIncrCells(spark, sfDir)))
     // Queries run CONCURRENTLY on a bounded pool (round-8 verdict item
     // 1: the serial dump took ~19-25 min — mostly per-query fixed cost
     // and small stages underfilling the local[n] task slots, so modest

@@ -25,7 +25,7 @@ import scala.collection.mutable
   *     pipelines rely on);
   *   - for every key in the map:  true − n/(k+1) ≤ count ≤ true.
   * The summary is a CANDIDATE set: callers verify with one exact counting
-  * pass over the candidates (see SparkEntry `text_heavy_tokens`) — the
+  * pass over the candidates (see the `text_heavy_tokens` query) — the
   * classic two-scan pattern that finds frequent keys without ever
   * shuffling the full distinct-key domain (a groupBy over 100 TB of
   * tokens shuffles billions of distinct grams; the sketch ships k

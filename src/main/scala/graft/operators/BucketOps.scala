@@ -23,13 +23,12 @@ object BucketOps {
     * `numBuckets` buckets. Sorting within buckets makes the later
     * SortMergeJoin skip its per-task sort too.
     *
-    * `repartitionFirst` (default true) shuffles onto the bucket hash
-    * before writing so each bucket is written by exactly ONE task → one
-    * file per bucket. Without it a bucketed write emits up to
-    * tasks×buckets files (100k tasks × 16k buckets at 100 TB is a
-    * catastrophic small-file explosion, and every reader pays the
-    * listing). The shuffle is the one-time write cost bucketing exists
-    * to amortize; flip off only when the input is already co-partitioned.
+    * The write first shuffles onto the bucket hash so each bucket is
+    * written by exactly ONE task → one file per bucket. Without it a
+    * bucketed write emits up to tasks×buckets files (100k tasks × 16k
+    * buckets at 100 TB is a catastrophic small-file explosion, and every
+    * reader pays the listing). The shuffle is the one-time write cost
+    * bucketing exists to amortize.
     *
     * The rebuild is STAGED: data lands in `<table>__staging` first, and
     * only after that write succeeds is the old table dropped and the
@@ -45,14 +44,13 @@ object BucketOps {
       table: String,
       numBuckets: Int,
       keys: Seq[String],
-      sortKeys: Seq[String] = Nil,
-      repartitionFirst: Boolean = true
+      sortKeys: Seq[String] = Nil
   ): Unit = {
     val spark = df.sparkSession
     val staging = s"${table}__staging"
     dropTable(spark, staging)
-    val src = if (repartitionFirst) df.repartition(numBuckets, keys.map(df(_)): _*) else df
-    val w0 = src.write.mode(SaveMode.Overwrite).format("parquet")
+    val w0 = df.repartition(numBuckets, keys.map(df(_)): _*)
+      .write.mode(SaveMode.Overwrite).format("parquet")
       .bucketBy(numBuckets, keys.head, keys.tail: _*)
     val w = if (sortKeys.nonEmpty) w0.sortBy(sortKeys.head, sortKeys.tail: _*) else w0
     w.saveAsTable(staging)
@@ -75,8 +73,7 @@ object BucketOps {
       table: String,
       numBuckets: Int,
       keys: Seq[String],
-      sortKeys: Seq[String] = Nil,
-      repartitionFirst: Boolean = true
+      sortKeys: Seq[String] = Nil
   ): Unit = {
     val spark = df.sparkSession
     if (spark.catalog.tableExists(table)) {
@@ -90,8 +87,8 @@ object BucketOps {
             "would silently lose the co-located layout")
       }
     }
-    val src = if (repartitionFirst) df.repartition(numBuckets, keys.map(df(_)): _*) else df
-    val w0 = src.write.mode(SaveMode.Append).format("parquet")
+    val w0 = df.repartition(numBuckets, keys.map(df(_)): _*)
+      .write.mode(SaveMode.Append).format("parquet")
       .bucketBy(numBuckets, keys.head, keys.tail: _*)
     val w = if (sortKeys.nonEmpty) w0.sortBy(sortKeys.head, sortKeys.tail: _*) else w0
     w.saveAsTable(table)

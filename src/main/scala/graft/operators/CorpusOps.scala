@@ -161,7 +161,7 @@ object CorpusOps {
     * every row of a hot shingle through ONE reducer with no partial-agg
     * or skew-split escape; probed 90%-hot vs uniform in ScaleProbe.)
     * Price: the tokenize→shingle scan runs on both join sides —
-    * `materializeSignatures` (the same lever containmentPairs carries)
+    * `materializeSignatures` (containmentPairs always pins its signatures)
     * lazily localCheckpoints the (doc_id, h) table so the scan runs
     * once; flip off when recompute is cheaper than materializing the
     * shingle mass (storage-starved executors).
@@ -281,9 +281,7 @@ object CorpusOps {
     * funnel), the boilerplate set joins back as an UNHINTED left-anti
     * (AQE broadcasts it when small — it usually is: boilerplate is rare
     * in DISTINCT terms — and keeps a skew-splittable shuffle join
-    * otherwise). `materializeSegments` localCheckpoints the exploded
-    * (doc, pos, seg) table so the segment scan feeds both join sides
-    * without re-tokenizing. The per-doc rebuild is a collect_list bounded
+    * otherwise). The per-doc rebuild is a collect_list bounded
     * by document length. Docs whose every segment was boilerplate (or
     * that had none) survive with empty text — dropping them is the
     * caller's policy decision, not this operator's.
@@ -292,12 +290,10 @@ object CorpusOps {
       docs: DataFrame,
       idCol: String,
       segsCol: String,
-      maxDf: Int,
-      materializeSegments: Boolean = false
+      maxDf: Int
   ): DataFrame = {
     require(maxDf >= 1, "maxDf must be >= 1")
-    val seg0 = docs.select(col(idCol), posexplode(col(segsCol)).as(Seq("__pos", "__seg")))
-    val seg = if (materializeSegments) seg0.transform(Ckpt.lazyCkpt) else seg0
+    val seg = docs.select(col(idCol), posexplode(col(segsCol)).as(Seq("__pos", "__seg")))
     val boiler = seg
       .groupBy(col(idCol), col("__seg")).agg(count(lit(1)).as("__c"))
       .groupBy("__seg").agg(count(lit(1)).as("__df"))

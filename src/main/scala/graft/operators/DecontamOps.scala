@@ -28,14 +28,12 @@ object DecontamOps {
       idCol: String,
       bench: DataFrame,
       benchTextCol: String,
-      n: Int,
-      broadcastBench: Boolean = true
+      n: Int
   ): DataFrame = {
     val dSh = docs.select(col(idCol).as("doc_id"),
       explode(DedupOps.hashedShingleSet(col(textCol), n)).as("h"))
-    val bSh0 = bench.select(explode(DedupOps.hashedShingleSet(col(benchTextCol), n)).as("h")).distinct()
-    val bSh = if (broadcastBench) broadcast(bSh0) else bSh0
-    dSh.join(bSh, "h")
+    val bSh = bench.select(explode(DedupOps.hashedShingleSet(col(benchTextCol), n)).as("h")).distinct()
+    dSh.join(broadcast(bSh), "h")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_hits"))
   }
@@ -54,15 +52,13 @@ object DecontamOps {
       bench: DataFrame,
       benchTextCol: String,
       benchIdCol: String,
-      n: Int,
-      broadcastBench: Boolean = true
+      n: Int
   ): DataFrame = {
     val dSh = docs.select(col(idCol).as("doc_id"),
       explode(DedupOps.hashedShingleSet(col(textCol), n)).as("h"))
-    val bSh0 = bench.select(col(benchIdCol).as("bench_id"),
+    val bSh = bench.select(col(benchIdCol).as("bench_id"),
       explode(DedupOps.hashedShingleSet(col(benchTextCol), n)).as("h"))
-    val bSh = if (broadcastBench) broadcast(bSh0) else bSh0
-    dSh.join(bSh, "h")
+    dSh.join(broadcast(bSh), "h")
       .groupBy("bench_id")
       .agg(countDistinct(col("doc_id")).as("n_contaminating_docs"),
         countDistinct(col("h")).as("n_shared_grams"))
@@ -91,20 +87,17 @@ object DecontamOps {
       benchTextCol: String,
       benchIdCol: String,
       n: Int,
-      minOverlap: Double,
-      broadcastBench: Boolean = true
+      minOverlap: Double
   ): DataFrame = {
     val dSh = docs.select(col(idCol).as("doc_id"),
       explode(DedupOps.hashedShingleSet(col(textCol), n)).as("h"))
-    val bSh0 = bench.select(col(benchIdCol).as("bench_id"),
+    val bSh = bench.select(col(benchIdCol).as("bench_id"),
       explode(DedupOps.hashedShingleSet(col(benchTextCol), n)).as("h"))
-    val bSh = if (broadcastBench) broadcast(bSh0) else bSh0
-    val bN0 = bSh0.groupBy("bench_id").agg(count(lit(1)).as("bench_n"))
-    val bN = if (broadcastBench) broadcast(bN0) else bN0
-    dSh.join(bSh, "h")
+    val bN = bSh.groupBy("bench_id").agg(count(lit(1)).as("bench_n"))
+    dSh.join(broadcast(bSh), "h")
       .groupBy("doc_id", "bench_id")
       .agg(count(lit(1)).as("n_shared"))
-      .join(bN, "bench_id")
+      .join(broadcast(bN), "bench_id")
       .filter(col("n_shared").cast("double") / col("bench_n") >= minOverlap)
       .select(col("doc_id"), col("bench_id"), col("n_shared"), col("bench_n"),
         round(col("n_shared").cast("double") / col("bench_n"), 4).as("overlap"))

@@ -335,13 +335,11 @@ object DedupOps {
     * content n-grams. Same bucket-pair machinery as MinHash (overflow
     * path, no self-join over the shingle scan).
     */
-  /** @param materializeSignatures checkpoint the (id, shingles) table so
-    *        the blocking explode and the two verify joins read it once
-    *        instead of re-running tokenize→shingle three times (the
-    *        bucket-table lesson: differently-pruned consumers defeat
-    *        ReuseExchange). Storage ∝ corpus shingle mass — right on a
-    *        single node and most clusters; flip off when recompute is
-    *        cheaper than materializing (storage-starved executors). */
+  /** The (id, shingles) table is checkpointed so the blocking explode
+    * and the two verify joins read it once instead of re-running
+    * tokenize→shingle three times (the bucket-table lesson:
+    * differently-pruned consumers defeat ReuseExchange). Storage ∝
+    * corpus shingle mass. */
   def containmentPairs(
       df: DataFrame,
       textCol: String,
@@ -349,16 +347,15 @@ object DedupOps {
       threshold: Double,
       shingleSize: Int = 3,
       maxDf: Int = 20,
-      maxBucketSize: Int = 64,
-      materializeSignatures: Boolean = true
+      maxBucketSize: Int = 64
   ): DataFrame = {
     // EAGER (r15): three consumers (the shingle explode + both verify
     // attach sides) launch concurrent stages — the lazy pin raced its
     // own first materialization and re-ran the shingle scan per
     // consumer (profiled: the raw scan appeared twice at sf0.1); the
     // eager pin also gives the planner real sizes for the attach sides
-    val docs0 = df.select(col(idCol).as("id"), hashedShingleSet(col(textCol), shingleSize).as("sh"))
-    val docs = if (materializeSignatures) docs0.transform(Ckpt.eagerCkpt) else docs0
+    val docs = df.select(col(idCol).as("id"), hashedShingleSet(col(textCol), shingleSize).as("sh"))
+      .transform(Ckpt.eagerCkpt)
     val sh = docs.select(col("id"), explode(col("sh")).as("h"))
     // per-shingle df via two-level groupBy — map-side partial aggregation
     // bounds a hot boilerplate shingle to one row per map partition. (The

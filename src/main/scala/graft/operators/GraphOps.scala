@@ -432,6 +432,9 @@ object GraphOps {
     * fine to k ~ 10⁹; the outer Louvain loop coarsens long before
     * that). Deterministic tie-break (max gain_num, then min candidate
     * id); a node moves only on gain_num > 0, else keeps its own id.
+    * Precondition: node ids are ≥ 0 and never `Long.MinValue` — the
+    * min-id tie-break is encoded as max(−j), and −Long.MinValue overflows
+    * to itself. Remap full-range (e.g. xxhash64) ids first.
     * Returns (node, k, community, best_gain_num, moved). Scale: m and
     * the degrees are edge aggregates, the per-node argmax a partial-
     * aggregating max(struct) over each node's neighbor list — two

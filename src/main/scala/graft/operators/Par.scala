@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Parallelism-starvation spread, shared by SparkEntry's TP and the
+/** Parallelism-starvation spread, shared by `queries.Inputs.TP` and the
   * operator library (r14): the testdata tables are ONE single-row-group
   * parquet file, so every scan is one task and all map-side work above
   * it — decimal-moment batteries, md5 expansions, percentile buffers —

@@ -936,22 +936,25 @@ object SimilarityOps {
       vecCol: String,
       nCells: Int,
       tau: Double,
-      iters: Int = 4
+      iters: Int = 4,
+      cellCap: Int = 4096,
+      cellSplits: Int = 16
   ): DataFrame =
-    pruneCells(semanticCells(vectors, idCol, vecCol, nCells, iters), tau)
+    pruneCells(semanticCells(vectors, idCol, vecCol, nCells, iters), tau, cellCap, cellSplits)
 
   /** The within-cell prune core of [[semanticDedup]] — split out so the
     * scale probe can pin the shuffle-bearing machinery under its own
     * (constant-width) cell assignment. Input: (id, cell, cent_sim, unit)
     * rows; output: the survivors (id, cell, cent_sim). */
-  private[graft] def pruneCells(cells: DataFrame, tau: Double): DataFrame = {
+  private[graft] def pruneCells(cells: DataFrame, tau: Double,
+      cellCap: Int = 4096, cellSplits: Int = 16): DataFrame = {
     // lazy localCheckpoint so the corpus-wide unit-vector assignment
     // executes ONCE: cellDrops' eager oversized-cell detection, the
     // anti-join's left side, and the pair generation all read the same
     // materialized blocks (the probe path checkpoints `rem` for exactly
     // this fan-out; the batch entry point was the one missing it)
     val c = cells.transform(Ckpt.lazyCkpt)
-    c.join(cellDrops(c, tau), Seq("id"), "left_anti")
+    c.join(cellDrops(c, tau, cellCap, cellSplits), Seq("id"), "left_anti")
       .select(col("id"), col("cell"), col("cent_sim"))
   }
 
@@ -963,21 +966,19 @@ object SimilarityOps {
     * quadratic is SemDeDup's contract, but a degenerate embedding
     * distribution (k-means collapse — e.g. mostly-zero vectors landing in
     * one cell) concentrates the whole m² on ONE join key, i.e. one task.
-    * Cells above `spark.graft.semdedup.cellCap` (default 4096) are
+    * Cells above `cellCap` rows (default 4096) are
     * therefore SUB-BANDED: each row gets a deterministic chunk
     * c = xxhash64(id) mod k, the left side replicates over all right
     * chunks and vice versa, and the join key becomes (cell, ca, cb) — the
     * identical pair set, spread over k² independent tasks (the
     * both-sides-replication skew split, `allBucketPairs`' overflow spirit
-    * applied to a keyed self-join). k = `spark.graft.semdedup.cellSplits`
+    * applied to a keyed self-join). k = `cellSplits`
     * (default 16) bounds replication at k× on the oversized slice only.
     * Results are bit-identical to the unguarded join (pair set equality —
     * each unordered pair meets in exactly one (chunk(a), chunk(b)) task).
     */
-  private[graft] def cellDrops(cells: DataFrame, tau: Double): DataFrame = {
-    val conf = cells.sparkSession.conf
-    val cellCap = conf.get("spark.graft.semdedup.cellCap", "4096").toInt
-    val splits = conf.get("spark.graft.semdedup.cellSplits", "16").toInt
+  private[graft] def cellDrops(cells: DataFrame, tau: Double,
+      cellCap: Int = 4096, cellSplits: Int = 16): DataFrame = {
     def aSide(df: DataFrame) = df.select(
       col("cell"), col("id").as("a_id"), col("unit").as("a_vec"), col("cent_sim").as("a_cs"))
     def bSide(df: DataFrame) = df.select(
@@ -1010,12 +1011,12 @@ object SimilarityOps {
       // self-join — round-9 verdict item 2).
       val ok = cells.filter(!col("cell").isin(oversized.map(Int.box): _*))
       val big = cells.filter(col("cell").isin(oversized.map(Int.box): _*))
-      val chunks = sequence(lit(0), lit(splits - 1))
+      val chunks = sequence(lit(0), lit(cellSplits - 1))
       val bigA = aSide(big)
-        .withColumn("ca", pmod(xxhash64(col("a_id")), lit(splits)))
+        .withColumn("ca", pmod(xxhash64(col("a_id")), lit(cellSplits)))
         .withColumn("cb", explode(chunks))
       val bigB = bSide(big)
-        .withColumn("cb", pmod(xxhash64(col("b_id")), lit(splits)))
+        .withColumn("cb", pmod(xxhash64(col("b_id")), lit(cellSplits)))
         .withColumn("ca", explode(chunks))
       prune(aSide(ok).join(bSide(ok), Seq("cell")))
         .unionByName(prune(bigA.join(bigB, Seq("cell", "ca", "cb"))))

@@ -4,7 +4,7 @@ import graft.pipeline.Uris.ParsedUri
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.UnsupportedSourceInEnv.isMissingClass
+import graft.sources.UnsupportedSourceInEnv.guard
 
 /** A readable pipeline endpoint. Implementations build *declarative* plans
   * (spark.read / readStream) so Catalyst keeps pushdown and pruning.
@@ -38,6 +38,12 @@ object UnsupportedSourceInEnv {
       case _: ClassNotFoundException | _: NoClassDefFoundError => true
       case t => Option(t.getMessage).exists(m => m.contains("Failed to find") || m.contains("DATA_SOURCE_NOT_FOUND"))
     }
+
+  /** Runs `body`; a missing-connector failure is rewrapped as
+    * [[UnsupportedSourceInEnv]] for `scheme`, any other failure propagates. */
+  def guard[A](scheme: String)(body: => A): A =
+    try body
+    catch { case scala.util.control.NonFatal(e) if isMissingClass(e) => throw new UnsupportedSourceInEnv(scheme, e) }
 }
 
 /** Shared write-side flatten: top-level complex columns become JSON
@@ -157,12 +163,8 @@ class FileFormatProvider(format: String, val schemes: Seq[String], guarded: Bool
     if (!guarded) inner
     else
       new DfSource with DfSink {
-        override def read(): DataFrame =
-          try inner.read()
-          catch { case scala.util.control.NonFatal(e) if isMissingClass(e) => throw new UnsupportedSourceInEnv(uri.scheme, e) }
-        override def write(df: DataFrame): Boolean =
-          try inner.write(df)
-          catch { case scala.util.control.NonFatal(e) if isMissingClass(e) => throw new UnsupportedSourceInEnv(uri.scheme, e) }
+        override def read(): DataFrame = guard(uri.scheme)(inner.read())
+        override def write(df: DataFrame): Boolean = guard(uri.scheme)(inner.write(df))
       }
   }
 }
@@ -302,7 +304,7 @@ object CatalogProvider extends SchemeProvider {
   * standard `kafka` format read/write wrapped in a serde
   * (ref KafkaDataFrameSource.scala:1-60). The connector jar is absent in
   * this container, so read()/write() surface UnsupportedSourceInEnv —
-  * unless `embedded=true` (or conf `spark.graft.kafka.embedded=true`)
+  * unless `embedded=true`
   * routes the topic to [[EmbeddedTopicLog]], the file-backed partitioned
   * offset log that exercises append/offset/consumer-replay semantics
   * in-container (the EmbeddedCommitLog posture applied to kafka; the
@@ -324,9 +326,7 @@ object KafkaProvider extends SchemeProvider {
       "checkpointLocation")
     val extra = uri.queryParams -- ("serde" +: embeddedKeys)
     val isStream = uri.scheme == "kafka-stream"
-    def useEmbedded: Boolean =
-      uri.queryParams.get("embedded").contains("true") ||
-        spark.conf.getOption("spark.graft.kafka.embedded").contains("true")
+    def useEmbedded: Boolean = uri.queryParams.get("embedded").contains("true")
     def topicDir: String = uri.queryParams.getOrElse("dir",
       java.nio.file.Paths.get(
         System.getProperty("java.io.tmpdir"), "graft_kafka", topic).toString)
@@ -341,7 +341,7 @@ object KafkaProvider extends SchemeProvider {
                   .map("maxFilesPerTrigger" -> _).toMap)
             else EmbeddedTopicLog.read(spark, topicDir)
           serde.deserialize(base)
-        } else try {
+        } else guard(uri.scheme) {
           val base =
             if (isStream)
               spark.readStream.format("kafka").option("kafka.bootstrap.servers", broker)
@@ -350,9 +350,6 @@ object KafkaProvider extends SchemeProvider {
               spark.read.format("kafka").option("kafka.bootstrap.servers", broker)
                 .option("subscribe", topic).options(extra).load()
           serde.deserialize(base)
-        } catch {
-          case scala.util.control.NonFatal(e) if isMissingClass(e) =>
-            throw new UnsupportedSourceInEnv(uri.scheme, e)
         }
       override def write(df: DataFrame): Boolean =
         if (useEmbedded) {
@@ -373,14 +370,11 @@ object KafkaProvider extends SchemeProvider {
             q.awaitTermination()
           } else EmbeddedTopicLog.append(ser, topicDir, topic, nPartitions)
           true
-        } else try {
+        } else guard(uri.scheme) {
           serde.serialize(df).write.format("kafka")
             .option("kafka.bootstrap.servers", broker).option("topic", topic)
             .options(extra).save()
           true
-        } catch {
-          case scala.util.control.NonFatal(e) if isMissingClass(e) =>
-            throw new UnsupportedSourceInEnv(uri.scheme, e)
         }
     }
   }
@@ -389,8 +383,8 @@ object KafkaProvider extends SchemeProvider {
 /** delta:///path — plans against the `delta` format with the session confs
   * the connector needs (ref delta/src/main/scala/dev/mauch/dfio/DeltaUriParser.scala:55-66);
   * jar absent here → UnsupportedSourceInEnv at I/O time, UNLESS the URI
-  * opts into the embedded commit-log backend (`embedded=true`, or conf
-  * `spark.graft.delta.embedded=true`): [[EmbeddedCommitLog]] then
+  * opts into the embedded commit-log backend (`embedded=true`):
+  * [[EmbeddedCommitLog]] then
   * exercises the scheme's transaction-log semantics — atomic
   * append/overwrite commits, optimistic version races, snapshot reads,
   * `versionAsOf=N` time travel — against a minimal file-backed log
@@ -413,27 +407,20 @@ object DeltaProvider extends SchemeProvider {
   override def apply(uri: ParsedUri): SparkSession => DfSource with DfSink = { spark =>
     val inner = new FormatEndpoint(
       spark, "delta", uri.path, uri.queryParams, isStream = uri.scheme.endsWith("-stream"))
-    def embeddedOptIn: Boolean =
-      uri.queryParams.get("embedded").contains("true") ||
-        spark.conf.getOption("spark.graft.delta.embedded").contains("true")
-    def useEmbedded: Boolean =
-      !deltaJarPresent && !uri.scheme.endsWith("-stream") && embeddedOptIn
+    def useEmbedded: Boolean = !deltaJarPresent && !uri.scheme.endsWith("-stream") &&
+      uri.queryParams.get("embedded").contains("true")
     new DfSource with DfSink {
       override def read(): DataFrame =
         if (useEmbedded)
           EmbeddedCommitLog.read(spark, uri.path,
             uri.queryParams.get("versionAsOf").map(_.toInt))
-        else
-          try inner.read()
-          catch { case scala.util.control.NonFatal(e) if isMissingClass(e) => throw new UnsupportedSourceInEnv(uri.scheme, e) }
+        else guard(uri.scheme)(inner.read())
       override def write(df: DataFrame): Boolean =
         if (useEmbedded) {
           EmbeddedCommitLog.write(df, uri.path,
             overwrite = !uri.queryParams.get("mode").contains("append"))
           true
-        } else
-          try inner.write(df)
-          catch { case scala.util.control.NonFatal(e) if isMissingClass(e) => throw new UnsupportedSourceInEnv(uri.scheme, e) }
+        } else guard(uri.scheme)(inner.write(df))
     }
   }
 }
@@ -451,12 +438,9 @@ object ExcelProvider extends SchemeProvider {
       spark, "com.crealytics.spark.excel", uri.path,
       Map("inferSchema" -> "true", "header" -> "true") ++ uri.queryParams, isStream = false)
     new DfSource with DfSink {
-      override def read(): DataFrame =
-        try inner.read()
-        catch { case e: Throwable => throw new UnsupportedSourceInEnv(uri.scheme, e) }
+      override def read(): DataFrame = guard(uri.scheme)(inner.read())
       override def write(df: DataFrame): Boolean =
-        try inner.write(WriteFlatten.jsonFlatten(df).coalesce(1))
-        catch { case e: Throwable => throw new UnsupportedSourceInEnv(uri.scheme, e) }
+        guard(uri.scheme)(inner.write(WriteFlatten.jsonFlatten(df).coalesce(1)))
     }
   }
 }

@@ -54,4 +54,14 @@ class GraphPathsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 0L, 2L -> 3L))
   }
+
+  test("louvainSweep: a tied gain moves to the smaller candidate id, including id 0") {
+    // star 0 - 1 - 2, unit weights: m = 2, k = (1, 2, 1). Node 1 gains
+    // 2m·1 − 2·1 = 2 toward BOTH leaves, so the tie-break decides; the
+    // leaves each gain 2m·1 − 1·2 = 2 toward node 1.
+    val got = GraphOps.louvainSweep(Seq((0L, 1L, 1L), (1L, 2L, 1L)).toDF("a", "b", "w"))
+      .select("node", "community", "best_gain_num").as[(Long, Long, Long)].collect()
+      .map { case (n, c, g) => n -> (c, g) }.toMap
+    assert(got == Map(0L -> (1L, 2L), 1L -> (0L, 2L), 2L -> (1L, 2L)))
+  }
 }

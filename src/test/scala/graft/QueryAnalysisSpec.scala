@@ -53,4 +53,11 @@ class QueryAnalysisSpec extends SparkSpec {
     val orphaned = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet -- auxDumps
     assert(orphaned.isEmpty, s"oracles without a query: ${orphaned.toSeq.sorted.mkString(", ")}")
   }
+
+  test("the query union throws on a name declared twice") {
+    val q: graft.queries.Inputs.Query = (s, _) => s.emptyDataFrame
+    assert(SparkEntry.union(Seq("a" -> q), Seq("b" -> q)).keySet == Set("a", "b"))
+    val e = intercept[IllegalStateException](SparkEntry.union(Seq("a" -> q, "b" -> q), Seq("b" -> q)))
+    assert(e.getMessage.endsWith(": b"))
+  }
 }

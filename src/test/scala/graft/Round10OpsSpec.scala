@@ -18,20 +18,16 @@ class Round10OpsSpec extends SparkSpec {
       (id + 1000, v.zipWithIndex.map { case (x, j) => x + 0.05 * v((j + 1) % dim) })
     }
     val df = (base ++ copies).toDF("id", "vec").repartition(3)
-    def survivors() = SimilarityOps.semanticDedup(df, "id", "vec", nCells = 1, tau = 0.99)
-      .collect().map(_.getLong(0)).sorted.toSeq
+    def survivors(cellCap: Int = 4096, cellSplits: Int = 16) =
+      SimilarityOps.semanticDedup(df, "id", "vec", nCells = 1, tau = 0.99,
+        cellCap = cellCap, cellSplits = cellSplits)
+        .collect().map(_.getLong(0)).sorted.toSeq
     // default cap (4096): 60 rows stay under it → the plain-self-join path
     val unguarded = survivors()
     assert(unguarded.nonEmpty && unguarded.size < 60, "some but not all rows must prune")
     // force the 60-row cell over an 8-row cap → the sub-banded overflow
     // path (xxhash64-chunk grid join) must yield the IDENTICAL survivors
-    spark.conf.set("spark.graft.semdedup.cellCap", "8")
-    spark.conf.set("spark.graft.semdedup.cellSplits", "4")
-    try assert(survivors() == unguarded)
-    finally {
-      spark.conf.unset("spark.graft.semdedup.cellCap")
-      spark.conf.unset("spark.graft.semdedup.cellSplits")
-    }
+    assert(survivors(cellCap = 8, cellSplits = 4) == unguarded)
   }
 
   test("rebuildSemDedupIndex: retrain catches the cross-cell dup the frozen geometry missed") {

@@ -58,6 +58,14 @@ class SourcesSpec extends SparkSpec {
     assert(ok)
   }
 
+  test("excel scheme raises UnsupportedSourceInEnv when the connector jar is absent") {
+    assume(scala.util.Try(Class.forName("com.crealytics.spark.excel.DefaultSource")).isFailure,
+      "the spark-excel connector is on this classpath")
+    val (p, _) = Pipeline.fromArgs(Seq("--source", s"excel://${tmp("excel")}/t.xlsx"))
+    val e = intercept[UnsupportedSourceInEnv](p.resultView(spark, "source"))
+    assert(e.getMessage.contains("excel"))
+  }
+
   test("malformed JSON: PERMISSIVE keeps rows with a corrupt-record column, FAILFAST throws") {
     val dir = java.nio.file.Files.createTempDirectory("graft-corrupt").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/data.json"),
