@@ -122,6 +122,15 @@ object ScaleProbe {
         CorpusOps.bm25TopK(synthDocs(rows), "id", "text",
           Seq("w1", "w2", "w3"), k = 50).count()
       },
+      "exact_sum" -> { rows =>
+        // q1's aggregate shape: exact decimal sums of doubles into few
+        // groups — per-row cost is ExactSum's long fast path, so it must
+        // stay flat (collected, so the sums are not pruned away)
+        synth(rows).groupBy("bucket")
+          .agg(graft.queries.Inputs.dsum(col("value"), 2).as("s2"),
+            graft.queries.Inputs.dsum(col("value") * 1.07, 6).as("s6"))
+          .collect().length.toLong
+      },
       "dup_span_stats_hot" -> { rows =>
         // 90% of docs share one boilerplate prefix: per-row throughput must
         // stay near the uniform dup_span_stats case (the count-window shape
@@ -851,7 +860,7 @@ object ScaleProbe {
         s / sec / 1e6 // M rows/sec
       }
       val ratio = rates.last / rates.head
-      println(f"$name%-22s ${rates.map(r => f"$r%8.1f M/s").mkString("  ")}  (10x ratio ${ratio}%.2f)")
+      println(f"$name%-22s ${rates.map(r => f"$r%8.3f M/s").mkString("  ")}  (10x ratio ${ratio}%.2f)")
       (name, rates, ratio)
     }
     // contrast_ probes exist to DOCUMENT a bad shape's number — they are

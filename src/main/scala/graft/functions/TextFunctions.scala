@@ -32,6 +32,13 @@ object TextFunctions {
   /** Whitespace tokens of the normalized text; empty text → empty array. */
   def tokens(c: Column): Column = tokensFromNorm(normText(c))
 
+  /** [[tokens]] without empty tokens and stopwords, in order and with
+    * repeats: the content stream `CorpusOps.docTermCounts` counts. */
+  def contentTokens(c: Column): Column = {
+    val stops = allStopwords
+    filter(tokens(c), t => t =!= "" && !t.isin(stops: _*))
+  }
+
   /** HTML/markup cleanup for crawled text: strip tags, decode the common
     * entities, straighten curly quotes/dashes, collapse whitespace.
     * Entity order matters — `&amp;` is decoded LAST so `&amp;lt;` yields

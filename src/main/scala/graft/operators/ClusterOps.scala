@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.ExactSum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -147,8 +148,7 @@ object ClusterOps {
             greatest(col("b.d1"), col("b.d2")), 6)).as("s"))
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("n_members"),
-        round(sum(col("s").cast("decimal(18,6)")).cast("decimal(38,6)").cast("double")
-          / count(lit(1)), 6).as("mean_silhouette"))
+        round(ExactSum(col("s"), 6).cast("double") / count(lit(1)), 6).as("mean_silhouette"))
       .orderBy("cluster_id")
   }
 

@@ -771,10 +771,14 @@ object CorpusOps {
     * rounded to 4 decimals and summed as DECIMAL so the per-document
     * score is independent of summation order — replay-stable.
     *
-    * Scale: the term scan filters to query terms BEFORE any shuffle (the
-    * isin pushes into the scan-side aggregation), df and corpus totals
-    * are tiny broadcast frames, and the only per-doc state is the doc
-    * length table, met with an unhinted equi-join on the id. Top-k is a
+    * Scale: each row is tokenized once; its content tokens give the
+    * document length and the query-term occurrences in one staged select,
+    * and one hash aggregate on the id turns those into one row per id
+    * (length, one tf per query term). No (doc, token) table of the full
+    * vocabulary is built or shuffled. df and the corpus length total come
+    * from a one-row aggregate over that per-id frame, N from a row count
+    * of `docs`; both ride broadcast. An id on several rows gets its tf,
+    * length and df summed over its rows, and N counts rows. Top-k is a
     * global orderBy+limit — TakeOrderedAndProject, a per-partition heap
     * plus a driver merge of k rows, no global sort.
     */
@@ -788,23 +792,36 @@ object CorpusOps {
       b: Double = 0.75
   ): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopK needs at least one query term")
-    val terms = docTermCounts(docs, idCol, textCol)
-    val dl = terms.groupBy(col(idCol)).agg(sum("tf").as("__dl"))
-    val q = terms.filter(col("token").isin(queryTerms: _*))
-    val dfTable = q.groupBy("token").agg(count(lit(1)).as("__df"))
-    val totals = terms.agg(sum("tf").cast("double").as("__tot"))
-      .crossJoin(docs.agg(count(lit(1)).as("__n")))
-    val contrib =
-      ((col("__n").cast("double") - col("__df") + lit(0.5)) / (col("__df") + lit(0.5))) *
-        ((col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / (col("__tot") / col("__n")))))
-    q.join(broadcast(dfTable), "token")
-      .crossJoin(broadcast(totals))
-      .join(dl, Seq(idCol))
+    val terms = queryTerms.distinct
+    val tf = terms.indices.map(i => col(s"__tf$i"))
+    val perId = docs
+      .select(col(idCol), TextFunctions.contentTokens(col(textCol)).as("__ct"))
+      .select(col(idCol), array_size(col("__ct")).as("__dl"),
+        filter(col("__ct"), _.isin(terms: _*)).as("__qt"))
       .groupBy(col(idCol))
-      .agg(
-        count(lit(1)).as("n_terms"),
-        sum(round(contrib, 4).cast("decimal(18,4)")).cast("decimal(38,4)").cast("double").as("score"))
+      .agg(sum("__dl").as("__dl"), terms.zipWithIndex.map { case (t, i) =>
+        sum(array_size(filter(col("__qt"), _ === t))).as(s"__tf$i")
+      }: _*)
+    val totals = perId
+      .agg(sum("__dl").cast("double").as("__tot"),
+        tf.zipWithIndex.map { case (c, i) => count(when(c > 0, lit(1))).as(s"__df$i") }: _*)
+      .crossJoin(docs.agg(count(lit(1)).as("__n")))
+    def contrib(tf: Column, df: Column): Column =
+      ((col("__n").cast("double") - df + lit(0.5)) / (df + lit(0.5))) *
+        ((tf * lit(k1 + 1.0)) /
+          (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / (col("__tot") / col("__n")))))
+    val matched = tf.map(_ > 0)
+    // per-term contributions rounded to 4 places and added as DECIMAL:
+    // an exact sum, so the score does not depend on the term order
+    val score = terms.indices.map { i =>
+      when(matched(i), round(contrib(tf(i), col(s"__df$i")), 4).cast("decimal(18,4)"))
+        .otherwise(lit(0).cast("decimal(18,4)"))
+    }.reduce(_ + _)
+    perId.filter(matched.reduce(_ || _))
+      .crossJoin(broadcast(totals))
+      .select(col(idCol),
+        matched.map(m => when(m, 1L).otherwise(0L)).reduce(_ + _).as("n_terms"),
+        score.cast("double").as("score"))
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
   }

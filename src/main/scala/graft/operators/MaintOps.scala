@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.ExactSum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,7 @@ object MaintOps {
     delta.groupBy(keys.map(col): _*)
       .agg(
         count(lit(1)).as("cnt"),
-        sum(col(valCol).cast("decimal(18,6)")).cast("decimal(38,6)").as("sum_v"),
+        ExactSum(col(valCol), 6).as("sum_v"),
         min(col(valCol)).as("min_v"),
         max(col(valCol)).as("max_v"))
 

@@ -1289,8 +1289,7 @@ object Data {
       val g = pmod(col("o_orderkey"), lit(2))
       val cents = (col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
       def dmean(side: Int, num: Column, n: Column) = round(
-        sum(when(g === side, num).otherwise(lit(null)).cast("decimal(18,0)"))
-          .cast("decimal(38,0)").cast("double") / n / 100.0, 6)
+        dsum(when(g === side, num), 0) / n / 100.0, 6)
       val cols = Seq(
         ("o_totalprice", Some(cents)),
         ("o_custkey", Some(col("o_custkey").cast("bigint") * 100)),

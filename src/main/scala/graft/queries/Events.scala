@@ -854,8 +854,7 @@ object Events {
       // is calendar-sized
       val daily = EV(s, d)
         .groupBy(col("event_type"), eventDay.as("day"))
-        .agg(sum(col("value").cast("decimal(18,2)")).cast("decimal(38,2)")
-          .cast("double").as("tot"))
+        .agg(dsum(col("value"), 2).as("tot"))
         .transform(Ckpt.lazyCkpt) // both pair sides read it
       val nxt = daily.select(col("event_type").as("et2"),
         (col("day") - 1).as("day2"), col("tot").as("tot_next"))

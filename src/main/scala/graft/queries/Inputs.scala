@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.{ExactSum, TextFunctions, VectorFunctions}
 import graft.operators._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -91,9 +91,18 @@ object Inputs {
     * the decimal→double conversion is correctly rounded and deterministic
     * in both Spark (BigDecimal.doubleValue) and DuckDB, so hashes agree,
     * whereas DECIMAL output canonicalizes differently between a Spark
-    * parquet dump and a DuckDB result (round-1 driver hash failures). */
-  def dsum(term: Column, scale: Int): Column =
-    sum(term.cast(s"decimal(18,$scale)")).cast(s"decimal(38,$scale)").cast("double")
+    * parquet dump and a DuckDB result (the round-1 hash mismatches).
+    *
+    * The sum is [[graft.functions.ExactSum]]: a double term whose scaled
+    * value is below 2⁴⁰ and not within 2⁻¹⁰ of a rounding tie takes a
+    * long fast path; every other row (ties, large values, NaN, ±Inf,
+    * non-double terms) goes through Spark's own cast, so values and ANSI
+    * errors are the cast's (that cast makes NaN and ±Inf null, so they are
+    * skipped). Terms add into a 128-bit long accumulator.
+    * The total's range is DECIMAL(38,s), wider than the DECIMAL(28,s) of
+    * `sum(CAST(term AS DECIMAL(18,s)))`, which threw above it; beyond
+    * DECIMAL(38,s) it throws ARITHMETIC_OVERFLOW. */
+  def dsum(term: Column, scale: Int): Column = ExactSum(term, scale).cast("double")
 
   def revenueTerm: Column = col("l_extendedprice") * (lit(1) - col("l_discount"))
 

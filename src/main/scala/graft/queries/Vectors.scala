@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import graft.functions.VectorFunctions
+import graft.functions.{ExactSum, VectorFunctions}
 import graft.operators._
 import graft.queries.Inputs._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -169,8 +169,7 @@ object Vectors {
       val moments = TP(s, d, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("label", "pos")
-        .agg(sum(col("x").cast("double").cast("decimal(18,9)"))
-               .cast("decimal(18,9)").as("sx"),
+        .agg(ExactSum(col("x").cast("double"), 9).cast("decimal(18,9)").as("sx"),
              count(lit(1)).as("nv"))
         .transform(Ckpt.lazyCkpt) // feeds norms + both pair sides
       val norms = moments.groupBy("label")

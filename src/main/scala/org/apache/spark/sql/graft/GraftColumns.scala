@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryExecutionErrors
 
 /** Bridge between custom Catalyst expressions and the public Column API.
   *
@@ -15,4 +16,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftColumns {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The ARITHMETIC_OVERFLOW error Spark's decimal `sum` raises. */
+  def decimalSumOverflow(): ArithmeticException =
+    QueryExecutionErrors.overflowInSumOfDecimalError(null, "try_sum")
 }

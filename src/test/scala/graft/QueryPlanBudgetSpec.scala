@@ -33,7 +33,8 @@ class QueryPlanBudgetSpec extends SparkSpec {
   // the round-14 red-test flake was exactly this, not a conf race);
   // recording restores the subtree ONCE (+1) = 12.
   private val budgets = Map(
-    "q1_agg" -> 3,            // Par.spread (r14) + agg + final ORDER BY
+    "q1_agg" -> 2,            // agg + final ORDER BY; no spread (ExactSum partials are
+                              // cheap on the 1-task scan)
     "q3_join_topn" -> 1,      // broadcast join (no shuffle) + agg; topN is TakeOrdered
     "q5_multijoin" -> 4,      // 5-table join: nation/region broadcast; the
                               // customer dim side carries NO static hint
@@ -241,8 +242,8 @@ class QueryPlanBudgetSpec extends SparkSpec {
                               // window + ORDER BY across the pair-chain frames
     "data_temperature_mix" -> 3, // source mass agg + 1-row weight total + source-count
                               // windows + ORDER BY sharing the tiny frame's sort
-    "text_retrieval_metrics" -> 14, // bm25 chain (term/dl/df/total aggs + joins) + rel
-                              // scan + level counts + ranked join + fold aggs; small
+    "text_retrieval_metrics" -> 7, // bm25 (per-id agg + one-row totals + doc count) +
+                              // rel scan + level counts + ranked join + fold aggs; small
                               // frames ride broadcast
     "graph_sssp" -> 8,        // lane agg; relax rounds hang off checkpointed frames,
                               // ORDER BY reuses the last round's agg partitioning
