@@ -82,7 +82,4 @@ object GraftExtensions {
       }
     )
   )
-
-  /** Kept for source compatibility with round-1 callers/tests. */
-  val dotFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = functions.head
 }

@@ -219,10 +219,12 @@ object ScaleProbe {
           when(pmod(col("id"), lit(2)) === 0, textOf(pmod(col("id") * 37, lit(rows))))
             .otherwise(textOf(col("id") + 2000000000L)).as("text"))
         val nBuckets = math.max(8, (rows / 125000).toInt)
-        val idx = graft.operators.IncrementalDedupOps.buildIndex(base, "text", "id",
-          "probe_inc_idx", numBuckets = nBuckets, shingleSize = 3, numBands = 8, rowsPerBand = 4)
-        graft.operators.IncrementalDedupOps.probe(batch, "text", "id", idx,
-          threshold = 0.9, shingleSize = 3, numBands = 8, rowsPerBand = 4).count()
+        val I = graft.operators.IncrementalDedupOps
+        val sh = graft.operators.DedupOps.shingleSets(_: DataFrame, "text", "id", 3)
+        val idx = I.buildIndexOf(sh(base).transform(Ckpt.eagerCkpt),
+          "probe_inc_idx", numBuckets = nBuckets, numBands = 8, rowsPerBand = 4)
+        I.probeOf(sh(batch).transform(Ckpt.lazyCkpt), idx,
+          threshold = 0.9, numBands = 8, rowsPerBand = 4).count()
       },
       "shuffle_permutation" -> { rows =>
         // seeded global permutation position assignment: bucket-parallel
@@ -719,10 +721,11 @@ object ScaleProbe {
             concat(runOf(pmod(col("id") * 7, lit(nGroups))), lit(" "), batchTail))
             .otherwise(batchTail).as("text"))
         val nBuckets = math.max(8, (rows / 125000).toInt)
-        val tbl = graft.operators.IncrementalDedupOps.buildWinnowIndex(
-          base, "text", "id", "probe_winc_idx", numBuckets = nBuckets)
-        graft.operators.IncrementalDedupOps.probeWinnowIndex(
-          batch, "text", "id", tbl, minShared = 1).count()
+        val fps = graft.operators.DedupOps.winnowHashes(_: DataFrame, "text", "id", 4, 4)
+        val tbl = "probe_winc_idx_fps"
+        graft.operators.IncrementalDedupOps.buildWinnowIndexOf(fps(base), tbl, numBuckets = nBuckets)
+        graft.operators.IncrementalDedupOps.probeWinnowIndexOf(
+          fps(batch).transform(Ckpt.lazyCkpt), tbl, minShared = 1).count()
       },
       "dsir_fit_score" -> { rows =>
         // DSIR fit+score: two exploded-gram partial aggs (bucket counts,

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BinaryExpression, Expression, If, IsNotNull, IsNull, Literal, Or, ShiftRight}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -27,7 +27,9 @@ import java.math.{BigInteger, BigDecimal => JBigDecimal}
   *
   * Result: DECIMAL(38, s), null for an empty or all-null group (as
   * `sum`). It is exact, so order-independent; a total outside
-  * DECIMAL(38, s) throws ARITHMETIC_OVERFLOW. (The 128-bit accumulator
+  * DECIMAL(38, s) throws ARITHMETIC_OVERFLOW, and a NaN or ±Inf term
+  * throws [[NonFiniteTermException]] (the ANSI cast makes such a term
+  * null, which `sum` would silently skip). (The 128-bit accumulator
   * itself cannot wrap first: each term is below 10¹⁸, so that would need
   * more than 10²⁰ rows.)
   */
@@ -40,6 +42,10 @@ object ExactSum {
       GraftColumns.expression(term.cast(DecimalType(18, scale))))
     GraftColumns.column(ExactDecimalSum(unscaled, scale).toAggregateExpression())
   }
+
+  /** The check behind a floating term the cast made null. */
+  def requireFinite(term: Double): Unit =
+    if (term.isNaN || term.isInfinite) throw new NonFiniteTermException(term)
 
   /** |y| bound of the fast path: a double y = x·10ˢ below 2⁴⁰ is within
     * 2⁻¹² of the decimal the cast rounds (see [[DecimalUnscaled]]). */
@@ -62,6 +68,12 @@ object ExactSum {
     }
 }
 
+/** A NaN or ±Inf term of [[ExactSum]]: it has no DECIMAL value, and
+  * skipping it (what `sum` over the ANSI cast's null does) would report
+  * the sum of the other terms as the group's total. */
+final class NonFiniteTermException(term: Double) extends ArithmeticException(
+  s"graft_exact_sum: term $term has no DECIMAL value; filter or replace NaN and ±Infinity terms first")
+
 /** Unscaled long of `exact` = CAST(child AS DECIMAL(18, s)), with a
   * guarded fast path for a DOUBLE child.
   *
@@ -73,7 +85,8 @@ object ExactSum {
   * `Math.round(y)` is the cast's unscaled value. Every other row (ties
   * and near-ties, |y| ≥ 2⁴⁰, NaN, ±Inf, non-double children) evaluates
   * Spark's own cast, so its value, its null and its ANSI error are the
-  * cast's.
+  * cast's — except that a floating term the cast makes null (NaN, ±Inf)
+  * throws [[NonFiniteTermException]].
   */
 case class DecimalUnscaled(child: Expression, exact: Expression) extends Expression {
 
@@ -83,6 +96,7 @@ case class DecimalUnscaled(child: Expression, exact: Expression) extends Express
   override def prettyName: String = "graft_decimal_unscaled"
 
   private lazy val fast: Boolean = child.dataType == DoubleType
+  private lazy val floating: Boolean = fast || child.dataType == FloatType
   private lazy val pow10: Double =
     java.lang.Double.parseDouble("1e" + exact.dataType.asInstanceOf[DecimalType].scale)
 
@@ -96,21 +110,33 @@ case class DecimalUnscaled(child: Expression, exact: Expression) extends Express
         return math.round(y)
     }
     val d = exact.eval(input)
-    if (d == null) null else d.asInstanceOf[Decimal].toUnscaledLong
+    if (d != null) return d.asInstanceOf[Decimal].toUnscaledLong
+    if (floating) child.eval(input) match {
+      case v: java.lang.Number => ExactSum.requireFinite(v.doubleValue)
+      case _ =>
+    }
+    null
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // own null flag: `ev.isNull` is the literal `false` when not nullable
     val isNull = JavaCode.isNullVariable(ctx.freshName("isNull"))
     val e = exact.genCode(ctx)
-    val slow =
+    // the cast's null for a non-null floating term: NaN or ±Inf
+    // one static call, so the generated method grows by a few bytes only
+    def nonFinite(v: String) = s"graft.functions.ExactSum.requireFinite((double) $v);"
+    def slow(check: Block) =
       code"""
          |${e.code}
          |$isNull = ${e.isNull};
-         |if (!$isNull) { ${ev.value} = ${e.value}.toUnscaledLong(); }
+         |if (!$isNull) { ${ev.value} = ${e.value}.toUnscaledLong(); } else { $check }
        """.stripMargin
     val body = if (!fast) {
-      code"boolean $isNull = true; long ${ev.value} = 0L; $slow"
+      val check = if (!floating) EmptyBlock else {
+        val c = child.genCode(ctx)
+        code"${c.code}\nif (!${c.isNull}) { ${nonFinite(c.value.toString)} }"
+      }
+      code"boolean $isNull = true; long ${ev.value} = 0L; ${slow(check)}"
     } else {
       val x = child.genCode(ctx)
       val y = ctx.freshName("y")
@@ -126,7 +152,7 @@ case class DecimalUnscaled(child: Expression, exact: Expression) extends Express
          |      && java.lang.Math.abs($f - 0.5D) > ${ExactSum.TieGuard}D) {
          |    ${ev.value} = java.lang.Math.round($y);
          |  } else {
-         |    $slow
+         |    ${slow(code"${nonFinite(x.value.toString)}")}
          |  }
          |}
        """.stripMargin

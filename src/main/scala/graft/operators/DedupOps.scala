@@ -74,6 +74,12 @@ object DedupOps {
     when(union === 0, 0d).otherwise(inter / union)
   }
 
+  /** The `(id, sh)` frame every shingle-set consumer reads: the doc id
+    * and its [[hashedShingleSet]]. Pin it when more than one consumer
+    * reads it (pair generation, verify joins, an index build). */
+  def shingleSets(df: DataFrame, textCol: String, idCol: String, shingleSize: Int): DataFrame =
+    df.select(col(idCol).as("id"), hashedShingleSet(col(textCol), shingleSize).as("sh"))
+
   /** Per-doc MinHash signature via the native `MinHashSignature`
     * expression over the hashed shingle set: one map-side projection, NO
     * shuffle and no explode — each doc's k-minima are computed in a tight
@@ -87,7 +93,7 @@ object DedupOps {
     * shape) AND keeps generated code one line. Output: (id, sig).
     */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String, shingleSize: Int, k: Int): DataFrame =
-    df.select(col(idCol).as("id"), hashedShingleSet(col(textCol), shingleSize).as("sh"))
+    shingleSets(df, textCol, idCol, shingleSize)
       .select(col("id"), minhashSigCol(col("sh"), k).as("sig"))
 
   /** Native MinHash signature column over a precomputed array<long> of
@@ -105,6 +111,17 @@ object DedupOps {
     transform(
       sequence(lit(0), lit(numBands - 1)),
       b => xxhash64(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), b))
+
+  /** `docs` (any columns but `sig`, among them the shingle set `sh`)
+    * exploded to one row per band with its `band_key`. The signature is
+    * its own column, so it is computed once per row and not once per band
+    * inside the [[bandKeys]] lambda. The one band-key derivation of the
+    * batch pair path, the persisted index and both probes. */
+  def withBandKeys(docs: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame = {
+    val cols = docs.columns.toSeq.map(col)
+    docs.select(cols :+ minhashSigCol(col("sh"), numBands * rowsPerBand).as("sig"): _*)
+      .select(cols :+ explode(bandKeys(col("sig"), numBands, rowsPerBand)).as("band_key"): _*)
+  }
 
   /** All (a,b) pairs (a<b by the array sort order) from a collected
     * per-bucket array column — pair generation without a self-join.
@@ -191,12 +208,10 @@ object DedupOps {
       rowsPerBand: Int = 4,
       maxBucketSize: Int = 64
   ): DataFrame =
-    minhashCandidatesOf(
-      df.select(col(idCol).as("id"), hashedShingleSet(col(textCol), shingleSize).as("sh")),
-      numBands, rowsPerBand, maxBucketSize)
+    minhashCandidatesOf(shingleSets(df, textCol, idCol, shingleSize), numBands, rowsPerBand, maxBucketSize)
 
-  /** [[minhashCandidates]] over a PRECOMPUTED `(id, sh)` hashed-shingle
-    * frame — the shared-signature entry (r15): composite incremental
+  /** [[minhashCandidates]] over a PRECOMPUTED [[shingleSets]] frame —
+    * the shared-signature entry (r15): composite incremental
     * queries shingle the same corpus slice for pair generation, the
     * verify join AND the persisted index build; one pinned signature
     * frame feeds all three instead of re-running the tokenize+hash scan
@@ -208,11 +223,7 @@ object DedupOps {
       rowsPerBand: Int,
       maxBucketSize: Int = 64
   ): DataFrame = {
-    val k = numBands * rowsPerBand
-    val banded = docsSh
-      .select(col("id"), minhashSigCol(col("sh"), k).as("sig"))
-      .select(col("id"), explode(bandKeys(col("sig"), numBands, rowsPerBand)).as("band_key"))
-    val buckets = banded
+    val buckets = withBandKeys(docsSh, numBands, rowsPerBand)
       .groupBy("band_key")
       .agg(sort_array(collect_list(col("id"))).as("ids"))
     allBucketPairs(buckets, Seq("band_key"), "ids", maxBucketSize)
@@ -232,9 +243,7 @@ object DedupOps {
       numBands: Int = 8,
       rowsPerBand: Int = 4
   ): DataFrame =
-    minhashDupPairsOf(
-      df.select(col(idCol).as("id"), hashedShingleSet(col(textCol), shingleSize).as("sh")),
-      threshold, numBands, rowsPerBand)
+    minhashDupPairsOf(shingleSets(df, textCol, idCol, shingleSize), threshold, numBands, rowsPerBand)
 
   /** [[minhashDupPairs]] over a precomputed `(id, sh)` frame — see
     * [[minhashCandidatesOf]]. */
@@ -354,8 +363,7 @@ object DedupOps {
     // own first materialization and re-ran the shingle scan per
     // consumer (profiled: the raw scan appeared twice at sf0.1); the
     // eager pin also gives the planner real sizes for the attach sides
-    val docs = df.select(col(idCol).as("id"), hashedShingleSet(col(textCol), shingleSize).as("sh"))
-      .transform(Ckpt.eagerCkpt)
+    val docs = shingleSets(df, textCol, idCol, shingleSize).transform(Ckpt.eagerCkpt)
     val sh = docs.select(col("id"), explode(col("sh")).as("h"))
     // per-shingle df via two-level groupBy — map-side partial aggregation
     // bounds a hot boilerplate shingle to one row per map partition. (The
@@ -616,8 +624,7 @@ object DedupOps {
       maxBucketSize: Int = 256
   ): DataFrame = {
     val tn = math.round(threshold * 1e6)
-    val docs = df
-      .select(col(idCol).as("id"), hashedShingleSet(col(textCol), shingleSize).as("sh"))
+    val docs = shingleSets(df, textCol, idCol, shingleSize)
       .filter(size(col("sh")) > 0)
       // consumed 3×: prefix generation + both verify sides — EAGER
       // because those consumers' stages launch concurrently; a lazy
@@ -718,6 +725,14 @@ object DedupOps {
       .distinct()
   }
 
+  /** The distinct `(fp_hash, id)` frame of [[winnowFingerprints]]: what
+    * the winnow pair generation, the persisted fingerprint index and its
+    * probe read. Selection is a pure per-document function of the text,
+    * so fingerprinting a batch once serves all three:
+    * hashes(subset) ≡ hashes(all) filtered to the subset's ids. */
+  def winnowHashes(df: DataFrame, textCol: String, idCol: String, k: Int, w: Int): DataFrame =
+    winnowFingerprints(df, textCol, idCol, k, w).select(col("fp_hash"), col("id")).distinct()
+
   /** Shared-passage candidate pairs from winnowing fingerprints: docs
     * sharing ≥ minShared distinct fingerprint HASHES, with the shared
     * count. By the winnowing guarantee, every doc pair sharing a token
@@ -736,15 +751,11 @@ object DedupOps {
       minShared: Int = 2,
       maxBucketSize: Int = 64
   ): DataFrame =
-    winnowDupPairsOf(
-      winnowFingerprints(df, textCol, idCol, k, w).select(col("fp_hash"), col("id")),
-      minShared, maxBucketSize)
+    winnowDupPairsOf(winnowHashes(df, textCol, idCol, k, w), minShared, maxBucketSize)
 
-  /** [[winnowDupPairs]] over a PRECOMPUTED `(fp_hash, id)` fingerprint
-    * frame (r15 shared-fingerprint entry): winnowing selection is a pure
-    * per-document function of the text, so a batch's fingerprints can be
-    * computed once and feed both the index probe and the within-batch
-    * pair generation — fps(subset) ≡ fps(all).filter(id ∈ subset). */
+  /** [[winnowDupPairs]] over a PRECOMPUTED [[winnowHashes]] frame (r15
+    * shared-fingerprint entry): one fingerprint pass of a batch feeds both
+    * the index probe and the within-batch pair generation. */
   def winnowDupPairsOf(
       fps: DataFrame,
       minShared: Int = 2,

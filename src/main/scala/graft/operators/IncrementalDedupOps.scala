@@ -4,70 +4,55 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental near-duplicate detection: a daily NEW BATCH probed against
-  * a PERSISTED MinHash index of the already-kept corpus — the most common
+  * a PERSISTED index of the already-kept corpus — the most common
   * production dedup shape (crawl delta vs 100 TB of base documents),
   * where re-signaturing the base corpus per batch is the cost to kill.
   *
+  * Two index kinds share one contract, each run by ONE step:
+  *  - [[minhashIndexDedup]] (whole-doc MinHash) and [[winnowIndexStep]]
+  *    (shared-passage winnowing fingerprints) derive the batch's
+  *    signatures ONCE — a pinned `(id, sh)` frame ([[DedupOps.shingleSets]])
+  *    or `(fp_hash, id)` frame ([[DedupOps.winnowHashes]]) — and that one
+  *    frame feeds the probe, the batch's self-dedup and the index fold;
+  *  - the index wins: a batch doc that near-dups an indexed doc drops,
+  *    whatever the ids;
+  *  - the rest of the batch dedups itself keeping the min id;
+  *  - the survivors fold into the index for the next batch (the first
+  *    run, with no index yet, builds it from the survivors).
+  * The `dedup` CLI step, the streaming [[winnowIndexDedupSink]] and the
+  * `dedup_winnow_incremental` query all run through these steps.
+  *
   * Scale posture (100 TB base, ~GB-scale daily delta):
-  *  - the base corpus is signatured ONCE, at index-build time; the index
-  *    is two bucketed catalog tables — `<prefix>_bands` (band_key, id)
-  *    bucketed by band_key and `<prefix>_sigs` (id, hashed shingle set)
-  *    bucketed by id — so the daily probe job's band join needs NO
+  *  - the base corpus is signatured ONCE, at index-build time; the MinHash
+  *    index is two bucketed catalog tables — `<prefix>_bands` (band_key,
+  *    id) bucketed by band_key and `<prefix>_sigs` (id, hashed shingle
+  *    set) bucketed by id — so the daily probe job's band join needs NO
   *    Exchange on the index side (the 100 TB side): only the small new
   *    batch shuffles to meet the bucket layout (or broadcasts; AQE picks);
   *  - new×base candidates come from that one band-key join; new×new
   *    candidates reuse the in-bucket pair generation (`allBucketPairs`,
   *    overflow-safe) over the new batch's own band buckets;
   *  - verification joins PRECOMPUTED shingle sets by id (base side from
-  *    the sigs table, new side from one localCheckpointed scan of the
-  *    batch) — the base corpus TEXT is never read again.
+  *    the sigs table, new side from the batch's pinned frame) — the base
+  *    corpus TEXT is never read again.
   *
   * Band parameters are part of the index contract: a probe must use the
   * same (shingleSize, numBands, rowsPerBand) the index was built with —
-  * [[DedupOps.bandKeys]] is shared by both paths so the keys agree.
+  * [[DedupOps.withBandKeys]] is shared by both paths so the keys agree.
   */
 object IncrementalDedupOps {
 
   /** Catalog table names of a persisted MinHash index. */
   final case class IndexTables(bands: String, sigs: String)
 
-  /** Signature one batch of documents: (id, sh) with sh = hashed distinct
-    * shingle set. Shared by index build and probe. */
-  private def signatured(df: DataFrame, textCol: String, idCol: String, shingleSize: Int): DataFrame = {
-    require(idCol != "sh", "incremental dedup: id column may not be named 'sh' (reserved)")
-    df.select(col(idCol).as("id"), DedupOps.hashedShingleSet(col(textCol), shingleSize).as("sh"))
-  }
-
-  /** Build (overwrite) the persisted index for `base`. One pass computes
-    * shingle sets + signatures; two bucketed writes lay out the band table
-    * (by band_key — the probe join key) and the signature table (by id —
-    * the verify join key). `numBuckets` should target per-task sort memory
-    * at the deployment's base-corpus size (see BucketOps scaladoc).
-    */
-  def buildIndex(
-      base: DataFrame,
-      textCol: String,
-      idCol: String,
-      prefix: String,
-      numBuckets: Int,
-      shingleSize: Int = 3,
-      numBands: Int = 8,
-      rowsPerBand: Int = 4
-  ): IndexTables = {
-    // the two writers below (bands, sigs) run CONCURRENTLY and would
-    // each re-run (and race) the shingle scan under a lazy pin — EAGER
-    // materializes the signatured frame once before either starts
-    val docs = signatured(base, textCol, idCol, shingleSize).transform(Ckpt.eagerCkpt)
-    buildIndexOf(docs, prefix, numBuckets, numBands, rowsPerBand)
-  }
-
-  /** [[buildIndex]] over a PRECOMPUTED `(id, sh)` signature frame (r15
-    * shared-signature entry — composite queries that also pair-generate
-    * over the same corpus slice pin the signatures once and feed both).
-    * The two bucketed writes target INDEPENDENT tables over one
-    * materialized frame, so they run concurrently (guide §2.6) instead
-    * of serializing two staged swaps; callers must hand a CHECKPOINTED
-    * frame (both writers race its materialization otherwise).
+  /** Build (overwrite) the persisted MinHash index from an `(id, sh)`
+    * frame. Two bucketed writes lay out the band table (by band_key — the
+    * probe join key) and the signature table (by id — the verify join
+    * key). They target INDEPENDENT tables over one frame, so they run
+    * concurrently (guide §2.6) instead of serializing two staged swaps;
+    * callers hand a frame that is checkpointed or reads only checkpoints
+    * (both writers evaluate it). `numBuckets` should target per-task sort
+    * memory at the deployment's base-corpus size (see BucketOps scaladoc).
     */
   def buildIndexOf(
       docsSh: DataFrame,
@@ -76,69 +61,47 @@ object IncrementalDedupOps {
       numBands: Int,
       rowsPerBand: Int
   ): IndexTables = {
-    val k = numBands * rowsPerBand
-    val bands = docsSh.select(
-      col("id"),
-      explode(DedupOps.bandKeys(DedupOps.minhashSigCol(col("sh"), k), numBands, rowsPerBand))
-        .as("band_key"))
     val t = IndexTables(s"${prefix}_bands", s"${prefix}_sigs")
-    Par.concurrently(
-      BucketOps.writeBucketed(bands.select("band_key", "id"), t.bands, numBuckets,
-        keys = Seq("band_key"), sortKeys = Seq("band_key")),
-      BucketOps.writeBucketed(docsSh, t.sigs, numBuckets, keys = Seq("id"), sortKeys = Seq("id")))
+    writeIndex(docsSh, t, numBuckets, numBands, rowsPerBand, BucketOps.writeBucketed)
     t
   }
 
-  /** Index maintenance — the other half of the daily job: after a batch
-    * is probed and its keepers decided, fold it into the index so
-    * TOMORROW's batch dedups against it too. Same signature pass as the
-    * build; rows append WITH the tables' bucket spec (appendBucketed), so
-    * the probe-side join stays Exchange-free on the index side after any
-    * number of appends. Band parameters must match the original build.
-    */
-  def appendToIndex(
-      batch: DataFrame,
-      textCol: String,
-      idCol: String,
-      index: IndexTables,
-      numBuckets: Int,
-      shingleSize: Int = 3,
-      numBands: Int = 8,
-      rowsPerBand: Int = 4
-  ): Unit = {
-    // EAGER: the two concurrent appends below would race a lazy pin's
-    // first materialization and re-run the batch shingle scan twice
-    val docs = signatured(batch, textCol, idCol, shingleSize).transform(Ckpt.eagerCkpt)
-    appendToIndexOf(docs, index, numBuckets, numBands, rowsPerBand)
-  }
-
-  /** [[appendToIndex]] over a precomputed `(id, sh)` frame — the daily
-    * job's probe and append share one batch signature pass (r15). The
-    * two appends target independent tables, so they run concurrently. */
+  /** Index maintenance: fold an `(id, sh)` frame into the index so the
+    * NEXT batch dedups against it too. Rows append WITH the tables' bucket
+    * spec (appendBucketed), so the probe-side join stays Exchange-free on
+    * the index side after any number of appends. Band parameters must
+    * match the original build; the frame contract is [[buildIndexOf]]'s. */
   def appendToIndexOf(
       docsSh: DataFrame,
       index: IndexTables,
       numBuckets: Int,
       numBands: Int,
       rowsPerBand: Int
+  ): Unit = writeIndex(docsSh, index, numBuckets, numBands, rowsPerBand, BucketOps.appendBucketed)
+
+  private def writeIndex(
+      docsSh: DataFrame,
+      t: IndexTables,
+      numBuckets: Int,
+      numBands: Int,
+      rowsPerBand: Int,
+      write: (DataFrame, String, Int, Seq[String], Seq[String]) => Unit
   ): Unit = {
-    val k = numBands * rowsPerBand
-    val bands = docsSh.select(
-      col("id"),
-      explode(DedupOps.bandKeys(DedupOps.minhashSigCol(col("sh"), k), numBands, rowsPerBand))
-        .as("band_key"))
+    val bands = DedupOps.withBandKeys(docsSh, numBands, rowsPerBand).select("band_key", "id")
     Par.concurrently(
-      BucketOps.appendBucketed(bands.select("band_key", "id"), index.bands, numBuckets,
-        keys = Seq("band_key"), sortKeys = Seq("band_key")),
-      BucketOps.appendBucketed(docsSh, index.sigs, numBuckets, keys = Seq("id"), sortKeys = Seq("id")))
+      write(bands, t.bands, numBuckets, Seq("band_key"), Seq("band_key")),
+      write(docsSh, t.sigs, numBuckets, Seq("id"), Seq("id")))
   }
 
   /** Verified near-dup pairs (a_id < b_id, exact Jaccard ≥ threshold)
-    * between `newBatch` and the indexed base corpus PLUS within the new
-    * batch itself — i.e. every pair involving at least one new document.
-    * Ids must be disjoint from base ids (same-id re-crawls are filtered
-    * from the cross candidates; handle true updates by rebuilding or
-    * compacting the index). Band parameters must match the index build.
+    * between the batch's `(id, sh)` frame `newDocs` and the indexed base
+    * corpus PLUS within the batch itself — i.e. every pair involving at
+    * least one new document. The frame should be checkpointed by the
+    * caller (it feeds band keys + both verify sides + the disjointness
+    * guard). Ids must be disjoint from base ids (same-id re-crawls are
+    * filtered from the cross candidates; handle true updates by
+    * rebuilding or compacting the index). Band parameters must match the
+    * index build.
     *
     * `enforceDisjointIds` (default true) actually checks that contract
     * instead of trusting it: the verify step coalesces the base-table
@@ -150,28 +113,6 @@ object IncrementalDedupOps {
     * upstream gate already guarantees disjointness and the probe is in a
     * latency-critical path.
     */
-  def probe(
-      newBatch: DataFrame,
-      textCol: String,
-      idCol: String,
-      index: IndexTables,
-      threshold: Double,
-      shingleSize: Int = 3,
-      numBands: Int = 8,
-      rowsPerBand: Int = 4,
-      maxBucketSize: Int = 64,
-      enforceDisjointIds: Boolean = true
-  ): DataFrame = {
-    // one scan of the (small) new batch feeds band keys + both verify sides
-    val newDocs = signatured(newBatch, textCol, idCol, shingleSize).transform(Ckpt.lazyCkpt)
-    probeOf(newDocs, index, threshold, numBands, rowsPerBand, maxBucketSize, enforceDisjointIds)
-  }
-
-  /** [[probe]] over a PRECOMPUTED `(id, sh)` signature frame of the new
-    * batch (r15 shared-signature entry): the daily job signatures its
-    * batch once for the probe AND the subsequent index append. The frame
-    * should be checkpointed by the caller (it feeds band keys + both
-    * verify sides + the disjointness guard). */
   def probeOf(
       newDocs: DataFrame,
       index: IndexTables,
@@ -182,7 +123,6 @@ object IncrementalDedupOps {
       enforceDisjointIds: Boolean = true
   ): DataFrame = {
     val spark = newDocs.sparkSession
-    val k = numBands * rowsPerBand
     if (enforceDisjointIds) {
       val overlap = newDocs.select("id")
         .join(spark.table(index.sigs).select("id"), Seq("id"), "left_semi")
@@ -192,10 +132,7 @@ object IncrementalDedupOps {
           s"(e.g. ${sample.mkString(", ")}) — re-crawled ids would be verified against their STALE " +
           "base signatures; rebuild or compact the index, or drop the overlapping ids upstream")
     }
-    val newBands = newDocs.select(
-      col("id"),
-      explode(DedupOps.bandKeys(DedupOps.minhashSigCol(col("sh"), k), numBands, rowsPerBand))
-        .as("band_key"))
+    val newBands = DedupOps.withBandKeys(newDocs, numBands, rowsPerBand).select("id", "band_key")
     // new×base: ONE equi-join on band_key; the index side is bucketed on
     // band_key so its scan plans with no Exchange
     val crossCands = newBands.as("n")
@@ -229,80 +166,85 @@ object IncrementalDedupOps {
       .select(col("a").as("a_id"), col("b").as("b_id"), round(col("jaccard"), 4).as("jaccard"))
   }
 
+  /** One batch through the persisted MinHash index at `prefix` — the
+    * `dedup` CLI step's `method=incremental`. Returns the surviving rows
+    * of `batch`. The batch is shingled once; that pinned `(id, sh)` frame
+    * feeds the probe, the drop rule and the fold:
+    *  - first run (no index yet): verified within-batch pairs drop their
+    *    larger id ([[DedupOps.minhashDropIds]]' keep-min rule);
+    *  - later runs: [[probeOf]] pairs drop their NEW side when the other
+    *    side is indexed (the index wins, whatever the ids), else their
+    *    larger id;
+    *  - with `update`, the survivors' frame is pinned — so no later plan
+    *    reads the index tables the fold writes — and builds the index
+    *    (first run) or is appended to it; without, the index is read only.
+    */
+  def minhashIndexDedup(
+      batch: DataFrame,
+      textCol: String,
+      idCol: String,
+      prefix: String,
+      numBuckets: Int,
+      threshold: Double,
+      shingleSize: Int,
+      numBands: Int,
+      rowsPerBand: Int,
+      update: Boolean
+  ): DataFrame = {
+    val index = IndexTables(s"${prefix}_bands", s"${prefix}_sigs")
+    val indexed = batch.sparkSession.catalog.tableExists(index.bands)
+    // EAGER: feeds the probe's band keys, verify sides and guard (or the
+    // first run's pair generation) AND the fold's two concurrent writes
+    val docsSh = DedupOps.shingleSets(batch, textCol, idCol, shingleSize).transform(Ckpt.eagerCkpt)
+    val pairs =
+      if (indexed) probeOf(docsSh, index, threshold, numBands, rowsPerBand)
+      else DedupOps.minhashDupPairsOf(docsSh, threshold, numBands, rowsPerBand)
+    val newIds = docsSh.select("id")
+    val drops = pairs
+      .join(newIds.select(col("id").as("a_id"), lit(true).as("a_new")), Seq("a_id"), "left")
+      .join(newIds.select(col("id").as("b_id"), lit(true).as("b_new")), Seq("b_id"), "left")
+      .select(
+        when(col("a_new").isNull, col("b_id"))
+          .when(col("b_new").isNull, col("a_id"))
+          .otherwise(col("b_id")).as("drop_id"))
+    val kept = docsSh.join(drops, col("id") === col("drop_id"), "left_anti")
+    val folded = if (!update) kept else {
+      val pinned = kept.transform(Ckpt.eagerCkpt)
+      if (indexed) appendToIndexOf(pinned, index, numBuckets, numBands, rowsPerBand)
+      else buildIndexOf(pinned, prefix, numBuckets, numBands, rowsPerBand)
+      pinned
+    }
+    batch.join(folded.select(col("id").as("__keep_id")), batch(idCol) === col("__keep_id"), "left_semi")
+  }
+
   // ----- incremental winnowing (shared-PASSAGE) index -----
   // The same daily-delta posture applied to winnowing fingerprints
   // ([[DedupOps.winnowFingerprints]]): whole-doc MinHash misses a long
   // license block pasted into otherwise-unique docs; the fingerprint
   // index catches any shared run ≥ w+k−1 tokens against the ENTIRE kept
-  // corpus without re-fingerprinting it. Index = one catalog table
-  // `<prefix>_fps` (fp_hash, id) bucketed by fp_hash, so the probe's
-  // hash join plans with no Exchange on the corpus side. (k, w,
-  // minShared) are part of the index contract, exactly like the MinHash
-  // band parameters.
+  // corpus without re-fingerprinting it. Index = one catalog table of
+  // [[DedupOps.winnowHashes]] rows (fp_hash, id) bucketed by fp_hash, so
+  // the probe's hash join plans with no Exchange on the corpus side.
+  // (k, w, minShared) are part of the index contract, exactly like the
+  // MinHash band parameters.
 
-  /** Fingerprint the base corpus once and persist the bucketed index.
-    * Returns the fps table name. */
-  def buildWinnowIndex(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      prefix: String,
-      numBuckets: Int,
-      k: Int = 4,
-      w: Int = 4
-  ): String = {
-    val fps = DedupOps.winnowFingerprints(df, textCol, idCol, k, w)
-      .select("fp_hash", "id").distinct()
-    BucketOps.writeBucketed(fps, s"${prefix}_fps", numBuckets, Seq("fp_hash"),
-      sortKeys = Seq("fp_hash"))
-    s"${prefix}_fps"
-  }
+  /** Build (overwrite) the fingerprint index table `fpsTable` from a
+    * [[DedupOps.winnowHashes]] frame. */
+  def buildWinnowIndexOf(fps: DataFrame, fpsTable: String, numBuckets: Int): Unit =
+    BucketOps.writeBucketed(fps, fpsTable, numBuckets, Seq("fp_hash"), sortKeys = Seq("fp_hash"))
 
-  /** Fold a batch's fingerprints into the index (bucket-spec-preserving
-    * append — a mismatched spec is rejected loudly by appendBucketed). */
-  def appendToWinnowIndex(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      fpsTable: String,
-      numBuckets: Int,
-      k: Int = 4,
-      w: Int = 4
-  ): Unit = {
-    val fps = DedupOps.winnowFingerprints(df, textCol, idCol, k, w)
-      .select("fp_hash", "id").distinct()
-    BucketOps.appendBucketed(fps, fpsTable, numBuckets, Seq("fp_hash"),
-      sortKeys = Seq("fp_hash"))
-  }
+  /** Fold a [[DedupOps.winnowHashes]] frame into the index
+    * (bucket-spec-preserving append — a mismatched spec is rejected
+    * loudly by appendBucketed). */
+  def appendToWinnowIndexOf(fps: DataFrame, fpsTable: String, numBuckets: Int): Unit =
+    BucketOps.appendBucketed(fps, fpsTable, numBuckets, Seq("fp_hash"), sortKeys = Seq("fp_hash"))
 
-  /** Probe a batch against the persisted fingerprint index: batch docs
-    * sharing ≥ `minShared` distinct selected hashes with an INDEXED doc
-    * (the MOSS link — guaranteed for any shared token run ≥ w+k−1 at
-    * minShared = 1). Returns (idx_id, batch_id, n_shared). The batch's
-    * fingerprints are computed once (checkpointed) and the index side
-    * scans Exchange-free; within-batch pairs are the caller's
-    * [[DedupOps.winnowDupPairs]] over the same batch. */
-  def probeWinnowIndex(
-      batch: DataFrame,
-      textCol: String,
-      idCol: String,
-      fpsTable: String,
-      minShared: Int = 2,
-      k: Int = 4,
-      w: Int = 4
-  ): DataFrame = {
-    val newFps = DedupOps.winnowFingerprints(batch, textCol, idCol, k, w)
-      .select(col("fp_hash"), col("id"))
-      .distinct()
-      .transform(Ckpt.lazyCkpt)
-    probeWinnowIndexOf(newFps, fpsTable, minShared)
-  }
-
-  /** [[probeWinnowIndex]] over a PRECOMPUTED `(fp_hash, id)` fingerprint
-    * frame of the batch (r15 shared-fingerprint entry): winnowing
-    * selection is a pure per-document function, so the daily job
-    * fingerprints its batch once and feeds both this probe and the
-    * within-batch [[DedupOps.winnowDupPairsOf]] pair generation. */
+  /** Probe a batch's [[DedupOps.winnowHashes]] frame against the
+    * persisted fingerprint index: batch docs sharing ≥ `minShared`
+    * distinct selected hashes with an INDEXED doc (the MOSS link —
+    * guaranteed for any shared token run ≥ w+k−1 at minShared = 1).
+    * Returns (idx_id, batch_id, n_shared); the index side scans
+    * Exchange-free. */
   def probeWinnowIndexOf(
       newFps: DataFrame,
       fpsTable: String,
@@ -319,31 +261,97 @@ object IncrementalDedupOps {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** STREAMING winnowing-index dedup + maintenance — the daily-delta
-    * posture of [[buildWinnowIndex]]/[[probeWinnowIndex]] run as a
-    * `foreachBatch` sink (the IVF-maintenance and CDC-apply exactly-once
-    * precedents composed). Each micro-batch:
-    *   1. probes the persisted fingerprint index — batch docs sharing
-    *      ≥ `minShared` selected hashes with an indexed doc drop
-    *      (index wins, the incremental contract);
-    *   2. self-dedups the remainder (within-batch shared-passage pairs →
-    *      keep-min-id components);
-    *   3. lands survivor ROWS in the batch-keyed exactly-once parquet
-    *      layout (`__batch_id=<n>` dynamic-partition overwrite —
-    *      idempotent per batch);
-    *   4. folds survivors' fingerprints into the index under the SAME
-    *      bucket spec (appendBucketed rejects a mismatch loudly), so the
-    *      next batch's probe still plans Exchange-free on the index side.
+  /** One batch through the persisted fingerprint index `fpsTable`.
+    * `ids` holds every batch id in its one column (a doc too short for
+    * one fingerprint has none, and survives); `fps` is the batch's
+    * [[DedupOps.winnowHashes]] frame, checkpointed by the caller — it
+    * feeds the probe, the self-dedup of the remainder and the fold.
+    * Returns `(<ids' column>, verdict)`:
+    *  - `dropped_index`: shares ≥ `minShared` selected hashes with an
+    *    indexed doc (the index wins);
+    *  - `dropped_delta`: linked within the rest of the batch to a smaller
+    *    id (keep-min over connected components, [[DedupOps.applyPairDedup]]);
+    *  - `survived`.
+    * The first run (no table yet) builds the index from the survivors'
+    * fingerprints; later runs append them with `update`. Either fold pins
+    * the verdicts first, so no later plan reads the table it writes.
+    */
+  def winnowIndexStep(
+      ids: DataFrame,
+      fps: DataFrame,
+      fpsTable: String,
+      numBuckets: Int,
+      minShared: Int,
+      update: Boolean
+  ): DataFrame = {
+    val id = ids.columns.head
+    val indexed = fps.sparkSession.catalog.tableExists(fpsTable)
+    val dropIdx =
+      if (indexed)
+        Some(probeWinnowIndexOf(fps, fpsTable, minShared).select(col("batch_id").as(id)).distinct())
+      else None
+    val remFps = dropIdx.fold(fps)(d => fps.join(d, fps("id") === d(id), "left_anti"))
+    val selfPairs = DedupOps.winnowDupPairsOf(remFps, minShared).select("a_id", "b_id")
+    val rem = dropIdx.fold(ids)(d => ids.join(d, Seq(id), "left_anti"))
+    val survivors = DedupOps.applyPairDedup(rem, id, selfPairs).select(id)
+    val verdicts = dropIdx
+      .fold(ids.withColumn("__di", lit(null)))(d => ids.join(d.withColumn("__di", lit(1)), Seq(id), "left"))
+      .join(survivors.withColumn("__sv", lit(1)), Seq(id), "left")
+      .withColumn("verdict",
+        when(col("__di") === 1, lit("dropped_index"))
+          .when(col("__sv") === 1, lit("survived"))
+          .otherwise(lit("dropped_delta")))
+      .select(id, "verdict")
+    if (indexed && !update) verdicts
+    else {
+      val pinned = verdicts.transform(Ckpt.eagerCkpt)
+      val keep = pinned.filter(col("verdict") === "survived").select(col(id).as("__keep_id"))
+      val keptFps = fps.join(keep, col("id") === col("__keep_id"), "left_semi")
+      if (indexed) appendToWinnowIndexOf(keptFps, fpsTable, numBuckets)
+      else buildWinnowIndexOf(keptFps, fpsTable, numBuckets)
+      pinned
+    }
+  }
+
+  /** [[winnowIndexStep]] over a batch of ROWS: fingerprints `batch` once
+    * (eager pin) and returns its surviving rows. The `dedup` CLI step's
+    * `method=winnow&index=` and [[winnowIndexDedupSink]] run this. */
+  def winnowIndexDedup(
+      batch: DataFrame,
+      textCol: String,
+      idCol: String,
+      fpsTable: String,
+      numBuckets: Int,
+      minShared: Int,
+      k: Int,
+      w: Int,
+      update: Boolean
+  ): DataFrame = {
+    val fps = DedupOps.winnowHashes(batch, textCol, idCol, k, w).transform(Ckpt.eagerCkpt)
+    val keep = winnowIndexStep(batch.select(idCol), fps, fpsTable, numBuckets, minShared, update)
+      .filter(col("verdict") === "survived")
+      .select(col(idCol).as("__keep_id"))
+    batch.join(keep, batch(idCol) === col("__keep_id"), "left_semi")
+  }
+
+  /** STREAMING winnowing-index dedup + maintenance — [[winnowIndexDedup]]
+    * run as a `foreachBatch` sink (the IVF-maintenance and CDC-apply
+    * exactly-once precedents composed). Each micro-batch drops docs the
+    * index already covers, self-dedups the rest, folds the survivors'
+    * fingerprints into the index under the SAME bucket spec (the next
+    * batch's probe still plans Exchange-free on the index side), then
+    * lands the survivor ROWS through [[graft.streaming.StreamOps.writeBatchPartition]]
+    * (`__batch_id=<n>` dynamic-partition overwrite — idempotent per batch).
     *
     * Replayed batch ids are complete no-ops (commit marker written after
-    * all writes). The crash window between the fingerprint append and
-    * the marker can leave duplicate (fp_hash, id) rows on a replay; that
-    * only INFLATES later probes' n_shared — over-dropping near-dup
-    * candidates, never letting one through — and the batch-keyed
-    * survivor write stays idempotent regardless (the IVF sink's
-    * at-least-once note, with the failure direction made explicit).
-    * Stream-maintained index ≡ the batch [[appendToWinnowIndex]] chain
-    * over the same deltas — pinned in StreamingSpec.
+    * all writes). A crash after the fold and before the marker replays
+    * the batch against an index that already holds its survivors'
+    * fingerprints: a doc never matches its own id, so the survivors are
+    * the same, and the re-appended (fp_hash, id) rows only INFLATE later
+    * probes' n_shared — over-dropping near-dup candidates, never letting
+    * one through (the IVF sink's at-least-once note, with the failure
+    * direction made explicit). Stream-maintained index ≡ the batch chain
+    * over the same deltas — pinned in Round11OpsSpec.
     */
   def winnowIndexDedupSink(
       fpsTable: String,
@@ -357,22 +365,11 @@ object IncrementalDedupOps {
       w: Int = 4
   ): (DataFrame, Long) => Unit =
     graft.streaming.StreamOps.idempotentForeachBatch(commitDir, { (batch, batchId) =>
-      // eager checkpoint: the micro-batch frame feeds the probe, the
-      // self-dedup pair gen, the survivor write AND the index append —
-      // and the append must not evaluate a plan that still reads the
-      // table being appended to (writeBucketed deadlock contract)
+      // eager checkpoint: the micro-batch frame feeds the fingerprint pin
+      // AND the survivor write
       val stable = batch.transform(Ckpt.eagerCkpt)
-      val dropIdx = probeWinnowIndex(stable, textCol, idCol, fpsTable, minShared, k, w)
-        .select(col("batch_id").as("__drop_id")).distinct()
-      val clean = stable.join(dropIdx, stable(idCol) === col("__drop_id"), "left_anti")
-      val pairs = DedupOps.winnowDupPairs(clean, textCol, idCol, k, w, minShared)
-        .select(col("a_id"), col("b_id"))
-      val kept = DedupOps.applyPairDedup(clean, idCol, pairs).transform(Ckpt.eagerCkpt)
-      kept.withColumn("__batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(outDir)
-      appendToWinnowIndex(kept, textCol, idCol, fpsTable, numBuckets, k, w)
+      graft.streaming.StreamOps.writeBatchPartition(
+        winnowIndexDedup(stable, textCol, idCol, fpsTable, numBuckets, minShared, k, w, update = true),
+        batchId, outDir)
     })
 }

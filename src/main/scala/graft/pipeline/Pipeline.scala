@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.operators.{Ckpt, DiffOps, FlattenOps}
+import graft.operators.{DiffOps, FlattenOps}
 import graft.sources.SourceRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
@@ -114,48 +114,14 @@ object Pipeline {
             // keep-min convention), then fold the survivors into the
             // index for tomorrow's run (update=false probes read-only).
             // First run bootstraps: within-batch dedup + index build.
-            val thr = p.getOrElse("threshold", "0.8").toDouble
-            val prefix = p.getOrElse("index", "graft_dedup_index")
-            val buckets = p.getOrElse("buckets", "8").toInt
-            val shingleSize = p.getOrElse("shingle", "3").toInt
-            val numBands = p.getOrElse("bands", "8").toInt
-            val rowsPerBand = p.getOrElse("rows", "4").toInt
-            val update = p.getOrElse("update", "true").toBoolean
-            val spark = df.sparkSession
-            val I = graft.operators.IncrementalDedupOps
-            val idx = I.IndexTables(s"${prefix}_bands", s"${prefix}_sigs")
-            val kept = if (!spark.catalog.tableExists(idx.bands)) {
-              val drops = graft.operators.DedupOps.minhashDropIds(
-                df, text, id, thr, shingleSize, numBands, rowsPerBand)
-              df.join(drops, df(id) === drops("drop_id"), "left_anti")
-            } else {
-              val pairs = I.probe(df, text, id, idx, thr,
-                shingleSize, numBands, rowsPerBand)
-              val newIds = df.select(F.col(id).as("nid"))
-              val drops = pairs
-                .join(newIds.select(F.col("nid").as("a_id"), F.lit(true).as("a_new")),
-                  Seq("a_id"), "left")
-                .join(newIds.select(F.col("nid").as("b_id"), F.lit(true).as("b_new")),
-                  Seq("b_id"), "left")
-                .select(
-                  F.when(F.col("a_new").isNull, F.col("b_id"))
-                    .when(F.col("b_new").isNull, F.col("a_id"))
-                    .otherwise(F.col("b_id")).as("drop_id"))
-                .distinct()
-              df.join(drops, df(id) === drops("drop_id"), "left_anti")
-            }
-            if (update) {
-              // survivors must materialize BEFORE the index append so
-              // the probe's band join cannot observe its own writes
-              val stable = kept.transform(Ckpt.eagerCkpt)
-              if (!spark.catalog.tableExists(idx.bands))
-                I.buildIndex(stable, text, id, prefix, buckets,
-                  shingleSize, numBands, rowsPerBand)
-              else
-                I.appendToIndex(stable, text, id, idx, buckets,
-                  shingleSize, numBands, rowsPerBand)
-              stable
-            } else kept
+            graft.operators.IncrementalDedupOps.minhashIndexDedup(df, text, id,
+              prefix = p.getOrElse("index", "graft_dedup_index"),
+              numBuckets = p.getOrElse("buckets", "8").toInt,
+              threshold = p.getOrElse("threshold", "0.8").toDouble,
+              shingleSize = p.getOrElse("shingle", "3").toInt,
+              numBands = p.getOrElse("bands", "8").toInt,
+              rowsPerBand = p.getOrElse("rows", "4").toInt,
+              update = p.getOrElse("update", "true").toBoolean)
           case "winnow" =>
             // shared-PASSAGE dedup (winnowing fingerprints, SURVEY row
             // 309): cluster docs sharing ≥ `shared` selected gram hashes
@@ -171,12 +137,6 @@ object Pipeline {
             val k = p.getOrElse("k", "4").toInt
             val w = p.getOrElse("w", "4").toInt
             val minShared = p.getOrElse("shared", "2").toInt
-            def selfDedup(batch: DataFrame): DataFrame = {
-              val pairs = graft.operators.DedupOps
-                .winnowDupPairs(batch, text, id, k, w, minShared)
-                .select(F.col("a_id"), F.col("b_id"))
-              graft.operators.DedupOps.applyPairDedup(batch, id, pairs)
-            }
             // `evidence=true` (SURVEY row 343 surfaced to the CLI,
             // round-11 verdict item 10): the step's OUTPUT becomes the
             // human-review report — winnow-linked pairs with their best
@@ -189,28 +149,15 @@ object Pipeline {
                 .winnowSharedSpanEvidence(df, text, id, k, w, minShared)
                 .orderBy("a_id", "b_id")
             } else p.get("index") match {
-              case None => selfDedup(df)
+              case None =>
+                val pairs = graft.operators.DedupOps
+                  .winnowDupPairs(df, text, id, k, w, minShared)
+                  .select(F.col("a_id"), F.col("b_id"))
+                graft.operators.DedupOps.applyPairDedup(df, id, pairs)
               case Some(prefix) =>
-                val I = graft.operators.IncrementalDedupOps
-                val buckets = p.getOrElse("buckets", "8").toInt
-                val update = p.getOrElse("update", "true").toBoolean
-                val spark = df.sparkSession
-                val tbl = s"${prefix}_fps"
-                if (!spark.catalog.tableExists(tbl)) {
-                  val kept = selfDedup(df).transform(Ckpt.eagerCkpt)
-                  I.buildWinnowIndex(kept, text, id, prefix, buckets, k, w)
-                  kept
-                } else {
-                  val dropIdx = I.probeWinnowIndex(df, text, id, tbl, minShared, k, w)
-                    .select(F.col("batch_id").as("__drop_id")).distinct()
-                  val kept = selfDedup(
-                    df.join(dropIdx, df(id) === F.col("__drop_id"), "left_anti"))
-                  if (update) {
-                    val stable = kept.transform(Ckpt.eagerCkpt)
-                    I.appendToWinnowIndex(stable, text, id, tbl, buckets, k, w)
-                    stable
-                  } else kept
-                }
+                graft.operators.IncrementalDedupOps.winnowIndexDedup(df, text, id, s"${prefix}_fps",
+                  p.getOrElse("buckets", "8").toInt, minShared, k, w,
+                  update = p.getOrElse("update", "true").toBoolean)
             }
           case "semantic" =>
             // SemDeDup over an embedding column (SURVEY rows 303/308 as a

@@ -542,36 +542,21 @@ object Dedup {
       // survived. Index side of the probe join is bucketed on fp_hash
       // → Exchange-free. Oracle replays the whole sequential chain
       // (winnowing selection is md5 — no aux dump needed).
-      // r15 (guide §1.2/§2.6): the delta was fingerprinted TWICE (index
-      // probe + within-batch pair gen) — winnowing selection is a pure
-      // per-document function, so fps(rem) ≡ fps(delta) filtered to the
-      // remainder ids; one eager fingerprint pin feeds both, and the pin
-      // job overlaps the independent index build (staged bucketed write).
+      // The delta runs through IncrementalDedupOps.winnowIndexStep (the
+      // CLI step and the streaming sink run the same step): one eager
+      // fingerprint pin feeds the probe and the within-batch pair gen,
+      // and the pin job overlaps the independent index build (staged
+      // bucketed write).
       val docs = TP(s, d, "documents")
       val base = docs.filter(col("doc_id") % 3 =!= 0)
       val delta = docs.filter(col("doc_id") % 3 === 0)
-      val (tbl, deltaFps) = Par.concurrently(
-        IncrementalDedupOps.buildWinnowIndex(
-          base, "text", "doc_id", "graft_winc_idx", numBuckets = 8),
-        DedupOps.winnowFingerprints(delta, "text", "doc_id", 4, 4)
-          .select(col("fp_hash"), col("id")).distinct()
-          .transform(Ckpt.eagerCkpt))
-      val dropIdx = IncrementalDedupOps
-        .probeWinnowIndexOf(deltaFps, tbl, minShared = 2)
-        .select(col("batch_id").as("doc_id")).distinct()
-      val remFps = deltaFps.join(dropIdx, col("id") === col("doc_id"), "left_anti")
-      val selfPairs = DedupOps.winnowDupPairsOf(remFps, minShared = 2)
-        .select("a_id", "b_id")
-      val rem = delta.select("doc_id").join(dropIdx, Seq("doc_id"), "left_anti")
-      val survivors = DedupOps.applyPairDedup(rem, "doc_id", selfPairs).select("doc_id")
-      delta.select("doc_id")
-        .join(dropIdx.withColumn("__di", lit(1)), Seq("doc_id"), "left")
-        .join(survivors.withColumn("__sv", lit(1)), Seq("doc_id"), "left")
-        .withColumn("verdict",
-          when(col("__di") === 1, lit("dropped_index"))
-            .when(col("__sv") === 1, lit("survived"))
-            .otherwise(lit("dropped_delta")))
-        .select("doc_id", "verdict")
+      val tbl = "graft_winc_idx_fps"
+      val (_, deltaFps) = Par.concurrently(
+        IncrementalDedupOps.buildWinnowIndexOf(
+          DedupOps.winnowHashes(base, "text", "doc_id", 4, 4), tbl, numBuckets = 8),
+        DedupOps.winnowHashes(delta, "text", "doc_id", 4, 4).transform(Ckpt.eagerCkpt))
+      IncrementalDedupOps.winnowIndexStep(delta.select("doc_id"), deltaFps, tbl,
+          numBuckets = 8, minShared = 2, update = false)
         .orderBy("doc_id")
     }),
     "dedup_shared_spans" -> ((s, d) => {

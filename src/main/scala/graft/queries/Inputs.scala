@@ -155,8 +155,7 @@ object Inputs {
     private val rowsPerBand = 3
     private val numBuckets = 4
 
-    def shingles(docs: DataFrame): DataFrame =
-      docs.select(col("doc_id").as("id"), DedupOps.hashedShingleSet(col("text"), shingleSize).as("sh"))
+    def shingles(docs: DataFrame): DataFrame = DedupOps.shingleSets(docs, "text", "doc_id", shingleSize)
 
     def pairs(docs: DataFrame): DataFrame =
       DedupOps.minhashDupPairs(docs, "text", "doc_id", threshold, shingleSize, numBands, rowsPerBand)
@@ -164,9 +163,9 @@ object Inputs {
     def pairsOf(sh: DataFrame): DataFrame =
       DedupOps.minhashDupPairsOf(sh, threshold, numBands, rowsPerBand)
 
+    // EAGER: the index build's two concurrent writers both read the frame
     def buildIndex(docs: DataFrame, prefix: String): IncrementalDedupOps.IndexTables =
-      IncrementalDedupOps.buildIndex(docs, "text", "doc_id", prefix, numBuckets,
-        shingleSize, numBands, rowsPerBand)
+      buildIndexOf(shingles(docs).transform(Ckpt.eagerCkpt), prefix)
 
     def buildIndexOf(sh: DataFrame, prefix: String): IncrementalDedupOps.IndexTables =
       IncrementalDedupOps.buildIndexOf(sh, prefix, numBuckets, numBands, rowsPerBand)
@@ -175,8 +174,7 @@ object Inputs {
       IncrementalDedupOps.appendToIndexOf(sh, idx, numBuckets, numBands, rowsPerBand)
 
     def probe(docs: DataFrame, idx: IncrementalDedupOps.IndexTables): DataFrame =
-      IncrementalDedupOps.probe(docs, "text", "doc_id", idx, threshold, shingleSize,
-        numBands, rowsPerBand)
+      probeOf(shingles(docs).transform(Ckpt.lazyCkpt), idx)
 
     def probeOf(sh: DataFrame, idx: IncrementalDedupOps.IndexTables): DataFrame =
       IncrementalDedupOps.probeOf(sh, idx, threshold, numBands, rowsPerBand)

@@ -456,14 +456,9 @@ object StreamOps {
   ): DataFrame = {
     import graft.operators.DedupOps
     val spark = stream.sparkSession
-    val k = numBands * rowsPerBand
-    val newSh = stream.select(
-      col(idCol).as("new_id"),
-      DedupOps.hashedShingleSet(col(textCol), shingleSize).as("new_sh"))
-    val newBands = newSh.select(
-      col("new_id"), col("new_sh"),
-      explode(DedupOps.bandKeys(DedupOps.minhashSigCol(col("new_sh"), k), numBands, rowsPerBand))
-        .as("band_key"))
+    val newBands = DedupOps.withBandKeys(DedupOps.shingleSets(stream, textCol, idCol, shingleSize),
+        numBands, rowsPerBand)
+      .select(col("id").as("new_id"), col("sh").as("new_sh"), col("band_key"))
     val baseBands = spark.table(bandsTable).select(col("band_key"), col("id").as("base_id"))
     val baseSh = spark.table(sigsTable).select(col("id").as("base_id"), col("sh").as("base_sh"))
     newBands
@@ -507,13 +502,17 @@ object StreamOps {
     * `writeStream.foreachBatch(...)`.
     */
   def exactlyOnceParquetSink(outDir: String, commitDir: String): (DataFrame, Long) => Unit =
-    idempotentForeachBatch(commitDir, { (df, batchId) =>
-      df.withColumn("__batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(outDir)
-    })
+    idempotentForeachBatch(commitDir, writeBatchPartition(_, _, outDir))
+
+  /** The batch write of [[exactlyOnceParquetSink]]: `df` overwrites the
+    * `__batch_id=<batchId>` partition of `outDir` (dynamic-partition
+    * overwrite), so re-running a batch id rewrites the same rows. */
+  def writeBatchPartition(df: DataFrame, batchId: Long, outDir: String): Unit =
+    df.withColumn("__batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id")
+      .parquet(outDir)
 
   /** Streaming CDC apply — the streaming twin of [[graft.operators.DiffOps.merge]]:
     * maintain a MERGE'd snapshot table from a change stream. Each

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{ExactSum, Int128ToDecimal}
+import graft.functions.{ExactSum, Int128ToDecimal, NonFiniteTermException}
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -88,14 +88,31 @@ class ExactSumSpec extends SparkSpec {
     assert(ref.isLeft && ref == got, s"sum: $ref, ExactSum: $got")
   }
 
-  test("NaN and ±Inf have the cast's outcome (the ANSI cast makes them null: skipped)") {
+  test("NaN and ±Inf terms raise NonFiniteTermException instead of being skipped") {
+    def raised(df: DataFrame): Boolean =
+      try { df.collect(); false }
+      catch {
+        case e: Throwable =>
+          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(_.isInstanceOf[NonFiniteTermException])
+      }
     Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { v =>
       val df = Seq((0L, 1.25), (0L, v), (1L, v)).toDF("g", "x")
+      // the form ExactSum replaces: the ANSI cast makes the term null, so
+      // {1.25, NaN} silently sums to 1.25
       val ref = outcome(df.groupBy("g").agg(reference("x", 2)).orderBy("g"))
-      val got = outcome(df.groupBy("g").agg(ExactSum(col("x"), 2)).orderBy("g"))
-      assert(ref == got, s"$v: sum $ref, ExactSum $got")
-      assert(got.map(_.map(r => Option(r.getDecimal(1)).map(_.toPlainString))) ==
+      assert(ref.map(_.map(r => Option(r.getDecimal(1)).map(_.toPlainString))) ==
         Right(Seq(Some("1.25"), None)))
+      Seq(col("x"), col("x").cast("float")).foreach { term =>
+        assert(raised(df.groupBy("g").agg(ExactSum(term, 2))), s"$v as ${term}: no error")
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        try assert(raised(df.groupBy("g").agg(ExactSum(term, 2))), s"$v as $term, interpreted: no error")
+        finally {
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+        }
+      }
     }
   }
 

@@ -721,8 +721,8 @@ class DotProductExprSpec extends SparkSpec {
   test("graft_dot registers as a SQL function via SparkSessionExtensions") {
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {})
     // direct registry injection on the live session for the test
-    spark.sessionState.functionRegistry.registerFunction(
-      GraftExtensions.dotFunction._1, GraftExtensions.dotFunction._2, GraftExtensions.dotFunction._3)
+    val (id, info, builder) = GraftExtensions.functions.find(_._1.funcName == "graft_dot").get
+    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     val r = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").collect().head
     assert(r.getDouble(0) == 11.0)
   }

@@ -235,6 +235,59 @@ class PipelineSpec extends SparkSpec {
     assert(spark.table(s"${pfx}_fps").count() == n0, "update=false must not grow the index")
   }
 
+  test("dedup:///?method=winnow&index= fingerprints and method=incremental shingles a batch once; " +
+    "CLI survivors equal dedup_winnow_incremental's") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Md5}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sf = s"${sys.props("user.home")}/testdata/sf0.001"
+    // a session of its own: its listener sees only the executions this test starts
+    val s = spark.newSession()
+    // plan counts: the optimized-plan nodes that derive fingerprints (md5
+    // of a gram) and shingle sets, summed over every SQL execution of one
+    // CLI run (pins, probes, index writes, the result)
+    val fingerprints, shingleSets = new java.util.concurrent.atomic.AtomicInteger(0)
+    def nodes(qe: QueryExecution, marker: Expression => Boolean): Int =
+      qe.optimizedPlan.collectWithSubqueries { case n if n.expressions.exists(_.exists(marker)) => n }.size
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        fingerprints.addAndGet(nodes(qe, _.isInstanceOf[Md5]))
+        shingleSets.addAndGet(nodes(qe, _.isInstanceOf[graft.functions.HashedShingles]))
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+    val counter = new RunOne.JobCounter(s.sparkContext)
+    def run(split: String, dedup: String): (Set[Long], Int, Int) = {
+      fingerprints.set(0)
+      shingleSets.set(0)
+      val (p, _) = Pipeline.fromArgs(Seq(
+        "--source", s"parquet://$sf/documents.parquet",
+        "--transform", "source+batch+sql:///" + java.net.URLEncoder.encode(
+          s"SELECT doc_id, text FROM source WHERE $split", "UTF-8"),
+        "--transform", s"batch+sink+dedup:///?$dedup"))
+      // the barrier job of JobCounter.measure passes the listener bus after
+      // every execution end of the run
+      val (kept, _) = counter.measure(
+        p.resultView(s, "sink").select("doc_id").collect().map(_.getLong(0)).toSet)
+      (kept, fingerprints.get, shingleSets.get)
+    }
+    val winnow = "method=winnow&text=text&id=doc_id&index=graft_r16_pipewin_once"
+    val minhash = "method=incremental&text=text&id=doc_id&index=graft_r16_pipemh_once"
+    graft.operators.BucketOps.dropTable(s, "graft_r16_pipewin_once_fps")
+    Seq("_bands", "_sigs").foreach(t => graft.operators.BucketOps.dropTable(s, s"graft_r16_pipemh_once$t"))
+    val (_, wBoot, _) = run("mod(doc_id, 3) <> 0", winnow)
+    val (cliSurvivors, wDelta, _) = run("mod(doc_id, 3) = 0", winnow)
+    assert(wBoot == 1 && wDelta == 1, s"fingerprint derivations: bootstrap $wBoot, delta $wDelta")
+    val (_, _, mBoot) = run("mod(doc_id, 3) <> 0", minhash)
+    val (_, _, mDelta) = run("mod(doc_id, 3) = 0", minhash)
+    assert(mBoot == 1 && mDelta == 1, s"shingle-set derivations: bootstrap $mBoot, delta $mDelta")
+    val survived = SparkEntry.queries("dedup_winnow_incremental")(s, sf)
+      .filter("verdict = 'survived'")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(cliSurvivors == survived,
+      s"CLI-only ${cliSurvivors -- survived}, query-only ${survived -- cliSurvivors}")
+  }
+
   // values:// carries only scalars, so the vector tests assemble the
   // embedding column with an inline sql:// step — itself an e2e check
   // that array columns flow through the URI pipeline.

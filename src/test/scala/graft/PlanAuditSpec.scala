@@ -345,6 +345,12 @@ class PlanAuditSpec extends SparkSpec {
       s"signature computation must be pure scan->project:\n${executedPlan(sigs)}")
   }
 
+  /** The `(id, sh)` frame of the incremental-index specs (2-shingles). */
+  private def shingled(df: org.apache.spark.sql.DataFrame) =
+    graft.operators.DedupOps.shingleSets(df, "text", "doc_id", 2)
+  private def eager(df: org.apache.spark.sql.DataFrame) = df.transform(graft.operators.Ckpt.eagerCkpt)
+  private def lazily(df: org.apache.spark.sql.DataFrame) = df.transform(graft.operators.Ckpt.lazyCkpt)
+
   test("incremental dedup probe: the persisted index side scans with no Exchange") {
     import graft.operators.IncrementalDedupOps
     // overlapping shingle content so the probe produces real pairs
@@ -355,10 +361,10 @@ class PlanAuditSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false") // AQE hides nodes from plan.collect
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // bucket layout must carry the joins
     try {
-      val idx = IncrementalDedupOps.buildIndex(base, "text", "doc_id", "inc_audit",
-        numBuckets = 4, shingleSize = 2, numBands = 8, rowsPerBand = 2)
-      val probed = IncrementalDedupOps.probe(batch, "text", "doc_id", idx, threshold = 0.8,
-        shingleSize = 2, numBands = 8, rowsPerBand = 2)
+      val idx = IncrementalDedupOps.buildIndexOf(eager(shingled(base)), "inc_audit",
+        numBuckets = 4, numBands = 8, rowsPerBand = 2)
+      val probed = IncrementalDedupOps.probeOf(lazily(shingled(batch)), idx, threshold = 0.8,
+        numBands = 8, rowsPerBand = 2)
       assert(probed.count() > 0, "probe should find near-dup pairs in this corpus")
       import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
       // the daily-job invariant: an index-table scan reaches its consuming
@@ -397,11 +403,11 @@ class PlanAuditSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val batch = (0L until 20L).map(i => (i * 2, s"the quick brown fox w${i % 10} jumps over"))
       .toDF("doc_id", "text")
-    val idx = IncrementalDedupOps.buildIndex(base, "text", "doc_id", "inc_eq",
-      numBuckets = 2, shingleSize = 2, numBands = 16, rowsPerBand = 2)
+    val idx = IncrementalDedupOps.buildIndexOf(eager(shingled(base)), "inc_eq",
+      numBuckets = 2, numBands = 16, rowsPerBand = 2)
     try {
-      val inc = IncrementalDedupOps.probe(batch, "text", "doc_id", idx, threshold = 0.7,
-          shingleSize = 2, numBands = 16, rowsPerBand = 2)
+      val inc = IncrementalDedupOps.probeOf(lazily(shingled(batch)), idx, threshold = 0.7,
+          numBands = 16, rowsPerBand = 2)
         .select("a_id", "b_id", "jaccard").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val full = DedupOps.minhashDupPairs(base.unionByName(batch), "text", "doc_id", threshold = 0.7,
           shingleSize = 2, numBands = 16, rowsPerBand = 2)
@@ -426,21 +432,21 @@ class PlanAuditSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val day2 = (0L until 20L).map(i => (i * 3, s"the quick brown fox w${i % 10} jumps over"))
       .toDF("doc_id", "text")
-    val idx = IncrementalDedupOps.buildIndex(base, "text", "doc_id", "inc_app",
-      numBuckets = 2, shingleSize = 2, numBands = 16, rowsPerBand = 2)
+    val idx = IncrementalDedupOps.buildIndexOf(eager(shingled(base)), "inc_app",
+      numBuckets = 2, numBands = 16, rowsPerBand = 2)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      IncrementalDedupOps.appendToIndex(day1, "text", "doc_id", idx,
-        numBuckets = 2, shingleSize = 2, numBands = 16, rowsPerBand = 2)
-      val probed = IncrementalDedupOps.probe(day2, "text", "doc_id", idx, threshold = 0.7,
-        shingleSize = 2, numBands = 16, rowsPerBand = 2)
+      IncrementalDedupOps.appendToIndexOf(eager(shingled(day1)), idx,
+        numBuckets = 2, numBands = 16, rowsPerBand = 2)
+      val probed = IncrementalDedupOps.probeOf(lazily(shingled(day2)), idx, threshold = 0.7,
+        numBands = 16, rowsPerBand = 2)
       val viaAppend = pairs(probed)
       // equality vs an index built from scratch over base∪day1
-      val fresh = IncrementalDedupOps.buildIndex(base.unionByName(day1), "text", "doc_id",
-        "inc_app_fresh", numBuckets = 2, shingleSize = 2, numBands = 16, rowsPerBand = 2)
-      val viaFresh = pairs(IncrementalDedupOps.probe(day2, "text", "doc_id", fresh,
-        threshold = 0.7, shingleSize = 2, numBands = 16, rowsPerBand = 2))
+      val fresh = IncrementalDedupOps.buildIndexOf(eager(shingled(base.unionByName(day1))),
+        "inc_app_fresh", numBuckets = 2, numBands = 16, rowsPerBand = 2)
+      val viaFresh = pairs(IncrementalDedupOps.probeOf(lazily(shingled(day2)), fresh,
+        threshold = 0.7, numBands = 16, rowsPerBand = 2))
       assert(viaAppend == viaFresh,
         s"append-only=${viaAppend -- viaFresh}, fresh-only=${viaFresh -- viaAppend}")
       assert(viaAppend.nonEmpty)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{BucketOps, ExportOps, IncrementalDedupOps}
+import graft.operators.{BucketOps, Ckpt, DedupOps, ExportOps, IncrementalDedupOps}
 import org.apache.spark.sql.functions._
 
 /** Failure-path contracts added in round 6 (advisor items): staged index
@@ -48,28 +48,45 @@ class RobustnessSpec extends SparkSpec {
 
   test("incremental probe rejects new-batch ids that already exist in the index") {
     val base = (0L until 50L).map(i => (i, s"alpha beta gamma tok$i delta")).toDF("doc_id", "text")
-    val idx = IncrementalDedupOps.buildIndex(base, "text", "doc_id", "rb_inc",
-      numBuckets = 2, shingleSize = 2, numBands = 4, rowsPerBand = 2)
+    def sh(df: org.apache.spark.sql.DataFrame) = DedupOps.shingleSets(df, "text", "doc_id", 2)
+    val idx = IncrementalDedupOps.buildIndexOf(sh(base).transform(Ckpt.eagerCkpt), "rb_inc",
+      numBuckets = 2, numBands = 4, rowsPerBand = 2)
     try {
       // id 7 is a "re-crawl": same id, changed text — must fail loudly
       val overlapping = Seq((7L, "completely different words now here"),
         (1000L, "alpha beta gamma tok1 delta")).toDF("doc_id", "text")
       val e = intercept[IllegalArgumentException] {
-        IncrementalDedupOps.probe(overlapping, "text", "doc_id", idx, threshold = 0.5,
-          shingleSize = 2, numBands = 4, rowsPerBand = 2).collect()
+        IncrementalDedupOps.probeOf(sh(overlapping).transform(Ckpt.lazyCkpt), idx, threshold = 0.5,
+          numBands = 4, rowsPerBand = 2).collect()
       }
       assert(e.getMessage.contains("already exist in index"))
       // disjoint batch passes the gate; opt-out restores the old behavior
       val disjoint = Seq((1000L, "alpha beta gamma tok1 delta")).toDF("doc_id", "text")
-      assert(IncrementalDedupOps.probe(disjoint, "text", "doc_id", idx, threshold = 0.5,
-        shingleSize = 2, numBands = 4, rowsPerBand = 2).count() > 0)
-      assert(IncrementalDedupOps.probe(overlapping, "text", "doc_id", idx, threshold = 0.5,
-        shingleSize = 2, numBands = 4, rowsPerBand = 2,
+      assert(IncrementalDedupOps.probeOf(sh(disjoint).transform(Ckpt.lazyCkpt), idx, threshold = 0.5,
+        numBands = 4, rowsPerBand = 2).count() > 0)
+      assert(IncrementalDedupOps.probeOf(sh(overlapping).transform(Ckpt.lazyCkpt), idx, threshold = 0.5,
+        numBands = 4, rowsPerBand = 2,
         enforceDisjointIds = false).count() >= 0)
     } finally {
       BucketOps.dropTable(spark, "rb_inc_bands")
       BucketOps.dropTable(spark, "rb_inc_sigs")
     }
+  }
+
+  test("data_entity_golden: a record with a null name still counts in n_records") {
+    // a temp copy of sf0.001 customer with one name nulled; every record
+    // (customer A plus the two dirty copies of k % 3 != 2) must land in
+    // exactly one entity's member count
+    val src = spark.read.parquet(s"${sys.props("user.home")}/testdata/sf0.001/customer.parquet")
+    val victim = src.filter(col("c_custkey") % 3 === 0).agg(min("c_custkey")).head().getLong(0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-entity-null").toString
+    src.withColumn("c_name",
+        when(col("c_custkey") === victim, lit(null).cast("string")).otherwise(col("c_name")))
+      .write.parquet(s"$dir/customer.parquet")
+    val records = src.count() + 2 * src.filter(col("c_custkey") % 3 =!= 2).count()
+    val out = SparkEntry.queries("data_entity_golden")(spark, dir)
+    assert(out.agg(sum("n_records")).head().getLong(0) == records)
+    assert(out.filter(col("name").isNull).count() > 0, "the null-name record's entity is missing")
   }
 
   test("permutation materializeInput yields the same positions as the two-scan path") {

@@ -305,21 +305,24 @@ class Round11OpsSpec extends SparkSpec {
     // maintained), 21 unique
     val delta2 = Seq((20L, s"$newRun x y"), uniq(21L))
 
-    def buildBase(prefix: String) = IncrementalDedupOps.buildWinnowIndex(
-      day0, "text", "id", prefix, numBuckets = 2, k = 4, w = 4)
+    def fps(df: org.apache.spark.sql.DataFrame) = DedupOps.winnowHashes(df, "text", "id", k = 4, w = 4)
+    def buildBase(prefix: String) = {
+      IncrementalDedupOps.buildWinnowIndexOf(fps(day0), s"${prefix}_fps", numBuckets = 2)
+      s"${prefix}_fps"
+    }
 
     // --- truth: the batch chain over the same deltas
     val truthTbl = buildBase("graft_r11_winnow_truth")
     def batchStep(rows: Seq[(Long, String)]): Seq[Long] = {
       val df = rows.toDF("id", "text")
       val dropIdx = IncrementalDedupOps
-        .probeWinnowIndex(df, "text", "id", truthTbl, minShared = 1)
+        .probeWinnowIndexOf(fps(df).transform(graft.operators.Ckpt.lazyCkpt), truthTbl, minShared = 1)
         .select(col("batch_id").as("__drop_id")).distinct()
       val clean = df.join(dropIdx, df("id") === col("__drop_id"), "left_anti")
       val pairs = DedupOps.winnowDupPairs(clean, "text", "id", 4, 4, 1)
         .select(col("a_id"), col("b_id"))
       val kept = DedupOps.applyPairDedup(clean, "id", pairs).localCheckpoint()
-      IncrementalDedupOps.appendToWinnowIndex(kept, "text", "id", truthTbl, 2, 4, 4)
+      IncrementalDedupOps.appendToWinnowIndexOf(fps(kept), truthTbl, 2)
       kept.select("id").collect().map(_.getLong(0)).toSeq.sorted
     }
     val truth1 = batchStep(delta1)

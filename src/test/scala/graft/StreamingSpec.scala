@@ -112,11 +112,12 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming index probe: docs stream matches the persisted index statelessly across batches") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.IncrementalDedupOps
+    import graft.operators.{Ckpt, DedupOps, IncrementalDedupOps}
+    def sh(df: org.apache.spark.sql.DataFrame) = DedupOps.shingleSets(df, "text", "doc_id", 2)
     val base = (0L until 40L).map(i => (i * 2 + 1, s"shared prefix text w${i % 8} suffix tail"))
       .toDF("doc_id", "text")
-    val idx = IncrementalDedupOps.buildIndex(base, "text", "doc_id", "inc_stream",
-      numBuckets = 2, shingleSize = 2, numBands = 16, rowsPerBand = 2)
+    val idx = IncrementalDedupOps.buildIndexOf(sh(base).transform(Ckpt.eagerCkpt), "inc_stream",
+      numBuckets = 2, numBands = 16, rowsPerBand = 2)
     val input = MemoryStream[(Long, String)]
     val probed = StreamOps.streamingIndexProbe(
       input.toDF().toDF("doc_id", "text"), "text", "doc_id",
@@ -132,10 +133,10 @@ class StreamingSpec extends SparkSpec {
       val rows = spark.table("inc_probe_out")
         .select("new_id", "base_id", "jaccard").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet // band-duplicate rows collapse
-      val expected = IncrementalDedupOps.probe(
-          Seq((0L, "shared prefix text w0 suffix tail"), (2L, "shared prefix text w1 suffix tail"),
-            (4L, "completely different content")).toDF("doc_id", "text"),
-          "text", "doc_id", idx, threshold = 0.7, shingleSize = 2, numBands = 16, rowsPerBand = 2)
+      val expected = IncrementalDedupOps.probeOf(
+          sh(Seq((0L, "shared prefix text w0 suffix tail"), (2L, "shared prefix text w1 suffix tail"),
+            (4L, "completely different content")).toDF("doc_id", "text")).transform(Ckpt.lazyCkpt),
+          idx, threshold = 0.7, numBands = 16, rowsPerBand = 2)
         .filter(col("b_id") % 2 === 1 || col("a_id") % 2 === 1) // new×base half only
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .map { case (a, b, j) => if (a % 2 == 0) (a, b, j) else (b, a, j) }.toSet

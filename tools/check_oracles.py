@@ -13,7 +13,8 @@ Round-11 gate-economics hardening (the r8/r10 empty-artifact lesson):
     run truncates instead of zeroing;
   * ONLY=<substr>[,substr...] env filter for selective re-checks.
 """
-import duckdb, json, sys, glob, os, time
+import duckdb, json, sys, glob, os, time, math
+import pandas as pd
 import pyarrow.parquet as pq
 
 out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_out"
@@ -68,14 +69,12 @@ for name in sorted(oracle):
     for c in sc:
         av, bv = list(a[c]), list(b[c])
         for i, (x, y) in enumerate(zip(av, bv)):
-            import math
             eq = (x == y)
             try:
                 if isinstance(x, float) and isinstance(y, float) and math.isnan(x) and math.isnan(y): eq = True
             except Exception: pass
             if x is None and y is None: eq = True
             try:
-                import pandas as pd
                 if pd.isna(x) and pd.isna(y): eq = True
             except Exception: pass
             if not eq:

@@ -37,13 +37,25 @@ object Oracles {
     def shingles(t: String, n: Int = 3) =
       s"(CASE WHEN len($t) <= $n THEN [array_to_string($t, ' ')] " +
         s"ELSE list_transform(range(1, len($t)-${n - 2}), i -> array_to_string($t[i:i+${n - 1}], ' ')) END)"
+    // the quadratic Jaccard join over a distinct-shingle CTE `sh` (columns
+    // `id`, s): one row per pair, (a_id, b_id, i = |A∩B|, n = |A| + |B|),
+    // read through `jaccard` = |A∩B| / |A∪B| with |A∪B| = n − i — the
+    // integers the union's length gave, so the same doubles, without
+    // building the union. MATERIALIZED: through a plain subquery DuckDB
+    // pushes the threshold filter below the projection and computes the
+    // intersection twice per pair
+    def jaccardCte(name: String, sh: String, id: String = "doc_id") =
+      s"""$name AS MATERIALIZED (SELECT a.$id AS a_id, b.$id AS b_id,
+         |  len(list_intersect(a.s, b.s)) AS i, len(a.s) + len(b.s) AS n
+         |  FROM $sh a JOIN $sh b ON a.$id < b.$id)""".stripMargin
+    val jaccard = "i::DOUBLE / (n - i)"
     def jaccardPairsSql(n: Int, threshold: Double, extraWhere: String = "") =
       s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
-         |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", n)}) AS s FROM t)
-         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         | ROUND(len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)), 4) AS jaccard
-         |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= $threshold
+         |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", n)}) AS s FROM t),
+         |${jaccardCte("ji", "sh")}
+         |SELECT a_id, b_id, ROUND($jaccard, 4) AS jaccard
+         |FROM ji
+         |WHERE $jaccard >= $threshold
          |$extraWhere
          |ORDER BY a_id, b_id""".stripMargin
     val revenue =
@@ -328,9 +340,10 @@ object Oracles {
         // (the data_survivors pattern) + integer ppm weights
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
@@ -886,12 +899,12 @@ object Oracles {
       // the incremental probe returns exactly the quadratic pair set
       // restricted to pairs touching at least one NEW doc (doc_id%4=0)
       "dedup_incremental" -> jaccardPairsSql(n = 2, threshold = 0.7,
-        extraWhere = "AND (a.doc_id % 4 = 0 OR b.doc_id % 4 = 0)"),
+        extraWhere = "AND (a_id % 4 = 0 OR b_id % 4 = 0)"),
       // two-generation run: pairs touching day1 (%4=3) or day2 (%4=0) —
       // day1 pairs come from the pre-append probe, day2 pairs see
       // base∪day1 through the appended index
       "dedup_incremental_2day" -> jaccardPairsSql(n = 2, threshold = 0.7,
-        extraWhere = "AND (a.doc_id % 4 IN (0, 3) OR b.doc_id % 4 IN (0, 3))"),
+        extraWhere = "AND (a_id % 4 IN (0, 3) OR b_id % 4 IN (0, 3))"),
       "dedup_simhash_check" ->
         s"""WITH doubled AS (
            | SELECT doc_id, text FROM documents
@@ -1186,9 +1199,10 @@ object Oracles {
       "data_survivors" ->
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
@@ -1201,9 +1215,10 @@ object Oracles {
       "data_survivors_quality" ->
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
@@ -1221,9 +1236,10 @@ object Oracles {
       "dedup_clusters" ->
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
@@ -2136,9 +2152,10 @@ object Oracles {
       "dedup_cluster_stats" ->
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
@@ -2155,9 +2172,10 @@ object Oracles {
       "data_grouped_split" ->
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
@@ -2250,9 +2268,10 @@ object Oracles {
       "dedup_source_matrix" ->
         s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7)
+           |${jaccardCte("ji", "sh")},
+           |p AS (SELECT a_id, b_id
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7)
            |SELECT least(da.source, db.source) AS src_lo,
            | greatest(da.source, db.source) AS src_hi, COUNT(*) AS n_pairs
            |FROM p JOIN documents da ON da.doc_id = p.a_id
@@ -2435,9 +2454,10 @@ object Oracles {
       "data_contrastive_pairs" ->
         s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |pos AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, 1 AS label
-           |        FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |        WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |pos AS (SELECT a_id, b_id, 1 AS label
+           |        FROM ji
+           |        WHERE $jaccard >= 0.7),
            |h AS (SELECT doc_id, md5('neg:' || CAST(doc_id AS VARCHAR)) AS hh FROM documents),
            |r AS (SELECT doc_id, lead(doc_id) OVER
            |      (PARTITION BY substr(hh, 1, 1) ORDER BY hh, doc_id) AS nb FROM h),
@@ -2504,10 +2524,11 @@ object Oracles {
       "dedup_threshold_sweep" ->
         s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-           |      ROUND(len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)), 4) AS j
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS (SELECT a_id, b_id,
+           |      ROUND($jaccard, 4) AS j
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |pb AS (SELECT CASE WHEN j >= 0.9 THEN '0.9' WHEN j >= 0.8 THEN '0.8' ELSE '0.7' END AS band,
            |       a_id, b_id FROM p),
            |e AS (SELECT band, a_id AS doc FROM pb UNION ALL SELECT band, b_id AS doc FROM pb)
@@ -3209,9 +3230,10 @@ object Oracles {
       "dedup_cluster_radius" ->
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
@@ -3250,9 +3272,10 @@ object Oracles {
       "dedup_blocking_eval" ->
         s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 3)}) AS s FROM t),
-           |tr AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.8),
+           |${jaccardCte("ji", "sh")},
+           |tr AS (SELECT a_id, b_id
+           |      FROM ji
+           |      WHERE $jaccard >= 0.8),
            |b AS (SELECT doc_id, n_chars // 100 AS band FROM documents),
            |h AS (SELECT band, COUNT(*) AS c FROM b GROUP BY 1),
            |nc AS (SELECT CAST(SUM(c * (c - 1) // 2) AS BIGINT) AS n_cand FROM h),
@@ -3270,9 +3293,10 @@ object Oracles {
       "quality_label_prop" ->
         s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a AS src, b AS dst FROM p UNION ALL SELECT b AS src, a AS dst FROM p),
            |lab AS (SELECT doc_id AS dst, lang AS label FROM documents WHERE doc_id % 5 = 0),
            |v AS (SELECT e.src, lab.label, COUNT(*) AS n_votes
@@ -3768,9 +3792,10 @@ object Oracles {
       "data_dedup_idempotence" ->
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
@@ -3954,10 +3979,11 @@ object Oracles {
            |  FROM documents WHERE doc_id % 5 = 0),
            |tk AS (SELECT id, $toks AS tk FROM src),
            |shg AS MATERIALIZED (SELECT id, list_distinct(${shingles("tk", 3)}) AS s FROM tk),
+           |${jaccardCte("ji", "shg", "id")},
            |tp AS (
-           |  SELECT a.id AS a_id, b.id AS b_id
-           |  FROM shg a JOIN shg b ON a.id < b.id
-           |  WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.8),
+           |  SELECT a_id, b_id
+           |  FROM ji
+           |  WHERE $jaccard >= 0.8),
            |nn AS (SELECT id, text AS payload, greatest(length(text), 1)::BIGINT AS n FROM src),
            |px AS (SELECT id, i,
            |        CASE WHEN length(payload) = 0 THEN 0
@@ -4245,12 +4271,11 @@ object Oracles {
         // unnest the same deduped set
         s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-           |  ROUND(len(list_intersect(a.s, b.s))::DOUBLE
-           |    / len(list_distinct(a.s || b.s)), 6) AS exact_jaccard
-           | FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           | WHERE len(list_intersect(a.s, b.s))::DOUBLE
-           |    / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id, b_id,
+           |  ROUND($jaccard, 6) AS exact_jaccard
+           | FROM ji
+           | WHERE $jaccard >= 0.7),
            |ids AS (SELECT DISTINCT id FROM
            |  (SELECT a_id AS id FROM p UNION ALL SELECT b_id AS id FROM p)),
            |ex AS (SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id IN (SELECT id FROM ids)),
@@ -4354,9 +4379,10 @@ object Oracles {
         // nearest in both engines)
         s"""WITH RECURSIVE t AS (SELECT doc_id, $toks AS tk FROM documents),
            |sh AS MATERIALIZED (SELECT doc_id, list_distinct(${shingles("tk", 2)}) AS s FROM t),
-           |p AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
-           |      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-           |      WHERE len(list_intersect(a.s, b.s))::DOUBLE / len(list_distinct(a.s || b.s)) >= 0.7),
+           |${jaccardCte("ji", "sh")},
+           |p AS MATERIALIZED (SELECT a_id AS a, b_id AS b
+           |      FROM ji
+           |      WHERE $jaccard >= 0.7),
            |e AS (SELECT a, b FROM p UNION ALL SELECT b AS a, a AS b FROM p),
            |reach(id, r) AS (
            | SELECT DISTINCT a AS id, a AS r FROM e
