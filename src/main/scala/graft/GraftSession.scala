@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The one local-session builder of graft's dev and audit mains and of the
   * test suite: master `local[cpus]`, one shuffle partition per core, UTC
   * session time zone (every oracle reads naive timestamps as UTC), UI off,
-  * log level WARN. `confs` are set after these, so they may override them.
+  * log level WARN, and the `file:` scheme bound to graft's fork-free local
+  * filesystem ([[graft.io.LocalFileSystems]]). `confs` are set after these,
+  * so they may override them.
   *
   * `Bench` and `EtlCli` keep their own builders: the bench's session is part
   * of its output contract, and the CLI leaves the time zone to the user.
@@ -24,7 +26,8 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    val spark = confs.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    val all = graft.io.LocalFileSystems.sparkConfigs.toSeq ++ confs
+    val spark = all.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

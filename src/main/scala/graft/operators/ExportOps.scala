@@ -131,13 +131,14 @@ object ExportOps {
     *                       hidden-file filter (a WARN per read, and a
     *                       reader passing dir/_manifest explicitly would
     *                       race the filter's semantics)
-    *   dir/_COMMIT         one-line totals marker, written to a temp
-    *                       name and rename()d last — readers treat its
+    *   dir/_COMMIT         one-line totals marker, published last
+    *                       with [[graft.io.PointerFile.publish]] (a temp
+    *                       sibling renamed over it) — readers treat its
     *                       presence as the commit point. The marker goes
-    *                       through the session's Hadoop FileSystem (the
-    *                       same FS the data landed on — local, HDFS,
+    *                       through the session's Hadoop FileContext (the
+    *                       same store the data landed on — local, HDFS,
     *                       s3a), NOT java.nio, so the contract holds on
-    *                       any store; rename is atomic on HDFS-like
+    *                       any store; the rename is atomic on HDFS-like
     *                       filesystems, best-effort (non-atomic but
     *                       still last-step) on object stores.
     * Stats are computed from the data as WRITTEN (read-back), so the
@@ -157,15 +158,7 @@ object ExportOps {
     val t = back.agg(count(lit(1)).as("n_rows"), countDistinct(col("chunk")).as("n_chunks"))
       .collect()(0)
     val marker = s"""{"n_rows":${t.getLong(0)},"n_chunks":${t.getLong(1)},"rows_per_file":$rowsPerFile,"seed":"$seed"}\n"""
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(base, "_COMMIT.tmp")
-    val dst = new org.apache.hadoop.fs.Path(base, "_COMMIT")
-    val out = fs.create(tmp, true)
-    try out.write(marker.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"exportWithManifest: could not publish $dst")
+    graft.io.PointerFile.publish(new org.apache.hadoop.fs.Path(dir, "_COMMIT"), marker,
+      spark.sparkContext.hadoopConfiguration)
   }
 }

@@ -487,7 +487,10 @@ object SourceRegistry {
 
   def schemes: Seq[String] = providers.flatMap(_.schemes)
 
-  def sparkConfigs: Map[String, String] = providers.flatMap(_.sparkConfigs).toMap
+  /** Every provider's confs plus the `file:` binding to graft's fork-free
+    * local filesystem ([[graft.io.LocalFileSystems]]). */
+  def sparkConfigs: Map[String, String] =
+    graft.io.LocalFileSystems.sparkConfigs ++ providers.flatMap(_.sparkConfigs)
 
   def forUri(uri: ParsedUri): SparkSession => DfSource with DfSink =
     providers

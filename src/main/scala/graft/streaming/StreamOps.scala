@@ -521,7 +521,9 @@ object StreamOps {
     * updated twice in one batch must land on its final state), then
     * (b) full-outer-merges into the current snapshot (upsert + delete
     * semantics) and (c) publishes a new snapshot GENERATION directory,
-    * flipping a pointer file only after the write succeeds. Replayed
+    * flipping a pointer file only after the write succeeds (an atomic
+    * temp-then-rename flip, [[graft.io.PointerFile.publish]]: a crash
+    * mid-flip leaves the previous generation's pointer whole). Replayed
     * batch ids are complete no-ops (the commit-log discipline of
     * [[idempotentForeachBatch]]), so a post-failure re-delivery cannot
     * double-apply — exactly-once table maintenance over plain parquet.
@@ -543,7 +545,6 @@ object StreamOps {
       val spark = batch.sparkSession
       val hconf = spark.sparkContext.hadoopConfiguration
       val snapRoot = new org.apache.hadoop.fs.Path(snapshotDir)
-      val fs = snapRoot.getFileSystem(hconf)
       val ptr = new org.apache.hadoop.fs.Path(snapRoot, "_LATEST")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keyCols.map(col): _*)
@@ -551,20 +552,17 @@ object StreamOps {
       val latest = batch.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
       val snapCols = batch.columns.toSeq.filterNot(deleteCol.contains)
-      val base =
-        if (fs.exists(ptr)) {
-          val in = fs.open(ptr)
-          val cur = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-          spark.read.parquet(cur)
-        } else
+      val base = graft.io.PointerFile.read(ptr, hconf) match {
+        case Some(cur) => spark.read.parquet(cur)
+        case None =>
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
             org.apache.spark.sql.types.StructType(
               batch.schema.fields.filter(f => snapCols.contains(f.name))))
+      }
       val merged = graft.operators.DiffOps.merge(base, latest, keyCols, deleteCol)
       val gen = new org.apache.hadoop.fs.Path(snapRoot, s"gen-$batchId").toString
       merged.write.mode("overwrite").parquet(gen)
-      val out = fs.create(ptr, true)
-      try out.write(gen.getBytes("UTF-8")) finally out.close()
+      graft.io.PointerFile.publish(ptr, gen, hconf)
     })
 
   /** Streaming CDC apply into an embedded COMMIT-LOG table — the
@@ -613,11 +611,9 @@ object StreamOps {
 
   /** Read the current snapshot maintained by [[cdcApplySink]]. */
   def readSnapshot(spark: SparkSession, snapshotDir: String): DataFrame = {
-    val snapRoot = new org.apache.hadoop.fs.Path(snapshotDir)
-    val fs = snapRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ptr = new org.apache.hadoop.fs.Path(snapRoot, "_LATEST")
-    val in = fs.open(ptr)
-    val cur = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
+    val ptr = new org.apache.hadoop.fs.Path(snapshotDir, "_LATEST")
+    val cur = graft.io.PointerFile.read(ptr, spark.sparkContext.hadoopConfiguration)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no snapshot published under $snapshotDir"))
     spark.read.parquet(cur)
   }
 

@@ -509,6 +509,30 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("cdcApplySink: an interrupted pointer flip leaves readSnapshot on the previous generation") {
+    import graft.io.PointerFile
+    import org.apache.hadoop.fs.{FileContext, Path}
+    val snap = java.nio.file.Files.createTempDirectory("graft-cdc-flip").toString
+    val commits = java.nio.file.Files.createTempDirectory("graft-cdc-flip-log").toString
+    val sink = StreamOps.cdcApplySink(snap, commits,
+      keyCols = Seq("k"), orderCol = "seq", deleteCol = Some("deleted"))
+    def snapshot() = StreamOps.readSnapshot(spark, snap)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    sink(Seq((1L, "v1", 1L, false), (2L, "v2", 2L, false)).toDF("k", "v", "seq", "deleted"), 0L)
+    val s0 = snapshot()
+    assert(s0 == Map(1L -> "v1", 2L -> "v2"))
+    // batch 1 dies after staging its pointer, before the rename; its
+    // commit marker is never written
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val ptr = new Path(snap, "_LATEST")
+    PointerFile.stage(FileContext.getFileContext(ptr.toUri, hconf), ptr, new Path(snap, "gen-1").toString)
+    assert(snapshot() == s0, "a half-done flip must leave the previous generation readable")
+    // the replayed batch 1 publishes over the stale staging file
+    sink(Seq((2L, "v2b", 3L, false), (1L, "", 4L, true)).toDF("k", "v", "seq", "deleted"), 1L)
+    assert(snapshot() == Map(2L -> "v2b"))
+    assert(!ptr.getFileSystem(hconf).exists(PointerFile.staging(ptr)))
+  }
+
   test("streaming decayed trend equals the batch StatsOps.decayedTrend " +
     "bit-exactly and is micro-batch-split invariant") {
     import graft.operators.StatsOps
