@@ -1,11 +1,11 @@
 package graft.io
 
 import java.net.URI
-import java.nio.file.{FileSystems, Files}
+import java.nio.file.{FileSystems, Files, LinkOption, StandardCopyOption}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{AbstractFileSystem, ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -17,8 +17,11 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `FileContext.rename(…, OVERWRITE)` makes two link-status checks, and
   * Spark commits streaming offsets, commits and state-store deltas that
   * way. A fork costs 5–20 ms where the `java.nio` call costs well under
-  * one. These classes replace exactly those two calls; everything else,
-  * `.crc` sidecars included, is stock Hadoop.
+  * one. These classes replace exactly those two calls, and make a
+  * `FileContext.rename` with OVERWRITE of a file onto a file one
+  * rename(2) (stock Hadoop deletes the destination first, so a crash in
+  * between leaves no file at all); everything else, `.crc` sidecars
+  * included, is stock Hadoop.
   *
   * [[LocalFileSystems.sparkConfigs]] binds them for a session. Hadoop's
   * FileSystem cache is JVM-wide, so the first `file:` lookup of the JVM
@@ -74,10 +77,36 @@ class NioRawLocalFs(conf: Configuration)
   override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults()
   override def getServerDefaults(): FsServerDefaults = LocalConfigKeys.getServerDefaults()
   override def isValidName(src: String): Boolean = true
+
+  /** An OVERWRITE rename of a file onto another file is one atomic
+    * `rename(2)`: `dst` names the old file, then the new one, and is never
+    * missing. The inherited version deletes `dst` and renames after it.
+    * Anything else (no overwrite, a directory or symlink on either side,
+    * `dst` absent) keeps the stock checks. */
+  override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit = {
+    val raw = fsImpl.asInstanceOf[RawLocalFileSystem]
+    val (s, d) = (raw.pathToFile(src).toPath, raw.pathToFile(dst).toPath)
+    if (overwrite && s != d && Files.isRegularFile(s, LinkOption.NOFOLLOW_LINKS) &&
+        Files.isRegularFile(d, LinkOption.NOFOLLOW_LINKS))
+      Files.move(s, d, StandardCopyOption.ATOMIC_MOVE)
+    else super.renameInternal(src, dst, overwrite)
+  }
 }
 
 /** The checksummed `file:` AbstractFileSystem, what `FileContext` (and so
   * Spark's streaming checkpoint manager) uses: `LocalFs` over
   * [[NioRawLocalFs]]. `FileContext` instantiates it by its `(URI,
-  * Configuration)` constructor; like `LocalFs`, it ignores the URI. */
-class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf))
+  * Configuration)` constructor; like `LocalFs`, it ignores the URI. The
+  * primary constructor takes the filesystem under the checksums. */
+class NioLocalFs(raw: AbstractFileSystem) extends ChecksumFs(raw) {
+  def this(uri: URI, conf: Configuration) = this(new NioRawLocalFs(conf))
+
+  /** Drops `dst`'s `.crc` before the stock rename moves the data and then
+    * the `.crc`. A crash between those two steps then leaves the new data
+    * with no checksum (read unverified), not under the old one (a
+    * ChecksumException on every read). */
+  override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit = {
+    if (overwrite) getMyFs.delete(getChecksumFile(dst), false)
+    super.renameInternal(src, dst, overwrite)
+  }
+}

@@ -135,12 +135,12 @@ object ExportOps {
     *                       with [[graft.io.PointerFile.publish]] (a temp
     *                       sibling renamed over it) — readers treat its
     *                       presence as the commit point. The marker goes
-    *                       through the session's Hadoop FileContext (the
+    *                       through the session's Hadoop filesystem (the
     *                       same store the data landed on — local, HDFS,
-    *                       s3a), NOT java.nio, so the contract holds on
-    *                       any store; the rename is atomic on HDFS-like
-    *                       filesystems, best-effort (non-atomic but
-    *                       still last-step) on object stores.
+    *                       s3a, gs), NOT java.nio. The rename is atomic on
+    *                       `file:` and HDFS; elsewhere it is a delete, then
+    *                       a rename, so a re-export briefly has no marker
+    *                       (it reads as uncommitted, never as torn).
     * Stats are computed from the data as WRITTEN (read-back), so the
     * manifest certifies what actually landed, not what was planned.
     */

@@ -521,12 +521,16 @@ object StreamOps {
     * updated twice in one batch must land on its final state), then
     * (b) full-outer-merges into the current snapshot (upsert + delete
     * semantics) and (c) publishes a new snapshot GENERATION directory,
-    * flipping a pointer file only after the write succeeds (an atomic
-    * temp-then-rename flip, [[graft.io.PointerFile.publish]]: a crash
-    * mid-flip leaves the previous generation's pointer whole). Replayed
-    * batch ids are complete no-ops (the commit-log discipline of
-    * [[idempotentForeachBatch]]), so a post-failure re-delivery cannot
-    * double-apply — exactly-once table maintenance over plain parquet.
+    * flipping a pointer file only after the write succeeds
+    * ([[graft.io.PointerFile.publish]]: a temp file renamed over the
+    * pointer). Replayed batch ids are complete no-ops (the commit-log
+    * discipline of [[idempotentForeachBatch]]), so a post-failure
+    * re-delivery cannot double-apply — exactly-once table maintenance
+    * over plain parquet. A batch cut after its flip but before its commit
+    * marker replays against a pointer that already names its own
+    * generation: that generation already holds the batch, so the replay
+    * only re-publishes it (a merge would read and overwrite the same
+    * directory).
     *
     * Single-writer contract: the streaming query serializes batches, so
     * the read-merge-publish cycle never races itself; a transactional
@@ -552,17 +556,20 @@ object StreamOps {
       val latest = batch.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
       val snapCols = batch.columns.toSeq.filterNot(deleteCol.contains)
-      val base = graft.io.PointerFile.read(ptr, hconf) match {
-        case Some(cur) => spark.read.parquet(cur)
-        case None =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-            org.apache.spark.sql.types.StructType(
-              batch.schema.fields.filter(f => snapCols.contains(f.name))))
+      val gen = new org.apache.hadoop.fs.Path(snapRoot, s"gen-$batchId")
+      val cur = graft.io.PointerFile.read(ptr, hconf)
+      if (!cur.exists(new org.apache.hadoop.fs.Path(_).getName == gen.getName)) {
+        val base = cur match {
+          case Some(c) => spark.read.parquet(c)
+          case None =>
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+              org.apache.spark.sql.types.StructType(
+                batch.schema.fields.filter(f => snapCols.contains(f.name))))
+        }
+        val merged = graft.operators.DiffOps.merge(base, latest, keyCols, deleteCol)
+        merged.write.mode("overwrite").parquet(gen.toString)
       }
-      val merged = graft.operators.DiffOps.merge(base, latest, keyCols, deleteCol)
-      val gen = new org.apache.hadoop.fs.Path(snapRoot, s"gen-$batchId").toString
-      merged.write.mode("overwrite").parquet(gen)
-      graft.io.PointerFile.publish(ptr, gen, hconf)
+      graft.io.PointerFile.publish(ptr, gen.toString, hconf)
     })
 
   /** Streaming CDC apply into an embedded COMMIT-LOG table — the

@@ -5,13 +5,14 @@ import java.nio.file.{Files, Path => JPath}
 
 import scala.jdk.CollectionConverters._
 
-import graft.io.{NioLocalFileSystem, NioLocalFs}
+import graft.io.{NioLocalFileSystem, NioLocalFs, NioRawLocalFs, PointerFile}
 import graft.pipeline.Pipeline
 import graft.sources.SourceRegistry
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FileContext, FileSystem, LocalFileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileContext, FileSystem, LocalFileSystem, Options, Path,
+  UnsupportedFileSystemException}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** graft binds the `file:` scheme to its fork-free local filesystem
@@ -119,6 +120,60 @@ class LocalFileSystemsSpec extends SparkSpec {
       val names = new java.io.File(dir.toUri.getPath).list().toSeq.sorted
       (back, names, fc.util.exists(src))
     }
+  }
+
+  test("an OVERWRITE rename of a file deletes no destination: its old crc goes first, then one rename(2) each") {
+    val dir = tempDir()
+    val ops = scala.collection.mutable.ArrayBuffer.empty[String]
+    /** graft's raw AbstractFileSystem, logging the deletes and renames
+      * the checksummed layer asks of it. */
+    class Logged(conf: Configuration) extends NioRawLocalFs(conf) {
+      override def delete(f: Path, recursive: Boolean): Boolean = {
+        ops += s"delete ${f.getName}"
+        super.delete(f, recursive)
+      }
+      override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit = {
+        ops += s"rename ${src.getName} ${dst.getName}"
+        super.renameInternal(src, dst, overwrite)
+      }
+    }
+    val conf = new Configuration()
+    val fc = FileContext.getFileContext(new NioLocalFs(new Logged(conf)), conf)
+    def write(p: Path, s: String): Unit = {
+      val out = fc.create(p, java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE))
+      try out.write(s.getBytes("UTF-8")) finally out.close()
+    }
+    val (src, dst) = (new Path(dir, "src"), new Path(dir, "dst"))
+    write(src, "new content")
+    write(dst, "old")
+    ops.clear()
+    fc.rename(src, dst, Options.Rename.OVERWRITE)
+    // the stock AbstractFileSystem rename would log "delete dst" between the two renames
+    assert(ops == Seq("delete .dst.crc", "rename src dst", "rename .src.crc .dst.crc"), ops)
+    val in = fc.open(dst)
+    assert((try new String(in.readAllBytes(), "UTF-8") finally in.close()) == "new content")
+    assert(new java.io.File(dir.toUri.getPath).list().toSeq.sorted == Seq(".dst.crc", "dst"))
+  }
+
+  test("PointerFile publishes through FileSystem on a store with no FileContext binding; read serves a cut flip's temp file") {
+    val ptr = new Path(tempDir(), "_LATEST")
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.unset("fs.AbstractFileSystem.file.impl")
+    assert(scala.util.Try(FileContext.getFileContext(ptr.toUri, conf)).failed.toOption
+      .exists(_.isInstanceOf[UnsupportedFileSystemException]))
+    val fs = ptr.getFileSystem(conf)
+    assert(PointerFile.read(ptr, conf).isEmpty)
+    PointerFile.stage(ptr, "", conf) // a first publish cut inside its write
+    assert(PointerFile.read(ptr, conf).isEmpty)
+    PointerFile.publish(ptr, "gen-0", conf)
+    PointerFile.publish(ptr, "gen-1", conf)
+    assert(PointerFile.read(ptr, conf).contains("gen-1") && !fs.exists(PointerFile.staging(ptr)))
+    // a flip cut between its delete and its rename
+    fs.delete(ptr, false)
+    PointerFile.stage(ptr, "gen-2", conf)
+    assert(PointerFile.read(ptr, conf).contains("gen-2"))
+    PointerFile.publish(ptr, "gen-3", conf)
+    assert(PointerFile.read(ptr, conf).contains("gen-3") && !fs.exists(PointerFile.staging(ptr)))
   }
 
   test("getFileLinkStatus reports a symlink and a dangling symlink as stock Hadoop does") {

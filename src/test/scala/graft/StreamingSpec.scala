@@ -511,7 +511,7 @@ class StreamingSpec extends SparkSpec {
 
   test("cdcApplySink: an interrupted pointer flip leaves readSnapshot on the previous generation") {
     import graft.io.PointerFile
-    import org.apache.hadoop.fs.{FileContext, Path}
+    import org.apache.hadoop.fs.Path
     val snap = java.nio.file.Files.createTempDirectory("graft-cdc-flip").toString
     val commits = java.nio.file.Files.createTempDirectory("graft-cdc-flip-log").toString
     val sink = StreamOps.cdcApplySink(snap, commits,
@@ -525,12 +525,49 @@ class StreamingSpec extends SparkSpec {
     // commit marker is never written
     val hconf = spark.sparkContext.hadoopConfiguration
     val ptr = new Path(snap, "_LATEST")
-    PointerFile.stage(FileContext.getFileContext(ptr.toUri, hconf), ptr, new Path(snap, "gen-1").toString)
+    PointerFile.stage(ptr, new Path(snap, "gen-1").toString, hconf)
     assert(snapshot() == s0, "a half-done flip must leave the previous generation readable")
     // the replayed batch 1 publishes over the stale staging file
     sink(Seq((2L, "v2b", 3L, false), (1L, "", 4L, true)).toDF("k", "v", "seq", "deleted"), 1L)
     assert(snapshot() == Map(2L -> "v2b"))
     assert(!ptr.getFileSystem(hconf).exists(PointerFile.staging(ptr)))
+  }
+
+  test("cdcApplySink: a batch replayed after its flip (pointer whole, or cut to its temp file) keeps the earlier keys") {
+    import graft.io.PointerFile
+    import org.apache.hadoop.fs.Path
+    val snap = java.nio.file.Files.createTempDirectory("graft-cdc-replay").toString
+    val commits = java.nio.file.Files.createTempDirectory("graft-cdc-replay-log").toString
+    val sink = StreamOps.cdcApplySink(snap, commits,
+      keyCols = Seq("k"), orderCol = "seq", deleteCol = Some("deleted"))
+    def snapshot() = StreamOps.readSnapshot(spark, snap)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val ptr = new Path(snap, "_LATEST")
+    val fs = ptr.getFileSystem(hconf)
+    val batch1 = Seq((2L, "v2b", 3L, false), (3L, "v3", 4L, false)).toDF("k", "v", "seq", "deleted")
+    sink(Seq((1L, "v1", 1L, false), (2L, "v2", 2L, false)).toDF("k", "v", "seq", "deleted"), 0L)
+    sink(batch1, 1L)
+    val want = Map(1L -> "v1", 2L -> "v2b", 3L -> "v3")
+    assert(snapshot() == want)
+    def gen1Files() = new java.io.File(snap, "gen-1").list().toSeq.sorted
+    val written = gen1Files()
+    // batch 1 dies after its flip, before its commit marker: it replays
+    // against a pointer that already names gen-1
+    assert(fs.delete(new Path(commits, "batch-1"), false))
+    sink(batch1, 1L)
+    assert(snapshot() == want, "a replay after the flip must not lose or re-merge keys")
+    assert(gen1Files() == written, "the replay must re-publish gen-1, not rewrite it")
+    // a delete-then-rename flip (a store without an atomic rename) dies
+    // between the two: no pointer, the complete temp file naming gen-1
+    assert(fs.delete(new Path(commits, "batch-1"), false))
+    assert(fs.delete(ptr, false))
+    PointerFile.stage(ptr, new Path(snap, "gen-1").toString, hconf)
+    assert(snapshot() == want, "readSnapshot must serve the cut flip's temp file")
+    sink(batch1, 1L)
+    assert(snapshot() == want, "the replay must keep the keys of earlier batches")
+    assert(fs.exists(ptr) && !fs.exists(PointerFile.staging(ptr)))
+    assert(gen1Files() == written)
   }
 
   test("streaming decayed trend equals the batch StatsOps.decayedTrend " +
